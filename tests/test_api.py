@@ -92,21 +92,6 @@ def test_insert_batch_microbatch(svc):
     assert svc.search(50, "batch", limit=10).count() == 5
 
 
-def test_422_validation_contract(svc):
-    """/root/reference/app.py:28-33: bad params -> {status_code: 10422,
-    message, data: None}, never an exception."""
-    bad = svc.handle_search_request({"user_id": "not-an-int", "text": "x"})
-    assert bad["status_code"] == 10422 and bad["data"] is None
-    missing = svc.handle_search_request({"text": "x"})
-    assert missing["status_code"] == 10422
-    neg = svc.handle_search_request({"user_id": 1, "text": "x", "limit": 0})
-    assert neg["status_code"] == 10422
-
-    svc.insert(1, 77, "valid document", "s", "en")
-    ok = svc.handle_search_request({"user_id": "77", "text": "document", "limit": "5"})
-    assert ok["status_code"] == 200 and len(ok["data"]) == 1
-
-
 def test_count_and_set_payload_tenant_scoped(svc):
     """Qdrant-surface extensions: /points/count and set_payload compose
     with the mandatory tenant filter — one user's update never leaks into
@@ -319,11 +304,16 @@ def test_search_routes_text_index_clauses(svc):
                   svc.search(40, "spark", limit=10,
                              query_filter=flt2).collect())
     assert got2 == [73]
-    # routing helper splits correctly and leaves unindexed clauses alone
-    cand, residual = svc.catalog.route_text_clauses(
-        svc.index_name, {"must": [{"key": "lang", "match": {"text": "en"}}]})
-    assert cand is None and residual == {
+    # the text-filter rewrite leaves unindexed clauses alone (no has_id
+    # cut), and search() keeps their scan-stage substring semantics
+    unindexed = {"must": [{"key": "lang", "match": {"text": "en"}}]}
+    assert svc.catalog.rewrite_text_filter(
+        svc.index_name, unindexed) == {
         "must": [{"key": "lang", "match": {"text": "en"}}]}
+    got3 = sorted(r["id"] for r in
+                  svc.search(40, "spark", limit=10,
+                             query_filter=unindexed).collect())
+    assert got3 == [71, 72, 73]
 
 
 def test_search_plan_memo_and_invalidation(svc):
@@ -924,3 +914,89 @@ def test_query_batch_ann_shared_parity(spark, tmp_path):
     want3 = [svc3.query(7, b) for b in bodies3]
     for g, w in zip(got3, want3):
         assert [r["id"] for r in g] == [r["id"] for r in w]
+
+
+def _assert_search_is_query(svc, user_id, body, templated=True, **kw):
+    """``svc.search(**kw)`` equals ``svc.query(body)`` in the reference's
+    {id, string, score} projection — on the cold first request and on a
+    second request with a different text, which the shape template
+    serves when ``templated``."""
+    for i, text in enumerate(("first probe text", "second probe text")):
+        before = svc._shape_hits
+        got = [(r["id"], r["string"], r["score"]) for r in
+               svc.search(user_id, text, limit=body["limit"], **kw).collect()]
+        if i and templated:
+            assert svc._shape_hits == before + 1, "search not templated"
+        want = [(h["text_id"], h["text"], h["dist"]) for h in
+                svc.query(user_id, dict(body, query={"text": text}))]
+        assert got and got == want
+
+
+def test_search_is_query_site_lang_and_filter(svc):
+    """/search folds site/lang into the filter document as match.value
+    clauses, next to the caller's own filter document."""
+    rows = [(1001, "red apple pie", "s1", "en"),
+            (1002, "red apple tart", "s2", "en"),
+            (1003, "green pear pie", "s1", "de"),
+            (1004, "blue plum pie", "s1", "en")]
+    svc.insert_batch([{"id": pid, "user_id": 45, "text": text, "site": site,
+                       "lang": lang} for pid, text, site, lang in rows])
+    site_lang = {"must": [{"key": "site", "match": {"value": "s1"}},
+                          {"key": "lang", "match": {"value": "en"}}]}
+    _assert_search_is_query(svc, 45, {"limit": 3, "filter": site_lang},
+                            site="s1", lang="en")
+    flt = {"must_not": [{"key": "text", "match": {"text": "plum"}}]}
+    _assert_search_is_query(svc, 45, {"limit": 3, "filter": flt},
+                            query_filter=flt)
+    both = {"must": [{"key": "site", "match": {"value": "s1"}},
+                     {"key": "text", "match": {"text": "pie"}}],
+            "must_not": [{"key": "lang", "match": {"value": "de"}}]}
+    _assert_search_is_query(
+        svc, 45, {"limit": 3, "filter": both}, site="s1",
+        query_filter={"must": {"key": "text", "match": {"text": "pie"}},
+                      "must_not": both["must_not"]})
+
+
+def test_search_is_query_text_indexed_and_text_id(svc, spark):
+    """A match.text clause on a text-indexed field is served by the same
+    rewrite on both routes, and /search's `id` is the point's text_id
+    while the tiebreak stays the point id."""
+    from vectordb_cloud_spark.functions.embedding import mock_embed
+
+    svc.create_index("text", "text")
+    df = spark.createDataFrame(
+        [(1, 5001, "spark joins shuffle data", 46, "s", "en"),
+         (2, 5002, "database joins only", 46, "s", "en"),
+         (3, 5003, "spark data pipelines", 46, "s", "en"),
+         (4, 5000, "spark data pipelines", 46, "s", "en")],
+        "id long, text_id long, text string, user_id long, "
+        "site string, lang string",
+    ).withColumn("embedding", mock_embed("text", svc.dim))
+    svc.catalog.upsert(svc.index_name, df)
+    flt = {"must": [{"key": "text", "match": {"text": "spark data"}}]}
+    _assert_search_is_query(svc, 46, {"limit": 4, "filter": flt},
+                            query_filter=flt)
+    _assert_search_is_query(svc, 46, {"limit": 4})
+    ids = [r["id"] for r in svc.search(46, "spark data pipelines",
+                                       limit=4).collect()]
+    assert ids[:2] == [5003, 5000]  # tied: point id 3 before 4
+
+
+def test_search_is_query_exact_false(spark, tmp_path):
+    """exact=False maps to params {"exact": false}: with an IVF sidecar
+    both routes take the same ANN route; with no sidecar /search stays
+    exact and template-served."""
+    svc = VectorService(spark, str(tmp_path / "ivf"), index_name="I", dim=8,
+                        ann_index={"ivf": {"k_centroids": 4, "nprobe": 2,
+                                           "full_scan_threshold": 0}})
+    rows = [{"id": i, "user_id": 9, "text": f"point number {i}", "site": "s",
+             "lang": "en"} for i in range(40)]
+    svc.insert_batch(rows)
+    _assert_search_is_query(svc, 9, {"limit": 5,
+                                     "params": {"exact": False}},
+                            templated=False, exact=False)
+    plain = VectorService(spark, str(tmp_path / "plain"), index_name="P",
+                          dim=8)
+    plain.insert_batch(rows[:10])
+    _assert_search_is_query(plain, 9, {"limit": 5}, exact=False)
+

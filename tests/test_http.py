@@ -120,6 +120,33 @@ def test_validation_422_envelope(server):
     assert "site" in body["message"] and "lang" in body["message"]
 
 
+def test_search_422_validation_contract(server):
+    """The reference app.py:28-33 contract on the /search route: bad params ->
+    422 + {status_code: 10422, message, data: None}, never a 500 —
+    including a limit that is not positive."""
+    status, bad = _get(server, "/search", user_id="not-an-int", text="x",
+                       limit=5)
+    assert status == 422
+    assert bad["status_code"] == 10422 and bad["data"] is None
+    status, missing = _get(server, "/search", text="x", limit=5)
+    assert status == 422 and missing["status_code"] == 10422
+    for limit in (0, -1):
+        status, neg = _get(server, "/search", user_id=1, text="x",
+                           limit=limit)
+        assert status == 422 and neg["status_code"] == 10422
+        assert "limit" in neg["message"]
+    _get(server, "/insert", id=1, user_id=77, text="valid document",
+         site="s", lang="en")
+    status, ok = _get(server, "/search", user_id="77", text="document",
+                      limit="5")
+    assert status == 200 and len(ok) == 1
+    # a filter document the filter DSL rejects is a client error too
+    status, body = _get(server, "/search", user_id=77, text="document",
+                        limit=5, filter=json.dumps(
+                            {"must": [{"bogus": 1}]}))
+    assert status == 422 and body["status_code"] == 10422
+
+
 def test_unknown_route_404(server):
     status, body = _get(server, "/nope")
     assert status == 404

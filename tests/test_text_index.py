@@ -308,7 +308,7 @@ def test_text_match_ids_schedules_no_job(cat, spark):
     assert sorted(r["id"] for r in cand.collect()) == [1]
 
 
-def test_routed_search_consistent_with_scan_semantics(cat, spark):
+def test_routed_search_consistent_with_scan_semantics(cat, spark, tmp_path):
     """The behavior-flip the r9 advice called out: indexing a field must
     not SHRINK results for a punctuation-adjacent token query. The routed
     whole-token path and the unindexed substring path now agree on plain
@@ -323,14 +323,27 @@ def test_routed_search_consistent_with_scan_semantics(cat, spark):
         r["id"] for r in
         cat.read("c").filter(compile_filter(flt, id_col="id")).collect())
     cat.create_payload_index("c", "text", "text")
-    cand, residual = cat.route_text_clauses("c", flt)
-    assert residual is None
-    routed_ids = sorted(r["id"] for r in cand.collect())
+    out = cat.rewrite_text_filter("c", flt)
+    # the whole clause is served by the postings: no residual clause
+    assert list(out) == ["must"] and len(out["must"]) == 1
+    routed_ids = sorted(out["must"][0]["has_id"])
     # substring semantics additionally matches 'cookie recipes' (doc 3) —
     # the documented indexed/unindexed split Qdrant itself has; the indexed
     # set must be the whole-token subset, never missing a whole-token hit
     assert routed_ids == [1, 2]
     assert set(routed_ids) <= set(scan_ids)
+    # the service's search() serves the same whole-token subset
+    from vectordb_cloud_spark.api import VectorService
+
+    svc = VectorService(spark, str(tmp_path / "svc"), dim=2)
+    svc.create_index("text", "text")
+    svc.catalog.upsert(svc.index_name, _docs(spark).select(
+        "id", F.col("id").alias("text_id"), "text", "user_id",
+        F.lit("s").alias("site"), F.lit("en").alias("lang"), "embedding"))
+    searched = sorted(
+        r["id"] for uid in (1, 2) for r in
+        svc.search(uid, "cookies", limit=10, query_filter=flt).collect())
+    assert searched == routed_ids
 
 
 def test_murmur3_matches_spark_hash(spark):

@@ -1,28 +1,30 @@
-"""Round-14 optimization measurement harness.
+"""Per-query optimization measurement harness.
 
 For every registry + library query: time (a) driver-side DataFrame
 construction (plan build, any bounded collects inside the query fn) and
 (b) the noop-sink execution, count Spark jobs triggered during each, and
-dump `.explain("formatted")` to plans/r15/<name>_<tag>.txt.
+dump `.explain("formatted")` to <out>/<name>_<tag>.txt, plus a
+measure_<tag>.json summary.
 
-Usage: python tools/r15_measure.py <tag> [sf_dir] [name ...]
-  tag: "before" / "after" (file suffix in plans/r15/)
-  sf_dir: default /root/testdata/sf0.1
+Usage: python tools/measure.py --tag TAG --out DIR [--sf-dir DIR] [name ...]
+  --tag: file suffix, e.g. "before" / "after"
+  --out: output dir, one per round (e.g. plans/r16)
+  --sf-dir: the scale-factor data dir (default: $SPARK_GRAFT_SF_DIR)
   name...: restrict to these queries (default: all)
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import json
+import os
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-OUT_DIR = Path(__file__).resolve().parents[1] / "plans" / "r15"
 
 
 def _explain(df) -> str:
@@ -33,18 +35,25 @@ def _explain(df) -> str:
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    only = set(sys.argv[3:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--out", required=True, type=Path,
+                    help="output dir, e.g. plans/r16")
+    ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    if not args.sf_dir:
+        ap.error("--sf-dir is required when SPARK_GRAFT_SF_DIR is unset")
+    tag, sf_dir, only, out_dir = args.tag, args.sf_dir, set(args.names), args.out
 
     from vectordb_cloud_spark import queries as qmod
     from vectordb_cloud_spark.session import get_spark
 
-    spark = get_spark("r15-measure")
+    spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    OUT_DIR.mkdir(parents=True, exist_ok=True)
+    out_dir.mkdir(parents=True, exist_ok=True)
 
     # warmup (JVM, codegen, parquet footers)
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
@@ -74,7 +83,7 @@ def main():
             f"{name}-exec-{tag}",
             lambda: df.write.format("noop").mode("overwrite").save())
         plan = _explain(df)
-        (OUT_DIR / f"{name}_{tag}.txt").write_text(plan)
+        (out_dir / f"{name}_{tag}.txt").write_text(plan)
         n_ex = plan.count("Exchange")
         rows.append({
             "name": name,
@@ -89,7 +98,7 @@ def main():
               f"jobs(fn/exec)={j_build}/{j_exec} exch={n_ex}", flush=True)
 
     rows.sort(key=lambda r: -r["total_s"])
-    (OUT_DIR / f"measure_{tag}.json").write_text(json.dumps(rows, indent=1))
+    (out_dir / f"measure_{tag}.json").write_text(json.dumps(rows, indent=1))
     print("\ntop by total:")
     for r in rows[:20]:
         print(f"  {r['total_s']:6.2f}s  {r['name']}  (build {r['build_s']}, "

@@ -20,7 +20,6 @@ from vectordb_cloud_spark.collections import CollectionCatalog
 from vectordb_cloud_spark.filters import compile_filter
 from vectordb_cloud_spark.functions.embedding import DEFAULT_DIM, mock_embed, mock_vector
 from vectordb_cloud_spark.operators.classify import classify_title
-from vectordb_cloud_spark.operators.knn import knn_search, search_response
 from vectordb_cloud_spark.session import local_df
 
 
@@ -40,28 +39,28 @@ class VectorService:
         self.dim = dim
         self.catalog.create(index_name, dim, quantization=quantization,
                             ann_index=ann_index)
-        # Compiled-plan memo for /search (VERDICT r9 #4): key includes the
+        # Two memo tiers on the one read path (_query_df, which serves
+        # /query and, through its {id, string, score} projection,
+        # /search). The compiled-plan memo (VERDICT r9 #4) keys on the
         # IMMUTABLE data.v{N} dir (every write publishes a new one, so a
-        # version advance naturally invalidates), the tenant, the filter
-        # document, k, and the query vector. A repeat request re-collects
-        # the SAME DataFrame — zero plan re-construction (the measured
-        # r9/r10 serving cost was driver-side py4j plan building, not
-        # execution). LRU-bounded; DataFrames are lazy plans (a few KB),
-        # not cached data.
+        # version advance naturally invalidates), the tenant, the request
+        # body — query vector included — and the projection. A repeat
+        # request re-collects the SAME DataFrame — zero plan
+        # re-construction (the measured r9/r10 serving cost was
+        # driver-side py4j plan building, not execution). LRU-bounded;
+        # DataFrames are lazy plans (a few KB), not cached data.
         from collections import OrderedDict
         self._plan_memo: OrderedDict[tuple, DataFrame] = OrderedDict()
         self._PLAN_MEMO_CAP = 512
-        # Shape-keyed serving-template memo (VERDICT r10 wrong#1): the
-        # plan memo above only hits on EXACT-repeat requests (the query
-        # vector is part of its key), so every distinct query text used
-        # to pay the full serving construction — catalog meta reads,
-        # tenant read, text-clause routing, filter-DSL compile, and four
-        # eagerly-analyzed DataFrame ops — ~156 ms of driver work (r10
-        # PLANS.md split). The shape memo keys on everything EXCEPT the
-        # vector: the vector-independent candidate frame (tenant-pruned +
-        # routed + filtered + projected) registers once per shape as a
-        # temp view, and a distinct-text request costs ONE spark.sql()
-        # whose only per-request piece is the query vector as a
+        # The shape-template memo (VERDICT r10 wrong#1) keys a plain
+        # dense body on everything EXCEPT the query vector, so a distinct
+        # query text skips the full construction — catalog meta reads,
+        # tenant read, text-filter rewrite, filter-DSL compile, and the
+        # eagerly-analyzed DataFrame ops (~156 ms of driver work, r10
+        # PLANS.md split). The vector-independent candidate frame
+        # (tenant-pruned + filtered) registers once per shape as a temp
+        # view, and a distinct-text request costs ONE spark.sql() whose
+        # only per-request piece is the query vector as a
         # `from_json('<json>', 'array<double>')` constant — one string
         # literal in the tree instead of 64 literal nodes (analysis walks
         # it once; ConstantFolding folds it out of the physical plan, so
@@ -152,159 +151,45 @@ class VectorService:
         column predicates by :mod:`vectordb_cloud_spark.filters`.
 
         ``exact=False`` (Qdrant ``params: {"exact": false}``) routes
-        through the collection's quantized codes sidecar when a
-        quantization_config is set (``CollectionCatalog.search_quantized``);
-        with no config it silently stays exact, as in Qdrant."""
-        import json as _json
-        import struct as _struct
+        through the collection's ANN or quantized codes sidecar; with no
+        sidecar configured it silently stays exact, as in Qdrant.
 
-        qvec = mock_vector(text, self.dim)
-        # plan memo probe: everything downstream is a deterministic function
-        # of (data version, tenant, predicates, k, qvec) — including the
-        # text-index routing and ANN/quantized sidecar paths, whose sidecars
-        # are keyed by the same version
-        meta0 = self._safe_meta()
-        data_dir = self.catalog._current_data_dir(self.index_name, meta=meta0)
-        memo_key = None
-        stamp = self._memo_stamp(data_dir, meta0)
-        if stamp is not None:
-            try:
-                # type-tagged serialization: default=str would collide a
-                # datetime with its equal string form under one key while
-                # compile_filter builds differently-typed literals
-                filt_key = (_json.dumps(
-                    query_filter, sort_keys=True,
-                    default=lambda o: f"__{type(o).__name__}__:{o}")
-                    if query_filter else None)
-            except (TypeError, ValueError):
-                # non-serializable filter document: skip BOTH memo probes
-                # (memo_key stays None) but serve the request normally
-                pass
-            else:
-                memo_key = (
-                    data_dir, stamp, user_id, limit, site, lang,
-                    bool(exact), filt_key,
-                    _struct.pack(f"{len(qvec)}d",
-                                 *[float(x) for x in qvec]),
-                )
-        if memo_key is not None:
-            hit = self._plan_memo.get(memo_key)
-            if hit is not None:
-                self._plan_memo.move_to_end(memo_key)
-                self._plan_hits += 1
-                return hit
-            # distinct-text fast path: the candidate view + SQL template
-            # for this SHAPE (everything but the vector) is already built
-            # — skip the catalog reads, routing, filter compile, and all
-            # but one py4j call
-            df = self._serve_from_shape(memo_key[:8], qvec)
-            if df is not None:
-                self._shape_hits += 1
-                return self._memo_plan(memo_key, df)
-        # tenant-pruned scan: user_id predicate + derived partition-bucket
-        # predicate (PartitionFilters prune files, search.py:37 semantics)
-        points = self.catalog.read_for_user(self.index_name, user_id)
-        # match.text clauses on text-INDEXED fields route through the
-        # postings sidecar (whole-token semantics, Qdrant's indexed
-        # MatchText); the residual filter stays scan-stage
-        cand_ids, query_filter = self.catalog.route_text_clauses(
-            self.index_name, query_filter)
-        if cand_ids is not None:
-            # small candidate sets push down as an id IN predicate (row-
-            # group pruning on the id-sorted buckets); large ones stay a
-            # broadcast left-semi join (collections.restrict_to_ids)
-            points = self.catalog.restrict_to_ids(points, cand_ids)
-        pred = None
-        if site is not None:  # optional predicates (search.py:38-41)
-            pred = F.col("site") == F.lit(site)
-        if lang is not None:
-            lang_pred = F.col("lang") == F.lit(lang)
-            pred = lang_pred if pred is None else pred & lang_pred
-        extra = compile_filter(query_filter, id_col="id")
-        if extra is not None:
-            pred = extra if pred is None else pred & extra
-        meta = (meta0 or self.catalog.meta(self.index_name)
-                ) if not exact else None
-        if (meta is not None and (meta.ann_index or meta.quantization)
-                and cand_ids is None  # text-routed searches go exact over
-                # the (small) candidate set — the filtered-ANN fallback
-                and self.catalog._has_data(self.index_name)):
-            # empty collection falls through to the exact path below, which
-            # returns the reference's [] instead of a build error
-            qpred = F.col("user_id") == F.lit(user_id)
-            if pred is not None:
-                qpred = qpred & pred
-            if meta.ann_index:  # index for candidates beats codes-only scan
-                hits = self.catalog.search_ann(
-                    self.index_name, qvec, k=limit, predicate=qpred)
-            else:
-                hits = self.catalog.search_quantized(
-                    self.index_name, qvec, k=limit, predicate=qpred)
-            # re-attach the payload for the response shape: the hit set is
-            # k rows, so it broadcasts into one pruned base probe
-            payload = self.catalog.read_for_user(
-                self.index_name, user_id).select("id", "text_id", "text")
-            hits = (
-                payload.join(F.broadcast(hits), "id")
-                .orderBy(F.col("dist").asc(), F.col("id").asc())
-            )
-            return self._memo_plan(memo_key, search_response(hits))
-        # plain exact path: remember this SHAPE's candidate frame (the
-        # vector-independent prefix of the plan — tenant read, routed
-        # candidate restriction, compiled predicates, response-column
-        # projection) as a temp view + SQL template so the NEXT
-        # distinct-text request with the same shape skips construction
-        # entirely. Filter-before-projection keeps the view row-equal to
-        # knn_search(points, filters=pred).
-        if memo_key is not None:
-            cand = points if pred is None else points.filter(pred)
-            need = {"id", "text_id", "text", "embedding"}
-            if need <= set(cand.columns):
-                self._store_shape(memo_key[:8], cand.select(
-                    "id", "text_id", "text", "embedding"), limit)
-        hits = knn_search(points, qvec, k=limit, filters=pred, tiebreak="id")
-        return self._memo_plan(memo_key, search_response(hits))
+        /search is the plain dense /query body in the reference's
+        ``{id, string, score}`` projection: ``site``/``lang`` fold into
+        the filter document as ``match.value`` clauses (search.py:38-41),
+        and the request runs through :meth:`_query_df` — the same plan
+        memo, shape template, ANN route and text-index rewrite."""
+        must = [{"key": key, "match": {"value": v}}
+                for key, v in (("site", site), ("lang", lang))
+                if v is not None]
+        if must:
+            m = (query_filter or {}).get("must")
+            must += [m] if isinstance(m, dict) else list(m or [])
+            query_filter = dict(query_filter or {}, must=must)
+        body = {"query": {"text": text}, "limit": limit}
+        if query_filter:
+            body["filter"] = query_filter
+        if not exact:
+            # without a sidecar exact=False IS the exact scan: leave the
+            # body plain so it keeps the shape template (a /query body
+            # that spells params.exact=false keeps full routing)
+            meta = self._safe_meta()
+            if meta is not None and (meta.ann_index or meta.quantization):
+                body["params"] = {"exact": False}
+        return self._query_df(user_id, body, self._SEARCH_COLS)
 
-    # The distance expression is the EXACT SQL twin of
-    # functions.vector.l2_distance_to (same zip_with/aggregate fold, same
-    # casts) and the order/limit/projection mirror knn_search(tiebreak=
-    # "id") + search_response, so the templated path is bit-equal to the
-    # built path — parity-pinned in test_api.py. The vector rides as ONE
-    # from_json string constant (see _shape_memo comment above).
-    # The point id is carried as __pid so the outer ORDER BY cannot
-    # capture the `text_id AS id` OUTPUT alias (Spark resolves sort
-    # references against the projection's aliases first) — the tiebreak
-    # must be the POINT id, exactly like the built path, even for rows
-    # where text_id != id. `dist`/`__pid` are not output names, so both
-    # resolve to the child attributes (Spark adds missing sort columns
-    # and prunes them after the sort).
-    _SHAPE_SQL = """
-    SELECT text_id AS id, text AS string, dist AS score
-    FROM (
-      SELECT text_id, text, id AS __pid,
-             SQRT(aggregate(zip_with(CAST(embedding AS ARRAY<DOUBLE>),
-                  from_json('{{qjson}}', 'array<double>'),
-                  (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE),
-                  (acc, v) -> acc + v)) AS dist
-      FROM {view}
-    )
-    ORDER BY dist ASC, __pid ASC
-    LIMIT {k}
-    """
-
-    def _store_shape(self, shape_key: tuple, cand: DataFrame,
-                     k: int) -> None:
-        self._register_shape(
-            shape_key, cand, self._SHAPE_SQL.replace("{k}", str(int(k))))
+    # the reference's response shape (operators.knn.search_response) as
+    # SQL select items over a /query hit frame
+    _SEARCH_COLS = ("text_id AS id", "text AS string", "dist AS score")
 
     def _register_shape(self, shape_key: tuple, cand: DataFrame,
                         sql_template: str) -> None:
         """Register ``cand`` as this shape's temp view and memoize the
         per-request SQL (only ``{view}`` is formatted here; the
         ``{qjson}`` slot survives for ``_serve_from_shape`` to bind each
-        request's vector). Shared by the /search and /query templates —
-        one LRU, one eviction policy, superseded/evicted views dropped
-        rather than leaked in the session catalog."""
+        request's vector). One LRU, one eviction policy; superseded and
+        evicted views are dropped rather than leaked in the session
+        catalog."""
         prior = self._shape_memo.get(shape_key)
         if prior is not None:
             # re-store of a live shape (a non-finite-vector request falls
@@ -324,26 +209,32 @@ class VectorService:
             except Exception:  # pragma: no cover - already dropped
                 pass
 
-    # /query twin of _SHAPE_SQL for the TEMPLATE-ELIGIBLE subset: a plain
-    # dense kNN body (vector or {"text":...} query + filter/limit/offset/
-    # using/response selectors — the high-QPS production shape; prefetch/
-    # fusion/group_by/recommend/... keep full construction). The view
-    # holds the tenant read filtered by the REWRITTEN filter document
-    # (rewrite_text_filter is deterministic per data version, which rides
-    # in the shape key), so a distinct-text /query costs one spark.sql
-    # exactly like /search. Mirrors query_points' plain dense leg:
-    # knn_search(metric='l2', tiebreak='id') + offset paging + the
-    # _select_response projection ({keep} is baked at store time).
+    # The shape template of the plain dense /query subset (vector or
+    # {"text":...} query + filter/limit/offset/using/response selectors —
+    # the high-QPS shape /search is one of; prefetch/fusion/group_by/
+    # recommend/... keep full construction). The view holds the tenant
+    # read filtered by the REWRITTEN filter document (rewrite_text_filter
+    # is deterministic per data version, which rides in the shape key),
+    # so a distinct-text request costs one spark.sql. The distance is the
+    # EXACT SQL twin of functions.vector.l2_distance_to, and the order/
+    # offset/limit mirror query_points' plain dense leg (knn_search
+    # metric='l2', tiebreak='id'), so the template is bit-equal to the
+    # built path. {cols} is the response projection, baked at store time.
+    # The point id rides as __pid so the ORDER BY cannot capture an
+    # output alias (/search projects `text_id AS id`, and Spark resolves
+    # sort references against the projection's aliases first): the
+    # tiebreak is the POINT id even where text_id != id.
     _QSHAPE_SQL = """
-    SELECT {keep}
+    SELECT {cols}
     FROM (
-      SELECT *, SQRT(aggregate(zip_with(CAST({vcol} AS ARRAY<DOUBLE>),
+      SELECT *, id AS __pid,
+           SQRT(aggregate(zip_with(CAST({vcol} AS ARRAY<DOUBLE>),
            from_json('{{qjson}}', 'array<double>'),
            (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE),
            (acc, v) -> acc + v)) AS dist
       FROM {view}
     )
-    {where}ORDER BY dist ASC, id ASC
+    {where}ORDER BY dist ASC, __pid ASC
     LIMIT {k}{off}
     """
 
@@ -351,18 +242,9 @@ class VectorService:
                               "using", "with_payload", "with_vectors",
                               "score_threshold"})
 
-    def _query_dense_vec(self, body: dict):
-        """The embedded query vector of a template-eligible /query body,
-        else None (any other grammar branch, or a non-dense query)."""
-        if (not isinstance(body, dict) or set(body) - self._QSHAPE_KEYS
-                or "query" not in body):
-            return None
-        q = body["query"]
-        if isinstance(q, dict) and set(q) == {"nearest"}:
-            # the explicit NearestQuery spelling of the same plain dense
-            # body shares the template (an "mmr" sibling — or any other
-            # key — keeps full construction); scalar ids stay cold too
-            q = q["nearest"]
+    def _dense_vec(self, q):
+        """The vector of a dense query value — a ``{"text": ...}`` query
+        (embedded) or a flat numeric vector — else None."""
         if isinstance(q, dict) and set(q) == {"text"}:
             return mock_vector(q["text"], self.dim)
         if (isinstance(q, (list, tuple)) and q
@@ -373,10 +255,24 @@ class VectorService:
                 return None
         return None
 
-    def _query_shape_key(self, data_dir, stamp, user_id,
-                         body: dict) -> tuple | None:
+    def _query_dense_vec(self, body: dict):
+        """The query vector of a template-eligible /query body, else None
+        (any other grammar branch, or a non-dense query)."""
+        if (not isinstance(body, dict) or set(body) - self._QSHAPE_KEYS
+                or "query" not in body):
+            return None
+        q = body["query"]
+        if isinstance(q, dict) and set(q) == {"nearest"}:
+            # the explicit NearestQuery spelling of the same plain dense
+            # body shares the template (an "mmr" sibling — or any other
+            # key — keeps full construction); scalar ids stay cold too
+            q = q["nearest"]
+        return self._dense_vec(q)
+
+    def _query_shape_key(self, data_dir, stamp, user_id, body: dict,
+                         cols) -> tuple | None:
         """Everything about a template-eligible /query body EXCEPT the
-        query vector — the /query analog of the /search shape key.
+        query vector, plus the response projection ``cols``.
         Returns None for any slot value outside the canonical forms (the
         body keeps full construction): selector/using forms must be
         EXACT — a lax coercion here would collide distinct shapes under
@@ -416,7 +312,7 @@ class VectorService:
         except (TypeError, ValueError):
             return None
         return ("qshape", data_dir, stamp, user_id, using,
-                filt_key, k, off, wp_key, wv, thr)
+                filt_key, k, off, wp_key, wv, thr, cols)
 
     def _serve_from_shape(self, shape_key: tuple, qvec) -> DataFrame | None:
         import json as _json
@@ -642,13 +538,26 @@ class VectorService:
         take point ids / raw vectors, as in the operators. Returns
         JSON-ready hit dicts with vector columns dropped (Qdrant returns
         vectors only on request)."""
+        return [r.asDict(recursive=True)
+                for r in self._query_df(user_id, body).collect()]
+
+    def _query_df(self, user_id: int, body: dict,
+                  cols: tuple[str, ...] | None = None) -> DataFrame:
+        """The read path behind /query and /search: a /query ``body`` as
+        a lazy, response-shaped DataFrame. ``cols`` is an optional fixed
+        projection (SQL select items over the hit frame — /search asks
+        for ``_SEARCH_COLS``); None shapes the response by the body's
+        with_payload / with_vectors selectors. Three tiers, cheapest
+        first: the plan memo (an exact-repeat request), the shape
+        template (a plain dense body that differs only in its query
+        text/vector), and full construction."""
         import json as _json
 
         from vectordb_cloud_spark.query_api import query_points
 
-        # compiled-plan memo, the /search pattern: everything downstream is
-        # a deterministic function of (data versions, tenant, body) — the
-        # RAW body keys the memo (text embedding + filter rewrite are
+        # compiled-plan memo: everything downstream is a deterministic
+        # function of (data versions, tenant, body, projection) — the RAW
+        # body keys the memo (text embedding + filter rewrite are
         # deterministic), lookup collections' immutable data dirs ride in
         # the key so their writes invalidate too. A repeat body skips the
         # whole construction, including the filter-rewrite postings probe.
@@ -686,22 +595,21 @@ class VectorService:
                             break         # execution raises its own error
                 if extra is not None:
                     memo_key = ("query", data_dir, stamp, user_id,
-                                body_key, tuple(extra))
+                                body_key, tuple(extra), cols)
         qshape_key = None
         if memo_key is not None:
             hit = self._plan_memo.get(memo_key)
             if hit is not None:
                 self._plan_memo.move_to_end(memo_key)
                 self._plan_hits += 1
-                return [r.asDict(recursive=True) for r in hit.collect()]
-            # distinct-text fast path (the /search shape template, on
-            # /query's plain dense subset): a body differing only in its
-            # query vector/text reuses this shape's candidate view + SQL.
-            # A body carrying params:{exact:true} (or empty params) is
-            # exact-path identical to one without params — THIS engine's
-            # no-params default is an exact scan, so strip it before the
-            # shape checks, keying the shape on the NORMALIZED body.
-            # NOTE: Qdrant's own SearchParams default is exact=FALSE
+                return hit
+            # distinct-text fast path: a plain dense body differing only
+            # in its query vector/text reuses this shape's candidate view
+            # + SQL. A body carrying params:{exact:true} (or empty params)
+            # is exact-path identical to one without params — THIS
+            # engine's no-params default is an exact scan, so strip it
+            # before the shape checks, keying the shape on the NORMALIZED
+            # body. NOTE: Qdrant's own SearchParams default is exact=FALSE
             # (ANN); {"exact": false} must NOT join this benign set — it
             # requests ANN routing and keeps the full path (ADVICE r11/r12)
             tbody = body
@@ -711,39 +619,35 @@ class VectorService:
             qvec = self._query_dense_vec(tbody)
             if qvec is not None:
                 qshape_key = self._query_shape_key(
-                    data_dir, stamp, user_id, tbody)
+                    data_dir, stamp, user_id, tbody, cols)
             if qshape_key is not None:
                 df = self._serve_from_shape(qshape_key, qvec)
                 if df is not None:
                     self._shape_hits += 1
-                    self._memo_plan(memo_key, df)
-                    return [r.asDict(recursive=True) for r in df.collect()]
+                    return self._memo_plan(memo_key, df)
 
         # Qdrant params.exact=false: a plain dense body routes through the
-        # collection's ANN/quantized sidecar, exactly like /search's
-        # exact=False (with no sidecar configured it silently stays exact,
-        # as in Qdrant). Non-plain bodies (prefetch/fusion/sparse/...)
-        # keep the exact grammar path — Qdrant applies params per vector
-        # leg; here the universal endpoint supports the high-QPS plain
-        # shape, the one the sidecars exist for.
+        # collection's ANN/quantized sidecar (with no sidecar configured
+        # it silently stays exact, as in Qdrant). Non-plain bodies
+        # (prefetch/fusion/sparse/...) keep the exact grammar path —
+        # Qdrant applies params per vector leg; here the universal
+        # endpoint supports the high-QPS plain shape, the one the
+        # sidecars exist for.
         qparams = body.get("params")
         if (isinstance(qparams, dict)
                 and qparams.get("exact", True) is False):
-            served = self._query_ann(user_id, body, memo_key)
+            served = self._query_ann(user_id, body, cols)
             if served is not None:
-                return served
+                return self._memo_plan(memo_key, served)
 
         def _embed_text(q):
-            if isinstance(q, dict) and set(q) == {"text"}:
-                return mock_vector(q["text"], self.dim)
-            if (isinstance(q, dict) and "nearest" in q
-                    and isinstance(q["nearest"], dict)
-                    and set(q["nearest"]) == {"text"}):
-                # the explicit NearestQuery form embeds its text too (the
-                # mmr sibling, if any, rides through untouched)
-                return dict(q, nearest=mock_vector(q["nearest"]["text"],
-                                                   self.dim))
-            return q
+            # {"text": ...} queries — bare or as NearestQuery's "nearest"
+            # (an mmr sibling rides through) — embed through the service's
+            # embedder; other query values pass through
+            if isinstance(q, dict) and "nearest" in q:
+                return dict(q, nearest=_embed_text(q["nearest"]))
+            v = self._dense_vec(q)
+            return q if v is None else v
 
         def _translate(spec: dict) -> dict:
             out = dict(spec)
@@ -751,11 +655,12 @@ class VectorService:
                 out["query"] = _embed_text(out["query"])
             if out.get("filter"):
                 # text-INDEXED match.text clauses keep their whole-token
-                # index semantics on /query too (no indexed-vs-unindexed
-                # behavior flip between endpoints): routed clauses rewrite
-                # to has_id (postings-served) or match.tokens filter-DSL
-                # equivalents, which thread through fusion/prefetch filter
-                # semantics unchanged (collections.rewrite_text_filter)
+                # index semantics (no indexed-vs-unindexed behavior flip
+                # between endpoints): top-level must clauses rewrite to
+                # has_id (postings-served) when the match set is small,
+                # every other one to the match.tokens filter-DSL
+                # equivalent, which threads through fusion/prefetch
+                # filter semantics unchanged (rewrite_text_filter)
                 out["filter"] = self.catalog.rewrite_text_filter(
                     self.index_name, out["filter"])
             inner = out.get("prefetch")
@@ -800,12 +705,18 @@ class VectorService:
             lookup_from=example_src,
             score_threshold=body.get("score_threshold"),
         )
-        keep = self._select_response(
-            hits.columns,
-            with_vectors=bool(body.get("with_vectors", False)),
-            with_payload=body.get("with_payload", True),
-        )
-        shaped = hits.select(*keep)
+        if cols is None:
+            keep = self._select_response(
+                hits.columns,
+                with_vectors=bool(body.get("with_vectors", False)),
+                with_payload=body.get("with_payload", True),
+            )
+            shaped = hits.select(*keep)
+            sql_cols = [f"`{c}`" for c in keep]
+        else:
+            keep = []
+            shaped = hits.selectExpr(*cols)
+            sql_cols = list(cols)
         if qshape_key is not None and "dist" not in points.columns:
             # remember this shape's candidate frame (tenant read + the
             # REWRITTEN filter — body was _translate()d above) + rendered
@@ -829,7 +740,7 @@ class VectorService:
                 thr = body.get("score_threshold")
                 sql = (
                     self._QSHAPE_SQL
-                    .replace("{keep}", ", ".join(f"`{c}`" for c in keep))
+                    .replace("{cols}", ", ".join(sql_cols))
                     .replace("{vcol}", f"`{vcol}`")
                     .replace("{k}", str(int(body.get("limit", 10))))
                     .replace("{off}", f" OFFSET {off}" if off else "")
@@ -839,8 +750,7 @@ class VectorService:
                              if thr is not None else "")
                 )
                 self._register_shape(qshape_key, cand, sql)
-        self._memo_plan(memo_key, shaped)
-        return [r.asDict(recursive=True) for r in shaped.collect()]
+        return self._memo_plan(memo_key, shaped)
 
     # response-shaping: Qdrant's with_payload / with_vectors selectors.
     # id + score/rank columns always ride; payload columns follow
@@ -886,9 +796,10 @@ class VectorService:
         ]
 
     def _query_ann(self, user_id: int, body: dict,
-                   memo_key) -> list[dict] | None:
+                   cols: tuple[str, ...] | None) -> DataFrame | None:
         """Serve a ``params.exact=false`` /query body through the
-        collection's ANN or quantized sidecar. Returns None when the body
+        collection's ANN or quantized sidecar, shaped like ``_query_df``
+        shapes it (``cols`` or the selectors). Returns None when the body
         is not the supported plain-dense shape, no sidecar is configured,
         or the collection is empty — the caller falls through to the
         exact path (Qdrant's silent-exact behavior). ``with_vectors`` and
@@ -966,12 +877,11 @@ class VectorService:
         if off:
             joined = joined.offset(off)
         joined = joined.limit(k)
-        keep = self._select_response(
+        if cols is not None:
+            return joined.selectExpr(*cols)
+        return joined.select(*self._select_response(
             joined.columns, with_vectors=False,
-            with_payload=core.get("with_payload", True))
-        shaped = joined.select(*keep)
-        self._memo_plan(memo_key, shaped)
-        return [r.asDict(recursive=True) for r in shaped.collect()]
+            with_payload=core.get("with_payload", True)))
 
     def _query_ann_batch(self, user_id: int, entries):
         """Shared-sidecar service for >=2 ANN-batchable /query bodies
@@ -1134,14 +1044,6 @@ class VectorService:
         from vectordb_cloud_spark.errors import PointNotFoundError
         from vectordb_cloud_spark.operators.knn import knn_batch
 
-        def _dense_vec(q):
-            if isinstance(q, dict) and set(q) == {"text"}:
-                return mock_vector(q["text"], self.dim)
-            if (isinstance(q, (list, tuple)) and q
-                    and not isinstance(q[0], (list, tuple))):
-                return [float(x) for x in q]
-            return None
-
         def _is_id(x):
             return isinstance(x, int) and not isinstance(x, bool)
 
@@ -1174,12 +1076,12 @@ class VectorService:
                 # would mean all-but-|k| rows while per-request returns
                 # empty — dispatch per-request so both paths agree
                 return None
+            v = self._query_dense_vec(b)
+            if v is not None:
+                return ("dense", v, [], k)
             q = b.get("query")
             if isinstance(q, dict) and set(q) == {"nearest"}:
                 q = q["nearest"]
-            v = _dense_vec(q)
-            if v is not None:
-                return ("dense", v, [], k)
             if _is_id(q):
                 return ("by_id", q, [q], k)
             if isinstance(q, dict) and set(q) == {"recommend"}:
@@ -1332,32 +1234,3 @@ class VectorService:
         meta = self.catalog.drop_payload_index(self.index_name, field)
         return {"result": {"status": "completed"},
                 "payload_indexes": dict(meta.payload_indexes or {})}
-
-    # 422 validation contract (/root/reference/app.py:28-33): coercion
-    # failures return {status_code: 10422, message, data: None} instead of
-    # raising — the FastAPI handler's observable shape.
-    @staticmethod
-    def _validation_error(message: str) -> dict:
-        return {"status_code": 10422, "message": message, "data": None}
-
-    def handle_search_request(self, params: dict):
-        """Endpoint-style dispatch: coerce/validate query params like the
-        FastAPI layer, 10422 envelope on failure, hits payload on success."""
-        try:
-            user_id = int(params["user_id"])
-            text = str(params["text"])
-            limit = int(params.get("limit", 5))
-            if limit <= 0:
-                raise ValueError("limit must be positive")
-        except (KeyError, TypeError, ValueError) as exc:
-            return self._validation_error(f"Validation error: {exc}")
-        site = params.get("site")
-        lang = params.get("lang")
-        hits = self.search(user_id, text, limit, site, lang)
-        return {
-            "status_code": 200,
-            "data": [
-                {"id": r["id"], "string": r["string"], "score": r["score"]}
-                for r in hits.collect()
-            ],
-        }

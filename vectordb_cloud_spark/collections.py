@@ -1171,54 +1171,6 @@ class CollectionCatalog:
         )
         return cand
 
-    def route_text_clauses(self, name: str,
-                           query_filter: dict | None) -> tuple:
-        """Split a filter DSL document into (candidate_ids | None,
-        residual_filter): top-level ``must`` clauses of the form
-        ``{"key": f, "match": {"text": ...}}`` where ``f`` carries a
-        ``"text"`` payload index are served by the postings sidecar
-        (whole-token semantics — Qdrant's documented behavior for MatchText
-        on an INDEXED field); everything else stays a scan-stage predicate.
-        Multiple routed clauses intersect. Indexed should/must_not/nested
-        text clauses can't use a prefilter (their boolean context isn't a
-        candidate cut), but they do NOT fall back to substring semantics:
-        the residual document passes through ``rewrite_text_filter``, which
-        turns them into whole-token ``match.tokens`` scan clauses — one
-        MatchText semantics per field in every boolean position."""
-        if not query_filter:
-            return None, query_filter
-        meta = self.meta(self.resolve(name))
-        indexed = {f: s for f, s in (meta.payload_indexes or {}).items()
-                   if s in TEXT_INDEX_SCHEMAS}
-        if not indexed:
-            return None, query_filter
-        must = query_filter.get("must")
-        must = ([must] if isinstance(must, dict) else list(must)) if must else []
-        routed, kept = [], []
-        for c in must:
-            if (isinstance(c, dict) and c.get("key") in indexed
-                    and isinstance(c.get("match"), dict)
-                    and "text" in c["match"]
-                    and self._tokenize_query(indexed[c["key"]],
-                                             str(c["match"]["text"]))):
-                routed.append((c["key"], str(c["match"]["text"])))
-            else:
-                kept.append(c)
-        residual = {k: v for k, v in query_filter.items() if k != "must"}
-        if kept:
-            residual["must"] = kept
-        # non-must indexed match.text -> match.tokens (no probe; the
-        # residual's must holds only unroutable clauses, so this never
-        # double-probes)
-        residual = self.rewrite_text_filter(name, residual or None)
-        if not routed:
-            return None, residual
-        cand = None
-        for field, text in routed:
-            ids = self.text_match_ids(name, field, text)
-            cand = ids if cand is None else cand.join(ids, "id", "inner")
-        return cand, (residual or None)
-
     # candidate sets at or below this size restrict the base scan with a
     # driver-side IN predicate instead of a semi join: the data layout is
     # id-sorted within buckets (upsert/_swap_buckets), so parquet min/max
@@ -1243,13 +1195,12 @@ class CollectionCatalog:
 
     def rewrite_text_filter(self, name: str,
                             query_filter: dict | None) -> dict | None:
-        """Rewrite top-level ``must`` ``match.text`` clauses on
-        text-INDEXED fields into index-equivalent filter-DSL clauses —
-        for callers that thread a FILTER DOCUMENT through richer
-        semantics (the universal query API: fusion applies the top-level
-        filter to merged candidates, prefetch legs carry their own
-        filters) and therefore cannot take a candidate frame the way
-        ``VectorService.search`` does.
+        """Rewrite ``match.text`` clauses on text-INDEXED fields into
+        index-equivalent filter-DSL clauses — the one way the service's
+        read path (/query and /search) serves text-indexed filters. A
+        filter DOCUMENT threads through the universal query API's richer
+        semantics unchanged (fusion applies the top-level filter to
+        merged candidates, prefetch legs carry their own filters).
 
         A TOP-LEVEL-MUST routed clause whose postings AND yields
         ≤ _ID_PUSHDOWN_MAX ids becomes ``{"has_id": [...]}`` (the postings

@@ -20,8 +20,8 @@ Contract notes (all cited against /root/reference/app.py):
 - ``/insert`` requires ALL of id, user_id, text, site, lang (:36-43 uses
   required ``Query(...)`` for each) and returns 1/0 with a bare-except 0
   (:46-55).
-- ``/search`` requires user_id, text, limit; site/lang optional (:58-65);
-  returns ``[{id, string, score}]`` (:73-75).
+- ``/search`` requires user_id, text, limit (a positive int); site/lang
+  optional (:58-65); returns ``[{id, string, score}]`` (:73-75).
 - the three removes return 1/0; /remove_all_by_word implements the INTENDED
   semantics (the reference's scroll mis-unpack at :102 made it always 0 —
   SURVEY.md §2.7 D2).
@@ -100,11 +100,18 @@ def _routes(service: VectorService) -> dict[str, Callable[[dict[str, str]], Any]
             ("limit", int, _MISSING), ("site", str, None), ("lang", str, None),
             ("filter", str, None),
         ])
-        hits = service.search(p["user_id"], p["text"], p["limit"], p["site"],
-                              p["lang"], query_filter=_parse_filter(p["filter"]))
+        if p["limit"] <= 0:
+            raise ValidationError("query.limit: must be positive")
+        try:
+            hits = service.search(
+                p["user_id"], p["text"], p["limit"], p["site"], p["lang"],
+                query_filter=_parse_filter(p["filter"])).collect()
+        except (ValueError, KeyError, TypeError) as exc:
+            # a malformed filter document is a client error, as on /query
+            raise ValidationError(f"bad search request: {exc}") from exc
         return [
             {"id": r["id"], "string": r["string"], "score": r["score"]}
-            for r in hits.collect()
+            for r in hits
         ]
 
     def count(params):

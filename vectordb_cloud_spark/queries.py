@@ -3686,18 +3686,19 @@ def text_routed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-text ROUTED search through the live service (VERDICT r9 #1a):
     ``VectorService.search`` with a filter carrying a ``match.text`` clause
     on the text-indexed body field plus a residual ``lang`` clause — the
-    match.text clause auto-routes through the token-postings sidecar
-    (``route_text_clauses`` → ``text_match_ids``: pure-Python xxhash64
+    match.text clause is served by the token-postings sidecar
+    (``rewrite_text_filter`` → ``text_match_ids``: pure-Python xxhash64
     bucket routing, postings AND, whole-token Qdrant word-tokenizer
-    semantics), the residual clause stays a scan-stage predicate, the
-    tenant filter prunes to the user's bucket, and the exact kNN runs over
-    the candidate set only (the selective-filter fallback). The oracle
+    semantics; the matching ids become one ``has_id`` clause), the
+    residual clause stays a scan-stage predicate, the tenant filter
+    prunes to the user's bucket, and the exact kNN runs over the
+    candidate set only (the selective-filter fallback). The oracle
     replays postings AND + residual + tenant + kNN + the reference's
     {id, string, score} response from the materialized sidecar/data files.
 
     r11 in-place upgrade (newest-code-least-proof rotation): a FIRST
     search with a DIFFERENT query text warms the shape-keyed serving
-    template (api.py ``_store_shape`` — the r11 distinct-text fast path),
+    template (api.py ``_QSHAPE_SQL`` — the r11 distinct-text fast path),
     so the measured request is served from the template (ONE spark.sql
     with the from_json vector constant), not from full plan construction
     — the oracle hash now gates the templated SQL's results end to end.
