@@ -28,6 +28,32 @@ def test_lsh_returns_k_and_overlaps_exact(embeddings, qvec):
     assert r >= 0.3  # loose floor for random 64-dim data with 4 tables
 
 
+def test_lsh_self_join_pairs_equals_mllib_similarity_join(embeddings):
+    """The banded self-join is MLlib's approxSimilarityJoin(x, x, t)
+    restricted to a < b: same pair set, same distances."""
+    from pyspark.ml.functions import array_to_vector
+
+    from vectordb_cloud_spark.operators.ann import lsh_self_join_pairs
+
+    pts = embeddings.limit(300)
+    model, _ = lsh_fit(pts, bucket_length=4.0, num_hash_tables=4)
+    got = {(r["id_a"], r["id_b"]): r["dist"]
+           for r in lsh_self_join_pairs(model, pts, threshold=2.0).collect()}
+    x = pts.withColumn("__features", array_to_vector(
+        F.col("embedding").cast("array<double>")))
+    want = {
+        (r["a"], r["b"]): r["dist"]
+        for r in model.approxSimilarityJoin(x, x, 2.0, distCol="dist")
+        .select(F.col("datasetA.vec_id").alias("a"),
+                F.col("datasetB.vec_id").alias("b"), "dist")
+        .filter(F.col("a") < F.col("b"))
+        .collect()
+    }
+    assert want
+    assert got.keys() == want.keys()
+    assert max(abs(got[k] - want[k]) for k in want) <= 1e-12
+
+
 def test_ivf_full_probe_equals_exact(embeddings, qvec):
     centers, assigned = ivf_build(embeddings, k_centroids=8)
     assigned = assigned.cache()

@@ -245,7 +245,7 @@ def test_embedding_near_dup_lsh_compound_buckets_recall_and_pruning(spark, embed
 
     # candidate-space selectivity: distinct colliding pairs << n^2/2
     buckets = lsh_bucket_columns(
-        F.col("embedding"), lsh_planes(model), bl, projections_per_table=g
+        "embedding", lsh_planes(model), bl, projections_per_table=g
     )
     banded = aug.select("vec_id", F.posexplode(F.array(*buckets)).alias("t", "bk"))
     l, r = banded.alias("l"), banded.alias("r")

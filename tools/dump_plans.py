@@ -34,8 +34,10 @@ SHOWCASE = {
         "(orders-lineitem) shuffles."
     ),
     "embedding_near_dup_lsh": (
-        "LSH-bucket-blocked similarity self-join: equi-join on the bucket "
-        "key; norms precomputed per row, one dot-product fold per pair."
+        "LSH-bucket-blocked similarity self-join (dedup.blocked_self_pairs): "
+        "equi-join on the bucket key; norms precomputed per row, one "
+        "dot-product fold per pair. The verified pairs are checkpointed "
+        "inside the call, so the plan shown is the checkpoint scan."
     ),
     "sessionize_users": (
         "Sessionization: ONE exchange on user_id shared by both window "

@@ -222,13 +222,13 @@ def hashed_tfidf_embed(docs, id_col: str = "doc_id", text_col: str = "text",
     Returns (id_col, embedding: array<float>) — plug-compatible with every
     kNN/ANN/near-dup operator in the package.
     """
-    from vectordb_cloud_spark.operators.dedup import _parallelize
+    from vectordb_cloud_spark.session import parallelize_narrow
 
     n_docs = docs.count()  # one scalar; the IDF needs the corpus size
     # fan the tokenize/hash map out (r14): a single-file corpus scans as
     # one task and the whole embed ran single-threaded; no-op on
     # multi-file tables at scale
-    docs = _parallelize(docs)
+    docs = parallelize_narrow(docs)
     terms = (
         docs.select(
             F.col(id_col),

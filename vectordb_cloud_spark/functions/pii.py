@@ -142,10 +142,10 @@ def scrub_corpus(docs, text_col: str = "text", out_col: str | None = None,
     quality/lang filtering without an extra pass. The input is fanned out
     first (r14): the regex battery is the whole cost and a single-file
     corpus otherwise runs it on one task; a no-op on multi-file tables."""
-    from vectordb_cloud_spark.operators.dedup import _parallelize
+    from vectordb_cloud_spark.session import parallelize_narrow
 
     out_col = out_col or text_col
-    return _parallelize(docs).withColumn(
+    return parallelize_narrow(docs).withColumn(
         "__pii", pii_counts(text_col)
     ).withColumn(
         out_col, redact_pii(text_col, kinds=kinds, token=token)

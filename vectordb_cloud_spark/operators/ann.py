@@ -59,15 +59,6 @@ def lsh_knn(model, points: DataFrame, query_vector: list[float], k: int = 5,
     return hits.drop("__features", "__hashes")
 
 
-def lsh_similarity_join(model, a: DataFrame, b: DataFrame, threshold: float,
-                        vector_col: str = "embedding") -> DataFrame:
-    """All-pairs (a, b) with L2 distance <= threshold, via LSH bucket join —
-    the distributed substitute for an O(n²) similarity join."""
-    ta = _to_vector_col(a, vector_col, "__features")
-    tb = _to_vector_col(b, vector_col, "__features")
-    return model.approxSimilarityJoin(ta, tb, threshold, distCol="dist")
-
-
 def lsh_planes(model) -> list[list[float]]:
     """Extract a fitted BucketedRandomProjectionLSH model's random unit
     vectors (data-independent, seeded) as plain Python lists — the planes
@@ -83,7 +74,7 @@ def lsh_planes(model) -> list[list[float]]:
     return cached
 
 
-def lsh_bucket_columns(vec, planes: list[list[float]], bucket_length: float,
+def lsh_bucket_columns(vec: str, planes: list[list[float]], bucket_length: float,
                        projections_per_table: int = 1):
     """MLlib-BRP-identical bucket ids as JVM expressions:
     ``floor(dot(vec, plane) / bucketLength)``. Sequential fold in element
@@ -107,22 +98,9 @@ def lsh_bucket_columns(vec, planes: list[list[float]], bucket_length: float,
     # measured). Same expression tree after parsing — zip_with/aggregate
     # fold in element order, floats rendered by repr (exact round-trip),
     # so bucket boundaries stay bit-identical to MLlib and the oracle.
-    if isinstance(vec, str):
-        c = f"`{vec}`"
-    else:
-        # Column input (legacy callers/tests): render through its name.
-        # Only a strict identifier qualifies for the parsed-SQL fast path
-        # (ADVICE r14: an isalnum check let non-reference Columns whose
-        # rendering happens to be alphanumeric — e.g. lit(5) -> '5' — be
-        # re-rendered as a backticked identifier, losing the expression);
-        # anything else keeps the Column-builder path.
-        import re
-
-        c = str(vec._jc.toString())  # noqa: SLF001 - name of a plain column ref
-        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", c):
-            return _lsh_bucket_columns_builder(
-                vec, planes, bucket_length, projections_per_table)
-        c = f"`{c}`"
+    if not isinstance(vec, str):
+        raise TypeError(f"vec must be a column name, not {type(vec).__name__}")
+    c = f"`{vec}`"
     floors = []
     for u in planes:
         arr = "array(" + ",".join(f"{float(x)!r}D" for x in u) + ")"
@@ -139,33 +117,9 @@ def lsh_bucket_columns(vec, planes: list[list[float]], bucket_length: float,
     ]
 
 
-def _lsh_bucket_columns_builder(vec, planes: list[list[float]],
-                                bucket_length: float,
-                                projections_per_table: int = 1):
-    """Column-builder fallback for non-column ``vec`` expressions —
-    identical arithmetic to the parsed-SQL fast path above."""
-    g = projections_per_table
-    floors = []
-    for u in planes:
-        dot = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(float(x)) for x in u]),
-                       lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        floors.append(F.floor(dot / F.lit(float(bucket_length))).cast("long"))
-    if g == 1:
-        return floors
-    return [
-        F.concat_ws(":", *[f.cast("string") for f in floors[t * g:(t + 1) * g]])
-        for t in range(len(planes) // g)
-    ]
-
-
 def lsh_self_join_pairs(model, points: DataFrame, threshold: float,
                         id_col: str = "vec_id",
                         vector_col: str = "embedding",
-                        eager: bool = False,
                         projections_per_table: int = 1) -> DataFrame:
     """Self similarity join returning unordered pairs (id_a < id_b, dist).
 
@@ -175,57 +129,32 @@ def lsh_self_join_pairs(model, points: DataFrame, threshold: float,
     (id, table, bucket) self equi-join carries ``l.id < r.id`` in the join
     condition, so mirror pairs and self-pairs never materialize — MLlib's
     two-sided explode join computes a distance for every ordered pair and
-    filters after (VERDICT r3 "What's wrong" #3). The join ships only skinny
-    (id, table, bucket) rows; vectors are joined back per surviving
-    candidate, exactly like operators/dedup.py:embedding_near_dup_lsh.
+    filters after (VERDICT r3 "What's wrong" #3). The join is
+    ``dedup.blocked_self_pairs``: it ships only skinny (id, table, bucket)
+    rows, joins vectors back per surviving candidate and returns the
+    verified pairs materialised.
 
     The model's hyperplanes are folded in as LITERALS and the buckets
-    computed with ``lsh_bucket_columns`` — one whole-stage-codegen scan per
-    side, no MLlib transform, no caching (the r5 cache contract existed to
-    amortize the transform; with expression-side hashing a re-scan is just
-    a columnar projection, so nothing needs pinning). ``eager=True`` still
-    materializes the result via ``localCheckpoint`` for serving paths that
-    reuse the pair set many times.
+    computed with ``lsh_bucket_columns`` — one whole-stage-codegen scan, no
+    MLlib transform.
     """
-    from vectordb_cloud_spark.functions.vector import l2_distance
+    from vectordb_cloud_spark.operators.dedup import blocked_self_pairs
 
-    planes = lsh_planes(model)
-    bucket_length = float(model.getBucketLength())
-    # materialize (id, vec) once per call (r15 — the embedding_near_dup_lsh
-    # treatment): the frame feeds the banded source and BOTH verify-join
-    # sides, each of which otherwise re-ran the input lineage
-    pts = points.select(
+    side = points.select(
         F.col(id_col).alias("id"),
         F.col(vector_col).cast("array<double>").alias("vec"),
-    ).localCheckpoint()
-    buckets = lsh_bucket_columns("vec", planes, bucket_length,
+    )
+    buckets = lsh_bucket_columns("vec", lsh_planes(model),
+                                 float(model.getBucketLength()),
                                  projections_per_table)
-    # materialized once per call (r14) so the self-join's two sides don't
-    # compute + codegen-compile the plane expressions twice — skinny
-    # (id, table, bucket) rows, recomputed fresh on every call
-    banded = pts.select(
-        "id", F.posexplode(F.array(*buckets)).alias("table", "bucket")
-    ).localCheckpoint()
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(r, (F.col("l.table") == F.col("r.table"))
-               & (F.col("l.bucket") == F.col("r.bucket"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    side = pts.select("id", "vec")
-    pairs = (
-        cand.join(side.select(F.col("id").alias("id_a"), F.col("vec").alias("va")), "id_a")
-        .join(side.select(F.col("id").alias("id_b"), F.col("vec").alias("vb")), "id_b")
-        .withColumn("dist", l2_distance(F.col("va"), F.col("vb")))
-    )
+    banded = side.select("id", F.posexplode(F.array(*buckets)).alias("band", "bucket"))
     # strict < matches MLlib approxSimilarityJoin's keyDistance < threshold
     # filter exactly (ADVICE r4): boundary-distance pairs are excluded.
-    out = pairs.filter(F.col("dist") < threshold).select("id_a", "id_b", "dist")
-    if eager:
-        out = out.localCheckpoint(eager=True)
-    return out
+    return blocked_self_pairs(banded, side, lambda pairs: (
+        pairs.withColumn("dist", l2_distance(F.col("vec_a"), F.col("vec_b")))
+        .filter(F.col("dist") < threshold)
+        .select("id_a", "id_b", "dist")
+    ))
 
 
 # ---------------------------------------------------------------------------

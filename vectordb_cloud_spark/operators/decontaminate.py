@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_cloud_spark.functions.text import ngram_shingles
+from vectordb_cloud_spark.operators.dedup import _minhash
 
 
 def _gram_hashes(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -115,41 +116,9 @@ def find_contaminated_fuzzy(
         # would inflate to short_train x short_eval pairs first (ADVICE r6)
         # signatures derive from the SAME shingle arrays the verify stage
         # uses (one tokenize+shingle pass per side, not two — the multi-TB
-        # train scan is the dominant cost); the minhash math matches
-        # dedup.minhash_signatures' xxhash64 form exactly
-        sigs = shingles.select(
-            F.col(f"{side}_id").alias("doc_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(
-                    F.transform(F.col(f"{side}_sh"),
-                                lambda sh: F.xxhash64(sh, i))
-                ),
-            ).alias("signature"),
-        )
-        rows_per_band = num_hashes // bands
-        banded = sigs.select(
-            F.col("doc_id").alias(f"{side}_id"),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                F.transform(
-                                    F.slice(F.col("signature"),
-                                            b * rows_per_band + 1,
-                                            rows_per_band),
-                                    lambda x: x.cast("string"),
-                                ),
-                            )
-                        ).alias("bucket"),
-                    ),
-                )
-            ).alias("bb"),
-        ).select(f"{side}_id", "bb.band", "bb.bucket")
+        # train scan is the dominant cost)
+        sigs, keys = _minhash(shingles, f"{side}_sh", num_hashes, bands)
+        banded = sigs.select(f"{side}_id", F.posexplode(keys).alias("band", "bucket"))
         return shingles, banded
 
     t_sh, t_banded = _prep(train, train_id, train_text, "t")

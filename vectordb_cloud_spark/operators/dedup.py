@@ -7,7 +7,14 @@ training-data ops (BASELINE.json). All candidate generation is blocked
 an O(n²) cross product: at 100 TB the only all-pairs work happens inside
 buckets whose expected size is constant.
 
+Every banded near-dup join — MinHash, SimHash, embedding LSH here and the
+L2 LSH self-join in ``ann.lsh_self_join_pairs`` — is one call of
+``blocked_self_pairs``: the caller supplies the (id, band, bucket) rows, the
+per-id side columns and the verify step; the primitive owns the candidate
+join, the join-backs and the one materialisation decision.
+
 - exact_dedup          — md5(normalized text) group-by
+- blocked_self_pairs   — banded candidate self-join -> verify (shared primitive)
 - minhash_signatures   — word-shingle MinHash via per-seed xxhash64 (JVM-side)
 - minhash_lsh_pairs    — banded LSH candidate pairs + exact Jaccard verify
 - simhash64            — 64-bit SimHash; near-dup = small hamming distance
@@ -23,20 +30,10 @@ buckets whose expected size is constant.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from vectordb_cloud_spark.functions.text import doc_fingerprint, ngram_shingles
-from vectordb_cloud_spark.functions.vector import cosine_similarity
-
-
-def _parallelize(df: DataFrame) -> DataFrame:
-    """Fan a narrow input out before compute-heavy per-row stages — the
-    shared helper now lives in session.py (``parallelize_narrow``,
-    centralized per ADVICE r14); this alias keeps the long-standing
-    operator-local name importable."""
-    from vectordb_cloud_spark.session import parallelize_narrow
-
-    return parallelize_narrow(df)
+from vectordb_cloud_spark.session import parallelize_narrow
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -62,6 +59,46 @@ def dedup_keep_first(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     return w_fp.join(keep, on=["__fp", id_col], how="inner").drop("__fp")
 
 
+def blocked_self_pairs(banded: DataFrame, side: DataFrame, verify) -> DataFrame:
+    """The blocked near-dup self-join every banded generator shares.
+
+    ``banded`` holds ``(id, band, bucket)`` rows, ``side`` holds
+    ``(id, *cols)``. Ids sharing a (band, bucket) become candidates through
+    one equi-join carrying ``l.id < r.id`` (no mirror or self pairs, and the
+    shuffle moves skinny rows only); duplicate candidates from several shared
+    bands collapse; ``side`` is joined back twice as ``<col>_a`` /
+    ``<col>_b``; ``verify`` maps that frame to the output pairs.
+
+    Materialisation: ``side`` (read by the band source and both join-backs)
+    and ``banded`` (both sides of the self-join) are cached for the duration
+    of this call only. The verified pairs — the only result, and small next
+    to the corpus — come back through ``localCheckpoint(eager=True)``, after
+    which both pins are released, so nothing corpus-sized outlives the call.
+    """
+    side = side.cache()
+    banded = banded.cache()
+    try:
+        l, r = banded.alias("l"), banded.alias("r")
+        pairs = (
+            l.join(r, (F.col("l.band") == F.col("r.band"))
+                   & (F.col("l.bucket") == F.col("r.bucket"))
+                   & (F.col("l.id") < F.col("r.id")))
+            .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        cols = [c for c in side.columns if c != "id"]
+        for s in ("a", "b"):
+            pairs = pairs.join(side.select(
+                F.col("id").alias(f"id_{s}"),
+                *[F.col(c).alias(f"{c}_{s}") for c in cols],
+            ), f"id_{s}")
+        return verify(pairs).localCheckpoint(eager=True)
+    finally:
+        # dependents first, so releasing ``side`` has nothing to re-plan
+        banded.unpersist()
+        side.unpersist()
+
+
 # Affine MinHash permutations for hash_fn='md5_60': h_i(s) = (a_i * m(s) +
 # b_i) mod P with m(s) the top 32 bits of md5(s). Seeded so Spark and the
 # DuckDB oracle inline the SAME constants. a_i < 2^27 keeps a*m + b < 2^63
@@ -76,6 +113,53 @@ def minhash_affine_params(num_hashes: int, seed: int = 42) -> list[tuple[int, in
         (rng.randrange(1, 1 << 27), rng.randrange(0, MINHASH_P))
         for _ in range(num_hashes)
     ]
+
+
+def _minhash(df: DataFrame, shingles: str, num_hashes: int, bands: int = 1,
+             hash_fn: str = "xxhash64") -> tuple[DataFrame, Column]:
+    """``df`` plus a ``signature`` column — ``num_hashes`` MinHash values
+    over the distinct-shingle array column ``shingles`` — and the column of
+    its ``bands`` band keys (one per band of ``num_hashes // bands`` rows).
+
+    ``hash_fn='xxhash64'``: hash_i(s) = xxhash64(s, i), band key =
+    xxhash64 of the band's joined values. ``hash_fn='md5_60'``: affine
+    permutations over a 32-bit md5 prefix (minhash_affine_params) and the
+    band's joined value string as its own key — every step has a DuckDB
+    twin. Both are one shingle-hash pass + cheap arithmetic, JVM-side; the
+    keys are returned as a column (not added to ``df``) so the band explode
+    reads the signature instead of re-deriving it per band."""
+    rows_per_band = num_hashes // bands
+    if hash_fn == "xxhash64":
+        sig_col = F.transform(
+            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+            lambda i: F.array_min(F.transform(F.col(shingles), lambda s: F.xxhash64(s, i))),
+        )
+        bucket_of = F.xxhash64
+    elif hash_fn == "md5_60":
+        # hash each shingle ONCE (m), then num_hashes cheap affine maps
+        df = df.withColumn("__m", F.transform(
+            F.col(shingles),
+            lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
+        ))
+        # one parsed SQL expression for the whole signature (r14): the
+        # Column-builder form marshalled a transform+lambda chain per
+        # permutation through py4j (~1.1s of driver-side plan construction
+        # at 32 hashes). Identical tree after parsing: a < 2^27 and m is a
+        # 32-bit value, so m*a + b < 2^63 — no overflow either way.
+        sig_col = F.expr("array(" + ",".join(
+            f"array_min(transform(__m, m -> (m * {a}L + {b}L) % {MINHASH_P}L))"
+            for a, b in minhash_affine_params(num_hashes)) + ")")
+        bucket_of = lambda joined: joined  # noqa: E731  (string key, no re-hash)
+    else:
+        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    keys = F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: bucket_of(F.concat_ws(",", F.transform(
+            F.slice("signature", b * rows_per_band + 1, rows_per_band),
+            lambda v: v.cast("string"),
+        ))),
+    )
+    return df.withColumn("signature", sig_col), keys
 
 
 def minhash_signatures(
@@ -94,11 +178,8 @@ def minhash_signatures(
     shingled = docs.select(
         F.col(id_col), F.array_distinct(ngram_shingles(text_col, shingle_n)).alias("__sh")
     )
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(F.col("__sh"), lambda s: F.xxhash64(s, i))),
-    )
-    return shingled.select(F.col(id_col), sig.alias("signature"))
+    sig, _ = _minhash(shingled, "__sh", num_hashes)
+    return sig.select(F.col(id_col), "signature")
 
 
 def minhash_lsh_pairs(
@@ -114,93 +195,30 @@ def minhash_lsh_pairs(
     """Near-duplicate pairs via banded MinHash-LSH with exact-Jaccard verify.
 
     shingle -> minhash -> split signature into ``bands`` bands -> bucket =
-    hash(band values) -> equi-self-join on (band, bucket) -> distinct
-    candidate pairs -> exact Jaccard on the shingle sets -> threshold.
+    hash(band values) -> blocked_self_pairs on (band, bucket) -> exact
+    Jaccard on the shingle sets -> threshold.
 
     The self-join shuffles on the bucket key only; candidates are verified
-    with ``array_intersect``/``array_union`` — no cross product anywhere.
+    with ``array_intersect`` — no cross product anywhere.
 
-    ``hash_fn='xxhash64'`` (default): seeded xxhash64 per permutation, the
-    fastest production path. ``hash_fn='md5_60'``: affine permutations over
-    a 32-bit md5 prefix (minhash_affine_params) and the band's joined value
-    string as its own bucket key — every step has a DuckDB twin, so the
-    registry query is fully oracle-checkable. Both are one shingle-hash pass
-    + cheap arithmetic, JVM-side."""
-    rows_per_band = num_hashes // bands
-    docs = _parallelize(docs)
-    shingled = docs.select(
+    ``hash_fn='xxhash64'`` (default) is the fastest production path;
+    ``hash_fn='md5_60'`` has a DuckDB twin for every step (see _minhash), so
+    the registry query is fully oracle-checkable."""
+    side = parallelize_narrow(docs).select(
         F.col(id_col).alias("id"),
-        F.array_distinct(ngram_shingles(text_col, shingle_n)).alias("shingles"),
-    ).cache()  # shared by the band join (×2 sides) and the verify join (×2)
-    if hash_fn == "xxhash64":
-        sig_col = F.transform(
-            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-            lambda i: F.array_min(F.transform(F.col("shingles"), lambda s: F.xxhash64(s, i))),
-        )
-        bucket_of = lambda joined: F.xxhash64(joined)  # noqa: E731
-        base = shingled
-    elif hash_fn == "md5_60":
-        ab = minhash_affine_params(num_hashes)
-        # hash each shingle ONCE (m), then num_hashes cheap affine maps
-        base = shingled.withColumn(
-            "__m",
-            F.transform(
-                F.col("shingles"),
-                lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-            ),
-        )
-        # one parsed SQL expression for the whole signature (r14): the
-        # Column-builder form marshalled a transform+lambda chain per
-        # permutation through py4j (~1.1s of driver-side plan construction
-        # at 32 hashes). Identical tree after parsing: a < 2^27 and m is a
-        # 32-bit value, so m*a + b < 2^63 — no overflow either way.
-        sig_col = F.expr("array(" + ",".join(
-            f"array_min(transform(__m, m -> (m * {a}L + {b}L) % {MINHASH_P}L))"
-            for a, b in ab) + ")")
-        bucket_of = lambda joined: joined  # noqa: E731  (string key, no re-hash)
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    sig = base.withColumn("signature", sig_col)
+        F.array_distinct(ngram_shingles(text_col, shingle_n)).alias("sh"),
+    )
+    sig, keys = _minhash(side, "sh", num_hashes, bands, hash_fn)
     # (id, band, bucket) only — the band join and candidate dedup shuffle
     # skinny rows, never the shingle arrays
-    banded = sig.select(
-        "id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: bucket_of(
-                    F.concat_ws(",", F.transform(
-                        F.slice("signature", b * rows_per_band + 1, rows_per_band),
-                        lambda v: v.cast("string"),
-                    ))
-                ),
-            )
-        ).alias("band", "bucket"),
-    ).cache()  # both sides of the self-join reuse one signature computation
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # verify: join the shingle sets back onto the (few) candidates
-    pairs = (
-        cand.join(shingled.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
-        .join(shingled.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
-    )
+    banded = sig.select("id", F.posexplode(keys).alias("band", "bucket"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter / (F.size("sh_a") + F.size("sh_b") - inter).cast("double")
-    return (
+    return blocked_self_pairs(banded, side, lambda pairs: (
         pairs.withColumn("jaccard", F.round(jac, 6))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
-    )
+    ))
 
 
 def _shingle_hash(col, hash_fn: str):
@@ -232,7 +250,7 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # measured ~2.6x faster than per-row array aggregates, bit-identical.
     # ngram_shingles never returns an empty array, so no docs are dropped.
     h, n_bits = _shingle_hash(F.col("__s"), hash_fn)
-    hashes = _parallelize(docs).select(
+    hashes = parallelize_narrow(docs).select(
         F.col(id_col), F.explode(ngram_shingles(text_col, shingle_n)).alias("__s")
     ).select(F.col(id_col), h.alias("__h"))
     # bit-vote sums and the sign-pack as parsed SQL (r14): the Column
@@ -278,34 +296,19 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
     # band i covers bits [n*i//bands, n*(i+1)//bands) — widths differ by
     # at most one bit when n_bits % bands != 0; coverage is exact either way
     bounds = [n_bits * i // bands for i in range(bands + 1)]
-    sh = simhash64(docs, id_col, text_col, hash_fn=hash_fn)
+    side = simhash64(docs, id_col, text_col, hash_fn=hash_fn).select(
+        F.col(id_col).alias("id"), F.col("simhash").alias("sh"))
     band_vals = [
-        F.col("simhash") if hi - lo == 64  # single-band: mask would overflow long
-        else F.shiftright(F.col("simhash"), lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1))
+        F.col("sh") if hi - lo == 64  # single-band: mask would overflow long
+        else F.shiftright(F.col("sh"), lo).bitwiseAND(F.lit((1 << (hi - lo)) - 1))
         for lo, hi in zip(bounds, bounds[1:])
     ]
-    banded = sh.select(
-        F.col(id_col).alias("id"),
-        F.col("simhash"),
-        F.posexplode(F.array(*band_vals)).alias("band", "bval"),
-    # materialized once per call (r15 — the LSH banded treatment): the
-    # self-join's two sides otherwise each recompute the whole
-    # shingle-hash + 64-bit-vote pipeline; the checkpoint stores three
-    # longs + two ints per (doc, band) and recomputes fresh every call
-    ).localCheckpoint()
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(r, (F.col("l.band") == F.col("r.band")) & (F.col("l.bval") == F.col("r.bval"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"),
-                F.col("l.simhash").alias("sh_a"), F.col("r.simhash").alias("sh_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.withColumn("hamming", hamming64("sh_a", "sh_b"))
+    banded = side.select("id", F.posexplode(F.array(*band_vals)).alias("band", "bucket"))
+    return blocked_self_pairs(banded, side, lambda pairs: (
+        pairs.withColumn("hamming", hamming64("sh_a", "sh_b"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
+    ))
 
 
 def ngram_jaccard_pairs(
@@ -319,7 +322,7 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard similarity for all pairs within a block
     (e.g. same lang/source). The equi-join on the block key keeps the pair
     space bounded; SQL-expressible, so it has a DuckDB oracle."""
-    base = _parallelize(docs).select(
+    base = parallelize_narrow(docs).select(
         F.col(id_col).alias("id"),
         F.col(block_col).alias("block"),
         F.array_distinct(ngram_shingles(text_col, shingle_n)).alias("sh"),
@@ -421,11 +424,11 @@ def embedding_near_dup_lsh(
     in n, so the candidate pair space stays linear).
 
     Plan: fit ``BucketedRandomProjectionLSH`` (L2 ≈ angular blocking once
-    vectors share scale) -> explode each row to (table_idx, bucket) -> self
-    equi-join on the skinny (table, bucket) rows -> dedup candidate ids ->
-    join vectors back -> exact cosine verify. Recall is governed by
-    num_tables (any single-table collision produces the candidate); verify
-    keeps precision exact.
+    vectors share scale) -> explode each row to (table_idx, bucket) ->
+    blocked_self_pairs on the skinny (table, bucket) rows -> exact cosine
+    verify on the joined-back vectors. Recall is governed by num_tables (any
+    single-table collision produces the candidate); verify keeps precision
+    exact.
 
     ``model``: a pre-fitted ``BucketedRandomProjectionLSHModel`` to reuse —
     the fit only draws seeded random hyperplanes (it is data-independent),
@@ -438,17 +441,12 @@ def embedding_near_dup_lsh(
         lsh_planes,
     )
 
-    # materialize (id, vec, norm) once per call (r15): the frame is
-    # referenced three times — the banded bucket source and BOTH verify-join
-    # sides — and each reference otherwise re-ran the scan + double-cast +
-    # norm (measured 2.2s -> 1.6s at sf0.1). Fresh per call, no cross-run
-    # reuse; at cluster scale this is the "persist the projected vectors
-    # once" serving layout the joins would read anyway.
-    pts = _parallelize(vectors).select(
+    # the double-cast vector and its norm once per row, not per pair
+    side = parallelize_narrow(vectors).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("vec"),
         l2_norm(F.col(vec_col)).alias("norm"),
-    ).localCheckpoint()
+    )
     if model is None:
         model, _ = lsh_fit(
             vectors, vector_col=vec_col, bucket_length=bucket_length,
@@ -459,36 +457,16 @@ def embedding_near_dup_lsh(
     # floor(dot/L) in element order; projections_per_table > 1 AND-composes
     # planes into compound buckets (ann.lsh_bucket_columns)
     buckets = lsh_bucket_columns(
-        F.col("vec"), lsh_planes(model), float(model.getBucketLength()),
+        "vec", lsh_planes(model), float(model.getBucketLength()),
         projections_per_table,
     )
-    # skinny (id, table, bucket) rows — the join never shuffles vectors.
-    # Materialized once per call (r14): the self-join's two sides and
-    # their codegen'd 18-plane bucket expressions otherwise compute (and
-    # compile) twice; the checkpoint stores two longs + a string per
-    # (row, table) and recomputes fresh on every call.
-    banded = pts.select(
-        "id", F.posexplode(F.array(*buckets)).alias("table", "bucket")
-    ).localCheckpoint()
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(r, (F.col("l.table") == F.col("r.table"))
-               & (F.col("l.bucket") == F.col("r.bucket"))
-               & (F.col("l.id") < F.col("r.id")))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    side = pts.select("id", "vec", "norm")
-    pairs = (
-        cand.join(side.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), F.col("norm").alias("na")), "id_a")
-        .join(side.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb")), "id_b")
-    )
-    cos = dot_product(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
+    banded = side.select("id", F.posexplode(F.array(*buckets)).alias("band", "bucket"))
+    cos = dot_product(F.col("vec_a"), F.col("vec_b")) / (F.col("norm_a") * F.col("norm_b"))
+    return blocked_self_pairs(banded, side, lambda pairs: (
         pairs.withColumn("__cos_raw", cos)
         .filter(F.col("__cos_raw") >= threshold)
         .select("id_a", "id_b", F.round("__cos_raw", 6).alias("cosine"))
-    )
+    ))
 
 
 def embedding_near_dup(
@@ -664,7 +642,7 @@ def span_dedup_corpus(
 
     tox = words(F.col(text_col))
     t = docs.withColumn("__toks", tox)
-    eligible = _parallelize(t.filter(F.size("__toks") >= window))
+    eligible = parallelize_narrow(t.filter(F.size("__toks") >= window))
     all_starts = F.sequence(F.lit(0), F.size("__toks") - window)
     if stride > 1:
         starts_expr = F.filter(

@@ -1247,10 +1247,10 @@ def lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself stays under unit ground truth); stays wired for spot runs with
     its full oracle via ``queries.library()``. The slot went to the r11
     serving grammar (``query_ann_params_topk``, VERDICT r11 #1)."""
-    from vectordb_cloud_spark.operators.dedup import _parallelize
+    from vectordb_cloud_spark.session import parallelize_narrow
 
     # single-task regex scan fanned out (r14) — no-op at scale
-    docs = _parallelize(_t(spark, sf_dir, "documents"))
+    docs = parallelize_narrow(_t(spark, sf_dir, "documents"))
     return (
         docs.select(lang_id_expr("text").alias("lang_pred"))
         .groupBy("lang_pred")
@@ -2879,12 +2879,12 @@ def gopher_quality_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     are one fused scan-stage struct (functions/text.py
     gopher_quality_flags); the oracle recomputes every rule in SQL."""
     from vectordb_cloud_spark.functions.text import gopher_quality_flags
-    from vectordb_cloud_spark.operators.dedup import _parallelize
+    from vectordb_cloud_spark.session import parallelize_narrow
 
     # fan the single-file scan out before the regex battery (r14): the
     # rule flags are the whole cost and ran on ONE task (1.51s -> 0.62s);
-    # _parallelize is a no-op on multi-file tables at scale
-    docs = _parallelize(_t(spark, sf_dir, "documents"))
+    # parallelize_narrow is a no-op on multi-file tables at scale
+    docs = parallelize_narrow(_t(spark, sf_dir, "documents"))
     g = docs.select(gopher_quality_flags("text").alias("g"))
     rules = ["word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
              "bullet_lines_ok", "ellipsis_lines_ok", "alpha_words_ok",
