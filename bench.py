@@ -128,6 +128,7 @@ def main():
     sf = float(m.group(1)) if m else -1.0
 
     from vectordb_cloud_spark.session import get_spark
+    from vectordb_cloud_spark import fixtures as fx
     from vectordb_cloud_spark import queries as qmod
 
     spark = get_spark("bench")
@@ -156,37 +157,37 @@ def main():
     # collection_build, not per-query work — measure each once explicitly so
     # ann_ivf_topk / pq_adc_topk reflect the pruned/codes-only searches.
     t0 = time.time()
-    qmod._ivf_index(spark, sf_dir)
+    fx.ivf_index(spark, sf_dir)
     builds["ivf_index_build"] = round(time.time() - t0, 3)
     t0 = time.time()
-    qmod._pq_index(spark, sf_dir)
+    fx.pq_index(spark, sf_dir)
     builds["pq_index_build"] = round(time.time() - t0, 3)
     t0 = time.time()
-    qmod._lsh_model(spark, sf_dir, qmod._LSH_BL, qmod._LSH_G * qmod._LSH_TABLES)
+    fx.lsh_model(spark, sf_dir)
     builds["lsh_model_fit"] = round(time.time() - t0, 3)
     t0 = time.time()
-    qmod._bm25_index(spark, sf_dir)
+    fx.bm25_index(spark, sf_dir)
     builds["bm25_index_build"] = round(time.time() - t0, 3)
     # r15: passage retrieval's chunk-TF-IDF index is a persisted build
     # artifact now (the bm25/IVF/PQ treatment — VERDICT r14 #1): chunk +
     # embed + write is index construction; passage_topk probes it.
     t0 = time.time()
-    qmod._passage_index_built(spark, sf_dir)
+    fx.passage_index(spark, sf_dir)
     builds["passage_index_build"] = round(time.time() - t0, 3)
     # r7 registry rotation: SQ/BQ/sparse/graph searches are oracle-gated
     # registry rows now, each over a fixture index built once here (the
     # same ingest-vs-query cost split as IVF/PQ above)
     t0 = time.time()
-    qmod._quantized_collection(spark, sf_dir)
+    fx.quantized_collection(spark, sf_dir)
     builds["quantized_collection_build"] = round(time.time() - t0, 3)
     t0 = time.time()
-    qmod._bq_index(spark, sf_dir)
+    fx.bq_index(spark, sf_dir)
     builds["bq_index_build"] = round(time.time() - t0, 3)
     t0 = time.time()
-    qmod._sparse_index(spark, sf_dir)
+    fx.sparse_index(spark, sf_dir)
     builds["sparse_index_build"] = round(time.time() - t0, 3)
     t0 = time.time()
-    qmod._graph_index(spark, sf_dir)
+    fx.graph_index(spark, sf_dir)
     builds["graph_index_build"] = round(time.time() - t0, 3)
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
@@ -317,7 +318,7 @@ def main():
         )
         # (the sparse SPLADE-shaped search moved into the registry in r7 —
         # sparse_topk_inverted is timed by the registry loop over the
-        # _sparse_index fixture and oracle-gated per round)
+        # fixtures.sparse_index fixture and oracle-gated per round)
     finally:
         shutil.rmtree(tdir, ignore_errors=True)
 
@@ -363,7 +364,7 @@ def main():
     )
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    entry_ids, adj_path = qmod._graph_index(spark, sf_dir)
+    entry_ids, adj_path = fx.graph_index(spark, sf_dir)
     adj = spark.read.parquet(adj_path)
     entry_ids = graph_load_entry_points(spark, adj_path) or entry_ids
     qv = [float(x) for x in emb.limit(1).collect()[0]["embedding"]]
@@ -379,7 +380,7 @@ def main():
     # candidates -> exact rescore join
     from vectordb_cloud_spark.operators.pq import pq_search_rerank
 
-    pq_codebooks, pq_path = qmod._pq_index(spark, sf_dir)
+    pq_codebooks, pq_path = fx.pq_index(spark, sf_dir)
     pq_codes = spark.read.parquet(pq_path)
     bench_one(
         "pq_adc_rerank_topk",

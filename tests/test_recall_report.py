@@ -3,8 +3,8 @@
 The per-family recall gates in test_ann/test_pq/test_graph_ann exercise
 hand-built indexes; this gate runs ``ann_recall_report`` — the exact code
 path bench.py and tools/recall_check.py use — so the artifact itself is
-what's protected: if a registry index parameter change (queries.py
-_lsh_model/_ivf_index/_pq_index) tanks recall, this fails before a bench
+what's protected: if a registry index parameter change (fixtures.py
+lsh_model/ivf_index/pq_index) tanks recall, this fails before a bench
 round records it.
 """
 

@@ -488,3 +488,17 @@ def test_indexed_ingest_epoch_collision_fails_loudly(spark, tmp_path):
     with pytest.raises(ValueError, match="legacy marker"):
         index_maintaining_batch(batch(100, 110), 0, catalog, "coll_col",
                                 centers, ivf_path)
+
+
+def test_streaming_hourly_counts_reuses_child_session(spark, sf_dir):
+    """The registry's streaming row runs in one child session per parent
+    session (not a new session and memory sink per call), and a rerun
+    replaces the previous sink's rows instead of adding to them."""
+    from vectordb_cloud_spark.queries import streaming_hourly_counts
+
+    first = streaming_hourly_counts(spark, sf_dir)
+    rows = sorted(first.collect())
+    second = streaming_hourly_counts(spark, sf_dir)
+    assert second.sparkSession is first.sparkSession
+    assert second.sparkSession is not spark
+    assert sorted(second.collect()) == rows

@@ -49,7 +49,7 @@ def main():
     params = {
         "lsh_knn": "registry LSH model (compound buckets)",
         "ann_ivf_topk": f"k_centroids={IVF_K_CENTROIDS}, nprobe={IVF_NPROBE}",
-        "pq_adc_topk": "M=16 subspaces, K=256 codes (queries.py _pq_index; r7 — was M=8/K=16)",
+        "pq_adc_topk": "M=16 subspaces, K=256 codes (fixtures.py pq_index; r7 — was M=8/K=16)",
         "ann_graph_topk": (
             f"degree={GRAPH_DEGREE}, beam={GRAPH_BEAM}, "
             f"max_hops={GRAPH_MAX_HOPS}, {GRAPH_ENTRIES} medoid entries "

@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from vectordb_cloud_spark import fixtures as fx
 from vectordb_cloud_spark.functions.text import (
     bpe_token_estimate,
     doc_fingerprint,
@@ -56,121 +57,6 @@ def _q(name: str, oracle: str | None = None):
     return deco
 
 
-# All oracle index artifacts (LSH planes, IVF layout, PQ codes/codebooks,
-# classify/media parquets) live under ONE per-PID base directory. The name
-# is deliberately self-documenting: DuckDB resolves read_parquet paths at
-# BIND time (before any row is evaluated — a SQL-level existence guard can
-# never fire first, verified), so when an oracle runs standalone without its
-# paired Spark query, the no-files-found error it raises quotes a path that
-# says exactly what to do (ADVICE r5). One base also gives the atexit hook
-# a single tree to remove, so repeated harness runs don't accumulate
-# parquet trees in /tmp.
-_ORACLE_ART_BASE = (
-    f"/tmp/vdb_spark_oracle_artifacts_{os.getpid()}"
-    "__created_by_running_the_paired_spark_query_first__see_queries_py"
-)
-
-
-def _cleanup_oracle_artifacts() -> None:  # pragma: no cover - atexit hook
-    """Remove this process's per-PID /tmp oracle artifact tree so repeated
-    harness runs don't accumulate parquet trees (ADVICE r5). Registered at
-    import; per-PID paths mean concurrent processes never race."""
-    import shutil
-
-    shutil.rmtree(_ORACLE_ART_BASE, ignore_errors=True)
-
-
-import atexit  # noqa: E402  (placed with the cleanup hook it registers)
-
-atexit.register(_cleanup_oracle_artifacts)
-
-
-def _corpus_key(sf_dir: str) -> tuple:
-    """Staleness-aware memo key for a fixture corpus (r15, VERDICT r14 #8):
-    the absolute path plus each parquet file's (name, mtime, size). Every
-    per-corpus cache below keys on this, so regenerating a fixture in place
-    invalidates collected scalars/oracle artifacts instead of silently
-    serving stale values. One os.scandir per call — microseconds."""
-    path = os.path.abspath(sf_dir)
-    try:
-        with os.scandir(path) as it:
-            stamps = tuple(sorted(
-                (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                for e in it if e.name.endswith(".parquet")
-            ))
-    except OSError:
-        stamps = ()
-    return (path, stamps)
-
-
-_T_MEMO: dict[tuple, DataFrame] = {}  # (corpus key, name) -> read relation
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # read relations are memoized per (corpus, table) and re-keyed when the
-    # session changes (the _ivf_assigned identity check — never hand back a
-    # relation bound to a stopped session) — r14: the footer/schema probe
-    # job on every call cost ~0.1s × every table touch across the whole
-    # registry (a serving tier keeps tables registered; this is that,
-    # fixture-scoped). Plans are immutable, so reuse is safe.
-    memo_key = (_corpus_key(sf_dir), name)
-    cached = _T_MEMO.get(memo_key)
-    if cached is not None and cached.sparkSession is spark:
-        return cached
-    # The driver runs these with its own SparkSession: pin the two runtime
-    # confs correctness depends on (UTC so timestamps compare naive-UTC like
-    # DuckDB's; nanosAsLong so the ns-precision events table is readable).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # parquet timestamps without the UTC flag must read as TIMESTAMP (LTZ),
-    # not TIMESTAMP_NTZ: NTZ can't take a watermark or cast to double, and
-    # reading natively (vs casting post-scan) keeps filter pushdown intact.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # right-size shuffles for the test scale factors (the 200 default wastes
-    # task overhead here; AQE coalesces further at runtime)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        # parquet TIMESTAMP(NANOS) arrives as long ns-since-epoch
-        # (spark.sql.legacy.parquet.nanosAsLong); convert to a real timestamp
-        # at µs precision — all downstream windows are >= 1s granularity.
-        from pyspark.sql.types import LongType
-
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # integer div — double math would lose precision above 2^53 ns
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # defensive fallback: if any NTZ column slipped through (e.g. the conf
-    # above ever stops being runtime-settable), normalize to TIMESTAMP so
-    # watermarks/epoch math downstream keep working.
-    from pyspark.sql.types import TimestampNTZType
-
-    for field in df.schema.fields:
-        if isinstance(field.dataType, TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
-    _T_MEMO[memo_key] = df
-    return df
-
-
-_QVEC_MEMO: dict[tuple, list[float]] = {}  # (sf_dir, vec_id) -> vector
-
-
-def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
-    # fixture-constant query vectors are memoized like the LSH model /
-    # BM25 scalars: the probe is input resolution, not query work, and
-    # re-collecting it per run cost one job each time
-    memo_key = (_corpus_key(sf_dir), vec_id)
-    if memo_key not in _QVEC_MEMO:
-        row = (
-            _t(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == vec_id)
-            .select("embedding")
-            .first()
-        )
-        _QVEC_MEMO[memo_key] = [float(x) for x in row[0]]
-    return list(_QVEC_MEMO[memo_key])
-
-
 # SQL fragment: L2 distance between two DuckDB FLOAT[] values in double
 # precision, folding in element order (matches Spark's aggregate()).
 _SQL_L2 = (
@@ -201,8 +87,8 @@ _SQL_NORM = "sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
     """,
 )
 def knn_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qv = _query_vec(spark, sf_dir, 0)
-    emb = _t(spark, sf_dir, "embeddings")
+    qv = fx.query_vec(spark, sf_dir, 0)
+    emb = fx.table(spark, sf_dir, "embeddings")
     hits = knn_search(emb, qv, k=10, filters=F.col("vec_id") != 0, tiebreak="vec_id")
     return hits.select("vec_id", F.round("dist", 6).alias("dist"))
 
@@ -222,23 +108,11 @@ def knn_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_l2_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tenant-filtered kNN: the label predicate plays user_id
     (/root/reference/search.py:37, P1+J1). Filter pushes to the scan."""
-    qv = _query_vec(spark, sf_dir, 0)
-    emb = _t(spark, sf_dir, "embeddings")
+    qv = fx.query_vec(spark, sf_dir, 0)
+    emb = fx.table(spark, sf_dir, "embeddings")
     hits = knn_search(emb, qv, k=5, filters=(F.col("label") == 3) & (F.col("vec_id") != 0),
                       tiebreak="vec_id")
     return hits.select("vec_id", "label", F.round("dist", 6).alias("dist"))
-
-
-def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cosine top-k — similarity-search extension (reference is L2-only).
-    Rotated out of the registry in r9 (redundant with knn_l2_topk's
-    coverage of the same plan shape; cosine math stays oracle-covered via
-    embedding_near_dup_lsh and unit tests)."""
-    qv = _query_vec(spark, sf_dir, 0)
-    emb = _t(spark, sf_dir, "embeddings")
-    hits = knn_search(emb, qv, k=10, filters=F.col("vec_id") != 0, metric="cosine",
-                      dist_col="cosine", tiebreak="vec_id")
-    return hits.select("vec_id", F.round("cosine", 6).alias("cosine"))
 
 
 def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,7 +123,7 @@ def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-exercised through ``knn_batch`` inside ``query_batch`` tests and
     the single-query kNN rows); the slot went to the r9 serving grammar
     (``text_routed_search`` et al., VERDICT r9 next-round #1)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -293,7 +167,7 @@ def classify_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch nearest-centroid: centroids = per-label mean vectors, items =
     first 20 vectors. Broadcast M centroids, min_by argmin per item
     (/root/reference/app.py:169's np.argmin as a distributed plan)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     cents = label_centroids(emb, "label", "embedding")
     items = emb.filter(F.col("vec_id") < 20).select("vec_id", "embedding")
     out = nearest_centroid(items, cents, item_id="vec_id", item_vec="embedding",
@@ -317,7 +191,7 @@ def scroll_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 scroll-as-scan: tenant equality filter + payload projection without
     vectors (P7 column pruning) and without the reference's silent 100k cap
     (/root/reference/app.py:102-107)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return docs.filter(F.col("doc_id") % 100 == 7).select("doc_id", "text", "lang", "source")
 
 
@@ -329,7 +203,7 @@ def filter_contains_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan instead of the reference's scroll-then-Python-filter
     (/root/reference/app.py:108-110); regex: rlike
     (/root/reference/app.py:134-136)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     has_substr = (F.col("doc_id") % 100 == 7) & F.col("text").contains("vector")
     has_regex = F.col("text").rlike("vector (join|sort)")
     return docs.filter(has_substr | has_regex).select(
@@ -349,7 +223,7 @@ def delete_by_word_remaining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2 intended semantics (the reference endpoint is broken — SURVEY.md
     §2.7): DELETE WHERE user_id=7 AND contains(text,'spark'), shown as the
     surviving rows."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return docs.filter(~((F.col("doc_id") % 100 == 7) & F.col("text").contains("spark"))).select(
         "doc_id"
     )
@@ -373,7 +247,7 @@ def delete_by_word_remaining(spark: SparkSession, sf_dir: str) -> DataFrame:
 def upsert_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2 replace-by-id upsert semantics (/root/reference/insert.py:31-63) as
     a pure query: base ∪ updates, keep the newest version per id."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text", F.lit(1).alias("version"))
     updates = docs.filter(F.col("doc_id") < 50).select(
         "doc_id", F.upper("text").alias("text"), F.lit(2).alias("version")
@@ -392,7 +266,7 @@ def upsert_last_write_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def delete_by_ids_remaining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4 delete-by-id-list as a broadcast anti-semijoin."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return docs.filter(~F.col("doc_id").isin([1, 2, 3, 5, 8, 13, 21, 34])).select("doc_id", "lang")
 
 
@@ -419,7 +293,7 @@ def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: scan-filter-aggregate with map-side partial aggs; the
     shuffle carries only (flag, status) groups. Decimal sums keep the result
     order-independent (exact) before the final double cast."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = fx.table(spark, sf_dir, "lineitem")
     disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc * (1 + F.col("l_tax"))
     return (
@@ -459,9 +333,9 @@ def tpch_q3_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouping_sets_order_stats); stays wired for spot runs with its full
     oracle via ``queries.library()``. The slot went to the r12 query
     grammar (``query_by_id_topk``, VERDICT r12 #1)."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
+    c = fx.table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = fx.table(spark, sf_dir, "orders")
+    l = fx.table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
@@ -498,12 +372,12 @@ def tpch_q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     wired for spot runs with its full oracle via ``queries.library()``.
     The slot went to the r11 serving grammar
     (``query_template_threshold_paged``, VERDICT r11 #1)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    c = fx.table(spark, sf_dir, "customer")
+    o = fx.table(spark, sf_dir, "orders")
+    l = fx.table(spark, sf_dir, "lineitem")
+    s = fx.table(spark, sf_dir, "supplier")
+    n = fx.table(spark, sf_dir, "nation")
+    r = fx.table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         o.join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
@@ -538,7 +412,7 @@ def grouping_sets_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-exercised through tpch_q1_pricing_summary and
     customer_order_stats) — stays wired for spot runs with its full oracle
     via ``queries.library()``."""
-    o = _t(spark, sf_dir, "orders")
+    o = fx.table(spark, sf_dir, "orders")
     o.createOrReplaceTempView("__orders_gs")
     return spark.sql(
         """
@@ -580,7 +454,7 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 0 rows), so the query injects a re-keyed copy of the first 30 docs —
     mirrored in the oracle — and the dedup operator must group every injected
     pair (n_dups >= 2, keep_id = the original)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     base = docs.select("doc_id", "text")
     injected = docs.filter(F.col("doc_id") < 30).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text"
@@ -601,32 +475,11 @@ def token_estimate_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     `gopher_quality_counts` and `text_quality_profile`) to make room for
     the serving-API rows (filter DSL / geo / discover / maxsim); kept
     library-level."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", bpe_token_estimate("text").alias("n_tokens"))
         .orderBy(F.col("n_tokens").desc(), "doc_id")
         .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Events: JSON extraction + time-windowed aggregation (streaming-shaped,
-# run in batch; SURVEY.md §2.8 additions)
-# ---------------------------------------------------------------------------
-
-def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic-payload access: the reference's schemaless payload maps onto
-    JSON columns (SURVEY.md §1.4) — parse + aggregate. Rotated out of the
-    registry in r9 (JSON access stays exercised here and in tests; the
-    slot now proves the r8 serving machinery)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(F.get_json_object("props", "$.k").cast("long").alias("k"), "value")
-        .groupBy("k")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(F.col("value").cast("decimal(28,10)")).cast("double"), 4).alias("total_value"),
-        )
     )
 
 
@@ -640,7 +493,7 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     span-dedup rotation (the exact-Jaccard arithmetic stays oracle-covered
     inside ``minhash_lsh_near_dup``'s verify stage; the slot went to
     ``span_dedup_injected``)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).withColumn(
+    docs = fx.table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).withColumn(
         "__block", F.concat_ws("|", "lang", "source")
     )
     return ngram_jaccard_pairs(docs, "__block", shingle_n=3, threshold=0.01)
@@ -722,7 +575,7 @@ def span_dedup_injected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from vectordb_cloud_spark.operators.dedup import span_dedup_corpus
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = fx.table(spark, sf_dir, "documents").select("doc_id", "text")
     inj = docs.filter(F.col("doc_id") < 20).select(
         (F.col("doc_id") + 10000).alias("doc_id"),
         F.concat(
@@ -738,74 +591,19 @@ def span_dedup_injected(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# LSH model cache: the BucketedRandomProjectionLSH fit only draws seeded
-# random hyperplanes (data-independent), so one fitted model per
-# (corpus, bucket_length, tables) is shared across queries — query time is
-# the transform + bucket join, not the fit. The hyperplanes are materialized
-# to a per-PID parquet so the DuckDB oracle can replay the bucketing
-# (bucket = floor(dot(v, u_t) / bucket_length), MLlib's hashFunction).
-_LSH_MODEL_CACHE: dict[tuple, object] = {}
-_LSH_PLANES_BASE = os.path.join(_ORACLE_ART_BASE, "lsh_planes")
-_LSH_PLANES_WRITTEN: dict[str, int] = {}  # planes path -> dim last written
-
-
-def _lsh_planes_path(bucket_length: float, num_tables: int) -> str:
-    return os.path.join(
-        _LSH_PLANES_BASE, f"planes_{bucket_length:g}_{num_tables}.parquet"
-    )
-
-
-def _lsh_model(spark: SparkSession, sf_dir: str, bucket_length: float, num_tables: int):
-    key = (_corpus_key(sf_dir), bucket_length, num_tables)
-    if key not in _LSH_MODEL_CACHE:
-        from vectordb_cloud_spark.operators.ann import lsh_fit
-
-        emb = _t(spark, sf_dir, "embeddings")
-        model, _ = lsh_fit(emb, bucket_length=bucket_length, num_hash_tables=num_tables)
-        _LSH_MODEL_CACHE[key] = model
-    # materialize the (seeded, data-independent) hyperplanes for the oracle,
-    # kept aligned with the model about to be returned: the planes file is
-    # keyed only by (bucket_length, num_tables), so a corpus with a
-    # DIFFERENT embedding dim earlier in the process may have overwritten it
-    # with wrong-length vectors. The seed is fixed, so same dim => identical
-    # planes — tracking the written dim per path skips redundant rewrites
-    # while still rewriting exactly when staleness is possible.
-    model = _LSH_MODEL_CACHE[key]
-    from vectordb_cloud_spark.operators.ann import lsh_planes
-
-    planes = lsh_planes(model)  # cached on the model (r14 — py4j extraction)
-    path = _lsh_planes_path(bucket_length, num_tables)
-    dim = len(planes[0]) if planes else 0
-    if _LSH_PLANES_WRITTEN.get(path) != dim or not os.path.exists(path):
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        os.makedirs(_LSH_PLANES_BASE, exist_ok=True)
-        papq.write_table(
-            pa.table({
-                "tbl": pa.array(range(len(planes)), pa.int32()),
-                "u": pa.array(planes, pa.list_(pa.float64())),
-            }),
-            path,
-        )
-        _LSH_PLANES_WRITTEN[path] = dim
-    return model
-
-
-def _lsh_cand_sql(bucket_length: float, num_planes: int,
-                  source: str = "embeddings", id_col: str = "vec_id",
+def _lsh_cand_sql(source: str = "embeddings", id_col: str = "vec_id",
                   group: int = 1) -> str:
     """DuckDB fragment: DISTINCT candidate pairs (id_a < id_b) colliding in
     >= 1 LSH table, replaying bucket = floor(dot(v, u)/L) over the
-    materialized hyperplanes. ``group`` > 1 AND-composes consecutive planes
-    into one compound "h1:h2:..." bucket per table — the exact string
-    ``ann.lsh_bucket_columns`` builds with concat_ws."""
+    materialized hyperplanes (``fixtures.LSH_PLANES``). ``group`` > 1 AND-composes
+    consecutive planes into one compound "h1:h2:..." bucket per table — the
+    exact string ``ann.lsh_bucket_columns`` builds with concat_ws."""
     dot = _SQL_DOT.format(a="e.embedding", b="p.u")
     per_plane = f"""
     ph AS (
       SELECT e.{id_col} AS id, p.tbl,
-             CAST(floor({dot} / {bucket_length}) AS BIGINT) AS h
-      FROM {source} e, read_parquet('{_lsh_planes_path(bucket_length, num_planes)}') p
+             CAST(floor({dot} / {fx.LSH_BL}) AS BIGINT) AS h
+      FROM {source} e, read_parquet('{fx.LSH_PLANES}') p
     )"""
     if group == 1:
         bucket_tbl = "b AS (SELECT id, tbl, h::VARCHAR AS bucket FROM ph)"
@@ -837,20 +635,11 @@ def _lsh_cand_sql(bucket_length: float, num_planes: int,
 # the original ≈ 0.98) — true near-dups the blocking must recover, replayed
 # verbatim in the oracle.
 _AUG_OFFSET = 1_000_000
-_EMB_DIM = 64  # fixture embedding dim (TESTDATA.md), all sf dirs
-# compound LSH config shared by the two near-dup registry queries:
-# (AND 3 projections, OR 6 tables) at bucket_length 0.075 -> 18 planes.
-# On unit vectors sigma_projection = 1/sqrt(dim) = 0.125: a random pair's
-# per-projection collision odds ~ L*phi(0)/sigma ~ 0.17 -> ~0.005 per
-# compound table; an injected near-dup pair (projected gap sigma 0.023)
-# keeps ~0.43 per table -> ~97% recall across 6 tables with ~3% of the
-# pair space scored (measured in test_dedup.py).
-_LSH_BL, _LSH_G, _LSH_TABLES = 0.075, 3, 6
 
 
 def _aug_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings ∪ perturbed copies of vec_id % 10 == 0 (ids + 1e6)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = fx.table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
 
@@ -883,7 +672,7 @@ def _aug_sql() -> str:
                e.embedding[t.i + 1]::DOUBLE
                + ((('0x' || substr(md5(e.vec_id::VARCHAR || ':' || t.i::VARCHAR), 1, 15))::BIGINT
                    % 1000)::DOUBLE / 1000.0 * 0.08 - 0.04) AS p
-        FROM embeddings e, range({_EMB_DIM}) t(i)
+        FROM embeddings e, range({fx.EMB_DIM}) t(i)
         WHERE e.vec_id % 10 = 0
       ) q
       GROUP BY q.vec_id
@@ -903,7 +692,7 @@ def _embedding_lsh_oracle_sql() -> str:
     )
     return f"""
     WITH {_aug_sql()},
-    {_lsh_cand_sql(_LSH_BL, _LSH_G * _LSH_TABLES, source="aug", group=_LSH_G)}
+    {_lsh_cand_sql(source="aug", group=fx.LSH_G)}
     SELECT c.id_a, c.id_b, round({cos}, 6) AS cosine
     FROM cand c
     JOIN aug va ON va.vec_id = c.id_a
@@ -927,8 +716,8 @@ def embedding_near_dup_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _aug_embeddings(spark, sf_dir)
     return embedding_near_dup_lsh(
         emb, threshold=0.9,
-        model=_lsh_model(spark, sf_dir, _LSH_BL, _LSH_G * _LSH_TABLES),
-        projections_per_table=_LSH_G,
+        model=fx.lsh_model(spark, sf_dir),
+        projections_per_table=fx.LSH_G,
     )
 
 
@@ -1002,7 +791,7 @@ def minhash_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates (band-bucket join + exact-Jaccard
     verify) — dedup op #2, oracle-checked end to end including candidate
     generation (md5_60 affine permutations; see _minhash_oracle_sql)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(docs, num_hashes=32, bands=8, shingle_n=3,
                              jaccard_threshold=0.2, hash_fn="md5_60")
 
@@ -1064,7 +853,7 @@ def simhash_near_dup_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5_60 the guaranteed-recall output equals brute-force hamming pairs,
     which DuckDB re-derives from scratch (_simhash_oracle_sql); banding ==
     brute-force is additionally gated in tests/test_dedup.py."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return simhash_near_dup_pairs(docs, max_hamming=3, hash_fn="md5_60")
 
 
@@ -1098,27 +887,8 @@ def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle) — the batch twin of streaming session_window."""
     from vectordb_cloud_spark.streaming.ingest import sessionize_batch
 
-    ev = _t(spark, sf_dir, "events")
+    ev = fx.table(spark, sf_dir, "events")
     return sessionize_batch(ev, gap_minutes=30, tiebreak_col="event_id")
-
-
-def pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with an explicit value list (no extra distinct-scan pass).
-    Rotated out of the registry in r9 (grouping_sets_order_stats covers the
-    multi-arrangement aggregate shape)."""
-    o = _t(spark, sf_dir, "orders")
-    p = (
-        o.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-        .na.fill(0)
-    )
-    return p.select(
-        "o_orderpriority",
-        F.col("F").alias("status_F"),
-        F.col("O").alias("status_O"),
-        F.col("P").alias("status_P"),
-    )
 
 
 def tpch_q6_q14_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1128,7 +898,7 @@ def tpch_q6_q14_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry in r8 (q1/q3/q5 keep the TPC-H scan/join/agg shapes under the
     oracle) to make room for the serving-API rows; kept library-level and
     covered by test_relational.py."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = fx.table(spark, sf_dir, "lineitem")
     q6 = (
         li.filter(F.col("l_discount").between(0.05, 0.07) & (F.col("l_quantity") < 24))
         .agg(
@@ -1139,7 +909,7 @@ def tpch_q6_q14_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.lit("q6_revenue").alias("metric"), "value")
     )
-    p = _t(spark, sf_dir, "part")
+    p = fx.table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
     q14 = (
@@ -1199,7 +969,7 @@ def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         stopword_ratio,
     )
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
+    docs = fx.table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return docs.select(
         "doc_id",
         token_count("text").alias("n_tokens"),
@@ -1250,7 +1020,7 @@ def lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectordb_cloud_spark.session import parallelize_narrow
 
     # single-task regex scan fanned out (r14) — no-op at scale
-    docs = parallelize_narrow(_t(spark, sf_dir, "documents"))
+    docs = parallelize_narrow(fx.table(spark, sf_dir, "documents"))
     return (
         docs.select(lang_id_expr("text").alias("lang_pred"))
         .groupBy("lang_pred")
@@ -1259,77 +1029,8 @@ def lang_id_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Rows-only ops: ANN paths, uuid3 content ids, classification service
+# ANN paths: IVF, LSH similarity join, PQ
 # ---------------------------------------------------------------------------
-
-def uuid3_content_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """uuid3(NAMESPACE_DNS, text) content-addressed ids (F6,
-    /root/reference/test_qdrant.py:55), computed JVM-side (md5 over a binary
-    concat + hex surgery — no Python boundary). Rows-only check: DuckDB
-    1.0.0's md5 only accepts VARCHAR and the RFC 4122 DNS namespace bytes are
-    not valid UTF-8, so no SQL twin exists; exactness is unit-tested against
-    uuid.uuid3 (tests/test_ids.py, incl. unicode + version/variant bits)."""
-    from vectordb_cloud_spark.functions.ids import uuid3_dns
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    return docs.select("doc_id", uuid3_dns("text").alias("content_id"))
-
-
-# IVF index: built once per corpus (KMeans + centroid-partitioned write —
-# index construction, not query work) at a FIXED per-PID path so the DuckDB
-# oracle can read the same index the Spark query searches. Single-entry
-# cache tracking which (sf_dir, params) the layout currently holds, like the
-# classify oracle: alternating sf_dirs rebuilds instead of serving stale
-# files; the PID suffix keeps concurrent harness processes apart. ORDERING
-# CONTRACT (same as classify): the Spark query fn materializes the index;
-# the harness runs it before the oracle SQL.
-_IVF_IDX_BASE = os.path.join(_ORACLE_ART_BASE, "ivf_idx")
-_IVF_LAYOUT = os.path.join(_IVF_IDX_BASE, "ivf")
-_IVF_CENTERS_PARQUET = os.path.join(_IVF_IDX_BASE, "centers.parquet")
-_IVF_INDEX_CURRENT: tuple | None = None  # ((sf_dir, k_centroids), centers)
-_IVF_ASSIGNED_DF = None  # memoized read relation over _IVF_LAYOUT
-
-
-def _ivf_assigned(spark: SparkSession):
-    """The memoized read relation over the persisted IVF layout —
-    re-keyed per SparkSession so a caller with a fresh session never gets
-    a relation bound to a stopped one (re-listing ~k partition dirs per
-    QUERY is the thing being avoided; once per session is fine)."""
-    global _IVF_ASSIGNED_DF
-    if _IVF_ASSIGNED_DF is None or _IVF_ASSIGNED_DF.sparkSession is not spark:
-        _IVF_ASSIGNED_DF = spark.read.parquet(_IVF_LAYOUT)
-    return _IVF_ASSIGNED_DF
-
-
-def _ivf_index(spark: SparkSession, sf_dir: str, k_centroids: int = 192):
-    global _IVF_INDEX_CURRENT, _IVF_ASSIGNED_DF
-    key = (_corpus_key(sf_dir), k_centroids)
-    if _IVF_INDEX_CURRENT is not None and _IVF_INDEX_CURRENT[0] == key:
-        return _IVF_INDEX_CURRENT[1], _IVF_LAYOUT
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.operators.ann import ivf_build, ivf_persist
-
-    emb = _t(spark, sf_dir, "embeddings")
-    centers, assigned = ivf_build(emb, k_centroids=k_centroids)
-    ivf_persist(assigned, _IVF_LAYOUT)
-    os.makedirs(_IVF_IDX_BASE, exist_ok=True)
-    papq.write_table(
-        pa.table({
-            "centroid_id": pa.array([i for i, _ in centers], pa.int32()),
-            "center": pa.array([c for _, c in centers], pa.list_(pa.float64())),
-        }),
-        _IVF_CENTERS_PARQUET,
-    )
-    _IVF_INDEX_CURRENT = (key, centers)
-    # refresh the memoized READ relation (see _ivf_assigned): re-listing
-    # ~k_centroids partition dirs on every query costs ~0.85 s at k=192
-    # locally (r9 measured; a serving tier keeps the table registered
-    # with a cached file index — this is that, per-fixture)
-    _IVF_ASSIGNED_DF = spark.read.parquet(_IVF_LAYOUT)
-    return centers, _IVF_LAYOUT
-
 
 def _ivf_oracle_sql() -> str:
     """DuckDB twin of the FULL IVF search, index structure included: route
@@ -1345,14 +1046,14 @@ def _ivf_oracle_sql() -> str:
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     cen AS (SELECT centroid_id, center
-            FROM read_parquet('{_IVF_CENTERS_PARQUET}')),
+            FROM read_parquet('{fx.IVF_CENTERS}')),
     probes AS (
         SELECT cen.centroid_id FROM cen, q
         ORDER BY {cdist}, cen.centroid_id
         LIMIT 48
     ),
     pts AS (SELECT vec_id, embedding, CAST(centroid_id AS INT) AS cid
-            FROM read_parquet('{_IVF_LAYOUT}/*/*.parquet', hive_partitioning=1))
+            FROM read_parquet('{fx.IVF_LAYOUT}/*/*.parquet', hive_partitioning=1))
     SELECT p.vec_id, round({pdist}, 6) AS dist
     FROM pts p, probes pr, q
     WHERE p.cid = pr.centroid_id
@@ -1368,19 +1069,20 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ``centroid_id IN (probes)`` predicate lands in PartitionFilters, so
     the scan opens nprobe/k_centroids of the files (pruning asserted in
     tests/test_pruning.py). The KMeans build happens once per corpus via
-    ``_ivf_index`` — index construction, not per-query work. Oracle: DuckDB
-    replays the same routing + pruned scan over the materialized index
-    (see _ivf_oracle_sql); recall vs exact is gated in tests/test_ann.py."""
+    ``fixtures.ivf_index`` — index construction, not per-query work.
+    Oracle: DuckDB replays the same routing + pruned scan over the
+    materialized index (see _ivf_oracle_sql); recall vs exact is gated in
+    tests/test_ann.py."""
     from vectordb_cloud_spark.operators.ann import ivf_search
 
-    qv = _query_vec(spark, sf_dir, 0)
-    centers, path = _ivf_index(spark, sf_dir, k_centroids=192)
+    qv = fx.query_vec(spark, sf_dir, 0)
+    centers, assigned = fx.ivf_index(spark, sf_dir)
     # r9 geometry (VERDICT r8 #3): k=192 lists, nprobe=48 = 75% of the
     # layout pruned at recall 0.872 (sf0.1, 32 queries) — the oracle's
     # probe LIMIT mirrors nprobe. Searches reuse the memoized relation
     # (the probe still prunes partitions per query); re-listing the
     # layout per query is a serving anti-pattern, not index cost.
-    hits = ivf_search(_ivf_assigned(spark), centers, qv, k=10, nprobe=48,
+    hits = ivf_search(assigned, centers, qv, k=10, nprobe=48,
                       tiebreak="vec_id")
     return hits.select("vec_id", F.round("dist", 6).alias("dist"))
 
@@ -1389,7 +1091,7 @@ def _lsh_joinpairs_oracle_sql() -> str:
     l2 = _SQL_L2.format(a="va.embedding", b="vb.embedding")
     return f"""
     WITH {_aug_sql()},
-    {_lsh_cand_sql(_LSH_BL, _LSH_G * _LSH_TABLES, source="aug", group=_LSH_G)}
+    {_lsh_cand_sql(source="aug", group=fx.LSH_G)}
     SELECT c.id_a, c.id_b, round({l2}, 6) AS dist
     FROM cand c
     JOIN aug va ON va.vec_id = c.id_a
@@ -1415,61 +1117,10 @@ def lsh_similarity_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectordb_cloud_spark.operators.ann import lsh_self_join_pairs
 
     emb = _aug_embeddings(spark, sf_dir)
-    model = _lsh_model(spark, sf_dir, _LSH_BL, _LSH_G * _LSH_TABLES)
+    model = fx.lsh_model(spark, sf_dir)
     pairs = lsh_self_join_pairs(model, emb, threshold=0.5,
-                                projections_per_table=_LSH_G)
+                                projections_per_table=fx.LSH_G)
     return pairs.select("id_a", "id_b", F.round("dist", 6).alias("dist"))
-
-
-# PQ index: like _ivf_index — codebook training + corpus encoding is
-# ingest-time work, persisted at a FIXED per-PID path (codes + codebooks
-# parquet) so the DuckDB oracle can replay the ADC math over the same index.
-# Single-entry cache tracking the current (sf_dir, params); same ordering
-# contract as the classify/IVF oracles.
-_PQ_IDX_BASE = os.path.join(_ORACLE_ART_BASE, "pq_idx")
-_PQ_CODES = os.path.join(_PQ_IDX_BASE, "codes")
-_PQ_BOOKS_PARQUET = os.path.join(_PQ_IDX_BASE, "codebooks.parquet")
-# registry/bench config: dim 64 = 16 subspaces x 4 dims, K=256 codes per
-# subspace (the standard 8-bit PQ codebook). Round 7 raised M 8->16 and K
-# 16->256: the old 4-bit-toy config scored rerank recall 0.50 at sf0.1;
-# this one measures 0.988 at oversample=4 (VERDICT r6 "What's wrong" #1).
-_PQ_M, _PQ_SUBD = 16, 4
-_PQ_INDEX_CURRENT: tuple | None = None  # ((sf_dir, m, k), codebooks)
-
-
-def _pq_index(spark: SparkSession, sf_dir: str, m_subvectors: int = _PQ_M, k_codes: int = 256):
-    global _PQ_INDEX_CURRENT
-    key = (_corpus_key(sf_dir), m_subvectors, k_codes)
-    if _PQ_INDEX_CURRENT is not None and _PQ_INDEX_CURRENT[0] == key:
-        return _PQ_INDEX_CURRENT[1], _PQ_CODES
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.operators.pq import pq_encode, pq_train
-
-    emb = _t(spark, sf_dir, "embeddings")
-    codebooks = pq_train(emb, m_subvectors=m_subvectors, k_codes=k_codes)
-    pq_encode(emb, codebooks).select("vec_id", "pq_code").write.mode(
-        "overwrite"
-    ).parquet(_PQ_CODES)
-    os.makedirs(_PQ_IDX_BASE, exist_ok=True)
-    papq.write_table(
-        pa.table({
-            "m": pa.array(
-                [m for m, book in enumerate(codebooks) for _ in book], pa.int32()
-            ),
-            "code": pa.array(
-                [c for book in codebooks for c in range(len(book))], pa.int32()
-            ),
-            "center": pa.array(
-                [center for book in codebooks for center in book],
-                pa.list_(pa.float64()),
-            ),
-        }),
-        _PQ_BOOKS_PARQUET,
-    )
-    _PQ_INDEX_CURRENT = (key, codebooks)
-    return codebooks, _PQ_CODES
 
 
 def _pq_oracle_sql() -> str:
@@ -1479,7 +1130,7 @@ def _pq_oracle_sql() -> str:
     it into a nested DOUBLE[][] ordered by (m, code), then score every
     persisted code word with the same left-to-right m-order sum Spark's
     codegen expression uses — bit-equal adc_dist, vec_id tiebreak."""
-    sub = _PQ_SUBD
+    sub = fx.PQ_SUBD
     lut_d2 = (
         f"list_sum(list_transform(range(1, {sub}+1), "
         f"j -> (q.qe[cb.m*{sub}+j]::DOUBLE - cb.center[j]) "
@@ -1487,15 +1138,15 @@ def _pq_oracle_sql() -> str:
     )
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    cb AS (SELECT m, code, center FROM read_parquet('{_PQ_BOOKS_PARQUET}')),
+    cb AS (SELECT m, code, center FROM read_parquet('{fx.PQ_BOOKS}')),
     lut AS (SELECT cb.m, cb.code, {lut_d2} AS d2 FROM cb, q),
     lutrow AS (SELECT m, list(d2 ORDER BY code) AS row FROM lut GROUP BY m),
     luts AS (SELECT list(row ORDER BY m) AS t FROM lutrow),
     scored AS (
         SELECT c.vec_id,
-               sqrt(list_sum(list_transform(range(1, {_PQ_M}+1),
+               sqrt(list_sum(list_transform(range(1, {fx.PQ_M}+1),
                     m -> l.t[m][c.pq_code[m] + 1]))) AS adc
-        FROM read_parquet('{_PQ_CODES}/*.parquet') c, luts l
+        FROM read_parquet('{fx.PQ_CODES}/*.parquet') c, luts l
     )
     SELECT vec_id, round(adc, 6) AS adc_dist
     FROM scored
@@ -1510,29 +1161,29 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one byte per subspace, 16x compression at dim 64) ->
     asymmetric-distance top-k via a
     broadcast lookup table over the PERSISTED codes (training + encoding is
-    cached ingest-time work via ``_pq_index``; the query scans codes only —
-    the billion-scale read shape; composes with IVF as
+    cached ingest-time work via ``fixtures.pq_index``; the query scans codes
+    only — the billion-scale read shape; composes with IVF as
     ``operators.pq.ivfpq_build/ivfpq_search``). Oracle: DuckDB replays the
     ADC lookup-table math over the materialized codebooks + codes
     (see _pq_oracle_sql); recall vs exact is gated in tests/test_pq.py."""
     from vectordb_cloud_spark.operators.pq import pq_search
 
-    qv = _query_vec(spark, sf_dir, 0)
-    codebooks, path = _pq_index(spark, sf_dir)
+    qv = fx.query_vec(spark, sf_dir, 0)
+    codebooks, path = fx.pq_index(spark, sf_dir)
     encoded = spark.read.parquet(path)
     hits = pq_search(encoded, codebooks, qv, k=10, tiebreak="vec_id")
     return hits.select("vec_id", F.round("adc_dist", 6).alias("adc_dist"))
 
 
 # ---------------------------------------------------------------------------
-# Round-7 registry rotation: the SQ8 / BQ / sparse-inverted / graph-ANN
-# families under the DuckDB oracle (VERDICT r6 #1 — the hard correctness
-# signal must cover the newest code, not only the oldest). Each follows the
-# IVF/PQ fixture pattern: index construction is cached ingest-time work at a
-# fixed per-PID path; the oracle REPLAYS the search math over the
-# materialized structures (affine dequant sums, XOR popcount over BIGINT
-# words, posting-list group-sums, an unrolled beam trace over the persisted
-# adjacency) — full hash matches, not exact-kNN stand-ins.
+# Round-7 registry rotation: the BQ / sparse-inverted / graph-ANN families
+# under the DuckDB oracle (the hard correctness signal must cover the
+# newest code, not only the oldest). Each follows the IVF/PQ
+# fixture pattern: index construction is cached ingest-time work at a fixed
+# path (fixtures.py); the oracle REPLAYS the search math over the
+# materialized structures (XOR popcount over BIGINT words, posting-list
+# group-sums, an unrolled beam trace over the persisted adjacency) — full
+# hash matches, not exact-kNN stand-ins.
 # Search knobs come from vectordb_cloud_spark.recall so the registry, bench,
 # recall artifact, and test floors can never drift apart.
 # ---------------------------------------------------------------------------
@@ -1540,121 +1191,10 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 from vectordb_cloud_spark.recall import (  # noqa: E402  (fixture knobs)
     BQ_OVERSAMPLE as _BQ_OS,
     GRAPH_BEAM as _GRAPH_BEAM,
-    GRAPH_DEGREE as _GRAPH_DEGREE,
-    GRAPH_ENTRIES as _GRAPH_ENTRIES,
     GRAPH_MAX_HOPS as _GRAPH_HOPS,
 )
 
-_EMB_DIM = 64  # fixture embeddings width (TESTDATA.md) — an import-time
-# constant because the SQ/BQ oracle SQL (generated once at registry build)
-# unrolls per-dimension expressions over it
-
-
-# --- SQ8: persisted int8 codes + (mins, maxs) stats ------------------------
-_SQ_IDX_BASE = os.path.join(_ORACLE_ART_BASE, "sq_idx")
-_SQ_CODES = os.path.join(_SQ_IDX_BASE, "codes")
-_SQ_STATS_PARQUET = os.path.join(_SQ_IDX_BASE, "stats.parquet")
-_SQ_INDEX_CURRENT: tuple | None = None  # (sf_dir, (mins, maxs))
-
-
-def _sq_index(spark: SparkSession, sf_dir: str):
-    global _SQ_INDEX_CURRENT
-    key = _corpus_key(sf_dir)
-    if _SQ_INDEX_CURRENT is not None and _SQ_INDEX_CURRENT[0] == key:
-        return _SQ_INDEX_CURRENT[1], _SQ_CODES
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.operators.sq import sq_encode, sq_train
-
-    emb = _t(spark, sf_dir, "embeddings")
-    mins, maxs = sq_train(emb)
-    sq_encode(emb, mins, maxs).select("vec_id", "sq_code").write.mode(
-        "overwrite"
-    ).parquet(_SQ_CODES)
-    os.makedirs(_SQ_IDX_BASE, exist_ok=True)
-    papq.write_table(
-        pa.table({
-            "mins": pa.array([mins], pa.list_(pa.float64())),
-            "maxs": pa.array([maxs], pa.list_(pa.float64())),
-        }),
-        _SQ_STATS_PARQUET,
-    )
-    _SQ_INDEX_CURRENT = (key, (mins, maxs))
-    return (mins, maxs), _SQ_CODES
-
-
-def _sq_oracle_sql() -> str:
-    """DuckDB twin of the SQ8 asymmetric search: dequantize every persisted
-    int8 code against the materialized per-dimension (min, max) stats with
-    the SAME arithmetic shape Spark's fused zip_with/aggregate uses —
-    dist² = Σ ((c+128)·step_d − (q_d − min_d))², step_d = (max−min)/255 —
-    then exact (dist, vec_id) top-k. Both engines derive step/qadj from the
-    identical float64 stats, so the doubles are bit-equal."""
-    term = (
-        "((c.sq_code[i]::DOUBLE + 128.0) * ((st.maxs[i] - st.mins[i]) / 255.0)"
-        " - (q.qe[i]::DOUBLE - st.mins[i]))"
-    )
-    return f"""
-    WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    st AS (SELECT mins, maxs FROM read_parquet('{_SQ_STATS_PARQUET}')),
-    scored AS (
-        SELECT c.vec_id,
-               sqrt(list_sum(list_transform(range(1, {_EMB_DIM} + 1),
-                    i -> {term} * {term}))) AS d
-        FROM read_parquet('{_SQ_CODES}/*.parquet') c, st, q
-    )
-    SELECT vec_id, round(d, 6) AS sq_dist
-    FROM scored ORDER BY d, vec_id LIMIT 10
-    """
-
-
-def sq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar-quantized (int8) ANN — Qdrant's SQ mode, Spark-first: the scan
-    reads 4x fewer bytes (codes only, persisted by ``_sq_index``) and the
-    asymmetric dequantize-vs-query distance is one fused zip_with/aggregate
-    in whole-stage codegen (operators/sq.py:sq_search). Oracle: DuckDB
-    replays the affine-dequant sum over the same codes + stats parquet
-    (_sq_oracle_sql). Recall floor gated in tests/test_recall_report.py
-    (0.975 at sf0.1)."""
-    from vectordb_cloud_spark.operators.sq import sq_search
-
-    qv = _query_vec(spark, sf_dir, 0)
-    (mins, maxs), path = _sq_index(spark, sf_dir)
-    codes = spark.read.parquet(path)
-    hits = sq_search(codes, mins, maxs, qv, k=10, tiebreak="vec_id")
-    return hits.select("vec_id", F.round("sq_dist", 6).alias("sq_dist"))
-
-
 # --- BQ: persisted 1-bit codes + thresholds, hamming + exact rescore -------
-_BQ_IDX_BASE = os.path.join(_ORACLE_ART_BASE, "bq_idx")
-_BQ_CODES = os.path.join(_BQ_IDX_BASE, "codes")
-_BQ_THR_PARQUET = os.path.join(_BQ_IDX_BASE, "thresholds.parquet")
-_BQ_INDEX_CURRENT: tuple | None = None  # (sf_dir, thresholds)
-
-
-def _bq_index(spark: SparkSession, sf_dir: str):
-    global _BQ_INDEX_CURRENT
-    key = _corpus_key(sf_dir)
-    if _BQ_INDEX_CURRENT is not None and _BQ_INDEX_CURRENT[0] == key:
-        return _BQ_INDEX_CURRENT[1], _BQ_CODES
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.operators.sq import bq_encode, bq_train
-
-    emb = _t(spark, sf_dir, "embeddings")
-    thresholds = bq_train(emb)
-    bq_encode(emb, thresholds).select("vec_id", "bq_code").write.mode(
-        "overwrite"
-    ).parquet(_BQ_CODES)
-    os.makedirs(_BQ_IDX_BASE, exist_ok=True)
-    papq.write_table(
-        pa.table({"thr": pa.array([thresholds], pa.list_(pa.float64()))}),
-        _BQ_THR_PARQUET,
-    )
-    _BQ_INDEX_CURRENT = (key, thresholds)
-    return thresholds, _BQ_CODES
 
 
 def _bq_oracle_sql() -> str:
@@ -1664,16 +1204,16 @@ def _bq_oracle_sql() -> str:
     errors on 1<<63 where Spark's shiftleft wraps), XOR+bit_count hamming
     over the persisted codes, (hamming, vec_id) top-k·oversample candidate
     cut, then exact L2 rescore against the base table. dim 64 = one word
-    (_EMB_DIM); wider dims would emit one packed word per 64 dims."""
+    (``fixtures.EMB_DIM``); wider dims would emit one packed word per 64 dims."""
     l2 = _SQL_L2.format(a="e.embedding", b="q.qe")
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    t AS (SELECT thr FROM read_parquet('{_BQ_THR_PARQUET}')),
+    t AS (SELECT thr FROM read_parquet('{fx.BQ_THR}')),
     qbits AS (
         SELECT r.range AS j,
                CASE WHEN q.qe[r.range + 1]::DOUBLE > t.thr[r.range + 1]
                     THEN 1::BIGINT ELSE 0::BIGINT END AS b
-        FROM range({_EMB_DIM}) r, q, t
+        FROM range({fx.EMB_DIM}) r, q, t
     ),
     qword AS (
         SELECT (sum(CASE WHEN j < 63 THEN b * (1::BIGINT << j::INT)
@@ -1684,7 +1224,7 @@ def _bq_oracle_sql() -> str:
     ),
     cand AS (
         SELECT c.vec_id
-        FROM read_parquet('{_BQ_CODES}/*.parquet') c, qword qw
+        FROM read_parquet('{fx.BQ_CODES}/*.parquet') c, qword qw
         ORDER BY bit_count(xor(c.bq_code[1], qw.w)), c.vec_id
         LIMIT {10 * _BQ_OS}
     )
@@ -1709,56 +1249,16 @@ def bq_hamming_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescore over the same codes + thresholds (_bq_oracle_sql)."""
     from vectordb_cloud_spark.operators.sq import bq_search
 
-    qv = _query_vec(spark, sf_dir, 0)
-    thresholds, path = _bq_index(spark, sf_dir)
+    qv = fx.query_vec(spark, sf_dir, 0)
+    thresholds, path = fx.bq_index(spark, sf_dir)
     codes = spark.read.parquet(path)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     hits = bq_search(codes, emb, thresholds, qv, k=10, oversample=_BQ_OS,
                      tiebreak="vec_id")
     return hits.select("vec_id", F.round("dist", 6).alias("dist"))
 
 
 # --- sparse inverted: persisted dim-partitioned postings + query vector ----
-_SPARSE_IDX_BASE = os.path.join(_ORACLE_ART_BASE, "sparse_idx")
-_SPARSE_POSTINGS = os.path.join(_SPARSE_IDX_BASE, "postings")
-_SPARSE_QUERY_PARQUET = os.path.join(_SPARSE_IDX_BASE, "query.parquet")
-_SPARSE_VOCAB = 4096
-_SPARSE_INDEX_CURRENT: tuple | None = None  # (sf_dir, (qdims, qvals))
-
-
-def _sparse_index(spark: SparkSession, sf_dir: str):
-    global _SPARSE_INDEX_CURRENT
-    key = _corpus_key(sf_dir)
-    if _SPARSE_INDEX_CURRENT is not None and _SPARSE_INDEX_CURRENT[0] == key:
-        return _SPARSE_INDEX_CURRENT[1], _SPARSE_POSTINGS
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.functions.embedding import hashed_tfidf_sparse
-    from vectordb_cloud_spark.operators.sparse import (
-        sparse_invert,
-        sparse_persist_inverted,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    # r15 (guide §2.4): materialize the sparse vectors ONCE per build — the
-    # postings write and the query-row probe both re-ran the whole
-    # tokenize/DF/assembly pipeline (two extra full computes per build)
-    sv = hashed_tfidf_sparse(docs, vocab_size=_SPARSE_VOCAB).localCheckpoint()
-    sparse_persist_inverted(sparse_invert(sv), _SPARSE_POSTINGS)
-    qrow = sv.filter(F.col("doc_id") == 1).first()
-    qdims = [int(i) for i in qrow["indices"]]
-    qvals = [float(v) for v in qrow["values"]]
-    os.makedirs(_SPARSE_IDX_BASE, exist_ok=True)
-    papq.write_table(
-        pa.table({
-            "qdim": pa.array(qdims, pa.int32()),
-            "qval": pa.array(qvals, pa.float64()),
-        }),
-        _SPARSE_QUERY_PARQUET,
-    )
-    _SPARSE_INDEX_CURRENT = (key, (qdims, qvals))
-    return (qdims, qvals), _SPARSE_POSTINGS
 
 
 def _sparse_oracle_sql() -> str:
@@ -1768,10 +1268,10 @@ def _sparse_oracle_sql() -> str:
     DECIMAL(38,18)-exact sum of contributions (order-independent in both
     engines — see sparse_topk_inverted), score-desc top-k."""
     return f"""
-    WITH qv AS (SELECT qdim, qval FROM read_parquet('{_SPARSE_QUERY_PARQUET}')),
+    WITH qv AS (SELECT qdim, qval FROM read_parquet('{fx.SPARSE_QUERY}')),
     contrib AS (
         SELECT p.id, CAST(p.value::DOUBLE * qv.qval AS DECIMAL(38,18)) AS c
-        FROM read_parquet('{_SPARSE_POSTINGS}/*/*.parquet', hive_partitioning=1) p
+        FROM read_parquet('{fx.SPARSE_POSTINGS}/*/*.parquet', hive_partitioning=1) p
         JOIN qv ON CAST(p.dim AS INT) = qv.qdim
     ),
     scored AS (SELECT id, round(sum(c)::DOUBLE, 6) AS score
@@ -1787,42 +1287,20 @@ def sparse_topk_inverted_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse lexical search over the PERSISTED dim-partitioned postings
     layout — Qdrant's sparse-vector point type, SPLADE-shaped: real hashed
     TF-IDF vectors (functions/embedding.py:hashed_tfidf_sparse), postings
-    built once per corpus by ``_sparse_index``; the query's ``dim IN``
+    built once per corpus by ``fixtures.sparse_index``; the query's ``dim IN``
     probe prunes partitions so scan bytes ∝ the query's posting lists
     (operators/sparse.py:sparse_topk_inverted — parity-tested against the
     scan-scoring form). Oracle: DuckDB replays the posting join +
     decimal-exact per-doc sum (_sparse_oracle_sql)."""
     from vectordb_cloud_spark.operators.sparse import sparse_topk_inverted
 
-    (qdims, qvals), path = _sparse_index(spark, sf_dir)
+    (qdims, qvals), path = fx.sparse_index(spark, sf_dir)
     postings = spark.read.parquet(path)
     hits = sparse_topk_inverted(postings, qdims, qvals, k=10)
     return hits.select(F.col("id").alias("doc_id"), "score")
 
 
 # --- graph ANN: persisted adjacency + medoid entries, unrolled beam trace --
-_GRAPH_IDX_BASE = os.path.join(_ORACLE_ART_BASE, "graph_idx")
-_GRAPH_ADJ = os.path.join(_GRAPH_IDX_BASE, "adj")
-_GRAPH_INDEX_CURRENT: tuple | None = None  # (sf_dir, entry_ids)
-
-
-def _graph_index(spark: SparkSession, sf_dir: str):
-    global _GRAPH_INDEX_CURRENT
-    key = _corpus_key(sf_dir)
-    if _GRAPH_INDEX_CURRENT is not None and _GRAPH_INDEX_CURRENT[0] == key:
-        return _GRAPH_INDEX_CURRENT[1], _GRAPH_ADJ
-    from vectordb_cloud_spark.operators.graph_ann import (
-        graph_entry_points,
-        knn_graph_build,
-        knn_graph_persist,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    g = knn_graph_build(emb, degree=_GRAPH_DEGREE, refine_rounds=1)
-    entry_ids = graph_entry_points(emb, n_entry=_GRAPH_ENTRIES)
-    knn_graph_persist(g, _GRAPH_ADJ, entry_ids=entry_ids)
-    _GRAPH_INDEX_CURRENT = (key, entry_ids)
-    return entry_ids, _GRAPH_ADJ
 
 
 def _graph_oracle_sql() -> str:
@@ -1850,8 +1328,8 @@ def _graph_oracle_sql() -> str:
         prev = f"v{h}"
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    adj AS (SELECT src, dst FROM read_parquet('{_GRAPH_ADJ}/*.parquet')),
-    ep AS (SELECT id FROM read_parquet('{_GRAPH_ADJ}/_entry_points/*.parquet')),
+    adj AS (SELECT src, dst FROM read_parquet('{fx.GRAPH_ADJ}/*.parquet')),
+    ep AS (SELECT id FROM read_parquet('{fx.GRAPH_ADJ}/_entry_points/*.parquet')),
     v0 AS (SELECT e.vec_id AS node, {l2} AS dist
            FROM embeddings e JOIN ep ON e.vec_id = ep.id, q){"".join(hops)}
     SELECT node AS vec_id, round(dist, 6) AS dist
@@ -1869,13 +1347,13 @@ def ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     early-stop branch, so the DuckDB oracle replays it hop by hop over the
     same adjacency + entries (_graph_oracle_sql) — the approximate answer
     itself is hash-matched. Build is cached ingest-time work
-    (``_graph_index``); per-hop query cost is beam×degree probes,
+    (``fixtures.graph_index``); per-hop query cost is beam×degree probes,
     corpus-size-independent (SCALE.md)."""
     from vectordb_cloud_spark.operators.graph_ann import graph_knn_join
 
-    entry_ids, path = _graph_index(spark, sf_dir)
+    entry_ids, path = fx.graph_index(spark, sf_dir)
     adj = spark.read.parquet(path)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     qdf = emb.filter(F.col("vec_id") == 0).select(
         F.lit(0).alias("query_id"), "embedding"
     )
@@ -1885,57 +1363,19 @@ def ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # classify_titles_mock_embed oracle support: the mock embedder is
-# deterministic, so the title embeddings can be materialized to a parquet
-# that DuckDB reads — the nearest-centroid argmin itself is plain SQL.
-# Category centroids (4 fixed strings) are inlined as DOUBLE[] literals in
-# the SQL (float32 -> double is exact, so both engines see the same values).
+# deterministic, so the title embeddings are materialized to a parquet
+# (fixtures.mock_embedded_docs) that DuckDB reads — the nearest-centroid
+# argmin itself is plain SQL. Category centroids (4 fixed strings) are
+# inlined as DOUBLE[] literals in the SQL (float32 -> double is exact, so
+# both engines see the same values).
 _CLASSIFY_CATS = ["science", "sports", "politics", "technology"]
-# Path is per-process (PID suffix) so concurrent harness runs never collide,
-# and it is an import-time constant because the oracle SQL string (which
-# embeds it) is generated once at registry build. ORDERING CONTRACT: the
-# parquet is materialized as a side effect of running the Spark query fn —
-# the harness must run the Spark side before the oracle SQL (both the driver
-# and tools/check_queries.py do). _CLASSIFY_ORACLE_CURRENT tracks WHICH
-# sf_dir's embeddings the file currently holds, so alternating sf_dirs in one
-# process rewrites instead of serving stale rows (ADVICE r4).
-_CLASSIFY_ORACLE_PARQUET = os.path.join(_ORACLE_ART_BASE, "classify_emb.parquet")
-_CLASSIFY_ORACLE_CURRENT: str | None = None
+_CLASSIFY_EMB = "classify_emb"  # fixture name of the embedded title slice
 
 
 def _classify_cat_rows() -> list[tuple[str, list[float]]]:
     from vectordb_cloud_spark.functions.embedding import mock_vector
 
     return [(c, mock_vector(c, 64)) for c in _CLASSIFY_CATS]
-
-
-def _classify_oracle_materialize(spark: SparkSession, sf_dir: str) -> None:
-    """Write (doc_id, embedding) mock-embeds for the benched title slice to a
-    fixed path the DuckDB oracle reads. Driver-side over 50 rows — O(small)."""
-    global _CLASSIFY_ORACLE_CURRENT
-    key = _corpus_key(sf_dir)
-    if _CLASSIFY_ORACLE_CURRENT == key and os.path.exists(_CLASSIFY_ORACLE_PARQUET):
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from vectordb_cloud_spark.functions.embedding import mock_vector
-
-    rows = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", "text")
-        .collect()
-    )
-    table = pa.table({
-        "doc_id": pa.array([r["doc_id"] for r in rows], pa.int64()),
-        "embedding": pa.array(
-            [mock_vector(r["text"] or "", 64) for r in rows],
-            pa.list_(pa.float32()),
-        ),
-    })
-    os.makedirs(_ORACLE_ART_BASE, exist_ok=True)
-    pq.write_table(table, _CLASSIFY_ORACLE_PARQUET)
-    _CLASSIFY_ORACLE_CURRENT = key
 
 
 def _classify_oracle_sql() -> str:
@@ -1946,7 +1386,7 @@ def _classify_oracle_sql() -> str:
     l2 = _SQL_L2.format(a="t.embedding", b="c.centroid")
     return f"""
     WITH t AS (SELECT doc_id, embedding
-               FROM read_parquet('{_CLASSIFY_ORACLE_PARQUET}')),
+               FROM read_parquet('{fx.art_path(_CLASSIFY_EMB)}/*.parquet')),
          c(cat, centroid) AS (VALUES {cat_values})
     SELECT doc_id, cat FROM (
         SELECT t.doc_id, c.cat,
@@ -1969,7 +1409,7 @@ def classify_titles_mock_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectordb_cloud_spark.functions.embedding import mock_embed
     from vectordb_cloud_spark.operators.classify import nearest_centroid
 
-    _classify_oracle_materialize(spark, sf_dir)
+    fx.mock_embedded_docs(spark, sf_dir, _CLASSIFY_EMB, 50)
     from vectordb_cloud_spark.session import local_df
 
     cats = local_df(
@@ -1979,7 +1419,7 @@ def classify_titles_mock_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pandas_udf once per parent partition (32 sequential Arrow round-trips,
     # measured ~4s); repartition shuffles first, one batch, one worker.
     titles = (
-        _t(spark, sf_dir, "documents")
+        fx.table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 50)
         .repartition(1)
         .select("doc_id", mock_embed("text", 64).alias("embedding"))
@@ -2002,7 +1442,7 @@ def price_percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     tpch_q1/grouping_sets/customer_order_stats; accuracy vs the approx twin
     stays unit-tested); the slot went to the r9 serving grammar
     (VERDICT r9 next-round #1)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = fx.table(spark, sf_dir, "lineitem")
     # ONE array-percentile aggregate, not three scalar ones: each scalar
     # percentile buffers every group value independently (3x the memory and
     # sort work); the array form shares one buffer — measured 2.1x faster,
@@ -2026,7 +1466,7 @@ def price_percentiles_by_flag_approx(spark: SparkSession, sf_dir: str) -> DataFr
     registry): sketch outputs are engine-specific, so there is no DuckDB hash
     oracle; accuracy is asserted against the exact query in tests and the
     runtime is recorded by bench.py as ``price_percentiles_approx``."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = fx.table(spark, sf_dir, "lineitem")
     pcts = F.expr(
         "approx_percentile(l_extendedprice, array(0.25D, 0.5D, 0.9D), 10000)"
     )
@@ -2046,7 +1486,7 @@ def top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``search_groups_topk``; the slot went to ``hybrid_rrf_topk``)."""
     from vectordb_cloud_spark.functions.text import words
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     terms = (
         docs.select("lang", F.explode(words("text")).alias("w"))
         .select("lang", F.lower("w").alias("term"))
@@ -2070,7 +1510,7 @@ def scalar_functions_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tpch rows, instr/substring in the filter DSL row, the \\n-split quirk in
     tests/test_api.py::test_get_category_for_title); the slot went to the
     r9 serving grammar (VERDICT r9 next-round #1)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
+    docs = fx.table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return docs.select(
         "doc_id",
         F.upper(F.substring("text", 1, 10)).alias("head_upper"),
@@ -2087,7 +1527,7 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle bounded by bucket count). Rotated OUT of the 50-slot registry in
     r7 (redundant with the other grouped-agg oracle rows) to make room for
     the SQ/BQ/sparse/graph ANN oracle entries; kept library-level."""
-    ev = _t(spark, sf_dir, "events")
+    ev = fx.table(spark, sf_dir, "events")
     return ev.groupBy(
         "event_type", F.floor(F.col("value") / 25.0).cast("long").alias("bucket")
     ).agg(F.count("*").alias("n"))
@@ -2115,8 +1555,8 @@ def customer_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT (DuckDB 1.0 max_by has no struct ordering), so the latest-order
     lookup costs zero extra shuffles on top of the profile aggregation
     (replaces the round-1 window-rank query ``latest_order_per_customer``)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = fx.table(spark, sf_dir, "customer")
+    o = fx.table(spark, sf_dir, "orders")
     order_key = (
         F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date")).cast("long")
         * F.lit(10_000_000_000).cast("long")
@@ -2171,8 +1611,8 @@ _BM25_ORACLE = """
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical retrieval gate: BM25 top-k over the documents corpus via the
-    PERSISTED inverted index (built once per corpus by ``_bm25_index`` —
-    postings term-sharded and term-sorted so the query's term ``isin``
+    PERSISTED inverted index (built once per corpus by
+    ``fixtures.bm25_index`` — postings term-sharded and term-sorted so the query's term ``isin``
     predicate skips row groups; index construction is ingest-time work,
     benched separately as ``bm25_index_build``). The oracle re-derives the
     same postings/df/dl/corpus tables in SQL — BM25 is pure relational math,
@@ -2186,46 +1626,14 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``query_mmr_rerank_topk``, VERDICT r12 #2)."""
     from vectordb_cloud_spark.operators.lexical import bm25_search
 
-    postings, docstats, doclens, corpus = _bm25_index(spark, sf_dir)
+    postings, docstats, doclens, corpus = fx.bm25_index(spark, sf_dir)
     return bm25_search(postings, docstats, doclens, corpus, "spark hash join", k=10)
 
 
 # -- hybrid retrieval (BM25 ∪ dense kNN via reciprocal-rank fusion) ---------
 _HYBRID_QUERY_TEXT = "spark hash join"
 _HYBRID_DENSE_SLICE = 200  # dense side ranks this doc_id slice (see docstring)
-_HYBRID_ORACLE_PARQUET = os.path.join(_ORACLE_ART_BASE, "hybrid_emb.parquet")
-_HYBRID_ORACLE_CURRENT: str | None = None
-
-
-def _hybrid_oracle_materialize(spark: SparkSession, sf_dir: str) -> None:
-    """Write (doc_id, embedding) mock-embeds of the dense-side slice to a
-    fixed path the DuckDB oracle reads (same artifact pattern as
-    ``classify_titles_mock_embed``). Driver-side over ≤200 rows."""
-    global _HYBRID_ORACLE_CURRENT
-    key = _corpus_key(sf_dir)
-    if _HYBRID_ORACLE_CURRENT == key and os.path.exists(_HYBRID_ORACLE_PARQUET):
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from vectordb_cloud_spark.functions.embedding import mock_vector
-
-    rows = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _HYBRID_DENSE_SLICE)
-        .select("doc_id", "text")
-        .collect()
-    )
-    table = pa.table({
-        "doc_id": pa.array([r["doc_id"] for r in rows], pa.int64()),
-        "embedding": pa.array(
-            [mock_vector(r["text"] or "", 64) for r in rows],
-            pa.list_(pa.float32()),
-        ),
-    })
-    os.makedirs(_ORACLE_ART_BASE, exist_ok=True)
-    pq.write_table(table, _HYBRID_ORACLE_PARQUET)
-    _HYBRID_ORACLE_CURRENT = key
+_HYBRID_EMB = "hybrid_emb"  # fixture name of the embedded dense-side slice
 
 
 def _hybrid_oracle_sql() -> str:
@@ -2273,7 +1681,7 @@ def _hybrid_oracle_sql() -> str:
     ),
     dense AS (
       SELECT e.doc_id, {l2} AS dist
-      FROM read_parquet('{_HYBRID_ORACLE_PARQUET}') e CROSS JOIN q
+      FROM read_parquet('{fx.art_path(_HYBRID_EMB)}/*.parquet') e CROSS JOIN q
       ORDER BY dist ASC, e.doc_id ASC
       LIMIT 20
     ),
@@ -2312,14 +1720,14 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectordb_cloud_spark.functions.vector import l2_distance_to
     from vectordb_cloud_spark.operators.lexical import bm25_search, rrf_fuse
 
-    _hybrid_oracle_materialize(spark, sf_dir)
-    postings, docstats, doclens, corpus = _bm25_index(spark, sf_dir)
+    fx.mock_embedded_docs(spark, sf_dir, _HYBRID_EMB, _HYBRID_DENSE_SLICE)
+    postings, docstats, doclens, corpus = fx.bm25_index(spark, sf_dir)
     lex = bm25_search(postings, docstats, doclens, corpus,
                       _HYBRID_QUERY_TEXT, k=20)
     # repartition(1), NOT coalesce(1): one Arrow batch for the pandas_udf
     # (the classify_titles_mock_embed lesson)
     dense = (
-        _t(spark, sf_dir, "documents")
+        fx.table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < _HYBRID_DENSE_SLICE)
         .repartition(1)
         .select("doc_id", mock_embed("text", 64).alias("emb"))
@@ -2333,71 +1741,12 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rrf_fuse([lex, dense], id_col="doc_id", k=10, max_list_rows=None)
 
 
-_BM25_INDEX_CACHE: dict[str, tuple] = {}
-_BM25_READS: tuple | None = None  # ((corpus key, session id), read relations)
-
-
-def _bm25_index(spark: SparkSession, sf_dir: str):
-    """Build-once-per-corpus persisted BM25 index (the IVF/PQ treatment):
-    postings repartitioned by term and term-sorted within files, so a
-    keyword query's pruned postings scan reads a vocabulary-fraction of the
-    bytes; corpus stats collapse to two driver scalars."""
-    key = _corpus_key(sf_dir)
-    if key not in _BM25_INDEX_CACHE:
-        import tempfile
-
-        from vectordb_cloud_spark.operators.lexical import bm25_index
-
-        docs = _t(spark, sf_dir, "documents")
-        postings, docstats, doclens, corpus = bm25_index(docs, id_col="doc_id")
-        root = tempfile.mkdtemp(prefix="bm25_idx_")
-        paths = {n: os.path.join(root, n) for n in ("postings", "docstats", "doclens")}
-        (
-            postings.repartition(8, "term")
-            .sortWithinPartitions("term")
-            .write.parquet(paths["postings"])
-        )
-        # r15 (guide §2.4): derive the secondary tables from materialized
-        # data instead of re-running the tokenize+explode pipeline per
-        # write — docstats is a groupBy over the postings just written
-        # (identical (term, df) rows: same content, one scan instead of a
-        # recompute), and the corpus scalars aggregate the checkpointed
-        # doclens rather than re-tokenizing the corpus a fourth time.
-        (
-            spark.read.parquet(paths["postings"])
-            .groupBy("term")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .write.parquet(paths["docstats"])
-        )
-        dl = doclens.localCheckpoint()
-        dl.write.parquet(paths["doclens"])
-        row = dl.agg(
-            F.count("*").alias("n_docs"), F.avg("dl").alias("avg_len")
-        ).first()
-        _BM25_INDEX_CACHE[key] = (paths, (int(row["n_docs"]), float(row["avg_len"])))
-    paths, (n_docs, avg_len) = _BM25_INDEX_CACHE[key]
-    # corpus stats ride as the pre-resolved tuple (r14): bm25_search's
-    # probe of a local-relation corpus frame cost ~0.9s of pure
-    # first()-on-LocalRelation overhead PER QUERY; the scalars were
-    # already cached here at build time. The three read relations are
-    # memoized per session too (the _ivf_assigned treatment — re-listing
-    # footers per query is a serving anti-pattern, not index cost).
-    memo_key = (key, id(spark))
-    global _BM25_READS
-    if _BM25_READS is None or _BM25_READS[0] != memo_key:
-        _BM25_READS = (memo_key, tuple(
-            spark.read.parquet(paths[n])
-            for n in ("postings", "docstats", "doclens")))
-    p, ds, dl = _BM25_READS[1]
-    return (p, ds, dl, (n_docs, avg_len))
-
-
 def events_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily distinct-user counts. Rotated OUT of the 50-slot registry in
     r8 (events-table time aggregation stays oracle-checked via
     `streaming_hourly_counts` and `sessionize_users`) to make room for the
     serving-API rows; kept library-level."""
-    ev = _t(spark, sf_dir, "events")
+    ev = fx.table(spark, sf_dir, "events")
     return ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.countDistinct("user_id").alias("dau"), F.count("*").alias("n_events")
     )
@@ -2409,7 +1758,7 @@ def price_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the comparison is deterministic. Rotated OUT of the 50-slot registry in
     r7 (redundant with the other window-agg oracle rows) to make room for
     the SQ/BQ/sparse/graph ANN oracle entries; kept library-level."""
-    p = _t(spark, sf_dir, "part")
+    p = fx.table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand")
     brand_avg = (
         F.sum(F.col("p_retailprice").cast("decimal(28,10)")).over(w).cast("double")
@@ -2445,7 +1794,7 @@ def asof_last_purchase_before_click(spark: SparkSession, sf_dir: str) -> DataFra
     oracle is DuckDB's native ASOF JOIN."""
     from vectordb_cloud_spark.operators.temporal import asof_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = fx.table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     purchases = (
         ev.filter(F.col("event_type") == "purchase")
@@ -2481,7 +1830,7 @@ def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from vectordb_cloud_spark.operators.temporal import range_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = fx.table(spark, sf_dir, "events")
     from vectordb_cloud_spark.session import local_df
 
     tiers = local_df(
@@ -2508,23 +1857,14 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet drives a watermarked tumbling-window stream (availableNow) into
     a memory sink; the streamed result must hash-match the batch SQL — the
     exactly-once guarantee made testable (SURVEY.md §2.8)."""
-    batch = _t(spark, sf_dir, "events")  # sets confs; provides the schema
+    fx.table(spark, sf_dir, "events")  # pins the parent session's confs
     raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    # r15 (ADVICE r14): the stream runs in a CHILD session (shared
-    # SparkContext, isolated SQLConf) so sizing its shuffle/state-store
-    # partition count never mutates the caller's session — concurrent
-    # queries on the parent keep their own shuffle sizing, and there is no
-    # conf to restore. Streaming aggregations pin ONE state-store instance
-    # per shuffle partition per micro-batch and AQE never coalesces them —
-    # at 32-64 partitions most instances held a handful of keys and the
-    # run was state-store setup, not aggregation (r14: 2.0s -> 1.4s at 8).
-    # Env-tunable: real deployments size it to key cardinality.
-    ss = spark.newSession()
-    ss.conf.set("spark.sql.session.timeZone", "UTC")
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ss.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    ss.conf.set("spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    # the stream runs in a CHILD session kept per parent session
+    # (fixtures.stream_session), so its shuffle sizing never mutates the
+    # caller's session; the previous run's memory sink is dropped first
+    ss = fx.stream_session(spark)
+    name = "__stream_hourly_out"
+    ss.catalog.dropTempView(name)
     # the file stream source needs a DIRECTORY; glob-filter to the events file
     stream = (
         ss.readStream.schema(raw_schema)
@@ -2537,7 +1877,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(raw_schema["ts"].dataType, TimestampNTZType):
         # watermarks require TIMESTAMP; NTZ appears if the schema was probed
-        # before _t pinned inferTimestampNTZ off
+        # before fixtures.table() pinned inferTimestampNTZ off
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         stream.withWatermark("ts", "2 hours")
@@ -2545,7 +1885,6 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    name = "__stream_hourly_out"
     q = (
         agg.writeStream.outputMode("complete").format("memory")
         .queryName(name).trigger(availableNow=True).start()
@@ -2564,46 +1903,10 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of md5(seed ':' k//16)) and the 16-dim feature is integer-sum stats, so
 # DuckDB can replay decode AND feature math bit-for-bit given only the
 # per-media (media_id, format, width, height, seed) metadata — materialized
-# to a per-PID parquet by the Spark query fn (same ordering contract as the
-# classify/IVF/PQ oracles). Media is synthetic (no media table in the
-# driver fixtures), so the metadata parquet is the oracle's whole input.
-_MM_MEDIA_PARQUET = os.path.join(_ORACLE_ART_BASE, "mm_media.parquet")
-_MM_MEDIA_WRITTEN = False
+# by the Spark query fn (fixtures.multimodal_media). Media is synthetic (no
+# media table in the driver fixtures), so the metadata parquet is the
+# oracle's whole input.
 _MM_MAX_BLOCKS = 1408  # ceil(max_w * max_h * 3 / 16) = ceil(95*79*3/16)
-
-
-def _multimodal_media_materialize(spark: SparkSession) -> None:
-    """Collect the synthetic media table's metadata + payload seeds (64
-    rows) to the oracle parquet. Derived from the same make_fake_media /
-    _payload_seed code path the Spark query uses, so the two can't drift."""
-    global _MM_MEDIA_WRITTEN
-    if _MM_MEDIA_WRITTEN and os.path.exists(_MM_MEDIA_PARQUET):
-        return
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.operators.multimodal import (
-        _payload_seed,
-        make_fake_media,
-    )
-
-    rows = (
-        make_fake_media(spark, n=64, kind="image")
-        .select("media_id", "format", "width", "height", "data")
-        .collect()
-    )
-    os.makedirs(_ORACLE_ART_BASE, exist_ok=True)
-    papq.write_table(
-        pa.table({
-            "media_id": pa.array([r["media_id"] for r in rows], pa.int64()),
-            "format": pa.array([r["format"] for r in rows], pa.string()),
-            "width": pa.array([r["width"] for r in rows], pa.int64()),
-            "height": pa.array([r["height"] for r in rows], pa.int64()),
-            "seed": pa.array([_payload_seed(r["data"]) for r in rows], pa.string()),
-        }),
-        _MM_MEDIA_PARQUET,
-    )
-    _MM_MEDIA_WRITTEN = True
 
 
 def _multimodal_oracle_sql() -> str:
@@ -2616,7 +1919,7 @@ def _multimodal_oracle_sql() -> str:
     return f"""
     WITH m AS (
       SELECT media_id, format, width, height, seed
-      FROM read_parquet('{_MM_MEDIA_PARQUET}')
+      FROM read_parquet('{fx.art_path("mm_media")}/*.parquet')
     ),
     blocks AS (
       SELECT m.media_id, m.width, m.height,
@@ -2672,7 +1975,7 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_fake_media,
     )
 
-    _multimodal_media_materialize(spark)
+    fx.multimodal_media(spark)
     media = make_fake_media(spark, n=64, kind="image")
     feats = extract_image_features(media, feature_dim=16)
     # posexplode the vector to scalar rows: the driver's canonicalizer sorts
@@ -2682,7 +1985,6 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "format",
         F.posexplode("feature").alias("idx", "value"),
     ).withColumn("value", F.round(F.col("value").cast("double"), 6))
-
 
 
 # ---------------------------------------------------------------------------
@@ -2716,7 +2018,7 @@ def faceted_search_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-facet rescans."""
     from vectordb_cloud_spark.operators.knn import facet_counts
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return facet_counts(docs, ["lang", "source"],
                         filters=F.col("n_chars") > 400,
                         max_values_per_facet=10)
@@ -2769,8 +2071,8 @@ def search_groups_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the lookup has no such point, ``lookup_`` column prefix."""
     from vectordb_cloud_spark.operators.knn import search_groups
 
-    qv = _query_vec(spark, sf_dir, 0)
-    emb = _t(spark, sf_dir, "embeddings")
+    qv = fx.query_vec(spark, sf_dir, 0)
+    emb = fx.table(spark, sf_dir, "embeddings")
     lookup = (
         emb.filter(F.col("label").isNotNull())
         .groupBy("label")
@@ -2815,7 +2117,7 @@ def recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     example fetch is one bounded isin probe (operators/knn.py recommend)."""
     from vectordb_cloud_spark.operators.knn import recommend
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     hits = recommend(emb, positive_ids=[1, 2, 3], negative_ids=[4], k=8,
                      tiebreak="vec_id")
     return hits.select("vec_id", F.round("dist", 6).alias("dist"))
@@ -2884,7 +2186,7 @@ def gopher_quality_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan the single-file scan out before the regex battery (r14): the
     # rule flags are the whole cost and ran on ONE task (1.51s -> 0.62s);
     # parallelize_narrow is a no-op on multi-file tables at scale
-    docs = parallelize_narrow(_t(spark, sf_dir, "documents"))
+    docs = parallelize_narrow(fx.table(spark, sf_dir, "documents"))
     g = docs.select(gopher_quality_flags("text").alias("g"))
     rules = ["word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
              "bullet_lines_ok", "ellipsis_lines_ok", "alpha_words_ok",
@@ -2897,67 +2199,10 @@ def gopher_quality_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- passage retrieval: chunk-level hashed-TF-IDF index, materialized ------
 # The hashed-TF-IDF embedder uses xxhash64 (no DuckDB twin), so — like the
-# LSH planes / PQ codes / graph adjacency oracles — the CHUNK INDEX is
-# materialized to a per-PID parquet by the Spark side and DuckDB replays
-# the search over it: cosine per chunk, max-pooled per doc with the best
-# chunk pinned, top-k. The approximate-pipeline OUTPUT is hash-matched.
-_PASSAGE_ORACLE_PARQUET = os.path.join(_ORACLE_ART_BASE, "passage_chunks.parquet")
-_PASSAGE_ORACLE_CURRENT: tuple | None = None
-_PASSAGE_DOCS = 300  # doc_id < 300: bounded fixture slice
-_PASSAGE_INDEX_CACHE: dict[tuple, tuple] = {}  # corpus token -> (path, qv)
-_PASSAGE_READS: tuple | None = None  # ((token, session id), read relation)
-
-
-def _passage_index_built(spark: SparkSession, sf_dir: str):
-    """Build-once-per-corpus PERSISTED chunk-TF-IDF passage index — the
-    bm25/IVF/PQ treatment (r15, VERDICT r14 #1): chunking + embedding are
-    index-construction cost (benched as ``passage_index_build``), and the
-    query becomes a probe + scoring scan over the persisted chunks instead
-    of rebuilding the whole index per call (13 jobs / ~2s of construction
-    measured). Hash-distributed by doc_id and doc-sorted within files so
-    the query-vector probe prunes on row-group stats. Returns
-    (index read relation, query vector)."""
-    global _PASSAGE_ORACLE_CURRENT, _PASSAGE_READS
-    token = _corpus_key(sf_dir)
-    if token not in _PASSAGE_INDEX_CACHE:
-        import tempfile
-
-        from vectordb_cloud_spark.operators.chunking import chunk_tfidf_index
-
-        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < _PASSAGE_DOCS)
-        idx = chunk_tfidf_index(docs, dim=64, chunk_tokens=64, overlap=16)
-        path = os.path.join(tempfile.mkdtemp(prefix="passage_idx_"), "chunks")
-        (
-            idx.repartition("doc_id")
-            .sortWithinPartitions("doc_id", "chunk_idx")
-            .write.parquet(path)
-        )
-        _PASSAGE_INDEX_CACHE[token] = (path, None)
-    path, qv = _PASSAGE_INDEX_CACHE[token]
-    memo_key = (token, id(spark))
-    if _PASSAGE_READS is None or _PASSAGE_READS[0] != memo_key:
-        _PASSAGE_READS = (memo_key, spark.read.parquet(path))
-    idx = _PASSAGE_READS[1]
-    if qv is None:
-        # fixture-constant query vector (doc 0's first chunk) resolved once
-        # at build time from the persisted index: a pushed-down point read
-        row = (
-            idx.filter((F.col("doc_id") == 0) & (F.col("chunk_idx") == 0))
-            .select("embedding")
-            .first()
-        )
-        qv = [float(x) for x in row[0]]
-        _PASSAGE_INDEX_CACHE[token] = (path, qv)
-    if _PASSAGE_ORACLE_CURRENT != token or not os.path.exists(_PASSAGE_ORACLE_PARQUET):
-        import pandas as pd
-
-        os.makedirs(_ORACLE_ART_BASE, exist_ok=True)
-        # same bytes the Spark query scans (parquet roundtrip is exact)
-        pd.read_parquet(path, columns=["doc_id", "chunk_idx", "embedding"]).to_parquet(
-            _PASSAGE_ORACLE_PARQUET
-        )
-        _PASSAGE_ORACLE_CURRENT = token
-    return idx, qv
+# LSH planes / PQ codes / graph adjacency oracles — DuckDB replays the
+# search over the persisted CHUNK INDEX (fixtures.passage_index): cosine
+# per chunk, max-pooled per doc with the best chunk pinned, top-k. The
+# approximate-pipeline OUTPUT is hash-matched.
 
 
 def _passage_oracle_sql() -> str:
@@ -2965,7 +2210,8 @@ def _passage_oracle_sql() -> str:
     na = _SQL_NORM.format(a="c.embedding")
     nb = _SQL_NORM.format(a="q.qe")
     return f"""
-    WITH chunks AS (SELECT * FROM read_parquet('{_PASSAGE_ORACLE_PARQUET}')),
+    WITH chunks AS (SELECT doc_id, chunk_idx, embedding
+                    FROM read_parquet('{fx.PASSAGE_CHUNKS}/*.parquet')),
     q AS (SELECT embedding AS qe FROM chunks WHERE doc_id = 0 AND chunk_idx = 0),
     scored AS (
       SELECT c.doc_id, c.chunk_idx, {dot} / ({na} * {nb}) AS score
@@ -2996,12 +2242,10 @@ def passage_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk (self-retrieval: doc 0 must come back at score 1)."""
     from vectordb_cloud_spark.operators.chunking import passage_topk
 
-    # r15 (VERDICT r14 #1): the chunk index is a PERSISTED build artifact
-    # (the bm25/IVF/PQ precedent) — construction is benched as
-    # passage_index_build; the query is one scoring scan of the persisted
-    # chunks (r14's localCheckpoint still rebuilt the index per call:
-    # 13 jobs / ~2s of per-query construction).
-    idx, qv = _passage_index_built(spark, sf_dir)
+    # the chunk index is a PERSISTED build artifact (construction is
+    # benched as passage_index_build); the query is one scoring scan of the
+    # persisted chunks
+    idx, qv = fx.passage_index(spark, sf_dir)
     return passage_topk(idx, qv, k=8, per_doc="max")
 
 
@@ -3052,7 +2296,7 @@ def filter_dsl_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     match.regex ≡ rlike)."""
     from vectordb_cloud_spark.filters import compile_filter
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = fx.table(spark, sf_dir, "documents")
     return docs.filter(
         compile_filter(_FILTER_DSL_SPEC, id_col="doc_id")
     ).select("doc_id", "lang", "source", "n_chars")
@@ -3095,7 +2339,7 @@ def geo_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot went to the r10-new serving surfaces per VERDICT r10 #1."""
     from vectordb_cloud_spark.filters import compile_filter, geo_distance_meters_to
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = fx.table(spark, sf_dir, "customer")
     pts = cust.select(
         "c_custkey",
         ((F.col("c_custkey") * 7919 % 18000) / 100.0 - 90.0).alias("lat"),
@@ -3156,7 +2400,7 @@ def discover_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the slot went to the r10-new serving surfaces per VERDICT r10 #1."""
     from vectordb_cloud_spark.operators.discover import discover
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     vecs = {r["vec_id"]: [float(x) for x in r["embedding"]]
             for r in emb.filter(F.col("vec_id") <= 6).collect()}
     pairs = [(vecs[1], vecs[2]), (vecs[3], vecs[4]), (vecs[5], vecs[6])]
@@ -3204,7 +2448,7 @@ def multivector_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_into_tokens,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     mv = emb.select(
         "vec_id", split_into_tokens("embedding", 4).alias("token_vectors")
     )
@@ -3218,11 +2462,7 @@ def multivector_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # r9 registry rotation (VERDICT r8 next-round #1): the r8 collection/serving
 # machinery under the hard oracle — query_points fusion, the quantized
-# collection sidecar, DSIR, line-level dedup, formula rescoring. Rotated
-# out: knn_cosine_topk, pivot_status_priority, events_json_extract (shape-
-# redundant), uuid3_content_ids (provably no DuckDB twin; exact unit test
-# stands), sq_adc_topk (superseded by quantized_search_int8, which proves
-# the same affine math THROUGH the collection sidecar lifecycle).
+# collection sidecar, DSIR, line-level dedup, formula rescoring.
 # ---------------------------------------------------------------------------
 
 _RRF_PRE_N = 20  # per-leg prefetch limit for query_rrf_fusion_topk
@@ -3276,9 +2516,9 @@ def query_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the filter-then-limit ordering."""
     from vectordb_cloud_spark.query_api import query_points
 
-    emb = _t(spark, sf_dir, "embeddings")
-    q0 = _query_vec(spark, sf_dir, 0)
-    q1 = _query_vec(spark, sf_dir, 1)
+    emb = fx.table(spark, sf_dir, "embeddings")
+    q0 = fx.query_vec(spark, sf_dir, 0)
+    q1 = fx.query_vec(spark, sf_dir, 1)
     out = query_points(
         emb, {"fusion": "rrf"},
         prefetch=[{"query": q0, "limit": _RRF_PRE_N},
@@ -3287,54 +2527,6 @@ def query_rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         limit=10, id_col="vec_id",
     )
     return out.select("vec_id", "rrf_score")
-
-
-# --- quantized collection (int8 sidecar) -----------------------------------
-_QUANTCOL_BASE = os.path.join(_ORACLE_ART_BASE, "quant_col")
-_QUANTCOL_STATS = os.path.join(_ORACLE_ART_BASE, "quant_col_stats.parquet")
-_QUANTCOL_CURRENT: str | None = None
-
-
-def _quantized_collection(spark: SparkSession, sf_dir: str):
-    """Collection fixture: embeddings upserted into a catalog collection
-    with ``quantization={"scalar": {"type": "int8"}}``, codes sidecar
-    materialized, per-dim (min, max) stats exported for the oracle.
-    Exercises the FULL r8 collection lifecycle (create → validate →
-    bucketed upsert → versioned quant.v{N} sidecar build)."""
-    global _QUANTCOL_CURRENT
-    import json as _json
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.collections import CollectionCatalog
-
-    key = _corpus_key(sf_dir)
-    cat = CollectionCatalog(spark, _QUANTCOL_BASE)
-    if _QUANTCOL_CURRENT == key:
-        return cat
-    shutil.rmtree(_QUANTCOL_BASE, ignore_errors=True)
-    cat = CollectionCatalog(spark, _QUANTCOL_BASE)
-    cat.create("q8", dim=_EMB_DIM, n_buckets=4,
-               quantization={"scalar": {"type": "int8"}})
-    emb = _t(spark, sf_dir, "embeddings")
-    cat.upsert("q8", emb.select(
-        F.col("vec_id").alias("id"), "embedding",
-        (F.col("vec_id") % 50).alias("user_id"),
-    ))
-    qdir = cat.quantize("q8")
-    with open(os.path.join(qdir, "params.json")) as f:
-        params = _json.load(f)
-    papq.write_table(
-        pa.table({
-            "mins": pa.array([params["mins"]], pa.list_(pa.float64())),
-            "maxs": pa.array([params["maxs"]], pa.list_(pa.float64())),
-        }),
-        _QUANTCOL_STATS,
-    )
-    _QUANTCOL_CURRENT = key
-    return cat
 
 
 def _quantcol_oracle_sql() -> str:
@@ -3348,14 +2540,14 @@ def _quantcol_oracle_sql() -> str:
         "((c.sq_code[i]::DOUBLE + 128.0) * ((st.maxs[i] - st.mins[i]) / 255.0)"
         " - (q.qe[i]::DOUBLE - st.mins[i]))"
     )
-    codes_glob = os.path.join(_QUANTCOL_BASE, "q8", "quant.v*", "codes",
+    codes_glob = os.path.join(fx.QUANT_COL, "q8", "quant.v*", "codes",
                               "*.parquet")
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    st AS (SELECT mins, maxs FROM read_parquet('{_QUANTCOL_STATS}')),
+    st AS (SELECT mins, maxs FROM read_parquet('{fx.QUANT_STATS}')),
     scored AS (
         SELECT c.id,
-               sqrt(list_sum(list_transform(range(1, {_EMB_DIM} + 1),
+               sqrt(list_sum(list_transform(range(1, {fx.EMB_DIM} + 1),
                     i -> {term} * {term}))) AS d
         FROM read_parquet('{codes_glob}') c, st, q
     )
@@ -3375,8 +2567,8 @@ def quantized_search_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator-level sq_adc_topk with the same math proven THROUGH the
     collection lifecycle. Recall floor stays gated in
     tests/test_recall_report.py (0.975 at sf0.1)."""
-    cat = _quantized_collection(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir, 0)
+    cat = fx.quantized_collection(spark, sf_dir)
+    qv = fx.query_vec(spark, sf_dir, 0)
     return cat.search_quantized("q8", qv, k=10)
 
 
@@ -3458,7 +2650,7 @@ def dsir_select_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage including the sampling keys."""
     from vectordb_cloud_spark.operators.dsir import dsir_select
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    docs = fx.table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     out = dsir_select(
         docs.select("doc_id", "text"),
         docs.filter(F.col("lang") == "de").select("doc_id", "text"),
@@ -3519,7 +2711,7 @@ def line_dedup_injected(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus."""
     from vectordb_cloud_spark.operators.dedup import line_dedup_corpus
 
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = fx.table(spark, sf_dir, "documents").select("doc_id", "text")
     injected = docs.filter(F.col("doc_id") < 30).select(
         (F.col("doc_id") + 20000).alias("doc_id"),
         F.concat_ws("\n", F.lit(_LINE_BANNER), F.col("text"),
@@ -3565,8 +2757,8 @@ def formula_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM column). Oracle replays candidates and the full formula."""
     from vectordb_cloud_spark.formula import rescore_with_formula
 
-    emb = _t(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir, 0)
+    emb = fx.table(spark, sf_dir, "embeddings")
+    qv = fx.query_vec(spark, sf_dir, 0)
     cand = knn_search(emb, qv, k=50, tiebreak="vec_id")
     formula = {"sum": [
         {"sum": [
@@ -3592,53 +2784,11 @@ def formula_rescore_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # --- text-index routed search through the SERVICE --------------------------
-_TXT_SVC_ROOT = os.path.join(_ORACLE_ART_BASE, "text_svc")
-_TXT_COLLECTION = "EverGrowingVDB"  # VectorService's prod collection name
 _TXT_QUERY_TEXT = "fast vector search"   # embedded via the mock embedder
 _TXT_MATCH_TEXT = "vector scan"          # the routed match.text clause
 _TXT_USER = 3                            # tenant (user_id = doc_id % 5)
 _TXT_LANG = "en"                         # the residual scan-stage clause
 _TXT_K = 10
-_TXT_SVC_CURRENT: tuple | None = None    # (sf_dir_key, service)
-
-
-def _text_service(spark: SparkSession, sf_dir: str):
-    """Service fixture: a VectorService over the documents table with a
-    ``"text"`` payload index on the body field — the FULL serving stack
-    (catalog create → payload-index declare → bucketed LWW upsert with the
-    mock embedder → lazy textidx.v{N} postings sidecar). The oracle reads
-    the data files and the postings the catalog actually wrote."""
-    global _TXT_SVC_CURRENT
-    import shutil
-
-    from vectordb_cloud_spark.api import VectorService
-    from vectordb_cloud_spark.functions.embedding import mock_embed
-
-    key = _corpus_key(sf_dir)
-    if (_TXT_SVC_CURRENT is not None and _TXT_SVC_CURRENT[0] == key
-            and _TXT_SVC_CURRENT[1].spark is spark):
-        return _TXT_SVC_CURRENT[1]
-    shutil.rmtree(_TXT_SVC_ROOT, ignore_errors=True)
-    svc = VectorService(spark, _TXT_SVC_ROOT, dim=_EMB_DIM)
-    # declare BEFORE the first write: no data rewrite, so exactly one
-    # data.v{N} exists and the oracle's data.v* glob is unambiguous
-    svc.create_index("text", "text")
-    docs = (
-        _t(spark, sf_dir, "documents")
-        .repartition(1)  # one Arrow batch for the embed pandas_udf
-        .select(
-            F.col("doc_id").alias("id"),
-            F.col("doc_id").alias("text_id"),
-            "text",
-            (F.col("doc_id") % 5).alias("user_id"),
-            F.lit("site0").alias("site"),
-            "lang",
-        )
-        .withColumn("embedding", mock_embed("text", _EMB_DIM))
-    )
-    svc.catalog.upsert(_TXT_COLLECTION, docs)
-    _TXT_SVC_CURRENT = (key, svc)
-    return svc
 
 
 def _text_routed_oracle_sql() -> str:
@@ -3652,13 +2802,13 @@ def _text_routed_oracle_sql() -> str:
     from vectordb_cloud_spark.functions.embedding import mock_vector
     from vectordb_cloud_spark.functions.hashing import word_tokens_py
 
-    qv = mock_vector(_TXT_QUERY_TEXT, _EMB_DIM)
+    qv = mock_vector(_TXT_QUERY_TEXT, fx.EMB_DIM)
     qlit = "[" + ", ".join(repr(float(v)) for v in qv) + "]::DOUBLE[]"
     tokens = sorted(set(word_tokens_py(_TXT_MATCH_TEXT)))
     tok_in = ", ".join("'" + t + "'" for t in tokens)
-    post_glob = os.path.join(_TXT_SVC_ROOT, _TXT_COLLECTION, "textidx.v*",
+    post_glob = os.path.join(fx.TXT_SVC_ROOT, fx.TXT_COLLECTION, "textidx.v*",
                              "text", "*", "*.parquet")
-    data_glob = os.path.join(_TXT_SVC_ROOT, _TXT_COLLECTION, "data.v*",
+    data_glob = os.path.join(fx.TXT_SVC_ROOT, fx.TXT_COLLECTION, "data.v*",
                              "*", "*.parquet")
     l2 = _SQL_L2.format(a="b.embedding", b="q.qe")
     return f"""
@@ -3704,7 +2854,7 @@ def text_routed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the oracle hash now gates the templated SQL's results end to end.
     The function asserts the fast path actually ran (shape-template hit,
     or plan-memo hit on repeat invocations within one process)."""
-    svc = _text_service(spark, sf_dir)
+    svc = fx.text_service(spark, sf_dir)
     flt = {"must": [
         {"key": "text", "match": {"text": _TXT_MATCH_TEXT}},
         {"key": "lang", "match": {"value": _TXT_LANG}},
@@ -3722,7 +2872,6 @@ def text_routed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- recursive prefetch funnel: sparse → dense → MaxSim --------------------
-_FUNNEL_T = 0.05        # sparse-dim activation threshold (deterministic)
 _FUNNEL_SPARSE_N = 40   # inner sparse leg limit
 _FUNNEL_DENSE_N = 20    # middle dense rescore limit
 _FUNNEL_K = 10
@@ -3737,8 +2886,8 @@ def _funnel_oracle_sql() -> str:
     leg — exact L2 over ONLY those candidates, (dist, id) top-20; (3)
     MaxSim — 4×16 contiguous token reshape, Σ_q max_d q·d over ONLY the
     dense candidates, (maxsim desc, id) top-10."""
-    sp_term = (f"CASE WHEN e.embedding[i]::DOUBLE > {_FUNNEL_T} "
-               f"AND q.qe[i]::DOUBLE > {_FUNNEL_T} "
+    sp_term = (f"CASE WHEN e.embedding[i]::DOUBLE > {fx.FUNNEL_T} "
+               f"AND q.qe[i]::DOUBLE > {fx.FUNNEL_T} "
                f"THEN e.embedding[i]::DOUBLE * q.qe[i]::DOUBLE "
                f"ELSE 0.0 END")
     l2 = _SQL_L2.format(a="e.embedding", b="q.qe")
@@ -3757,7 +2906,7 @@ def _funnel_oracle_sql() -> str:
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     sp AS (
       SELECT e.vec_id,
-             round(list_sum(list_transform(range(1, {_EMB_DIM} + 1),
+             round(list_sum(list_transform(range(1, {fx.EMB_DIM} + 1),
                    i -> {sp_term})), 6) AS score
       FROM embeddings e, q
     ),
@@ -3793,21 +2942,14 @@ def query_funnel_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vectordb_cloud_spark.operators.multivector import split_into_tokens
     from vectordb_cloud_spark.query_api import query_points
 
-    emb = _t(spark, sf_dir, "embeddings")
-    vec = F.col("embedding")
-    pos = F.sequence(F.lit(0), F.lit(_EMB_DIM - 1))
-    live = F.filter(
-        pos, lambda i: F.element_at(vec, (i + F.lit(1)).cast("int"))
-        .cast("double") > F.lit(_FUNNEL_T))
-    vals = F.transform(
-        live, lambda i: F.element_at(vec, (i + F.lit(1)).cast("int"))
-        .cast("double"))
+    emb = fx.table(spark, sf_dir, "embeddings")
+    live, vals = fx.sparse_activation(F.col("embedding"))
     points = emb.select(
         "vec_id", "embedding", live.alias("indices"), vals.alias("values"),
         split_into_tokens("embedding", 4).alias("token_vectors"),
     )
-    qv = _query_vec(spark, sf_dir, 0)
-    qdims = [i for i, v in enumerate(qv) if v > _FUNNEL_T]
+    qv = fx.query_vec(spark, sf_dir, 0)
+    qdims = [i for i, v in enumerate(qv) if v > fx.FUNNEL_T]
     qvals = [qv[i] for i in qdims]
     q_tokens = [qv[j * 16:(j + 1) * 16] for j in range(4)]
     out = query_points(
@@ -3823,78 +2965,6 @@ def query_funnel_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- collection search_ann through the ann.v sidecar lifecycle -------------
-_ANNCOL_BASE = os.path.join(_ORACLE_ART_BASE, "ann_col")
-_ANNCOL_CENTERS = os.path.join(_ORACLE_ART_BASE, "ann_col_centers.parquet")
-_ANNCOL_NPROBE = 4
-_ANNCOL_CURRENT: str | None = None
-
-
-def _ann_collection(spark: SparkSession, sf_dir: str):
-    """Collection fixture: embeddings upserted into a catalog collection
-    configured with ``ann_index={"ivf": ...}``; the versioned ann.v{N}
-    sidecar (centroid-partitioned layout + params.json) is built through
-    the collection lifecycle and the KMeans centers are exported for the
-    oracle — the IVF twin of ``_quantized_collection``."""
-    global _ANNCOL_CURRENT
-    import json as _json
-    import shutil
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from vectordb_cloud_spark.collections import CollectionCatalog
-
-    key = _corpus_key(sf_dir)
-    cat = CollectionCatalog(spark, _ANNCOL_BASE)
-    if _ANNCOL_CURRENT == key:
-        return cat
-    shutil.rmtree(_ANNCOL_BASE, ignore_errors=True)
-    cat = CollectionCatalog(spark, _ANNCOL_BASE)
-    # full_scan_threshold: 0 pins the SIDECAR route for the oracle rows:
-    # with the r13 planner default (10k), this fixture's selective tenant
-    # filters would legitimately serve EXACT (the small-matching-set
-    # rule) and the rows would stop hash-gating the IVF routing + pruned
-    # scan they exist to prove. The planner itself is gated in
-    # test_collection_ann_index/test_graph_ann + the RECALL.md filtered
-    # series; these rows gate the index math.
-    cat.create("annc", dim=_EMB_DIM, n_buckets=4,
-               ann_index={"ivf": {"k_centroids": 16,
-                                  "nprobe": _ANNCOL_NPROBE,
-                                  "full_scan_threshold": 0}})
-    emb = _t(spark, sf_dir, "embeddings")
-    pts = emb.select(
-        F.col("vec_id").alias("id"), "embedding",
-        (F.col("vec_id") % 50).alias("user_id"),
-    )
-    # r14: two write epochs, so the served sidecar is maintained by the
-    # INCREMENTAL path (centroids kept, delta routed via ivf_append into
-    # a hardlinked layout copy) — the oracle's routing + pruned-scan
-    # replay then hash-gates the appended layout, the IVF twin of
-    # collection_ann_incremental_topk. RAISES if the append fell back to
-    # a rebuild (which would silently un-prove the incremental path).
-    cat.upsert("annc", pts.filter(F.col("id") % 10 != 0))
-    cat.build_ann_index("annc")
-    cat.upsert("annc", pts.filter(F.col("id") % 10 == 0))
-    adir = cat.build_ann_index("annc")
-    with open(os.path.join(adir, "params.json")) as f:
-        if int(_json.load(f).get("appended_rows", 0)) <= 0:
-            raise RuntimeError(
-                "collection_search_ann fixture: the second build did not "
-                "take the incremental IVF path — investigate "
-                "collections._incremental_ivf_params before trusting "
-                "this oracle row")
-    with open(os.path.join(adir, "params.json")) as f:
-        centers = _json.load(f)["centers"]
-    papq.write_table(
-        pa.table({
-            "centroid_id": pa.array([int(i) for i, _ in centers], pa.int32()),
-            "center": pa.array([[float(x) for x in c] for _, c in centers],
-                               pa.list_(pa.float64())),
-        }),
-        _ANNCOL_CENTERS,
-    )
-    _ANNCOL_CURRENT = key
-    return cat
 
 
 def _anncol_oracle_sql() -> str:
@@ -3907,16 +2977,16 @@ def _anncol_oracle_sql() -> str:
     hash-matched through the collection lifecycle."""
     cdist = _SQL_L2.format(a="cen.center", b="q.qe")
     pdist = _SQL_L2.format(a="p.embedding", b="q.qe")
-    layout_glob = os.path.join(_ANNCOL_BASE, "annc", "ann.v*", "ivf",
+    layout_glob = os.path.join(fx.ANN_COL, "annc", "ann.v*", "ivf",
                                "*", "*.parquet")
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     cen AS (SELECT centroid_id, center
-            FROM read_parquet('{_ANNCOL_CENTERS}')),
+            FROM read_parquet('{fx.ANN_COL_CENTERS}')),
     probes AS (
         SELECT cen.centroid_id FROM cen, q
         ORDER BY {cdist}, cen.centroid_id
-        LIMIT {_ANNCOL_NPROBE}
+        LIMIT {fx.ANNCOL_NPROBE}
     ),
     pts AS (SELECT id, embedding, CAST(centroid_id AS INT) AS cid
             FROM read_parquet('{layout_glob}', hive_partitioning=1))
@@ -3943,8 +3013,8 @@ def collection_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IVF incremental path is hash-gated like the graph one
     (``collection_ann_incremental_topk``); the fixture raises if the
     append fell back to a rebuild."""
-    cat = _ann_collection(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir, 0)
+    cat = fx.ann_collection(spark, sf_dir)
+    qv = fx.query_vec(spark, sf_dir, 0)
     hits = cat.search_ann("annc", qv, k=10)
     return hits.select("id", F.round("dist", 6).alias("dist"))
 
@@ -3962,49 +3032,7 @@ def collection_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # --- collection search_sparse through the sparseidx.v sidecar --------------
-_SPCOL_BASE = os.path.join(_ORACLE_ART_BASE, "sparse_col")
 _SPCOL_K = 10
-_SPCOL_CURRENT: str | None = None
-
-
-def _sparse_collection(spark: SparkSession, sf_dir: str):
-    """Collection fixture: named sparse vectors ("splade") derived from the
-    embeddings table by the funnel's activation-threshold rule (dims where
-    the value exceeds _FUNNEL_T), upserted into a catalog collection whose
-    sparse config declares ``{"index": ...}`` — so ``search_sparse`` serves
-    through the lazy versioned ``sparseidx.v{N}`` dim-bucketed
-    inverted-postings sidecar (collections.py build_sparse_index). The
-    sparse twin of ``_ann_collection``."""
-    global _SPCOL_CURRENT
-    import shutil
-
-    from vectordb_cloud_spark.collections import CollectionCatalog
-
-    key = _corpus_key(sf_dir)
-    cat = CollectionCatalog(spark, _SPCOL_BASE)
-    if _SPCOL_CURRENT == key:
-        return cat
-    shutil.rmtree(_SPCOL_BASE, ignore_errors=True)
-    cat = CollectionCatalog(spark, _SPCOL_BASE)
-    cat.create("sparsec", dim=_EMB_DIM, n_buckets=4,
-               sparse_vectors={"splade": {"index": {"on_disk": True}}})
-    emb = _t(spark, sf_dir, "embeddings")
-    vec = F.col("embedding")
-    pos = F.sequence(F.lit(0), F.lit(_EMB_DIM - 1))
-    live = F.filter(
-        pos, lambda i: F.element_at(vec, (i + F.lit(1)).cast("int"))
-        .cast("double") > F.lit(_FUNNEL_T))
-    vals = F.transform(
-        live, lambda i: F.element_at(vec, (i + F.lit(1)).cast("int"))
-        .cast("double"))
-    cat.upsert("sparsec", emb.select(
-        F.col("vec_id").alias("id"), "embedding",
-        (F.col("vec_id") % 50).alias("user_id"),
-        live.alias("sparse_splade_indices"),
-        vals.alias("sparse_splade_values"),
-    ))
-    _SPCOL_CURRENT = key
-    return cat
 
 
 def _spcol_oracle_sql() -> str:
@@ -4016,14 +3044,14 @@ def _spcol_oracle_sql() -> str:
     dirs a real query prunes to), DECIMAL(38,18)-exact per-doc sum
     (order-independent in both engines, the sparse_topk_inverted rule),
     score-desc top-k."""
-    post_glob = os.path.join(_SPCOL_BASE, "sparsec", "sparseidx.v*",
+    post_glob = os.path.join(fx.SPARSE_COL, "sparsec", "sparseidx.v*",
                              "splade", "bucket=*", "*.parquet")
     return f"""
     WITH q AS (
       SELECT i - 1 AS qdim, qe[i]::DOUBLE AS qval
       FROM (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-           range(1, {_EMB_DIM} + 1) t(i)
-      WHERE qe[i]::DOUBLE > {_FUNNEL_T}
+           range(1, {fx.EMB_DIM} + 1) t(i)
+      WHERE qe[i]::DOUBLE > {fx.FUNNEL_T}
     ),
     contrib AS (
       SELECT p.id, CAST(p.value::DOUBLE * q.qval AS DECIMAL(38,18)) AS c
@@ -4049,9 +3077,9 @@ def collection_search_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact per-doc dot product (collections.py search_sparse /
     build_sparse_index). The sparse twin of ``collection_search_ann``;
     the oracle replays scoring from the sidecar files the catalog wrote."""
-    cat = _sparse_collection(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir, 0)
-    qdims = [i for i, v in enumerate(qv) if v > _FUNNEL_T]
+    cat = fx.sparse_collection(spark, sf_dir)
+    qv = fx.query_vec(spark, sf_dir, 0)
+    qdims = [i for i, v in enumerate(qv) if v > fx.FUNNEL_T]
     qvals = [float(qv[i]) for i in qdims]
     return cat.search_sparse("sparsec", "splade", qdims, qvals, k=_SPCOL_K)
 
@@ -4075,13 +3103,13 @@ def _query_rewrite_oracle_sql() -> str:
     from vectordb_cloud_spark.functions.embedding import mock_vector
     from vectordb_cloud_spark.functions.hashing import word_tokens_py
 
-    qv = mock_vector(_TXT_QUERY_TEXT, _EMB_DIM)
+    qv = mock_vector(_TXT_QUERY_TEXT, fx.EMB_DIM)
     qlit = "[" + ", ".join(repr(float(v)) for v in qv) + "]::DOUBLE[]"
     tokens = sorted(set(word_tokens_py(_QTR_MATCH_TEXT)))
     tok_in = ", ".join("'" + t + "'" for t in tokens)
-    post_glob = os.path.join(_TXT_SVC_ROOT, _TXT_COLLECTION, "textidx.v*",
+    post_glob = os.path.join(fx.TXT_SVC_ROOT, fx.TXT_COLLECTION, "textidx.v*",
                              "text", "*", "*.parquet")
-    data_glob = os.path.join(_TXT_SVC_ROOT, _TXT_COLLECTION, "data.v*",
+    data_glob = os.path.join(fx.TXT_SVC_ROOT, fx.TXT_COLLECTION, "data.v*",
                              "*", "*.parquet")
     l2 = _SQL_L2.format(a="b.embedding", b="q.qe")
     return f"""
@@ -4124,7 +3152,7 @@ def query_text_rewrite_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tenant-pruned scan, exact kNN) happens inside ``VectorService.query``.
     The oracle replays both rewrites from the postings files the catalog
     wrote, then the tenant + kNN stages from the data files."""
-    svc = _text_service(spark, sf_dir)
+    svc = fx.text_service(spark, sf_dir)
     body = {
         "query": {"text": _TXT_QUERY_TEXT},
         "filter": {
@@ -4159,11 +3187,11 @@ def _query_batch_oracle_sql() -> str:
     windowed per query_id), which must equal the per-query answers."""
     from vectordb_cloud_spark.functions.embedding import mock_vector
 
-    data_glob = os.path.join(_TXT_SVC_ROOT, _TXT_COLLECTION, "data.v*",
+    data_glob = os.path.join(fx.TXT_SVC_ROOT, fx.TXT_COLLECTION, "data.v*",
                              "*", "*.parquet")
     parts = []
     for i, text in enumerate(_QB_TEXTS):
-        qv = mock_vector(text, _EMB_DIM)
+        qv = mock_vector(text, fx.EMB_DIM)
         qlit = "[" + ", ".join(repr(float(v)) for v in qv) + "]::DOUBLE[]"
         l2 = _SQL_L2.format(a="b.embedding", b="q.qe")
         parts.append(f"""
@@ -4188,7 +3216,7 @@ def query_batch_shared_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query oracle kNN — proving the shared scan changes the COST, not
     the answers. As with /query, the endpoint returns JSON dicts; the
     row transports them into a local DataFrame for the compare."""
-    svc = _text_service(spark, sf_dir)
+    svc = fx.text_service(spark, sf_dir)
     bodies = [{"query": {"text": t}, "limit": _QB_K} for t in _QB_TEXTS]
     res = svc.query_batch(_TXT_USER, bodies)
     rows = [(i, int(r["id"]), str(r["text"]), float(r["dist"]))
@@ -4230,9 +3258,9 @@ def _query_template_thr_oracle_sql() -> str:
     with_payload=["text"] response projection (id, text, dist)."""
     from vectordb_cloud_spark.functions.embedding import mock_vector
 
-    qv = mock_vector(_TXT_QUERY_TEXT, _EMB_DIM)
+    qv = mock_vector(_TXT_QUERY_TEXT, fx.EMB_DIM)
     qlit = "[" + ", ".join(repr(float(v)) for v in qv) + "]::DOUBLE[]"
-    data_glob = os.path.join(_TXT_SVC_ROOT, _TXT_COLLECTION, "data.v*",
+    data_glob = os.path.join(fx.TXT_SVC_ROOT, fx.TXT_COLLECTION, "data.v*",
                              "*", "*.parquet")
     l2 = _SQL_L2.format(a="b.embedding", b="q.qe")
     return f"""
@@ -4271,7 +3299,7 @@ def query_template_threshold_paged(spark: SparkSession,
     ``text_routed_search`` assertion. The endpoint returns JSON hit
     dicts; the row transports them into a local DataFrame for the
     compare."""
-    svc = _text_service(spark, sf_dir)
+    svc = fx.text_service(spark, sf_dir)
     body = {
         "query": {"text": _TXT_QUERY_TEXT},
         "filter": {"must": [{"key": "lang",
@@ -4317,17 +3345,17 @@ def _query_ann_params_oracle_sql() -> str:
     returned distances: threshold cut, OFFSET, LIMIT k."""
     cdist = _SQL_L2.format(a="cen.center", b="q.qe")
     pdist = _SQL_L2.format(a="p.embedding", b="q.qe")
-    layout_glob = os.path.join(_ANNCOL_BASE, "annc", "ann.v*", "ivf",
+    layout_glob = os.path.join(fx.ANN_COL, "annc", "ann.v*", "ivf",
                                "*", "*.parquet")
     fetch = _QAP_K + _QAP_OFF
     return f"""
     WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
     cen AS (SELECT centroid_id, center
-            FROM read_parquet('{_ANNCOL_CENTERS}')),
+            FROM read_parquet('{fx.ANN_COL_CENTERS}')),
     probes AS (
         SELECT cen.centroid_id FROM cen, q
         ORDER BY {cdist}, cen.centroid_id
-        LIMIT {_ANNCOL_NPROBE}
+        LIMIT {fx.ANNCOL_NPROBE}
     ),
     pts AS (SELECT id, user_id, embedding, CAST(centroid_id AS INT) AS cid
             FROM read_parquet('{layout_glob}', hive_partitioning=1)),
@@ -4367,15 +3395,14 @@ def query_ann_params_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     transports them into a local DataFrame for the compare."""
     from vectordb_cloud_spark.api import VectorService
 
-    _ann_collection(spark, sf_dir)  # build/refresh the ann.v fixture
-    svc = VectorService(spark, _ANNCOL_BASE, index_name="annc",
-                        dim=_EMB_DIM)
+    fx.ann_collection(spark, sf_dir)  # build/refresh the ann.v fixture
+    svc = VectorService(spark, fx.ANN_COL, index_name="annc", dim=fx.EMB_DIM)
     # the sidecar route's precondition: with an ann_index config, data
     # present, and a plain dense body, _query_ann SERVES (no silent-exact
     # fallback whose full-corpus answer could coincide with the oracle's)
     assert svc.catalog.meta("annc").ann_index, \
         "ann fixture lost its ann_index config — exact fallback would serve"
-    qv = _query_vec(spark, sf_dir, 0)
+    qv = fx.query_vec(spark, sf_dir, 0)
     rows = svc.query(_QAP_USER, {
         "query": qv, "limit": _QAP_K, "offset": _QAP_OFF,
         "score_threshold": _QAP_THR,
@@ -4431,7 +3458,7 @@ def query_by_id_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     came from the shape-redundant ``tpch_q3_revenue_topk``)."""
     from vectordb_cloud_spark.query_api import query_points
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     hits = query_points(emb, _QBI_ID, limit=_QBI_K, id_col="vec_id")
     return hits.select("vec_id", F.round("dist", 6).alias("dist"))
 
@@ -4480,7 +3507,7 @@ def context_only_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape-redundant ``lsh_similarity_join_pairs``)."""
     from vectordb_cloud_spark.query_api import query_points
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = fx.table(spark, sf_dir, "embeddings")
     hits = query_points(
         emb,
         {"context": [{"positive": p, "negative": n} for p, n in _CTX_PAIRS]},
@@ -4562,8 +3589,8 @@ def query_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count."""
     from vectordb_cloud_spark.query_api import query_points
 
-    emb = _t(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir, 0)
+    emb = fx.table(spark, sf_dir, "embeddings")
+    qv = fx.query_vec(spark, sf_dir, 0)
     hits = query_points(
         emb,
         {"nearest": qv,
@@ -4582,8 +3609,6 @@ def query_mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # except the non-SQL-expressible selection) and the oracle replays the
 # operator's actual math — pairwise exact L2 over sample², per-row
 # (dist, id_b) top-k window — hash-matched end to end.
-_DMX_PARQUET = os.path.join(_ORACLE_ART_BASE, "matrix_sample.parquet")
-_DMX_CURRENT: str | None = None
 _DMX_N, _DMX_K, _DMX_SEED = 10, 3, 42
 
 
@@ -4591,7 +3616,7 @@ def _dmx_oracle_sql() -> str:
     l2 = _SQL_L2.format(a="a.embedding", b="b.embedding")
     return f"""
     WITH s AS (SELECT vec_id, embedding
-               FROM read_parquet('{_DMX_PARQUET}')),
+               FROM read_parquet('{fx.art_path("matrix_sample")}/*.parquet')),
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b, {l2} AS dist
       FROM s a, s b WHERE a.vec_id <> b.vec_id
@@ -4617,28 +3642,10 @@ def distance_matrix_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registry row since r14 (VERDICT r13 #4: newest-code-least-proof
     rotation — built r13 as a library oracle, promoted the next round;
     the slot came from grouping_sets_order_stats)."""
-    global _DMX_CURRENT
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
     from vectordb_cloud_spark.operators.knn import distance_matrix_pairs
-    from vectordb_cloud_spark.sources.readers import random_sample
 
-    emb = _t(spark, sf_dir, "embeddings")
-    key = _corpus_key(sf_dir)
-    if _DMX_CURRENT != key or not os.path.exists(_DMX_PARQUET):
-        rows = random_sample(
-            emb.select("vec_id", "embedding"), _DMX_N, seed=_DMX_SEED,
-            id_col="vec_id",
-        ).collect()
-        os.makedirs(_ORACLE_ART_BASE, exist_ok=True)
-        papq.write_table(pa.table({
-            "vec_id": pa.array([r["vec_id"] for r in rows], pa.int64()),
-            "embedding": pa.array(
-                [[float(x) for x in r["embedding"]] for r in rows],
-                pa.list_(pa.float64())),
-        }), _DMX_PARQUET)
-        _DMX_CURRENT = key
+    emb = fx.table(spark, sf_dir, "embeddings")
+    fx.matrix_sample(spark, sf_dir, _DMX_N, _DMX_SEED)
     out = distance_matrix_pairs(emb, sample_size=_DMX_N, k=_DMX_K,
                                 seed=_DMX_SEED, id_col="vec_id")
     return out.select("id_a", "id_b", F.round("dist", 6).alias("dist"))
@@ -4654,67 +3661,13 @@ def distance_matrix_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # included — from the adjacency + coarse_sample files the INCREMENTAL
 # path wrote. The slot came from range_join_value_tiers (shape-redundant:
 # bucketized range joins survive in sessionize/asof rows; retired below).
-_GANN_BASE = os.path.join(_ORACLE_ART_BASE, "gann_col")
-_GANN_BEAM = 16
-_GANN_HOPS = 3
-_GANN_ENTRY = 8
-_GANN_CURRENT: str | None = None
-
-
-def _gann_collection(spark: SparkSession, sf_dir: str):
-    """Collection fixture for INCREMENTALLY-maintained graph ANN (r14,
-    VERDICT r13 #3): create with ``ann_index={"graph": ...}`` → upsert the
-    ~90% of embeddings with ``vec_id % 10 != 0`` → FULL sidecar build
-    (adjacency + blocking.json + banded + coarse_sample persisted) →
-    upsert the held-out ~10% (a second write epoch at 0.111 of the full
-    build's rows, inside the 0.2 ``incremental_budget``) → the next
-    ``build_ann_index`` maintains the sidecar through
-    ``knn_graph_append`` instead of rebuilding. RAISES if the second
-    build fell back to a full rebuild (``appended_rows`` unset): a
-    silent fallback would leave the row green while it stopped proving
-    the incremental path."""
-    global _GANN_CURRENT
-    import json as _json
-    import shutil
-
-    from vectordb_cloud_spark.collections import CollectionCatalog
-
-    key = _corpus_key(sf_dir)
-    cat = CollectionCatalog(spark, _GANN_BASE)
-    if _GANN_CURRENT == key:
-        return cat
-    shutil.rmtree(_GANN_BASE, ignore_errors=True)
-    cat = CollectionCatalog(spark, _GANN_BASE)
-    cat.create("ganni", dim=_EMB_DIM, n_buckets=4,
-               ann_index={"graph": {"degree": 8, "beam": _GANN_BEAM,
-                                    "max_hops": _GANN_HOPS,
-                                    "n_entry": _GANN_ENTRY}})
-    emb = _t(spark, sf_dir, "embeddings")
-    pts = emb.select(F.col("vec_id").alias("id"), "embedding",
-                     (F.col("vec_id") % 50).alias("user_id"))
-    cat.upsert("ganni", pts.filter(F.col("id") % 10 != 0))
-    cat.build_ann_index("ganni")            # full build
-    cat.upsert("ganni", pts.filter(F.col("id") % 10 == 0))
-    adir = cat.build_ann_index("ganni")     # write epoch: incremental
-    with open(os.path.join(adir, "params.json")) as f:
-        params = _json.load(f)
-    if int(params.get("appended_rows", 0)) <= 0:
-        raise RuntimeError(
-            "collection_ann_incremental_topk fixture: the second build did "
-            "not take the incremental path (appended_rows="
-            f"{params.get('appended_rows')!r}) — the oracle would still "
-            "hash-match a rebuilt sidecar, silently un-proving "
-            "knn_graph_append; investigate collections._incremental_graph_"
-            "params before trusting this row")
-    _GANN_CURRENT = key
-    return cat
 
 
 def _gann_oracle_sql(adj_glob: str | None = None,
                      cs_glob: str | None = None,
-                     beam: int = _GANN_BEAM,
-                     max_hops: int = _GANN_HOPS,
-                     n_entry: int = _GANN_ENTRY,
+                     beam: int = fx.GANN_BEAM,
+                     max_hops: int = fx.GANN_HOPS,
+                     n_entry: int = fx.GANN_ENTRY,
                      k: int = 10,
                      query_where: str = "vec_id = 0",
                      gated: bool = True) -> str:
@@ -4738,10 +3691,10 @@ def _gann_oracle_sql(adj_glob: str | None = None,
     l2 = _SQL_L2.format(a="e.embedding", b="q.qe")
     l2cs = _SQL_L2.format(a="cs.embedding", b="q.qe")
     if adj_glob is None:
-        adj_glob = os.path.join(_GANN_BASE, "ganni", "ann.v*", "graph",
+        adj_glob = os.path.join(fx.GANN_COL, "ganni", "ann.v*", "graph",
                                 "*.parquet")
     if cs_glob is None:
-        cs_glob = os.path.join(_GANN_BASE, "ganni", "ann.v*",
+        cs_glob = os.path.join(fx.GANN_COL, "ganni", "ann.v*",
                                "coarse_sample", "*.parquet")
     hops = []
     prev = "v0"
@@ -4796,8 +3749,8 @@ def collection_ann_incremental_topk(spark: SparkSession,
     itself in place on upsert (the server behind reference app.py:20-33's
     insert route); this is that maintenance re-expressed as bounded
     bucket-delta batch work."""
-    cat = _gann_collection(spark, sf_dir)
-    qv = _query_vec(spark, sf_dir, 0)
+    cat = fx.gann_collection(spark, sf_dir)
+    qv = fx.query_vec(spark, sf_dir, 0)
     hits = cat.search_ann("ganni", qv, k=10)
     return hits.select("id", F.round("dist", 6).alias("dist"))
 

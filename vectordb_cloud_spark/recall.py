@@ -7,8 +7,8 @@ silently dropping recall would pass every gate the driver sees (VERDICT r5
 item 6). ``ann_recall_report`` closes that hole: it measures recall@k
 against exact brute force for each approximate family, averaged over
 ``n_queries`` fixture vectors, using the SAME index artifacts and
-parameters the registry queries use (queries.py ``_lsh_model`` /
-``_ivf_index`` / ``_pq_index``), so the number describes the exact
+parameters the registry queries use (fixtures.py ``lsh_model`` /
+``ivf_index`` / ``pq_index``), so the number describes the exact
 configuration being benchmarked.
 
 Consumed by bench.py (emits a ``recall`` dict next to ``queries`` in the
@@ -88,7 +88,7 @@ def ann_recall_report(
     "pq_adc_rerank_topk": r}``
     with each r in [0, 1], rounded to 3 digits.
     """
-    from vectordb_cloud_spark import queries as qmod
+    from vectordb_cloud_spark import fixtures as fx
     from vectordb_cloud_spark.operators.ann import (
         brute_force_topk,
         ivf_search,
@@ -110,7 +110,7 @@ def ann_recall_report(
         sq_train,
     )
 
-    emb = qmod._t(spark, sf_dir, "embeddings").cache()
+    emb = fx.table(spark, sf_dir, "embeddings").cache()
     qrows = (
         emb.select("vec_id", "embedding")
         .orderBy("vec_id")
@@ -119,12 +119,9 @@ def ann_recall_report(
     )
     queries = [[float(x) for x in r["embedding"]] for r in qrows]
 
-    lsh_model = qmod._lsh_model(spark, sf_dir, qmod._LSH_BL,
-                                qmod._LSH_G * qmod._LSH_TABLES)
-    centers, ivf_path = qmod._ivf_index(spark, sf_dir,
-                                        k_centroids=IVF_K_CENTROIDS)
-    ivf_df = spark.read.parquet(ivf_path)  # list the layout ONCE
-    codebooks, pq_path = qmod._pq_index(spark, sf_dir)
+    lsh_model = fx.lsh_model(spark, sf_dir)
+    centers, ivf_df = fx.ivf_index(spark, sf_dir)
+    codebooks, pq_path = fx.pq_index(spark, sf_dir)
     encoded = spark.read.parquet(pq_path).cache()
     if graph is None:
         graph = knn_graph_build(emb, degree=GRAPH_DEGREE, refine_rounds=1)
@@ -198,9 +195,9 @@ def million_row_corpus(spark: SparkSession, sf_dir: str,
     query vectors have exact on-corpus neighbors."""
     from pyspark.sql import functions as F
 
-    from vectordb_cloud_spark import queries as qmod
+    from vectordb_cloud_spark import fixtures as fx
 
-    emb0 = qmod._t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    emb0 = fx.table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n0 = emb0.count()
     reps = (n_rows + n0 - 1) // n0
     rep = spark.range(reps).select(F.col("id").alias("rep"))
@@ -241,7 +238,7 @@ def million_recall_report(spark: SparkSession, sf_dir: str,
     per-query coarse-entry seeds (graph_coarse_entry_ids — HNSW's upper
     layer as one bounded sample scan), which restores recall at the
     registry beam/hop dials."""
-    from vectordb_cloud_spark import queries as qmod
+    from vectordb_cloud_spark import fixtures as fx
     from vectordb_cloud_spark.operators.ann import (
         brute_force_topk,
         ivf_build,
@@ -257,7 +254,7 @@ def million_recall_report(spark: SparkSession, sf_dir: str,
 
     corpus = million_row_corpus(spark, sf_dir, n_rows).cache()
     corpus.count()
-    emb0 = qmod._t(spark, sf_dir, "embeddings")
+    emb0 = fx.table(spark, sf_dir, "embeddings")
     qrows = (emb0.select("vec_id", "embedding").orderBy("vec_id")
              .limit(n_queries).collect())
     queries = [[float(x) for x in r["embedding"]] for r in qrows]
@@ -351,7 +348,7 @@ def filtered_graph_recall_report(
     tests/test_recall_report.py."""
     from pyspark.sql import functions as F
 
-    from vectordb_cloud_spark import queries as qmod
+    from vectordb_cloud_spark import fixtures as fx
     from vectordb_cloud_spark.operators.ann import (
         brute_force_topk,
         ivf_build,
@@ -367,7 +364,7 @@ def filtered_graph_recall_report(
 
     corpus = million_row_corpus(spark, sf_dir, n_rows).cache()
     corpus.count()
-    emb0 = qmod._t(spark, sf_dir, "embeddings")
+    emb0 = fx.table(spark, sf_dir, "embeddings")
     qrows = (emb0.select("vec_id", "embedding").orderBy("vec_id")
              .limit(n_queries).collect())
     queries = [[float(x) for x in r["embedding"]] for r in qrows]
@@ -462,12 +459,12 @@ def collection_graph_million_recall(spark: SparkSession, sf_dir: str,
 
     from pyspark.sql import functions as F
 
-    from vectordb_cloud_spark import queries as qmod
+    from vectordb_cloud_spark import fixtures as fx
     from vectordb_cloud_spark.collections import CollectionCatalog
     from vectordb_cloud_spark.operators.ann import brute_force_topk, recall_at_k
 
     corpus = million_row_corpus(spark, sf_dir, n_rows)
-    emb0 = qmod._t(spark, sf_dir, "embeddings")
+    emb0 = fx.table(spark, sf_dir, "embeddings")
     dim = len(emb0.select("embedding").first()["embedding"])
     root = tempfile.mkdtemp(prefix="recall_collection_1m_")
     try:
