@@ -12,6 +12,17 @@ def svc(spark, tmp_path):
     return VectorService(spark, str(tmp_path / "cat"), index_name="TestVDB", dim=16)
 
 
+def _typed(rows):
+    """Hit dicts with key order and value types made comparable."""
+    return [[(k, type(v), v) for k, v in r.items()] for r in rows]
+
+
+def _assert_pins_within_budget(svc):
+    stats = svc.memo_stats()
+    assert stats["pinned_bytes"] <= stats["pin_budget_bytes"]
+    assert stats["pinned_bytes"] == sum(p.nbytes for p in svc._pins.values())
+
+
 def test_insert_search_tenant_isolation(svc):
     """/root/reference/run_tests.py:21-28: user 332 inserts, user 332 finds
     it, user 333 sees nothing."""
@@ -523,9 +534,15 @@ def test_search_template_tiebreaks_on_point_id(svc, spark):
     svc.catalog.upsert(svc.index_name, df)
     built = svc.search(98, "anything", limit=2).collect()  # stores the shape
     templ = svc.search(98, "other words", limit=2).collect()  # template path
+    # the rows path: a first template hit marks the set, the second pins it
+    marked = svc.search_hits(98, "marking words", limit=2)
+    pinned = svc.search_hits(98, "more words", limit=2)
+    assert svc.memo_stats()["pin_hits"] == 1
     # tied distances -> point-id order (1 then 2), i.e. text_ids [900, 100]
     assert [r["id"] for r in built] == [900, 100]
     assert [r["id"] for r in templ] == [900, 100]
+    assert [r["id"] for r in marked] == [900, 100]
+    assert [r["id"] for r in pinned] == [900, 100]
 
 
 def test_search_template_survives_cleared_temp_views(svc):
@@ -667,9 +684,10 @@ def test_service_close_drops_shape_views(svc):
 
 
 def test_query_template_randomized_parity(svc):
-    """Seeded sweep: for random (filter, limit, offset, selector) shapes,
-    a template-served body must equal a fresh-service full construction
-    of the same body — the property the two pinned tests sample."""
+    """Seeded sweep: for random (filter, limit, offset, threshold,
+    selector) shapes, a template-served body — answered from the pinned
+    block — must equal a fresh-service full construction of the same
+    body, keys, key order and value types included."""
     import random
 
     rng = random.Random(11)
@@ -679,7 +697,7 @@ def test_query_template_randomized_parity(svc):
         assert svc.insert(950 + i, 55, t, f"s{i % 2}", "en") == 1
     ref_svc = VectorService(svc.spark, svc.catalog.root,
                             index_name=svc.index_name, dim=svc.dim)
-    for trial in range(4):
+    for trial in range(6):
         flt = rng.choice([
             None,
             {"must": [{"key": "site", "match": {"value": "s0"}}]},
@@ -693,12 +711,311 @@ def test_query_template_randomized_parity(svc):
             body["offset"] = rng.randint(0, 2)
         if rng.random() < 0.5:
             body["with_payload"] = rng.choice([False, ["text"]])
+        if rng.random() < 0.5:
+            body["score_threshold"] = rng.choice([2.9, 3.3])
         svc.query(55, body)                      # store this shape
+        # a first template hit marks the candidate set, the probe pins it
+        svc.query(55, dict(body, query={"text": f"mark {trial}"}))
         probe = dict(body, query={"text": f"distinct {trial}"})
-        before = svc._shape_hits
+        before = (svc._shape_hits, svc.memo_stats()["pin_hits"])
         got = svc.query(55, probe)               # template path
-        assert svc._shape_hits == before + 1, f"trial {trial}: no hit"
-        assert got == ref_svc.query(55, probe), f"trial {trial} mismatch"
+        assert (svc._shape_hits, svc.memo_stats()["pin_hits"]) == \
+            (before[0] + 1, before[1] + 1), f"trial {trial}: not pinned"
+        ref_svc.close()                          # full construction
+        assert _typed(got) == _typed(ref_svc.query(55, probe)), \
+            f"trial {trial} mismatch"
+    _assert_pins_within_budget(svc)
+
+
+def test_query_batch_pinned_matches_knn_batch(svc, monkeypatch):
+    """Once a read has pinned the tenant's unfiltered set, the batch's
+    shared exact leg — dense, by-id and recommend bodies, one with a raw
+    negative vector — is answered from the block with no knn_batch scan,
+    equal (key order and value types included) to a fresh service's
+    knn_batch answer; batches do not count as shape hits; a missing id
+    still raises PointNotFoundError."""
+    from vectordb_cloud_spark.errors import PointNotFoundError
+    from vectordb_cloud_spark.operators import knn as knn_mod
+
+    for i, t in enumerate(["red fox", "blue jay", "green frog", "red kite",
+                           "grey wolf", "gold fish"]):
+        assert svc.insert(1100 + i, 57, t, f"s{i % 2}", "en") == 1
+    assert svc.insert(1199, 58, "red fox", "s0", "en") == 1
+    bodies = [
+        {"query": {"text": "red animal"}, "limit": 3},
+        {"query": 1100, "limit": 2},
+        {"query": {"nearest": 1101}, "limit": 4},
+        {"query": {"recommend": {"positive": [1100, 1103],
+                                 "negative": [[0.25] * svc.dim]}},
+         "limit": 3},
+        {"query": {"recommend": {"positive": [1102]}}, "limit": 2},
+    ]
+    calls = []
+    orig = knn_mod.knn_batch
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(knn_mod, "knn_batch", spy)
+    ref = VectorService(svc.spark, svc.catalog.root,
+                        index_name=svc.index_name, dim=svc.dim)
+    want = ref.query_batch(57, bodies)
+    assert calls == [1]  # no pin: the shared knn_batch scan
+    svc.query(57, {"query": {"text": "warm"}, "limit": 2})  # stores a shape
+    svc.query(57, {"query": {"text": "mark"}, "limit": 2})  # marks the set
+    svc.query(57, {"query": {"text": "pin"}, "limit": 2})   # pins it
+    assert svc.memo_stats()["pinned_sets"] == 1
+    shape_hits = svc._shape_hits
+    pin_hits = svc.memo_stats()["pin_hits"]
+    got = svc.query_batch(57, bodies)
+    assert calls == [1]  # served from the pin
+    assert svc._shape_hits == shape_hits
+    assert svc.memo_stats()["pin_hits"] == pin_hits + len(bodies)
+    assert [_typed(g) for g in got] == [_typed(w) for w in want]
+    with pytest.raises(PointNotFoundError):  # 1199 is another tenant's
+        svc.query_batch(57, [{"query": 1100, "limit": 2},
+                             {"query": 1199, "limit": 2}])
+    _assert_pins_within_budget(svc)
+
+
+def test_pin_over_set_cap_stays_on_template(svc, monkeypatch):
+    """A candidate set over 1/8 of the pin budget is never pinned: its
+    reads stay template-served, one bounded collect (on the set's second
+    template hit) leaves one negative mark per set (no re-collect on
+    later hits, after a write either), and marks are bounded by the
+    shape-memo cap."""
+    for i in range(9):
+        assert svc.insert(1200 + i, 59, f"doc number {i}", f"s{i % 3}",
+                          "en") == 1
+    # per-set cap = budget / 8: two rows of id + 16 float32 dims
+    monkeypatch.setattr(VectorService, "_PIN_BUDGET_BYTES",
+                        8 * 2 * (8 + 4 * svc.dim))
+    svc._SHAPE_MEMO_CAP = 2
+    collects = []
+    orig = svc._collect_pin
+
+    def spy(shape, cap):
+        collects.append(shape.slot)
+        return orig(shape, cap)
+
+    monkeypatch.setattr(svc, "_collect_pin", spy)
+    body = {"query": {"text": "warm"}, "limit": 3}
+    svc.query(59, body)
+    ref = VectorService(svc.spark, svc.catalog.root,
+                        index_name=svc.index_name, dim=svc.dim)
+    for n in range(3):
+        probe = dict(body, query={"text": f"probe {n}"})
+        before = svc._shape_hits
+        got = svc.query(59, probe)
+        assert svc._shape_hits == before + 1
+        ref.close()
+        assert _typed(got) == _typed(ref.query(59, probe))
+    assert len(collects) == 1
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 0 and stats["pin_hits"] == 0
+    assert list(svc._pin_marks.values()) == [("no", None)]
+    for site in ("s0", "s1", "s2"):  # three more sets, each over the cap
+        flt = {"must": [{"key": "site", "match": {"value": site}}]}
+        svc.query(59, dict(body, filter=flt))
+        svc.query(59, dict(body, filter=flt, query={"text": "again"}))
+        svc.query(59, dict(body, filter=flt, query={"text": "third"}))
+    assert len(collects) == 4
+    assert len(svc._pin_marks) <= svc._SHAPE_MEMO_CAP
+    assert svc.memo_stats()["pinned_sets"] == 0
+    # the negative mark outlives a write: no collect at the new version
+    assert svc.insert(1209, 59, "one more", "s2", "en") == 1
+    flt = {"must": [{"key": "site", "match": {"value": "s2"}}]}
+    svc.query(59, dict(body, filter=flt, query={"text": "after write"}))
+    before = svc._shape_hits
+    svc.query(59, dict(body, filter=flt, query={"text": "template"}))
+    assert svc._shape_hits == before + 1
+    assert len(collects) == 4
+    _assert_pins_within_budget(svc)
+
+
+def test_pin_budget_admits_without_evicting(svc, monkeypatch):
+    """More sets than the budget holds, read in turn: the sets that found
+    room stay pinned, the rest stay on the template, and no set is
+    collected twice at one data version (no eviction thrash). A new data
+    version drops the stale pins first and gives every set one more
+    collect, again on its second hit. The collect is faked (a set's size
+    is the first item of its slot)."""
+    import numpy as np
+
+    from vectordb_cloud_spark.api import _Pin, _Shape
+
+    monkeypatch.setattr(VectorService, "_PIN_BUDGET_BYTES", 8_000)
+    collects = []
+
+    def fake_collect(shape, cap):
+        collects.append((shape.slot, shape.at, cap))
+        nbytes = shape.slot[0]
+        if nbytes > cap:
+            return None
+        return _Pin(shape.at, "embedding", np.zeros(0, np.int64),
+                    np.zeros((0, 0)), {}, ("id",), nbytes)
+
+    monkeypatch.setattr(svc, "_collect_pin", fake_collect)
+
+    sizes = (900, *[1_000] * 8, 990)  # 8 fit in the budget, then 100 left
+
+    def read_all(v):
+        for t, size in enumerate(sizes):
+            svc._pin(_Shape("", None, "embedding", (), 10, 0, None,
+                            slot=(size, "embedding", t),
+                            at=(f"data.v{v}", None)))
+
+    for _ in range(3):  # round-robin over 10 sets
+        read_all(1)
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 8 and stats["pinned_bytes"] == 7_900
+    assert len(collects) == 10  # one each; the last two had 100 bytes
+    assert [c[2] for c in collects[-2:]] == [100, 100]
+    read_all(2)  # a write: the first hit at the new version marks
+    assert len(collects) == 10
+    read_all(2)  # the second drops the stale pins and collects
+    assert len(collects) == 20
+    assert all(p.at == ("data.v2", None) for p in svc._pins.values())
+    assert svc.memo_stats()["pinned_sets"] == 8
+    _assert_pins_within_budget(svc)
+
+
+def test_pin_collect_is_bounded_by_bytes(svc, monkeypatch):
+    """A set of few rows with large text payloads — well under the row
+    bound — is declined without its payload reaching the driver: no
+    collect brings more than the per-set cap of text, and the reads stay
+    template-served."""
+    cap = 16_384
+    monkeypatch.setattr(VectorService, "_PIN_BUDGET_BYTES", 8 * cap)
+    for i in range(5):
+        assert svc.insert(1500 + i, 63, "x" * 6000 + f" {i}", "s", "en") == 1
+    fetched = []
+    frame = type(svc.spark.range(1))
+    orig = frame.collect
+
+    def spy(self):
+        rows = orig(self)
+        fetched.append(sum(len(v) for r in rows for v in r.asDict().values()
+                           if isinstance(v, str)))
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
+    body = {"query": {"text": "warm"}, "limit": 1}
+    svc.query(63, body)
+    for n in range(2):
+        before = svc._shape_hits
+        got = svc.query(63, dict(body, query={"text": f"probe {n}"}))
+        assert svc._shape_hits == before + 1 and len(got) == 1
+    assert 0 < max(fetched) <= cap
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 0 and stats["pin_hits"] == 0
+    assert list(svc._pin_marks.values()) == [("no", None)]
+
+
+def test_pin_empty_candidate_sets_answer_empty(svc):
+    """An empty candidate set — a tenant with no points, or a filter that
+    matches nothing — pins as an empty block: repeated distinct-text reads
+    through query() and the rows-level /search (cold, marking, pinning,
+    pinned), and a dense batch on the pinned tenant, answer [] as the
+    template does."""
+    assert svc.insert(1400, 61, "only doc", "news", "en") == 1
+    for n in range(4):
+        assert svc.query(62, {"query": {"text": f"empty {n}"},
+                              "limit": 3}) == []
+        assert svc.search_hits(61, f"blog {n}", limit=3, site="blog") == []
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 2 and stats["pin_hits"] == 4
+    assert svc.query_batch(62, [{"query": {"text": "a"}, "limit": 2},
+                                {"query": {"text": "b"}, "limit": 2}]) \
+        == [[], []]
+    assert svc.memo_stats()["pin_hits"] == 6
+    _assert_pins_within_budget(svc)
+
+
+def test_pin_follows_writes_and_close_drops_it(svc):
+    """A write between two reads: the new row is visible, and the set's
+    new pin replaces the old one in place (pinned_sets does not grow).
+    close() releases every pin and mark."""
+    for i, t in enumerate(["alpha one", "beta two", "gamma three"]):
+        assert svc.insert(1300 + i, 60, t, "s", "en") == 1
+    body = {"query": {"text": "warm"}, "limit": 10}
+    svc.query(60, body)
+    svc.query(60, dict(body, query={"text": "mark"}))  # marks the set
+    svc.query(60, dict(body, query={"text": "first"}))  # pins it
+    assert svc.memo_stats()["pinned_sets"] == 1
+    assert svc.insert(1303, 60, "delta four", "s", "en") == 1
+    cold = svc.query(60, dict(body, query={"text": "after write"}))
+    assert 1303 in [h["id"] for h in cold]
+    marked = svc.query(60, dict(body, query={"text": "mark again"}))
+    assert 1303 in [h["id"] for h in marked]  # template-served
+    probe = dict(body, query={"text": "second"})
+    got = svc.query(60, probe)  # the second hit at the new version re-pins
+    assert 1303 in [h["id"] for h in got]
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 1 and stats["pin_hits"] == 2
+    ref = VectorService(svc.spark, svc.catalog.root,
+                        index_name=svc.index_name, dim=svc.dim)
+    assert _typed(got) == _typed(ref.query(60, probe))
+    _assert_pins_within_budget(svc)
+    svc.close()
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 0 and stats["pinned_bytes"] == 0
+    assert not svc._pin_marks
+
+
+def test_pin_memo_bytes_hold_under_threads(svc, monkeypatch):
+    """First hits, version changes, declines and full-budget declines
+    racing on threads (create_app serves from FastAPI's threadpool) keep
+    pinned_bytes equal to the held pins' sum and within the budget, and
+    negative entries within their cap. The collect is faked: the lock
+    around the memo is what is under test."""
+    import random
+    import sys
+    import threading
+
+    import numpy as np
+
+    from vectordb_cloud_spark.api import _Pin, _Shape
+
+    monkeypatch.setattr(VectorService, "_PIN_BUDGET_BYTES", 8_000)
+    svc._SHAPE_MEMO_CAP = 3
+
+    def fake_collect(shape, cap):
+        nbytes = shape.slot[0] % 7 * 100  # every 7th set does not fit
+        if not nbytes or nbytes > cap:
+            return None
+        return _Pin(shape.at, "embedding", np.zeros(0, np.int64),
+                    np.zeros((0, 0)), {}, ("id",), nbytes)
+
+    monkeypatch.setattr(svc, "_collect_pin", fake_collect)
+    shapes = [_Shape("", None, "embedding", (), 10, 0, None,
+                     slot=(t, "embedding", None), at=(f"data.v{v}", None))
+              for t in range(40) for v in range(3)]
+    errors = []
+
+    def worker(seed):
+        rng = random.Random(seed)
+        try:
+            for _ in range(400):
+                svc._pin(rng.choice(shapes))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(s,)) for s in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert svc.memo_stats()["pinned_sets"] > 0
+    assert len(svc._pin_marks) <= svc._SHAPE_MEMO_CAP
+    _assert_pins_within_budget(svc)
 
 
 def test_query_template_noncanonical_selectors_stay_cold(svc):

@@ -377,3 +377,52 @@ def test_query_endpoint_malformed_specs_are_422(server):
     status, body = _get(server, "/query", user_id=11,
                         body=json.dumps({"limit": None}))
     assert status == 422 and body["status_code"] == 10422
+
+
+def test_metrics_reports_memo_tiers_and_pins(server):
+    """/metrics serves VectorService.memo_stats(): the third distinct-
+    text /search on a tenant is its second template hit, which pins its
+    candidate set; a batch on the pinned tenant naming a missing id is
+    still 404."""
+    for i, text in enumerate(["alpha doc", "beta doc", "gamma doc"], 1):
+        _get(server, "/insert", id=i, user_id=8, text=text, site="s",
+             lang="en")
+    status, m0 = _get(server, "/metrics")
+    assert status == 200
+    assert set(m0) == {"plan_hits", "shape_hits", "pin_hits", "pinned_sets",
+                       "pinned_bytes", "pin_budget_bytes"}
+    assert m0["pinned_sets"] == 0 and m0["pinned_bytes"] == 0
+    _get(server, "/search", user_id=8, text="first words", limit=2)
+    _get(server, "/search", user_id=8, text="marking words", limit=2)
+    status, hits = _get(server, "/search", user_id=8, text="second words",
+                        limit=2)
+    assert status == 200 and len(hits) == 2
+    assert list(hits[0]) == ["id", "string", "score"]
+    _, m = _get(server, "/metrics")
+    assert m["shape_hits"] == m0["shape_hits"] + 2
+    assert m["pin_hits"] == m0["pin_hits"] + 1
+    assert m["pinned_sets"] == 1
+    assert 0 < m["pinned_bytes"] <= m["pin_budget_bytes"]
+    status, body = _get(server, "/query_batch", user_id=8, bodies=json.dumps(
+        [{"query": 1, "limit": 2}, {"query": 999, "limit": 2}]))
+    assert status == 404 and "999" in body["status"]["error"]
+
+
+def test_repeated_reads_over_empty_set_are_empty(server):
+    """A filter that matches nothing, and a tenant with no points, pin an
+    empty candidate set: repeated distinct-text /search, /query and
+    /query_batch requests on them stay 200 [] instead of failing in the
+    ranking."""
+    _get(server, "/insert", id=1, user_id=9, text="news doc", site="news",
+         lang="en")
+    for n in range(4):  # cold, marking, pinning, pinned
+        status, hits = _get(server, "/search", user_id=9, text=f"words {n}",
+                            limit=2, site="blog")
+        assert (status, hits) == (200, [])
+        status, hits = _get(server, "/query", user_id=10, body=json.dumps(
+            {"query": {"text": f"words {n}"}, "limit": 2}))
+        assert (status, hits) == (200, [])
+    status, hits = _get(server, "/query_batch", user_id=10, bodies=json.dumps(
+        [{"query": {"text": "a"}, "limit": 2},
+         {"query": {"text": "b"}, "limit": 2}]))
+    assert (status, hits) == (200, [[], []])

@@ -64,3 +64,26 @@ def test_similar_documents_retrieval(corpus):
 def test_missing_query_doc_raises(corpus):
     with pytest.raises(ValueError, match="not found"):
         similar_documents(corpus, query_doc_id=999)
+
+
+@pytest.mark.parametrize("embed", ["hashed_tfidf_embed", "hashed_tfidf_sparse"])
+def test_pinned_fan_out_keeps_wide_input_partitions(spark, embed):
+    """The pinned repartition before the per-doc aggregate never narrows
+    the input: with twice the default parallelism in, the
+    RepartitionByExpression keeps the input's partition count, and the
+    plan keeps its three exchanges (the term DF count, its broadcast and
+    the pinned repartition)."""
+    import re
+
+    from vectordb_cloud_spark.functions import embedding
+
+    wide = 2 * spark.sparkContext.defaultParallelism
+    docs = spark.range(0, 64, numPartitions=wide).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("common word "), F.col("id").cast("string"))
+        .alias("text"))
+    qe = getattr(embedding, embed)(docs)._jdf.queryExecution()
+    parts = re.findall(r"RepartitionByExpression \[[^\]]*\], (\d+)",
+                       qe.analyzed().toString())
+    assert parts == [str(wide)]
+    assert qe.executedPlan().toString().count("Exchange ") == 3

@@ -264,8 +264,9 @@ def hashed_tfidf_embed(docs, id_col: str = "doc_id", text_col: str = "text",
     # pin the dim-sum aggregate's parallelism (r14): the weighted rows are
     # bytes-tiny but the dim partial sums are the embed's dominant compute,
     # and size-based AQE coalescing would run them in one task; groupBy
-    # reuses this hash partitioning, so no extra exchange
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
+    # reuses this hash partitioning, so no extra exchange. Never below the
+    # input's own fan-out: a wide input on a small driver keeps its width
+    n_part = _fan_out(docs)
     sums = weighted.repartition(n_part, id_col).groupBy(id_col).agg(*[
         F.sum(F.col("w") * sign[j]).alias(f"__e{j}") for j in range(dim)
     ])
@@ -276,6 +277,13 @@ def hashed_tfidf_embed(docs, id_col: str = "doc_id", text_col: str = "text",
         F.col(id_col),
         F.transform(vec, lambda x: x / norm).cast("array<float>").alias("embedding"),
     )
+
+
+def _fan_out(docs) -> int:
+    """Partitions for a pinned aggregate over ``docs``: the input's own
+    count or the cluster's default parallelism, whichever is larger."""
+    return max(docs.rdd.getNumPartitions(),
+               docs.sparkSession.sparkContext.defaultParallelism)
 
 
 def hashed_tfidf_sparse(docs, id_col: str = "doc_id", text_col: str = "text",
@@ -323,7 +331,7 @@ def hashed_tfidf_sparse(docs, id_col: str = "doc_id", text_col: str = "text",
     # both aggregates with no second shuffle; it also pins the fan-out the
     # dense variant pins (size-based AQE coalescing would run the
     # bytes-tiny weighted rows in one task).
-    n_part = docs.sparkSession.sparkContext.defaultParallelism
+    n_part = _fan_out(docs)
     by_dim = (
         weighted.repartition(n_part, id_col)
         .groupBy(id_col, "dim")

@@ -25,6 +25,8 @@ Contract notes (all cited against /root/reference/app.py):
 - the three removes return 1/0; /remove_all_by_word implements the INTENDED
   semantics (the reference's scroll mis-unpack at :102 made it always 0 —
   SURVEY.md §2.7 D2).
+- ``/metrics`` (not in the reference) returns ``VectorService.memo_stats()``:
+  hit counts per read-path memo tier and the pinned tier's sets and bytes.
 - validation failures return HTTP 422 with
   ``{"status_code": 10422, "message": ..., "data": None}`` (:28-33).
 """
@@ -103,16 +105,12 @@ def _routes(service: VectorService) -> dict[str, Callable[[dict[str, str]], Any]
         if p["limit"] <= 0:
             raise ValidationError("query.limit: must be positive")
         try:
-            hits = service.search(
+            return service.search_hits(
                 p["user_id"], p["text"], p["limit"], p["site"], p["lang"],
-                query_filter=_parse_filter(p["filter"])).collect()
+                query_filter=_parse_filter(p["filter"]))
         except (ValueError, KeyError, TypeError) as exc:
             # a malformed filter document is a client error, as on /query
             raise ValidationError(f"bad search request: {exc}") from exc
-        return [
-            {"id": r["id"], "string": r["string"], "score": r["score"]}
-            for r in hits
-        ]
 
     def count(params):
         # Qdrant POST /collections/{c}/points/count, tenant-scoped like
@@ -239,6 +237,10 @@ def _routes(service: VectorService) -> dict[str, Callable[[dict[str, str]], Any]
         except (ValueError, KeyError, TypeError) as exc:
             raise ValidationError(f"bad query document: {exc}") from exc
 
+    def metrics(_params):
+        # what the read-path memos served and pin (ROADMAP aim 4)
+        return service.memo_stats()
+
     return {
         "/": index,
         "/insert": insert,
@@ -256,6 +258,7 @@ def _routes(service: VectorService) -> dict[str, Callable[[dict[str, str]], Any]
         "/search_matrix_offsets": search_matrix_offsets,
         "/query": query,
         "/query_batch": query_batch,
+        "/metrics": metrics,
     }
 
 

@@ -3290,15 +3290,15 @@ def query_template_threshold_paged(spark: SparkSession,
     as a single from_json constant — carrying the r11 grammar in the body:
     ``score_threshold`` (baked into the template's WHERE, cutting on the
     unrounded distance), ``offset`` paging (baked as LIMIT/OFFSET), and a
-    ``with_payload`` field-list selector (baked into the projection). A
-    FIRST request with a different text warms the shape
-    (api.VectorService._register_shape); the measured request is then
-    served from the template, counter-asserted via the service's
-    ``_shape_hits``/``_plan_hits`` observability counters — so the oracle
-    hash gates the templated SQL end to end, /query's twin of the
-    ``text_routed_search`` assertion. The endpoint returns JSON hit
-    dicts; the row transports them into a local DataFrame for the
-    compare."""
+    ``with_payload`` field-list selector (baked into the projection).
+    Two requests with other texts warm the shape
+    (api.VectorService._register_shape) and mark its candidate set; the
+    measured request is then a template hit answered by the pinned tier — the shape's candidate set
+    ranked on the driver in NumPy with the threshold, offset and
+    selector applied as the template SQL applies them — counter-asserted
+    via ``memo_stats()["pin_hits"]``, so the oracle hash gates the pinned
+    tier end to end. The endpoint returns JSON hit dicts; the row
+    transports them into a local DataFrame for the compare."""
     svc = fx.text_service(spark, sf_dir)
     body = {
         "query": {"text": _TXT_QUERY_TEXT},
@@ -3308,11 +3308,12 @@ def query_template_threshold_paged(spark: SparkSession,
         "score_threshold": _QTT_THR,
         "with_payload": ["text"],
     }
-    svc.query(_TXT_USER, dict(body, query={"text": _QTT_WARM_TEXT}))
-    fast_before = (svc._shape_hits, svc._plan_hits)
+    for warm in (_QTT_WARM_TEXT, _QTT_WARM_TEXT + " again"):
+        svc.query(_TXT_USER, dict(body, query={"text": warm}))
+    pinned_before = svc.memo_stats()["pin_hits"]
     rows = svc.query(_TXT_USER, body)
-    assert (svc._shape_hits, svc._plan_hits) != fast_before, \
-        "measured request was rebuilt — template fast path not taken"
+    assert svc.memo_stats()["pin_hits"] == pinned_before + 1, \
+        "measured request was not served by the pinned tier"
     from vectordb_cloud_spark.session import local_df
 
     out = local_df(
