@@ -1113,8 +1113,9 @@ def test_query_params_exact_false_routes_through_sidecar(spark, tmp_path):
     svc = VectorService(spark, str(tmp_path / "annq"), index_name="A",
                         dim=8, ann_index={"ivf": {"k_centroids": 4,
                                                   "nprobe": 4}})
-    for i in range(40):
-        assert svc.insert(i, 9, f"point number {i}", "s", "en") == 1
+    assert svc.insert_batch([
+        {"id": i, "user_id": 9, "text": f"point number {i}", "site": "s",
+         "lang": "en"} for i in range(40)]) == 40
     body = {"query": {"text": "point number 7"}, "limit": 5,
             "params": {"exact": False}}
     got = svc.query(9, body)
@@ -1138,8 +1139,9 @@ def test_query_params_quantization_and_hnsw_ef(spark, tmp_path):
     oversampling pass through, hnsw_ef overrides the graph beam."""
     svc = VectorService(spark, str(tmp_path / "qz"), index_name="Q", dim=8,
                         quantization={"scalar": {"type": "int8"}})
-    for i in range(30):
-        assert svc.insert(i, 4, f"quantized point {i}", "s", "en") == 1
+    assert svc.insert_batch([
+        {"id": i, "user_id": 4, "text": f"quantized point {i}", "site": "s",
+         "lang": "en"} for i in range(30)]) == 30
     body = {"query": {"text": "quantized point 3"}, "limit": 5}
     exact = svc.query(4, body)
     via_codes = svc.query(4, dict(
@@ -1152,8 +1154,9 @@ def test_query_params_quantization_and_hnsw_ef(spark, tmp_path):
     svg = VectorService(spark, str(tmp_path / "gz"), index_name="G", dim=8,
                         ann_index={"graph": {"degree": 8, "beam": 4,
                                              "max_hops": 3}})
-    for i in range(60):
-        assert svg.insert(i, 4, f"graph point {i}", "s", "en") == 1
+    assert svg.insert_batch([
+        {"id": i, "user_id": 4, "text": f"graph point {i}", "site": "s",
+         "lang": "en"} for i in range(60)]) == 60
     wide = svg.query(4, dict(body, params={"exact": False, "hnsw_ef": 48}))
     assert len(wide) == 5 and "dist" in wide[0]
 
@@ -1169,9 +1172,9 @@ def test_query_batch_ann_shared_parity(spark, tmp_path):
                         dim=16, ann_index={"ivf": {
                             "k_centroids": 4, "nprobe": 2,
                             "full_scan_threshold": 4}})
-    for i in range(30):
-        assert svc.insert(i, 5, f"doc number {i} about topic {i % 7}",
-                          "s", "en") == 1
+    assert svc.insert_batch([
+        {"id": i, "user_id": 5, "text": f"doc number {i} about topic {i % 7}",
+         "site": "s", "lang": "en"} for i in range(30)]) == 30
     bodies = [
         {"query": {"text": "topic 3"}, "limit": 4,
          "params": {"exact": False}},
@@ -1198,9 +1201,9 @@ def test_query_batch_ann_shared_parity(spark, tmp_path):
     svc2 = VectorService(spark, str(tmp_path / "annb2"), index_name="AnnB2",
                          dim=16, ann_index={"ivf": {
                              "k_centroids": 4, "nprobe": 2}})
-    for i in range(20):
-        assert svc2.insert(i, 6, f"piece {i} of corpus {i % 5}",
-                           "s", "en") == 1
+    assert svc2.insert_batch([
+        {"id": i, "user_id": 6, "text": f"piece {i} of corpus {i % 5}",
+         "site": "s", "lang": "en"} for i in range(20)]) == 20
     bodies2 = [
         {"query": {"text": "corpus 2"}, "limit": 3,
          "params": {"exact": False}},
@@ -1219,8 +1222,9 @@ def test_query_batch_ann_shared_parity(spark, tmp_path):
                          dim=16, ann_index={"graph": {
                              "degree": 4, "beam": 8, "max_hops": 2,
                              "full_scan_threshold": 0}})
-    for i in range(15):
-        assert svc3.insert(i, 7, f"graph doc {i}", "s", "en") == 1
+    assert svc3.insert_batch([
+        {"id": i, "user_id": 7, "text": f"graph doc {i}", "site": "s",
+         "lang": "en"} for i in range(15)]) == 15
     bodies3 = [
         {"query": {"text": "graph doc 3"}, "limit": 3,
          "params": {"exact": False}},

@@ -76,7 +76,7 @@ def test_ivf_partial_probe_recall_and_filters(catalog, spark):
     qv = [0.1] * 8
     got = [(r["id"], round(r["dist"], 9)) for r in
            catalog.search_ann("c", qv, k=10).collect()]
-    adir = catalog._ann_dir("c", catalog.meta("c").version)
+    adir = catalog._sidecar_dir("c", "ann", catalog.meta("c").version)
     with open(os.path.join(adir, "params.json")) as f:
         centers = [(int(i), list(c)) for i, c in json.load(f)["centers"]]
     probe = route_probe_ids(centers, qv, 4)
@@ -148,13 +148,13 @@ def test_ann_sidecar_lazy_rebuild_and_pruning(catalog, spark):
     qv = [0.1] * 8
     catalog.search_ann("c", qv, k=5)
     v1 = catalog.meta("c").version
-    assert os.path.isdir(catalog._ann_dir("c", v1))
+    assert os.path.isdir(catalog._sidecar_dir("c", "ann", v1))
     catalog.delete_where("c", F.col("id") < 100)
     got = [r["id"] for r in catalog.search_ann("c", qv, k=5).collect()]
     assert all(i >= 100 for i in got)
     v2 = catalog.meta("c").version
-    assert os.path.isdir(catalog._ann_dir("c", v2))
-    assert not os.path.isdir(catalog._ann_dir("c", v1))
+    assert os.path.isdir(catalog._sidecar_dir("c", "ann", v2))
+    assert not os.path.isdir(catalog._sidecar_dir("c", "ann", v1))
 
 
 def test_ann_config_guards_and_service(catalog, spark, tmp_path):
@@ -170,8 +170,8 @@ def test_ann_config_guards_and_service(catalog, spark, tmp_path):
 
     svc = VectorService(spark, str(tmp_path / "cat"), dim=16,
                         ann_index={"ivf": {"k_centroids": 2, "nprobe": 2}})
-    for i in range(20):
-        svc.insert(id=i, user_id=3, text=f"topic {i}", site="s", lang="en")
+    svc.insert_batch([{"id": i, "user_id": 3, "text": f"topic {i}",
+                       "site": "s", "lang": "en"} for i in range(20)])
     exact = [r["id"] for r in svc.search(3, "topic 4", limit=5).collect()]
     got = [r["id"] for r in
            svc.search(3, "topic 4", limit=5, exact=False).collect()]
@@ -252,7 +252,7 @@ def test_graph_index_coarse_sample_seeding(catalog, spark):
     got = [r["id"] for r in catalog.search_ann("gc", qv, k=10).collect()]
     exact = _exact(catalog, "gc", qv, 10)
     assert len(set(got) & set(exact)) >= 5
-    adir = catalog._ann_dir("gc", catalog.meta("gc").version)
+    adir = catalog._sidecar_dir("gc", "ann", catalog.meta("gc").version)
     cdir = os.path.join(adir, "coarse_sample")
     assert os.path.isdir(cdir)
     ids = [r["id"] for r in spark.read.parquet(cdir).collect()]
@@ -266,7 +266,7 @@ def test_graph_index_coarse_sample_seeding(catalog, spark):
 def _graph_params(catalog, name):
     import json as _json
 
-    adir = catalog._ann_dir(name, catalog.meta(name).version)
+    adir = catalog._sidecar_dir(name, "ann", catalog.meta(name).version)
     with open(os.path.join(adir, "params.json")) as f:
         return adir, _json.load(f)
 
@@ -614,3 +614,77 @@ def test_ivf_sq_sidecar_incremental_append(catalog, spark):
     assert p2["appended_rows"] == 20
     assert p2["mins"] == p1["mins"] and p2["maxs"] == p1["maxs"]  # frozen
     assert 405 in got and 5 in got
+
+
+def test_concurrent_lazy_builds_publish_one_sidecar(catalog, spark,
+                                                    monkeypatch):
+    """Two readers lazily building the same version's sidecar at once (the
+    HTTP service's threadpool after a write) each build into a private
+    stage; the first publish wins and the other serves the winner's dir —
+    neither raises, and the published layout holds each row once."""
+    import threading
+
+    from vectordb_cloud_spark.operators import ann
+
+    _seed(catalog, spark, "race", {"ivf": {"k_centroids": 4, "nprobe": 4}},
+          n=40)
+    barrier = threading.Barrier(2, timeout=300)
+    real_build = ann.ivf_build
+
+    def lined_up(*args, **kwargs):
+        barrier.wait()  # both builders are past the freshness check
+        return real_build(*args, **kwargs)
+
+    monkeypatch.setattr(ann, "ivf_build", lined_up)
+    dirs, errors = [], []
+
+    def build():
+        try:
+            dirs.append(catalog.build_ann_index("race"))
+        except Exception as e:  # reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(dirs) == 2 and dirs[0] == dirs[1]
+    assert spark.read.parquet(os.path.join(dirs[0], "ivf")).count() == 40
+    assert not [d for d in os.listdir(os.path.dirname(dirs[0]))
+                if d.startswith("staging.")]
+    qv = [0.1] * 8  # nprobe == k_centroids: the probe is exact
+    got = [r["id"] for r in catalog.search_ann("race", qv, k=5).collect()]
+    assert got == _exact(catalog, "race", qv, 5) and len(set(got)) == 5
+
+
+def test_sidecar_rebuild_for_another_vector_column(catalog, spark):
+    """One ann.v{N} dir serves one vector column: a search on another
+    column replaces it at the same version, and the coarse-sample handle
+    memoized under the replaced dir must go with it. Each answer equals
+    a fresh catalog's over the same root."""
+    def vec(seed):
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(7)),
+            lambda i: (F.pmod(F.xxhash64(F.col("id"), i, F.lit(seed)),
+                              F.lit(1000)) - 500.0) / 500.0,
+        ).cast("array<float>")
+
+    catalog.create("nv", dim=8, vectors={"a": 8},
+                   ann_index={"graph": {"degree": 8, "beam": 16,
+                                        "coarse_mod": 3}})
+    catalog.upsert("nv", spark.range(150).select(
+        "id", vec(1).alias("embedding"), vec(2).alias("vec_a"),
+        F.concat(F.lit("doc "), F.col("id")).alias("text"),
+        (F.col("id") % 4).alias("user_id")))
+    qv = [0.1] * 8
+
+    def top(cat, col):
+        return [(r["id"], round(r["dist"], 9)) for r in
+                cat.search_ann("nv", qv, k=5, vector_col=col).collect()]
+
+    for col in ("embedding", "vec_a", "embedding"):
+        got = top(catalog, col)
+        assert len(got) == 5
+        assert got == top(CollectionCatalog(spark, catalog.root), col)

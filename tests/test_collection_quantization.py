@@ -84,15 +84,15 @@ def test_sidecar_lazy_rebuild_on_write(catalog, spark):
     qv = [0.1] * 8
     catalog.search_quantized("c", qv, k=5)
     v1 = catalog.meta("c").version
-    assert os.path.isdir(catalog._quant_dir("c", v1))
+    assert os.path.isdir(catalog._sidecar_dir("c", "quant", v1))
     # a write moves the snapshot; the stale sidecar is replaced on next use
     catalog.delete_where("c", F.col("id") < 5)
     v2 = catalog.meta("c").version
     assert v2 > v1
     got = [r["id"] for r in catalog.search_quantized("c", qv, k=5).collect()]
     assert all(i >= 5 for i in got)
-    assert os.path.isdir(catalog._quant_dir("c", v2))
-    assert not os.path.isdir(catalog._quant_dir("c", v1))  # pruned
+    assert os.path.isdir(catalog._sidecar_dir("c", "quant", v2))
+    assert not os.path.isdir(catalog._sidecar_dir("c", "quant", v1))  # pruned
 
 
 def test_quantization_config_guards_and_info(catalog, spark):
@@ -126,9 +126,9 @@ def test_service_exact_false_routes_through_codes(spark, tmp_path):
 
     svc = VectorService(spark, str(tmp_path / "cat"), dim=16,
                         quantization={"scalar": {"type": "int8"}})
-    for i in range(30):
-        assert svc.insert(id=i, user_id=7, text=f"document about topic {i}",
-                          site="s", lang="en") == 1
+    assert svc.insert_batch([
+        {"id": i, "user_id": 7, "text": f"document about topic {i}",
+         "site": "s", "lang": "en"} for i in range(30)]) == 30
     exact = [r["id"] for r in svc.search(7, "topic 3", limit=5).collect()]
     approx = svc.search(7, "topic 3", limit=5, exact=False)
     assert approx.columns == ["id", "string", "score"]

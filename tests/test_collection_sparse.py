@@ -63,7 +63,7 @@ def test_sparse_index_sidecar_lifecycle(catalog, spark, tmp_path):
     assert [(r["id"], r["score"]) for r in got.collect()] == \
         [(3, 4.0), (1, 3.0), (2, 3.0)]
     v = catalog.meta("c").version
-    sdir = catalog._sparse_index_dir("c", v, "text")
+    sdir = catalog._sidecar_dir("c", "sparseidx", v, "text")
     assert os.path.isdir(sdir)  # built lazily by the routed search
     # scan-path parity on the same collection (force the scan form)
     scan = catalog.search_sparse("c", "text", [7, 40], [1.0, 2.0], k=3,
@@ -82,7 +82,7 @@ def test_sparse_index_sidecar_lifecycle(catalog, spark, tmp_path):
     got2 = catalog.search_sparse("c", "text", [7, 40], [1.0, 2.0], k=1)
     assert [(r["id"], r["score"]) for r in got2.collect()] == [(5, 10.0)]
     v2 = catalog.meta("c").version
-    assert os.path.isdir(catalog._sparse_index_dir("c", v2, "text"))
+    assert os.path.isdir(catalog._sidecar_dir("c", "sparseidx", v2, "text"))
     assert not os.path.isdir(sdir)  # old version pruned
     # config without "index" stays scan-path (no sidecar appears)
     catalog.create("p", dim=2, sparse_vectors={"text": {}})

@@ -25,10 +25,14 @@ reproduction of a Delta/Iceberg transaction log's snapshot semantics.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
+import re
 import shutil
+import uuid
 from dataclasses import asdict, dataclass
+from types import SimpleNamespace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,25 +85,26 @@ class CollectionMeta:
     # parquet min/max footer stats.
     payload_indexes: dict | None = None
     # Qdrant quantization_config from create_collection: {"scalar":
-    # {"type": "int8"}} or {"binary": {}}. The codes live in a versioned
-    # sidecar (``quant.v{N}`` beside the data dirs), materialized lazily
-    # per committed snapshot by ``quantize()`` and served by
-    # ``search_quantized()`` — the batch-engine shape of Qdrant's
-    # background optimizer.
+    # {"type": "int8"}}, {"product": {...}} or {"binary": {}}. The codes
+    # live in the ``quant.v{N}`` sidecar, built lazily per committed
+    # snapshot by ``quantize()`` and served by ``search_quantized()``.
+    # All four sidecars (``textidx``, ``quant``, ``sparseidx``, ``ann``)
+    # share one lifecycle, ``CollectionCatalog._sidecar``: the batch-engine
+    # shape of Qdrant's background optimizer.
     quantization: dict | None = None
     # Qdrant sparse_vectors config (named sparse vectors beside the dense
     # ones): maps name -> config dict (may be empty). Stored as paired
     # ``sparse_{name}_indices`` (array<int>, strictly ascending, unique)
     # and ``sparse_{name}_values`` (array<float>) columns, validated
-    # together on every write; served by ``search_sparse()`` (scan scoring
-    # — persist an inverted layout via operators.sparse for the 100 TB
-    # path).
+    # together on every write; served by ``search_sparse()`` (scan
+    # scoring, or the ``sparseidx.v{N}/{name}`` postings sidecar when the
+    # config declares ``{"index": ...}``).
     sparse_vectors: dict | None = None
     # ANN index config — the hnsw_config slot of create_collection, with
     # the two families this engine builds: {"ivf": {"k_centroids": N,
     # "nprobe": M}} (centroid-partitioned layout, file pruning) or
     # {"graph": {"degree": D, "beam": B, "max_hops": H}} (HNSW-class).
-    # Same versioned-sidecar lifecycle as quantization (``ann.v{N}``).
+    # Built into the ``ann.v{N}`` sidecar.
     ann_index: dict | None = None
     # Creation nonce: a uuid stamped once at create() and never rewritten.
     # Serving-layer plan memos key on (nonce, data.v{N} path) to tell one
@@ -128,16 +133,14 @@ class CollectionCatalog:
         # latency (r9: ~0.85 s/query on a 192-dir IVF layout; the same
         # pathology applies to every endpoint that calls read())
         self._read_memo: dict[str, tuple[str, DataFrame]] = {}
-        # same pattern for text-postings sidecar relations, keyed by the
-        # immutable textidx.v{N}/{field} dir (serving: a routed match.text
-        # query then schedules ZERO jobs at construction time)
-        self._text_memo: dict[str, DataFrame] = {}
-        # and for the graph sidecar's coarse-entry sample (keyed by the
-        # immutable ann.v{N}/coarse_sample dir): the handle memo skips the
-        # per-query file listing/schema read; the top-k seeding job itself
-        # is the designed per-query cost (HNSW's upper layer). Entries die
-        # with their sidecar (pruned on rebuild alongside the dirs).
-        self._ann_sample_memo: dict[str, DataFrame] = {}
+        # same pattern for sidecar relations (the textidx postings, the
+        # graph's coarse_sample), keyed by their path under a published
+        # ``<kind>.v{N}`` dir: a routed match.text query then schedules
+        # ZERO jobs at construction time, and graph seeding skips the
+        # per-query file listing. Entries die with their dir — a
+        # publish-replace, a prune or a drop forgets every key under it
+        # (``_discard``/``_forget``).
+        self._handles: dict[str, DataFrame] = {}
         os.makedirs(root, exist_ok=True)
 
     # -- registry ---------------------------------------------------------
@@ -259,16 +262,16 @@ class CollectionCatalog:
             return legacy if os.path.isdir(legacy) else None
         return self._data_dir_v(name, meta.version)
 
-    def _versions_on_disk(self, name: str) -> list[int]:
-        out = []
-        prefix = DATA_DIR + ".v"
+    def _versions(self, name: str, kind: str = DATA_DIR) -> dict[int, str]:
+        """``{N: path}`` of every dir named exactly ``<kind>.v<N>`` — data
+        snapshots and sidecars alike; staging dirs never parse."""
+        pat = re.compile(re.escape(kind) + r"\.v(\d+)")
+        out = {}
         for d in os.listdir(self._dir(name)):
-            if d.startswith(prefix) and not d.endswith(".staging"):
-                try:
-                    out.append(int(d[len(prefix):]))
-                except ValueError:
-                    continue
-        return sorted(out)
+            m = pat.fullmatch(d)
+            if m:
+                out[int(m.group(1))] = os.path.join(self._dir(name), d)
+        return out
 
     def list_versions(self, name: str) -> list[int]:
         """COMMITTED versions still on disk (time-travel targets), oldest
@@ -276,7 +279,7 @@ class CollectionCatalog:
         orphan of a crashed, never-committed write — not a snapshot."""
         name = self.resolve(name)
         current = self.meta(name).version
-        return [v for v in self._versions_on_disk(name) if v <= current]
+        return [v for v in sorted(self._versions(name)) if v <= current]
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Time travel: read a retained historical snapshot."""
@@ -298,8 +301,9 @@ class CollectionCatalog:
         if keep < 1:
             raise ValueError("keep must be >= 1")
         current = self.meta(name).version
-        committed = [v for v in self._versions_on_disk(name) if v <= current]
-        orphans = [v for v in self._versions_on_disk(name) if v > current]
+        on_disk = sorted(self._versions(name))
+        committed = [v for v in on_disk if v <= current]
+        orphans = [v for v in on_disk if v > current]
         drop = (committed[:-keep] if len(committed) > keep else []) + orphans
         for v in drop:
             shutil.rmtree(self._data_dir_v(name, v), ignore_errors=True)
@@ -367,19 +371,17 @@ class CollectionCatalog:
                               for k, v in sparse_vectors.items()}
         if shard_key in ("id", "embedding", "__bucket") or shard_key.startswith("vec_"):
             raise ValueError(f"cannot shard on reserved column {shard_key!r}")
-        import uuid as _uuid
-
         meta = CollectionMeta(name, dim, metric, id_type, n_buckets,
                               vectors=vectors, quantization=quantization,
                               ann_index=ann_index,
                               sparse_vectors=sparse_vectors,
                               shard_key=shard_key,
-                              nonce=_uuid.uuid4().hex)
+                              nonce=uuid.uuid4().hex)
         # defensive: a fresh collection must never serve a memoized relation
         # from a previous same-name incarnation (drop+recreate restarts the
         # version counter, so data.v{N} paths can collide)
         self._read_memo.pop(name, None)
-        self._purge_text_memo(self._dir(name))
+        self._forget(self._dir(name))
         os.makedirs(self._dir(name), exist_ok=True)
         with open(os.path.join(self._dir(name), META_FILE), "w") as f:
             json.dump(asdict(meta), f)
@@ -398,7 +400,7 @@ class CollectionCatalog:
         # recreate returns a relation whose cached file listing points at
         # deleted part files (FileNotFoundException / stale data)
         self._read_memo.pop(name, None)
-        self._purge_text_memo(self._dir(name))
+        self._forget(self._dir(name))
         aliases = self.list_aliases()
         survivors = {a: c for a, c in aliases.items() if c != name}
         if len(survivors) != len(aliases):
@@ -1031,21 +1033,111 @@ class CollectionCatalog:
         self._write_meta(name, meta)
         return meta
 
+    # -- versioned sidecars -------------------------------------------------
+    # Every secondary structure — text postings (``textidx``), quantized
+    # codes (``quant``), sparse postings (``sparseidx``), the ANN index
+    # (``ann``) — lives in ``<kind>.v{N}[/sub]`` beside the data dirs and
+    # shares one lifecycle: built lazily for the CURRENT committed version,
+    # published atomically, older versions pruned — the batch-engine shape
+    # of Qdrant's background optimizer.
+    def _sidecar_dir(self, name: str, kind: str, version: int,
+                     sub: str | None = None) -> str:
+        d = os.path.join(self._dir(name), f"{kind}.v{version}")
+        return os.path.join(d, sub) if sub else d
+
+    @staticmethod
+    def _fresh(pdir: str, vector_col: str | None) -> bool:
+        """Published, and — for kinds built per vector column (a
+        ``params.json`` names it) — built for ``vector_col``. One
+        filesystem call either way."""
+        if vector_col is None:
+            return os.path.isdir(pdir)
+        try:
+            with open(os.path.join(pdir, "params.json")) as f:
+                built_for = json.load(f).get("vector_col", "embedding")
+        except FileNotFoundError:
+            return False
+        return built_for == vector_col
+
+    def _sidecar(self, name: str, meta: CollectionMeta, kind: str, build,
+                 sub: str | None = None,
+                 vector_col: str | None = None) -> str:
+        """The current version's published ``kind`` sidecar, built first
+        when missing or built for another vector column.
+
+        ``build(stage)`` fills a private staging dir and returns the params
+        to record (``params.json``, plus ``vector_col``) or None. The stage
+        is named outside every ``<kind>.v*`` name, so neither the prune nor
+        a glob over published sidecars sees an in-flight or crashed build.
+        The publish is one ``os.rename``: the first publisher wins, and a
+        concurrent builder that loses discards its stage and serves the
+        winner's dir. A published dir built for another vector column is
+        discarded and replaced."""
+        pdir = self._sidecar_dir(name, kind, meta.version, sub)
+        if self._fresh(pdir, vector_col):
+            return pdir
+        if not self._has_data(name):
+            raise ValueError(f"collection {name!r} is empty")
+        stage = os.path.join(self._dir(name), f"staging.{uuid.uuid4().hex}")
+        os.makedirs(stage)
+        try:
+            params = build(stage)
+            if vector_col is not None:
+                with open(os.path.join(stage, "params.json"), "w") as f:
+                    json.dump({**params, "vector_col": vector_col}, f)
+            os.makedirs(os.path.dirname(pdir), exist_ok=True)
+            while True:
+                try:
+                    os.rename(stage, pdir)
+                    break
+                except OSError as e:  # pdir exists (non-empty)
+                    if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+                        raise
+                    if self._fresh(pdir, vector_col):
+                        break  # a concurrent build published first
+                    # built for another vector column: replace it
+                    self._discard(name, pdir)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        for v, d in self._versions(name, kind).items():
+            if v != meta.version:
+                self._discard(name, d)
+        return pdir
+
+    def _discard(self, name: str, path: str) -> None:
+        """Unpublish ``path`` atomically (rename aside, then delete) and
+        forget the read handles under it; a concurrent discard of the
+        same dir is a no-op."""
+        trash = os.path.join(self._dir(name), f"staging.{uuid.uuid4().hex}")
+        try:
+            os.rename(path, trash)
+        except FileNotFoundError:
+            return
+        self._forget(path)
+        shutil.rmtree(trash, ignore_errors=True)
+
+    def _forget(self, path: str) -> None:
+        for k in list(self._handles):
+            if k == path or k.startswith(path + os.sep):
+                self._handles.pop(k, None)
+
+    def _read_handle(self, path: str) -> DataFrame:
+        df = self._handles.get(path)
+        if df is None:
+            df = self._handles[path] = self.spark.read.parquet(path)
+        return df
+
     # -- full-text payload index (Qdrant field_schema="text") --------------
     # Range clustering (the layout every other schema gets) cannot prune a
     # SUBSTRING/token predicate — min/max stats say nothing about interior
     # tokens. A "text"-indexed field therefore also gets a token-postings
     # sidecar (``textidx.v{N}/{field}``: (token, id) rows, one dir per
-    # token-hash bucket), maintained with the same versioned lazy-build /
-    # atomic-publish / stale-prune lifecycle as the quantization and ANN
-    # sidecars. ``match.text`` filters on the field can then prefilter to
+    # token-hash bucket), maintained by the one sidecar lifecycle
+    # (``_sidecar``). ``match.text`` filters on the field can then prefilter to
     # the ids whose postings contain EVERY query token (the scan touches
     # only the query's buckets) and verify the substring on those rows —
     # the classic inverted-index acceleration, relationally.
     _TEXT_IDX_BUCKETS = 64
-
-    def _text_index_dir(self, name: str, version: int, field: str) -> str:
-        return os.path.join(self._dir(name), f"textidx.v{version}", field)
 
     def _text_index_schema(self, meta: "CollectionMeta", field: str) -> str:
         schema = (meta.payload_indexes or {}).get(field)
@@ -1084,58 +1176,33 @@ class CollectionCatalog:
         name = self.resolve(name)
         meta = self.meta(name)
         schema = self._text_index_schema(meta, field)
-        if not self._has_data(name):
-            raise ValueError(f"collection {name!r} is empty")
-        tdir = self._text_index_dir(name, meta.version, field)
-        if os.path.isdir(tdir):
-            return tdir
-        df = self.read(name).select("id", field).filter(
-            F.col(field).isNotNull())
-        if schema == "text_whitespace":
-            # array_remove "": F.split keeps trailing empty strings (e.g.
-            # text ending in a tab), which would otherwise mint an
-            # empty-token posting the query twin can never produce
-            toks = F.array_remove(
-                F.transform(words(F.col(field)), lambda w: F.lower(w)), "")
-        else:
-            toks = word_tokens(F.col(field))
-        postings = df.select(
-            "id",
-            F.explode(F.array_distinct(toks)).alias("token"),
-        ).withColumn(
-            "tbucket", F.pmod(F.xxhash64("token"),
-                              F.lit(self._TEXT_IDX_BUCKETS)).cast("int")
-        )
-        stage = tdir + ".staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        # one shuffle on the bucket key -> one file per bucket dir (the
-        # sparse_persist_inverted lesson: unshuffled, every task writes
-        # into every bucket directory)
-        (postings.repartition("tbucket")
-         .write.mode("overwrite").partitionBy("tbucket").parquet(stage))
-        os.makedirs(os.path.dirname(tdir), exist_ok=True)
-        if os.path.isdir(tdir):
-            shutil.rmtree(tdir)
-        os.rename(stage, tdir)
-        prefix = "textidx.v"
-        current = f"textidx.v{meta.version}"
-        for d in os.listdir(self._dir(name)):  # prune stale sidecars
-            if d.startswith(prefix) and d != current:
-                stale = os.path.join(self._dir(name), d)
-                shutil.rmtree(stale, ignore_errors=True)
-                self._purge_text_memo(stale)
-        return tdir
 
-    def _purge_text_memo(self, path_prefix: str) -> None:
-        """Drop memoized sidecar relations (postings AND coarse-sample)
-        under ``path_prefix`` (a pruned sidecar version or a dropped
-        collection dir) — a recreated same-name collection must never
-        serve a dead incarnation's cached file listing."""
-        for memo in (self._text_memo, self._ann_sample_memo):
-            stale = [k for k in memo
-                     if k == path_prefix or k.startswith(path_prefix + os.sep)]
-            for k in stale:
-                del memo[k]
+        def build(stage: str) -> None:
+            df = self.read(name).select("id", field).filter(
+                F.col(field).isNotNull())
+            if schema == "text_whitespace":
+                # array_remove "": F.split keeps trailing empty strings (e.g.
+                # text ending in a tab), which would otherwise mint an
+                # empty-token posting the query twin can never produce
+                toks = F.array_remove(
+                    F.transform(words(F.col(field)), lambda w: F.lower(w)),
+                    "")
+            else:
+                toks = word_tokens(F.col(field))
+            postings = df.select(
+                "id",
+                F.explode(F.array_distinct(toks)).alias("token"),
+            ).withColumn(
+                "tbucket", F.pmod(F.xxhash64("token"),
+                                  F.lit(self._TEXT_IDX_BUCKETS)).cast("int")
+            )
+            # one shuffle on the bucket key -> one file per bucket dir (the
+            # sparse_persist_inverted lesson: unshuffled, every task writes
+            # into every bucket directory)
+            (postings.repartition("tbucket")
+             .write.mode("overwrite").partitionBy("tbucket").parquet(stage))
+
+        return self._sidecar(name, meta, "textidx", build, sub=field)
 
     def text_match_ids(self, name: str, field: str, text: str) -> DataFrame:
         """Ids whose ``field`` contains EVERY token of ``text``
@@ -1151,11 +1218,7 @@ class CollectionCatalog:
         tokens = self._tokenize_query(schema, text)
         if not tokens:
             raise ValueError("match.text needs at least one token")
-        tdir = self.build_text_index(name, field)
-        post = self._text_memo.get(tdir)
-        if post is None:
-            post = self.spark.read.parquet(tdir)
-            self._text_memo[tdir] = post
+        post = self._read_handle(self.build_text_index(name, field))
         # bucket routing reuses the writer's hash (Spark xxhash64, seed 42)
         # via its pure-Python twin — zero extra Spark jobs per query
         # (bit-parity with the JVM pinned in tests/test_text_index.py)
@@ -1361,14 +1424,10 @@ class CollectionCatalog:
     # -- collection-level quantization (Qdrant quantization_config) --------
     # Qdrant attaches quantization to the collection and its optimizer
     # keeps the compressed codes fresh in the background; the batch-engine
-    # equivalent is a VERSIONED CODES SIDECAR: ``quantize()`` materializes
-    # codes for the current committed snapshot into ``quant.v{N}`` (atomic
-    # staging+rename, older sidecars pruned), and ``search_quantized()``
+    # equivalent is the ``quant.v{N}`` sidecar: ``quantize()`` materializes
+    # codes for the current committed snapshot, and ``search_quantized()``
     # lazily (re)builds it when the data version moved — so a search after
     # a write pays one rebuild instead of every write paying an encode.
-    def _quant_dir(self, name: str, version: int) -> str:
-        return os.path.join(self._dir(name), f"quant.v{version}")
-
     def quantize(self, name: str, vector_col: str = "embedding") -> str:
         """Materialize the quantized-codes sidecar for the CURRENT version
         (no-op if already built). The codes table keeps id + payload
@@ -1381,60 +1440,43 @@ class CollectionCatalog:
         meta = self.meta(name)
         if not meta.quantization:
             raise ValueError(f"collection {name!r} has no quantization config")
-        if not self._has_data(name):
-            raise ValueError(f"collection {name!r} is empty")
-        qdir = self._quant_dir(name, meta.version)
-        pfile = os.path.join(qdir, "params.json")
-        if os.path.isfile(pfile):
-            with open(pfile) as f:
-                if json.load(f).get("vector_col", "embedding") == vector_col:
-                    return qdir
-            # sidecar was built for a different vector column: rebuild
-        df = self.read(name).filter(F.col(vector_col).isNotNull())
-        stage = qdir + ".staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        if "scalar" in meta.quantization:
-            mins, maxs = sq_train(df, vector_col)
-            codes = sq_encode(df, mins, maxs, vector_col).drop(vector_col)
-            params = {"kind": "scalar", "mins": mins, "maxs": maxs}
-        elif "product" in meta.quantization:
-            from vectordb_cloud_spark.operators.pq import pq_encode, pq_train
 
-            spec = meta.quantization["product"]
-            d = df.select(F.size(vector_col).alias("d")).first()["d"]
-            if "m" in spec:
-                m = int(spec["m"])
+        def build(stage: str) -> dict:
+            df = self.read(name).filter(F.col(vector_col).isNotNull())
+            if "scalar" in meta.quantization:
+                mins, maxs = sq_train(df, vector_col)
+                codes = sq_encode(df, mins, maxs, vector_col).drop(vector_col)
+                params = {"kind": "scalar", "mins": mins, "maxs": maxs}
+            elif "product" in meta.quantization:
+                from vectordb_cloud_spark.operators.pq import (
+                    pq_encode, pq_train)
+
+                spec = meta.quantization["product"]
+                d = df.select(F.size(vector_col).alias("d")).first()["d"]
+                if "m" in spec:
+                    m = int(spec["m"])
+                else:
+                    # Qdrant compression factor vs float32: xN -> dim*4/N
+                    # bytes per vector = M one-byte codes (K=256)
+                    factor = int(spec.get("compression", "x16")[1:])
+                    m = max(1, d * 4 // factor)
+                if d % m:
+                    raise ValueError(
+                        f"dim {d} not divisible by product m={m} "
+                        f"(pick a compression whose code count divides "
+                        f"the dim)")
+                codebooks = pq_train(df, m_subvectors=m, k_codes=256,
+                                     vector_col=vector_col)
+                codes = pq_encode(df, codebooks, vector_col).drop(vector_col)
+                params = {"kind": "product", "codebooks": codebooks}
             else:
-                # Qdrant compression factor vs float32: xN -> dim*4/N bytes
-                # per vector = M one-byte codes (K=256)
-                factor = int(spec.get("compression", "x16")[1:])
-                m = max(1, d * 4 // factor)
-            if d % m:
-                raise ValueError(
-                    f"dim {d} not divisible by product m={m} "
-                    f"(pick a compression whose code count divides the dim)")
-            codebooks = pq_train(df, m_subvectors=m, k_codes=256,
-                                 vector_col=vector_col)
-            codes = pq_encode(df, codebooks, vector_col).drop(vector_col)
-            params = {"kind": "product", "codebooks": codebooks}
-        else:
-            thresholds = bq_train(df, vector_col)
-            codes = bq_encode(df, thresholds, vector_col).drop(vector_col)
-            params = {"kind": "binary", "thresholds": thresholds}
-        params["vector_col"] = vector_col
-        codes.write.mode("overwrite").parquet(os.path.join(stage, "codes"))
-        with open(os.path.join(stage, "params.json"), "w") as f:
-            json.dump(params, f)
-        if os.path.isdir(qdir):
-            shutil.rmtree(qdir)
-        os.rename(stage, qdir)
-        prefix = "quant.v"
-        for d in os.listdir(self._dir(name)):  # prune stale sidecars
-            if d.startswith(prefix) and d != f"quant.v{meta.version}":
-                shutil.rmtree(os.path.join(self._dir(name), d),
-                              ignore_errors=True)
-        return qdir
+                thresholds = bq_train(df, vector_col)
+                codes = bq_encode(df, thresholds, vector_col).drop(vector_col)
+                params = {"kind": "binary", "thresholds": thresholds}
+            codes.write.mode("overwrite").parquet(os.path.join(stage, "codes"))
+            return params
+
+        return self._sidecar(name, meta, "quant", build, vector_col=vector_col)
 
     def search_quantized(self, name: str, query_vector: list[float],
                          k: int = 10, predicate=None,
@@ -1527,7 +1569,7 @@ class CollectionCatalog:
         if route and predicate is None and self._has_data(name):
             # Qdrant's sparse index IS an inverted index: serve through
             # the dim-bucketed postings sidecar (lazy versioned build, the
-            # textidx/quant.v lifecycle). Payload predicates stay on the
+            # one sidecar lifecycle). Payload predicates stay on the
             # scan path — postings carry no payload columns, and a
             # filtered sparse search over the base table is the standard
             # selective-filter fallback.
@@ -1555,16 +1597,10 @@ class CollectionCatalog:
     # geometry, operators/sparse.py sparse_persist_inverted)
     _SPARSE_IDX_BUCKETS = 64
 
-    def _sparse_index_dir(self, name: str, version: int,
-                          sparse_name: str) -> str:
-        return os.path.join(self._dir(name), f"sparseidx.v{version}",
-                            sparse_name)
-
     def build_sparse_index(self, name: str, sparse_name: str) -> str:
         """Materialize the inverted-postings sidecar for a named sparse
-        vector at the CURRENT version (no-op when fresh) — the quant.v /
-        textidx.v lifecycle: lazy rebuild when the data version moved,
-        atomic staging+rename publish, stale versions pruned. Layout:
+        vector at the CURRENT version (no-op when fresh; ``_sidecar``
+        lifecycle). Layout:
         ``sparseidx.v{N}/{sparse_name}/bucket=H/...`` with dim-sorted row
         groups, so a query reads its dims' buckets and row groups only
         (operators.sparse.sparse_persist_inverted geometry)."""
@@ -1579,44 +1615,28 @@ class CollectionCatalog:
             raise ValueError(
                 f"collection {name!r} has no sparse vector {sparse_name!r} "
                 f"(configured: {sorted(meta.sparse_vectors or {})})")
-        if not self._has_data(name):
-            raise ValueError(f"collection {name!r} is empty")
-        sdir = self._sparse_index_dir(name, meta.version, sparse_name)
-        if os.path.isdir(sdir):
-            return sdir
         icol, vcol = self.sparse_cols_of(sparse_name)
-        df = self.read(name).filter(F.col(icol).isNotNull())
-        postings = sparse_invert(df, id_col="id", idx_col=icol,
-                                 val_col=vcol)
-        stage = sdir + ".staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        sparse_persist_inverted(postings, stage,
-                                bucket_dims=self._SPARSE_IDX_BUCKETS)
-        os.makedirs(os.path.dirname(sdir), exist_ok=True)
-        if os.path.isdir(sdir):
-            shutil.rmtree(sdir)
-        os.rename(stage, sdir)
-        current = f"sparseidx.v{meta.version}"
-        for d in os.listdir(self._dir(name)):  # prune stale sidecars
-            if d.startswith("sparseidx.v") and d != current:
-                shutil.rmtree(os.path.join(self._dir(name), d),
-                              ignore_errors=True)
-        return sdir
+
+        def build(stage: str) -> None:
+            df = self.read(name).filter(F.col(icol).isNotNull())
+            postings = sparse_invert(df, id_col="id", idx_col=icol,
+                                     val_col=vcol)
+            sparse_persist_inverted(postings, stage,
+                                    bucket_dims=self._SPARSE_IDX_BUCKETS)
+
+        return self._sidecar(name, meta, "sparseidx", build, sub=sparse_name)
 
     # -- collection-attached ANN index (the hnsw_config slot) --------------
-    # Same versioned-sidecar lifecycle as quantization: build_ann_index()
-    # materializes the index for the CURRENT snapshot (atomic publish,
-    # stale sidecars pruned), search_ann() lazily rebuilds when a write
-    # moved the version. Since r14 the GRAPH family maintains itself
-    # incrementally across write epochs (_incremental_graph_params:
-    # file-level bucket diff -> knn_graph_append through the persisted
-    # blocking -> coarse-sample stratum refresh), falling back to the
-    # full rebuild on deletes or past the staleness budget; a streaming
-    # deployment keeps the IVF layout fresh via
+    # The ``ann.v{N}`` sidecar: build_ann_index() materializes the index
+    # for the CURRENT snapshot, search_ann() lazily rebuilds when a write
+    # moved the version. Both families maintain themselves incrementally
+    # across write epochs from one snapshot delta (``_snapshot_delta``:
+    # file-level bucket diff -> per-id vector-hash classification): the
+    # graph appends through its persisted blocking, IVF routes appends
+    # through its trained centroids and tombstones deletes; each falls
+    # back to the full rebuild past the staleness budget. A streaming
+    # deployment keeps an IVF layout fresh via
     # streaming.start_indexed_ingest_stream + operators.ann.ivf_append.
-    def _ann_dir(self, name: str, version: int) -> str:
-        return os.path.join(self._dir(name), f"ann.v{version}")
-
     @staticmethod
     def _bucket_file_sets(data_dir: str) -> dict[str, set] | None:
         """Per-bucket parquet filename sets, or None for an unpartitioned
@@ -1631,19 +1651,17 @@ class CollectionCatalog:
                           if f.endswith(".parquet")}
         return out or None
 
-    def _incremental_graph_params(self, name: str, meta, spec: dict,
-                                  df: DataFrame, vector_col: str,
-                                  id_col: str, stage: str) -> dict | None:
-        """Maintain the graph ann.v sidecar INCREMENTALLY across a write
-        instead of a full rebuild (VERDICT r13 #3 — IVF has ivf_append;
-        at 100 TB a full graph rebuild per write-epoch is the most
-        expensive thing the engine can do; Qdrant's HNSW likewise
-        maintains itself in place).
+    def _snapshot_delta(self, name: str, meta, kind: str, require: str,
+                        spec: dict, df: DataFrame, vector_col: str,
+                        id_col: str, stage: str, accept=None):
+        """What the writes since the newest prior ``kind`` sidecar moved —
+        the shared front half of incremental ANN maintenance, bounded by
+        the writes' footprint, never the corpus:
 
-        Plan, all bounded by the write's footprint — never the corpus:
-
-        1. find the newest previous graph sidecar whose snapshot is still
-           on disk and which persisted its build BLOCKING (blocking.json);
+        1. find the newest prior ann.v sidecar of ``kind`` built for
+           ``vector_col`` that holds ``require``, that ``accept(params)``
+           allows, and whose MVCC data snapshot is still on disk (the
+           diff needs both versions);
         2. diff the two snapshots at the FILE level — bucket-scoped MVCC
            hardlinks untouched buckets, so only buckets whose parquet
            name sets differ can hold new/changed/deleted rows;
@@ -1651,164 +1669,173 @@ class CollectionCatalog:
            hash: new (no old row), changed (hash moved), deleted;
         4. cumulative CHURN (appends + updates + deletes, this epoch and
            all prior incremental ones) past ``incremental_budget``
-           (default 0.2 of the last FULL build's row count) falls back
-           to the full rebuild — deleted nodes' edges are pruned without
-           repairing their neighbors' lost degree (HNSW's tombstone
-           decay), so the budget bounds connectivity drift, not just
-           centroid drift;
-        5. otherwise: drop changed AND deleted ids' adjacency (both
-           endpoints), prune them from the banded routing table, the
-           coarse_sample, and the medoid entry list (every medoid
-           deleted → rebuild re-seeds), route new+changed rows through
-           the PERSISTED blocking (``knn_graph_append`` — O(batch x
-           block) pair work), refresh the coarse_sample stratum
-           incrementally, and carry params forward with ``n_total``/
-           ``appended_rows``/``deleted_rows`` advanced. Deleted ids can
-           never surface in results regardless: beam candidates score
-           via a base-table probe, and the MVCC snapshot no longer
-           holds them.
+           (default 0.2 of the last FULL build's row count) falls back to
+           the full rebuild — it bounds centroid drift for IVF and, since
+           deleted graph nodes' edges are pruned without repairing their
+           neighbors' lost degree (HNSW's tombstone decay), connectivity
+           drift for the graph.
 
-        Returns the new params dict with stage/ populated, or None when
-        the full build must run. ``{"graph": {"incremental": false}}``
-        opts a collection out."""
+        Returns None when the full build must run. Otherwise a namespace:
+        ``old_adir``; ``params``, the prior params with ``full_build_n``/
+        ``appended_rows``/``deleted_rows`` advanced; and, when vectors
+        moved, ``joined`` (skinny (id, __hn, __ho) rows of the changed
+        buckets, ``__ho`` null for new ids), ``moved`` (new or changed
+        ids), ``deleted`` (ids gone) and their counts ``n_new``/
+        ``n_changed``/``n_deleted``. ``joined`` None means no vector moved
+        (index DDL, payload-only rewrite): the prior sidecar is still exact
+        and is hardlinked into ``stage`` (all but its params.json).
+        ``{"<family>": {"incremental": false}}`` opts a collection out."""
         if not spec.get("incremental", True):
             return None
-        # newest prior graph sidecar with blocking + data snapshot
-        prev = self._prev_ann_sidecar(name, meta, ("graph",), vector_col,
-                                      require_files=("blocking.json",))
-        if prev is None:
+        for old_v, old_adir in sorted(self._versions(name, "ann").items(),
+                                      reverse=True):
+            if (old_v >= meta.version
+                    or not os.path.exists(os.path.join(old_adir, require))
+                    or not os.path.isdir(self._data_dir_v(name, old_v))):
+                continue
+            try:
+                with open(os.path.join(old_adir, "params.json")) as f:
+                    old_params = json.load(f)
+            except FileNotFoundError:
+                continue
+            if (old_params.get("kind") == kind and old_params.get(
+                    "vector_col", "embedding") == vector_col):
+                break
+        else:
             return None
-        old_v, old_adir, old_params = prev
+        if accept is not None and not accept(old_params):
+            return None
         old_data = self._data_dir_v(name, old_v)
-        cur_data = self._current_data_dir(name)
         old_files = self._bucket_file_sets(old_data)
-        new_files = self._bucket_file_sets(cur_data)
+        new_files = self._bucket_file_sets(self._current_data_dir(name, meta))
         if old_files is None or new_files is None:
             return None  # unpartitioned layout: no cheap delta detector
-        changed_dirs = {
-            b for b in set(old_files) | set(new_files)
-            if old_files.get(b) != new_files.get(b)
-        }
+        buckets = [int(b.split("=", 1)[1])
+                   for b in set(old_files) | set(new_files)
+                   if old_files.get(b) != new_files.get(b)]
+        d = SimpleNamespace(old_adir=old_adir, params=dict(old_params),
+                            joined=None)
+        if buckets:
+            live = F.col(vector_col).isNotNull()  # index membership
+            old_cb = (
+                self.spark.read.parquet(old_data)
+                .filter(F.col("__bucket").isin(buckets) & live)
+                .select(F.col(id_col),
+                        F.xxhash64(F.col(vector_col)).alias("__ho"))
+            )
+            new_cb = (
+                df.filter(F.col("__bucket").isin(buckets))
+                .select(F.col(id_col),
+                        F.xxhash64(F.col(vector_col)).alias("__hn"))
+            )
+            # skinny (id, old-hash, new-hash) rows for the changed buckets,
+            # materialized once (localCheckpoint): the classification feeds
+            # the stats agg, delta/changed id frames, and their graph/
+            # banded/coarse/layout consumers — without it each one
+            # re-scans the changed buckets' vectors. localCheckpoint, NOT
+            # cache(): an InMemoryRelation here keeps its output
+            # partitioning, and the downstream sort-merge joins against
+            # 3-way unions intermittently zip a 200-partition cached side
+            # against a 600-partition union ("Can't zip RDDs with unequal
+            # numbers of partitions", observed ~1-in-4 under default
+            # shuffle partitions); the checkpointed RDD scan severs that
+            # propagation.
+            joined = new_cb.join(old_cb, id_col, "left_outer") \
+                .localCheckpoint()
+            is_moved = (F.col("__ho").isNull()
+                        | (F.col("__hn") != F.col("__ho")))
+            stats = joined.agg(
+                F.count(F.lit(1)).alias("n_new_rows"),
+                F.sum(F.col("__ho").isNull().cast("int")).alias("n_new"),
+                F.sum(is_moved.cast("int")).alias("n_moved"),
+            ).first()
+            n_new = int(stats["n_new"] or 0)
+            n_changed = int(stats["n_moved"] or 0) - n_new
+            n_deleted = old_cb.count() - (int(stats["n_new_rows"]) - n_new)
+            p = d.params
+            base_n = int(p.get("full_build_n", p.get("n_total", 0)) or 0)
+            appended = int(p.get("appended_rows", 0))
+            dropped = int(p.get("deleted_rows", 0))
+            churn = appended + dropped + n_new + n_changed + n_deleted
+            if base_n <= 0 or churn > float(
+                    spec.get("incremental_budget", 0.2)) * base_n:
+                return None  # drifted past the staleness budget: rebuild
+            if n_new + n_changed + n_deleted:
+                p["appended_rows"] = appended + n_new + n_changed
+                p["deleted_rows"] = dropped + n_deleted
+                p.setdefault("full_build_n", base_n)
+                d.joined = joined
+                d.moved = joined.filter(is_moved).select(id_col)
+                d.deleted = old_cb.select(id_col).join(
+                    joined.select(id_col), id_col, "left_anti")
+                d.n_new, d.n_changed, d.n_deleted = n_new, n_changed, n_deleted
+                return d
+        for e in os.listdir(old_adir):
+            src = os.path.join(old_adir, e)
+            if os.path.isdir(src):
+                self._link_tree(src, os.path.join(stage, e))
+            elif e != "params.json":  # rewritten at publish, never linked
+                shutil.copy2(src, os.path.join(stage, e))
+        return d
 
-        def _reuse() -> dict:
-            self._link_files(os.path.join(old_adir, "graph"),
-                             os.path.join(stage, "graph"))
-            for sub in ("coarse_sample", "banded"):
-                if os.path.isdir(os.path.join(old_adir, sub)):
-                    self._link_files(os.path.join(old_adir, sub),
-                                     os.path.join(stage, sub))
-            shutil.copy2(os.path.join(old_adir, "blocking.json"),
-                         os.path.join(stage, "blocking.json"))
-            return dict(old_params)
+    def _incremental_graph_params(self, name: str, meta, spec: dict,
+                                  df: DataFrame, vector_col: str,
+                                  id_col: str, stage: str) -> dict | None:
+        """Maintain the graph ann.v sidecar INCREMENTALLY across a write
+        instead of a full rebuild (VERDICT r13 #3 — at 100 TB a full graph
+        rebuild per write-epoch is the most expensive thing the engine can
+        do; Qdrant's HNSW likewise maintains itself in place).
 
-        if not changed_dirs:
-            # version moved without data movement (e.g. index DDL):
-            # the old sidecar is still exact — hardlink it forward
-            return _reuse()
-        buckets = [int(b.split("=", 1)[1]) for b in changed_dirs]
-        live = F.col(vector_col).isNotNull()  # graph membership filter
-        old_cb = (
-            self.spark.read.parquet(old_data)
-            .filter(F.col("__bucket").isin(buckets) & live)
-            .select(F.col(id_col),
-                    F.xxhash64(F.col(vector_col)).alias("__ho"))
-        )
-        new_cb = (
-            df.filter(F.col("__bucket").isin(buckets))
-            .select(F.col(id_col),
-                    F.xxhash64(F.col(vector_col)).alias("__hn"))
-        )
-        # skinny (id, old-hash, new-hash) rows for the changed buckets,
-        # materialized once (localCheckpoint): the classification feeds
-        # the stats agg, delta/changed id frames, and their graph/banded/
-        # coarse consumers — without it each one re-scans the changed
-        # buckets' vectors. localCheckpoint, NOT cache(): an
-        # InMemoryRelation here keeps its output partitioning, and the
-        # downstream sort-merge joins against 3-way unions intermittently
-        # zip a 200-partition cached side against a 600-partition union
-        # ("Can't zip RDDs with unequal numbers of partitions", observed
-        # ~1-in-4 under default shuffle partitions); the checkpointed RDD
-        # scan severs that propagation.
-        joined = new_cb.join(old_cb, id_col, "left_outer").localCheckpoint()
-        return self._classify_and_append(
-            joined, old_cb, old_params, old_adir, spec, df,
-            vector_col, id_col, stage, _reuse)
+        Over the snapshot delta (``_snapshot_delta``; updates count as
+        churn against the budget): drop changed AND deleted ids'
+        adjacency (both endpoints), prune them from the banded routing
+        table, the coarse_sample, and the medoid entry list (every medoid
+        deleted → rebuild re-seeds), route new+changed rows through the
+        PERSISTED blocking (``knn_graph_append`` — O(batch x block) pair
+        work), refresh the coarse_sample stratum incrementally, and carry
+        params forward. Deleted ids can never surface in results
+        regardless: beam candidates score via a base-table probe, and the
+        MVCC snapshot no longer holds them.
 
-    def _classify_and_append(self, joined, old_cb, old_params: dict,
-                             old_adir: str, spec: dict, df: DataFrame,
-                             vector_col: str, id_col: str, stage: str,
-                             _reuse) -> dict | None:
+        Returns the new params dict with stage/ populated, or None when
+        the full build must run."""
         from vectordb_cloud_spark.operators.graph_ann import (
-            blocking_from_json, knn_graph_append)
+            _banded, blocking_from_json, knn_graph_append)
 
-        stats = joined.agg(
-            F.count(F.lit(1)).alias("n_new_rows"),
-            F.sum(F.when(F.col("__ho").isNull(), 1).otherwise(0))
-            .alias("n_new"),
-            F.sum(F.when(F.col("__ho").isNotNull()
-                         & (F.col("__hn") != F.col("__ho")), 1)
-                  .otherwise(0)).alias("n_changed"),
-        ).first()
-        n_new = int(stats["n_new"] or 0)
-        n_changed = int(stats["n_changed"] or 0)
-        n_old_cb = old_cb.count()
-        n_deleted = n_old_cb - (int(stats["n_new_rows"]) - n_new)
-        base_n = int(old_params.get("full_build_n",
-                                    old_params.get("n_total", 0)) or 0)
-        appended = int(old_params.get("appended_rows", 0))
-        dropped = int(old_params.get("deleted_rows", 0))
-        budget = float(spec.get("incremental_budget", 0.2))
-        # deletes, appends, and updates all count against ONE budget: a
-        # deleted node's edges are PRUNED without repairing its neighbors'
-        # lost degree (HNSW's own tombstone decay), so cumulative churn —
-        # not just appends — bounds how far the graph drifts from a fresh
-        # build before the rebuild refreshes it (r14: delete epochs used
-        # to force an immediate full rebuild)
-        churn = appended + dropped + n_new + n_changed + n_deleted
-        if base_n <= 0 or churn > budget * base_n:
-            return None  # drifted past the staleness budget: rebuild
-        if n_new + n_changed + n_deleted == 0:
-            return _reuse()  # payload-only rewrite: vectors unmoved
-        delta_ids = joined.filter(
-            F.col("__ho").isNull() | (F.col("__hn") != F.col("__ho"))
-        ).select(id_col)
-        ch_ids = joined.filter(
+        d = self._snapshot_delta(name, meta, "graph", "blocking.json", spec,
+                                 df, vector_col, id_col, stage)
+        if d is None or d.joined is None:
+            return None if d is None else d.params
+        # changed ids plus deleted ones: their edges, routing rows and
+        # sample rows go; changed ones re-enter through the delta
+        ch_ids = d.joined.filter(
             F.col("__ho").isNotNull() & (F.col("__hn") != F.col("__ho"))
         ).select(id_col)
-        if n_deleted > 0:
-            # ids present in the old snapshot's changed buckets but gone
-            # from the new one; their edges/routing/sample rows are pruned
-            # below and their entry slots vacated
-            del_ids = old_cb.select(id_col).join(
-                joined.select(id_col), id_col, "left_anti")
-            ch_ids = ch_ids.unionByName(del_ids)
-            entry_ids = [int(i) for i in old_params.get("entry_ids", [])]
-            if entry_ids:
-                gone = {r[0] for r in del_ids.filter(
-                    F.col(id_col).isin(entry_ids)).collect()}
-                kept_entries = [i for i in entry_ids if i not in gone]
-                if not kept_entries:
-                    return None  # every medoid deleted: rebuild re-seeds
-            else:
-                kept_entries = entry_ids
+        if d.n_deleted > 0:
+            ch_ids = ch_ids.unionByName(d.deleted)
+            entry_ids = [int(i) for i in d.params.get("entry_ids", [])]
+            gone = {r[0] for r in d.deleted.filter(
+                F.col(id_col).isin(entry_ids)).collect()} if entry_ids else ()
+            d.params["entry_ids"] = [i for i in entry_ids if i not in gone]
+            if entry_ids and not d.params["entry_ids"]:
+                return None  # every medoid deleted: rebuild re-seeds
+        old_adir = d.old_adir
         graph = self.spark.read.parquet(os.path.join(old_adir, "graph"))
         # changed nodes: drop BOTH endpoints' stale edges (their stored
         # distances moved); the append below re-links them like new
-        # points. Deleted ids ride the same pruning (ch_ids includes
-        # them) — they just never re-enter via the delta.
+        # points. Deleted ids ride the same pruning — they just never
+        # re-enter via the delta.
         graph = graph.join(ch_ids.withColumnRenamed(id_col, "src"),
                            "src", "left_anti")
         graph = graph.join(ch_ids.withColumnRenamed(id_col, "dst"),
                            "dst", "left_anti")
-        delta_rows = df.join(delta_ids, id_col, "left_semi")
+        delta_rows = df.join(d.moved, id_col, "left_semi")
         with open(os.path.join(old_adir, "blocking.json")) as f:
             blocking = blocking_from_json(json.load(f))
         # persisted (id, block) routing table: the append prunes members
         # from this skinny table instead of re-routing the corpus (the
         # dominant append cost without it — knn_graph_append docstring);
         # cleansed of re-routed ids, refreshed with the delta's rows
-        from vectordb_cloud_spark.operators.graph_ann import _banded
-
         bdir_old = os.path.join(old_adir, "banded")
         banded_old = None
         if os.path.isdir(bdir_old):
@@ -1829,7 +1856,7 @@ class CollectionCatalog:
             banded_old.unionByName(banded_delta).coalesce(16) \
                 .write.mode("overwrite") \
                 .parquet(os.path.join(stage, "banded"))
-        coarse_mod = int(old_params.get("coarse_mod", 31))
+        coarse_mod = int(d.params.get("coarse_mod", 31))
         cdir = os.path.join(old_adir, "coarse_sample")
         if os.path.isdir(cdir):
             sample = self.spark.read.parquet(cdir) \
@@ -1842,69 +1869,10 @@ class CollectionCatalog:
                 .parquet(os.path.join(stage, "coarse_sample"))
         shutil.copy2(os.path.join(old_adir, "blocking.json"),
                      os.path.join(stage, "blocking.json"))
-        params = dict(old_params)
-        params["n_total"] = (int(old_params.get("n_total", base_n))
-                             + n_new - n_deleted)
-        params["appended_rows"] = appended + n_new + n_changed
-        params["deleted_rows"] = dropped + n_deleted
-        if n_deleted > 0:
-            params["entry_ids"] = kept_entries
-        params.setdefault("full_build_n", base_n)
-        return params
-
-    def _prev_ann_sidecar(self, name: str, meta, kinds: tuple,
-                          vector_col: str,
-                          require_files: tuple = ()) -> tuple | None:
-        """Newest prior ann.v sidecar of one of ``kinds`` whose MVCC data
-        snapshot is still on disk (the delta detector needs both versions
-        to diff) — shared by the graph and IVF incremental paths.
-        Returns (version, adir, params) or None."""
-        prev = None
-        for d in os.listdir(self._dir(name)):
-            if not d.startswith("ann.v"):
-                continue
-            try:
-                v = int(d.split("ann.v", 1)[1])
-            except ValueError:
-                continue
-            if v >= meta.version:
-                continue
-            adir = os.path.join(self._dir(name), d)
-            pfile = os.path.join(adir, "params.json")
-            if not os.path.isfile(pfile):
-                continue
-            if any(not os.path.exists(os.path.join(adir, f))
-                   for f in require_files):
-                continue
-            with open(pfile) as f:
-                p = json.load(f)
-            if (p.get("kind") not in kinds
-                    or p.get("vector_col", "embedding") != vector_col):
-                continue
-            if not os.path.isdir(self._data_dir_v(name, v)):
-                continue
-            if prev is None or v > prev[0]:
-                prev = (v, adir, p)
-        return prev
-
-    @staticmethod
-    def _link_tree(src_dir: str, dst_dir: str) -> None:
-        """``_link_files`` for a partitioned layout: hardlink every file
-        under ``src_dir`` into ``dst_dir`` preserving the subdirectory
-        structure (``centroid_id=N/part-*.parquet``)."""
-        for root, _dirs, files in os.walk(src_dir):
-            rel = os.path.relpath(root, src_dir)
-            out = (dst_dir if rel == "." else os.path.join(dst_dir, rel))
-            os.makedirs(out, exist_ok=True)
-            for f in files:
-                s, d = os.path.join(root, f), os.path.join(out, f)
-                try:
-                    os.link(s, d)
-                except OSError:
-                    shutil.copy2(s, d)
+        return d.params
 
     def _incremental_ivf_params(self, name: str, meta, spec: dict,
-                                df: DataFrame, vector_col: str,
+                                kind: str, df: DataFrame, vector_col: str,
                                 id_col: str, stage: str) -> dict | None:
         """r14 IVF twin of ``_incremental_graph_params``: a pure-append
         write epoch keeps the trained centroids and routes ONLY the
@@ -1928,91 +1896,20 @@ class CollectionCatalog:
 
         Falls back to the full rebuild (returns None) on: in-place
         updates (stale rows would need per-file rewrites), a
-        centroid-count config change, or cumulative churn (appends +
-        deletes) past ``incremental_budget`` (default 0.2 of the last
-        full build's rows — centroids drift as data grows, the FAISS
-        add-then-retrain cycle). ``{"ivf": {"incremental": false}}``
-        opts a collection out. Query-time knobs (nprobe,
-        full_scan_threshold, audit_sample_mod, oversample) refresh from
-        the CURRENT spec so a config tweak doesn't force a rebuild."""
+        centroid-count config change, or the snapshot delta's churn
+        budget (``_snapshot_delta``)."""
         from vectordb_cloud_spark.operators.ann import ivf_append, ivf_assign
 
-        if not spec.get("incremental", True):
-            return None
-        want_kind = ("ivf_sq" if meta.quantization
-                     and "scalar" in meta.quantization else "ivf")
-        prev = self._prev_ann_sidecar(name, meta, (want_kind,), vector_col,
-                                      require_files=(want_kind,))
-        if prev is None:
-            return None
-        old_v, old_adir, old_params = prev
-        if len(old_params.get("centers", [])) != int(
-                spec.get("k_centroids", 16)):
-            return None  # config change: retrain
-        old_files = self._bucket_file_sets(self._data_dir_v(name, old_v))
-        new_files = self._bucket_file_sets(self._current_data_dir(name))
-        if old_files is None or new_files is None:
-            return None
-        changed_dirs = {
-            b for b in set(old_files) | set(new_files)
-            if old_files.get(b) != new_files.get(b)
-        }
-
-        def _params_fwd() -> dict:
-            p = dict(old_params)
-            # query-time knobs follow the current spec
-            p["nprobe"] = int(spec.get("nprobe", 2))
-            p["full_scan_threshold"] = int(
-                spec.get("full_scan_threshold", 10_000))
-            p["audit_sample_mod"] = spec.get("audit_sample_mod", 31)
-            if want_kind == "ivf_sq":
-                p["oversample"] = int(spec.get("oversample", 4))
-            return p
-
-        if not changed_dirs:
-            self._link_tree(os.path.join(old_adir, want_kind),
-                            os.path.join(stage, want_kind))
-            if os.path.isdir(os.path.join(old_adir, "tombstones")):
-                self._link_tree(os.path.join(old_adir, "tombstones"),
-                                os.path.join(stage, "tombstones"))
-            return _params_fwd()
-        buckets = [int(b.split("=", 1)[1]) for b in changed_dirs]
-        live = F.col(vector_col).isNotNull()
-        old_cb = (
-            self.spark.read.parquet(self._data_dir_v(name, old_v))
-            .filter(F.col("__bucket").isin(buckets) & live)
-            .select(F.col(id_col),
-                    F.xxhash64(F.col(vector_col)).alias("__ho"))
-        )
-        new_cb = (
-            df.filter(F.col("__bucket").isin(buckets))
-            .select(F.col(id_col),
-                    F.xxhash64(F.col(vector_col)).alias("__hn"))
-        )
-        joined = new_cb.join(old_cb, id_col, "left_outer").localCheckpoint()
-        stats = joined.agg(
-            F.count(F.lit(1)).alias("n_new_rows"),
-            F.sum(F.when(F.col("__ho").isNull(), 1).otherwise(0))
-            .alias("n_new"),
-            F.sum(F.when(F.col("__ho").isNotNull()
-                         & (F.col("__hn") != F.col("__ho")), 1)
-                  .otherwise(0)).alias("n_changed"),
-        ).first()
-        n_new = int(stats["n_new"] or 0)
-        n_changed = int(stats["n_changed"] or 0)
-        n_deleted = old_cb.count() - (int(stats["n_new_rows"]) - n_new)
-        if n_changed > 0:
+        d = self._snapshot_delta(
+            name, meta, kind, kind, spec, df, vector_col, id_col, stage,
+            accept=lambda p: len(p.get("centers", [])) == int(
+                spec.get("k_centroids", 16)))  # config change: retrain
+        if d is None or d.joined is None:
+            return None if d is None else d.params
+        if d.n_changed > 0:
             return None  # in-place updates: stale rows in immutable files
-        base_n = int(old_params.get("full_build_n",
-                                    old_params.get("n_total", 0)) or 0)
-        appended = int(old_params.get("appended_rows", 0))
-        dropped = int(old_params.get("deleted_rows", 0))
-        budget = float(spec.get("incremental_budget", 0.2))
-        if base_n <= 0 or (appended + dropped + n_new + n_deleted
-                           ) > budget * base_n:
-            return None  # churn past budget: retrain + clear tombstones
-        self._link_tree(os.path.join(old_adir, want_kind),
-                        os.path.join(stage, want_kind))
+        self._link_tree(os.path.join(d.old_adir, kind),
+                        os.path.join(stage, kind))
         # deletes become TOMBSTONES (Qdrant's deleted flags, batch
         # edition): the layout's immutable files keep the stale rows, a
         # skinny id table rides the sidecar, and search_ann anti-joins it
@@ -2020,30 +1917,21 @@ class CollectionCatalog:
         # one. Rewritten (not linked) each epoch: a re-inserted id must
         # come back to life, so the delta's ids are subtracted below.
         # The rebuild (budget above) clears them entirely.
-        tdir_old = os.path.join(old_adir, "tombstones")
+        tdir_old = os.path.join(d.old_adir, "tombstones")
         tomb = (self.spark.read.parquet(tdir_old)
                 if os.path.isdir(tdir_old) else None)
-        if n_deleted > 0:
-            del_ids = old_cb.select(id_col).join(
-                joined.select(id_col), id_col, "left_anti")
-            tomb = (del_ids if tomb is None
-                    else tomb.unionByName(del_ids))
-        params = _params_fwd()
-        params["deleted_rows"] = dropped + n_deleted
-        if n_new == 0:
-            if tomb is not None:
-                tomb.coalesce(1).write.mode("overwrite") \
-                    .parquet(os.path.join(stage, "tombstones"))
-            return params  # no vectors added: routing untouched
-        delta_ids = joined.filter(F.col("__ho").isNull()).select(id_col)
+        if d.n_deleted > 0:
+            tomb = d.deleted if tomb is None else tomb.unionByName(d.deleted)
         if tomb is not None:
-            # a tombstoned id re-inserted this epoch is live again
-            tomb.join(delta_ids, id_col, "left_anti").coalesce(1) \
-                .write.mode("overwrite") \
+            if d.n_new:  # a tombstoned id re-inserted this epoch is live
+                tomb = tomb.join(d.moved, id_col, "left_anti")
+            tomb.coalesce(1).write.mode("overwrite") \
                 .parquet(os.path.join(stage, "tombstones"))
-        delta_rows = df.join(delta_ids, id_col, "left_semi")
-        centers = [(int(i), list(c)) for i, c in old_params["centers"]]
-        if want_kind == "ivf":
+        if d.n_new == 0:
+            return d.params  # no vectors added: routing untouched
+        delta_rows = df.join(d.moved, id_col, "left_semi")
+        centers = [(int(i), list(c)) for i, c in d.params["centers"]]
+        if kind == "ivf":
             ivf_append(delta_rows, centers, os.path.join(stage, "ivf"),
                        vector_col=vector_col)
         else:
@@ -2055,13 +1943,11 @@ class CollectionCatalog:
                 raise ValueError(
                     "incremental ivf_sq append: batch contains NULL or "
                     f"dimension-mismatched vectors in {vector_col!r}")
-            sq_encode(assigned, old_params["mins"], old_params["maxs"],
+            sq_encode(assigned, d.params["mins"], d.params["maxs"],
                       vector_col=vector_col).drop(vector_col) \
                 .write.mode("append").partitionBy("centroid_id") \
                 .parquet(os.path.join(stage, "ivf_sq"))
-        params["appended_rows"] = appended + n_new
-        params.setdefault("full_build_n", base_n)
-        return params
+        return d.params
 
     def build_ann_index(self, name: str, vector_col: str = "embedding",
                         id_col: str = "id") -> str:
@@ -2071,129 +1957,107 @@ class CollectionCatalog:
         meta = self.meta(name)
         if not meta.ann_index:
             raise ValueError(f"collection {name!r} has no ann_index config")
-        if not self._has_data(name):
-            raise ValueError(f"collection {name!r} is empty")
-        adir = self._ann_dir(name, meta.version)
-        pfile = os.path.join(adir, "params.json")
-        if os.path.isfile(pfile):
-            with open(pfile) as f:
-                if json.load(f).get("vector_col", "embedding") == vector_col:
-                    return adir
-            # sidecar was built for a different vector column: rebuild
-        df = self.read(name).filter(F.col(vector_col).isNotNull())
-        # snapshot-invariant total row count, persisted with the sidecar:
-        # the filtered planner's 2kN/m beam-widening heuristic needs N,
-        # and re-counting the corpus on EVERY filtered query is a full
-        # blocking scan for a number that can't change until the next
-        # write (which rebuilds this sidecar anyway) — ADVICE r13
-        n_total = df.count()
-        stage = adir + ".staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        os.makedirs(stage)
-        if "ivf" in meta.ann_index:
-            spec = meta.ann_index["ivf"]
-            # r14: a write-moved version tries the INCREMENTAL path first —
-            # pure-append epochs keep the trained centroids and route only
-            # the delta (ivf_append into a hardlinked layout copy); falls
-            # back here on deletes/updates, config change, missing prior
-            # state, or drift past incremental_budget
-            params = self._incremental_ivf_params(
-                name, meta, spec, df, vector_col, id_col, stage)
-            if params is None:
-                centers, assigned = ivf_build(
-                    df, k_centroids=int(spec.get("k_centroids", 16)),
-                    vector_col=vector_col)
-                if meta.quantization and "scalar" in meta.quantization:
-                    # BOTH configs -> the composed IVF×SQ layout: centroid
-                    # partitioning prunes FILES, int8 codes shrink the
-                    # BYTES of every opened file ~4x; originals stay in the
-                    # base table for the rescore (Qdrant's quantized-index
-                    # storage split). Unlike the bare
-                    # operators.sq.ivf_sq_persist, the sidecar KEEPS the
-                    # payload columns (the byte win is dropping the fp
-                    # vector) so search predicates — the mandatory tenant
-                    # filter above all — push into the CANDIDATE scan
-                    # instead of only filtering the rescore, which would
-                    # starve small tenants out of the global
-                    # top-k*oversample
-                    from vectordb_cloud_spark.operators.sq import (
-                        sq_encode, sq_train)
 
-                    mins, maxs = sq_train(df, vector_col)
-                    sq_encode(assigned, mins, maxs, vector_col=vector_col) \
-                        .drop(vector_col) \
-                        .write.mode("overwrite").partitionBy("centroid_id") \
-                        .parquet(os.path.join(stage, "ivf_sq"))
-                    params = {"kind": "ivf_sq", "centers": centers,
-                              "nprobe": int(spec.get("nprobe", 2)),
-                              "mins": mins, "maxs": maxs,
-                              "oversample": int(spec.get("oversample", 4)),
-                              "full_scan_threshold": int(
-                                  spec.get("full_scan_threshold", 10_000)),
-                              # filtered-search sample audit (the graph
-                              # family's knob, IVF edition) — None/0
-                              # disables
-                              "audit_sample_mod": spec.get(
-                                  "audit_sample_mod", 31)}
-                else:
-                    ivf_persist(assigned, os.path.join(stage, "ivf"))
-                    params = {"kind": "ivf", "centers": centers,
-                              "nprobe": int(spec.get("nprobe", 2)),
-                              # Qdrant's uniform planner rule: a filter
-                              # matching at most this many points serves
-                              # the exact filtered top-k (the matching set
-                              # may be far from the query — outside any
-                              # probed region); denser filters push into
-                              # the pruned scan, whose probed region covers
-                              # the filtered top-k's k·N/m overall rank at
-                              # any such selectivity (RECALL.md r13
-                              # filtered series)
-                              "full_scan_threshold": int(
-                                  spec.get("full_scan_threshold", 10_000)),
-                              # filtered-search sample audit (the graph
-                              # family's knob, IVF edition) — None/0
-                              # disables
-                              "audit_sample_mod": spec.get(
-                                  "audit_sample_mod", 31)}
-        else:
-            spec = meta.ann_index["graph"]
-            # default to the SHARDED builder: center-literal count is
-            # capped at any corpus size (the plain builder's n/128 center
-            # literals blow up the plan past ~10^7 rows — its own
-            # docstring), and it degenerates to the unsharded candidate
-            # structure on small corpora (n_shards=1). `builder:
-            # "blocked"` keeps the legacy form for comparisons; anything
-            # else is a config error, not a silent sharded build.
-            builder = spec.get("builder", "sharded")
-            if builder not in ("sharded", "blocked"):
-                raise ValueError(
-                    f"unknown graph builder {builder!r}: "
-                    "expected 'sharded' or 'blocked'")
-            # r14 (VERDICT r13 #3): a write-moved version tries the
-            # INCREMENTAL maintenance path first — append the write's
-            # delta through the persisted blocking instead of a full
-            # rebuild; falls back here on deletes, missing prior state,
-            # or a cumulative append fraction past incremental_budget
-            params = self._incremental_graph_params(
-                name, meta, spec, df, vector_col, id_col, stage)
-            if params is None:
-                params = self._full_graph_build(spec, df, vector_col,
-                                                id_col, stage, builder,
-                                                n_total)
-        params["n_total"] = n_total
-        params["vector_col"] = vector_col
-        with open(os.path.join(stage, "params.json"), "w") as f:
-            json.dump(params, f)
-        if os.path.isdir(adir):
-            shutil.rmtree(adir)
-        os.rename(stage, adir)
-        for d in os.listdir(self._dir(name)):  # prune stale sidecars
-            if d.startswith("ann.v") and d != f"ann.v{meta.version}":
-                stale = os.path.join(self._dir(name), d)
-                shutil.rmtree(stale, ignore_errors=True)
-                self._ann_sample_memo.pop(
-                    os.path.join(stale, "coarse_sample"), None)
-        return adir
+        def build(stage: str) -> dict:
+            df = self.read(name).filter(F.col(vector_col).isNotNull())
+            # snapshot-invariant total row count, persisted with the
+            # sidecar: the filtered planner's 2kN/m beam-widening heuristic
+            # needs N, and re-counting the corpus on EVERY filtered query
+            # is a full blocking scan for a number that can't change until
+            # the next write (which rebuilds this sidecar anyway) — ADVICE
+            # r13
+            n_total = df.count()
+            if "ivf" in meta.ann_index:
+                spec = meta.ann_index["ivf"]
+                kind = ("ivf_sq" if meta.quantization
+                        and "scalar" in meta.quantization else "ivf")
+                # r14: a write-moved version tries the INCREMENTAL path
+                # first — pure-append epochs keep the trained centroids and
+                # route only the delta (ivf_append into a hardlinked layout
+                # copy), deletes become tombstones; falls back here on
+                # updates, config change, missing prior state, or drift
+                # past incremental_budget
+                params = self._incremental_ivf_params(
+                    name, meta, spec, kind, df, vector_col, id_col, stage)
+                if params is None:
+                    centers, assigned = ivf_build(
+                        df, k_centroids=int(spec.get("k_centroids", 16)),
+                        vector_col=vector_col)
+                    params = {"kind": kind, "centers": centers}
+                    if kind == "ivf_sq":
+                        # BOTH configs -> the composed IVF×SQ layout:
+                        # centroid partitioning prunes FILES, int8 codes
+                        # shrink the BYTES of every opened file ~4x;
+                        # originals stay in the base table for the rescore
+                        # (Qdrant's quantized-index storage split). Unlike
+                        # the bare operators.sq.ivf_sq_persist, the sidecar
+                        # KEEPS the payload columns (the byte win is
+                        # dropping the fp vector) so search predicates —
+                        # the mandatory tenant filter above all — push into
+                        # the CANDIDATE scan instead of only filtering the
+                        # rescore, which would starve small tenants out of
+                        # the global top-k*oversample
+                        from vectordb_cloud_spark.operators.sq import (
+                            sq_encode, sq_train)
+
+                        mins, maxs = sq_train(df, vector_col)
+                        sq_encode(assigned, mins, maxs,
+                                  vector_col=vector_col) \
+                            .drop(vector_col) \
+                            .write.mode("overwrite") \
+                            .partitionBy("centroid_id") \
+                            .parquet(os.path.join(stage, "ivf_sq"))
+                        params.update(mins=mins, maxs=maxs)
+                    else:
+                        ivf_persist(assigned, os.path.join(stage, "ivf"))
+                # query-time knobs follow the CURRENT spec on a rebuild and
+                # an incremental epoch alike, so a config tweak never
+                # forces a rebuild
+                params.update(
+                    nprobe=int(spec.get("nprobe", 2)),
+                    # Qdrant's uniform planner rule: a filter matching at
+                    # most this many points serves the exact filtered
+                    # top-k (the matching set may be far from the query —
+                    # outside any probed region); denser filters push into
+                    # the pruned scan, whose probed region covers the
+                    # filtered top-k's k·N/m overall rank at any such
+                    # selectivity (RECALL.md r13 filtered series)
+                    full_scan_threshold=int(
+                        spec.get("full_scan_threshold", 10_000)),
+                    # filtered-search sample audit (the graph family's
+                    # knob, IVF edition) — None/0 disables
+                    audit_sample_mod=spec.get("audit_sample_mod", 31))
+                if kind == "ivf_sq":
+                    params["oversample"] = int(spec.get("oversample", 4))
+            else:
+                spec = meta.ann_index["graph"]
+                # default to the SHARDED builder: center-literal count is
+                # capped at any corpus size (the plain builder's n/128
+                # center literals blow up the plan past ~10^7 rows — its
+                # own docstring), and it degenerates to the unsharded
+                # candidate structure on small corpora (n_shards=1).
+                # `builder: "blocked"` keeps the legacy form for
+                # comparisons; anything else is a config error, not a
+                # silent sharded build.
+                builder = spec.get("builder", "sharded")
+                if builder not in ("sharded", "blocked"):
+                    raise ValueError(
+                        f"unknown graph builder {builder!r}: "
+                        "expected 'sharded' or 'blocked'")
+                # r14 (VERDICT r13 #3): a write-moved version tries the
+                # INCREMENTAL maintenance path first — append the write's
+                # delta through the persisted blocking instead of a full
+                # rebuild; falls back here on missing prior state or
+                # cumulative churn past incremental_budget
+                params = self._incremental_graph_params(
+                    name, meta, spec, df, vector_col, id_col, stage)
+                if params is None:
+                    params = self._full_graph_build(
+                        spec, df, vector_col, id_col, stage, builder, n_total)
+            params["n_total"] = n_total
+            return params
+
+        return self._sidecar(name, meta, "ann", build, vector_col=vector_col)
 
     def _full_graph_build(self, spec: dict, df: DataFrame, vector_col: str,
                           id_col: str, stage: str, builder: str,
@@ -2414,10 +2278,7 @@ class CollectionCatalog:
             # empty (offset/sparse id spaces).
             from vectordb_cloud_spark.operators.knn import knn_search
 
-            sample = self._ann_sample_memo.get(cdir)
-            if sample is None:
-                sample = self.spark.read.parquet(cdir)
-                self._ann_sample_memo[cdir] = sample
+            sample = self._read_handle(cdir)
             seeds = [int(r[0]) for r in knn_search(
                 sample, query_vector, k=int(params.get("n_entry", 16)),
                 vector_col=vector_col, tiebreak=id_col,
