@@ -744,3 +744,185 @@ def test_named_vectors_dim_checked_per_name(catalog, spark):
     assert catalog.meta("nv2_copy").vectors == {"title": 3}
     with pytest.raises(ValueError):
         catalog.create("nv3", dim=2, vectors={"bad": 0})
+
+
+
+def _jobs_during(spark, group, fn):
+    """Spark job ids ``fn`` fires (job-group tagged)."""
+    import uuid as _uuid
+
+    group = f"{group}-{_uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _committed_state(catalog, name):
+    """Everything a failed write must leave as it was."""
+    import os as _os
+
+    cdir = _os.path.join(catalog.root, name)
+    try:
+        with open(_os.path.join(cdir, "_buckets.json"), "rb") as f:
+            manifest = f.read()
+    except FileNotFoundError:
+        manifest = None
+    rows = sorted(tuple(map(str, r)) for r in catalog.read(name).collect())
+    return catalog.meta(name).version, sorted(_os.listdir(cdir)), manifest, rows
+
+
+def _assert_write_refused(catalog, name, write, match):
+    import os as _os
+
+    before = _committed_state(catalog, name)
+    with pytest.raises(ValueError, match=match) as err:
+        write()
+    assert err.value.__cause__ is not None  # chained to the Spark error
+    assert _committed_state(catalog, name) == before
+    assert not [d for d in _os.listdir(_os.path.join(catalog.root, name))
+                if "staging" in d]
+
+
+@pytest.mark.parametrize("path", ["bulk", "bucket", "update_batch"])
+def test_failed_dim_check_leaves_previous_snapshot(catalog, spark, path):
+    """A batch with one wrong-dim row among valid ones publishes nothing,
+    whichever write path runs it: the meta version, the dir listing, the
+    manifest bytes and the readable rows stay the previous snapshot's, no
+    staging dir is left, and the next valid write goes through. The check
+    itself fires no job — it runs inside the write's own jobs."""
+    # "bulk": rows without the shard key write the full-image path
+    schema = ("id long, embedding array<float>, text string" if path == "bulk"
+              else "id long, embedding array<float>, text string, user_id long")
+
+    def rows(rs):
+        return spark.createDataFrame(
+            [r if path != "bulk" else r[:3] for r in rs], schema)
+
+    catalog.create("c", dim=2, n_buckets=4)
+    catalog.upsert("c", rows([(i, [1.0, float(i)], "t", i % 3) for i in range(20)]))
+    bad = rows([(100, [1.0, 2.0], "n", 1), (101, [1.0, 2.0, 3.0], "n", 2)])
+    assert _jobs_during(spark, "validate_probe",
+                        lambda: catalog._validate("c", bad)) == []
+    if path == "update_batch":
+        write = lambda: catalog.update_batch(  # noqa: E731
+            "c", [{"delete": {"points": [0]}}, {"upsert": {"points": bad}}])
+    else:
+        write = lambda: catalog.upsert("c", bad)  # noqa: E731
+    _assert_write_refused(catalog, "c", write, "dim mismatch")
+    catalog.upsert("c", rows([(100, [1.0, 2.0], "n", 1)]))
+    assert catalog.read("c").count() == 21
+
+
+@pytest.mark.parametrize("path", ["bucket", "update_batch"])
+def test_failed_sparse_check_leaves_previous_snapshot(catalog, spark, path):
+    """The sparse-vector check refuses a write the same way."""
+    def rows(rs):
+        return spark.createDataFrame(
+            rs, "id long, embedding array<float>, text string, user_id long, "
+            "sparse_text_indices array<int>, sparse_text_values array<float>")
+
+    catalog.create("c", dim=2, n_buckets=4, sparse_vectors={"text": {}})
+    catalog.upsert("c", rows([(i, [1.0, 0.0], "t", i % 3, [i], [1.0])
+                              for i in range(10)]))
+    bad = rows([(50, [1.0, 0.0], "n", 1, [3, 9], [1.0, 2.0]),
+                (51, [1.0, 0.0], "n", 2, [9, 3], [1.0, 2.0])])  # not ascending
+    assert _jobs_during(spark, "validate_probe",
+                        lambda: catalog._validate("c", bad)) == []
+    if path == "update_batch":
+        write = lambda: catalog.update_batch(  # noqa: E731
+            "c", [{"upsert": {"points": bad}}])
+    else:
+        write = lambda: catalog.upsert("c", bad)  # noqa: E731
+    _assert_write_refused(catalog, "c", write, "sparse vector invalid")
+    catalog.upsert("c", rows([(50, [1.0, 0.0], "n", 1, [3, 9], [1.0, 2.0])]))
+    assert catalog.read("c").count() == 11
+
+
+def _scan_manifest(catalog, name):
+    """The manifest as a Spark scan of the current snapshot computes it:
+    per-bucket min/max id (the implementation the footer read replaced)."""
+    df = catalog.spark.read.parquet(catalog._current_data_dir(name))
+    stats = df.groupBy("__bucket").agg(F.min("id").alias("lo"),
+                                       F.max("id").alias("hi")).collect()
+    return {str(r["__bucket"]): [r["lo"], r["hi"]] for r in stats}
+
+
+def _footer_manifest(catalog, name):
+    import json as _json
+    import os as _os
+
+    with open(_os.path.join(catalog.root, name, "_buckets.json")) as f:
+        man = _json.load(f)
+    assert man["version"] == catalog.meta(name).version
+    assert man["id_col"] == "id"
+    return man["buckets"]
+
+
+def test_manifest_from_footers_matches_spark_scan(catalog, spark):
+    """The footer-read manifest equals a Spark min/max scan of the snapshot
+    after a bulk insert, a bucket-scoped upsert, a delete that empties a
+    bucket, and writes to a string-id collection; refreshing it fires no
+    Spark job."""
+    catalog.create("c", dim=2, n_buckets=8)
+    catalog.upsert("c", _rows(spark, [(i, [1.0, 1.0], "t", i % 20)
+                                      for i in range(200)]))
+    assert _footer_manifest(catalog, "c") == _scan_manifest(catalog, "c")
+    catalog.upsert("c", _rows(spark, [(1000, [2.0, 2.0], "n", 3),
+                                      (7, [2.0, 2.0], "moved", 13)]))
+    assert _footer_manifest(catalog, "c") == _scan_manifest(catalog, "c")
+    # every row of user 3's bucket goes: its entry must go with it
+    bucket = catalog._shard_bucket_value(catalog.meta("c"), catalog.read("c"), 3)
+    n_buckets_before = len(_footer_manifest(catalog, "c"))
+    catalog.delete_where("c", F.col("__bucket") == bucket)
+    man = _footer_manifest(catalog, "c")
+    assert str(bucket) not in man and len(man) == n_buckets_before - 1
+    assert man == _scan_manifest(catalog, "c")
+    assert _jobs_during(spark, "manifest_probe",
+                        lambda: catalog._update_manifest("c")) == []
+    assert _footer_manifest(catalog, "c") == man
+
+    catalog.create("s", dim=2, n_buckets=4, id_type="string")
+    srows = [(f"id-{i:03d}", [1.0, 1.0], "t", i % 5) for i in range(40)]
+    catalog.upsert("s", spark.createDataFrame(
+        srows, "id string, embedding array<float>, text string, user_id long"))
+    catalog.upsert("s", spark.createDataFrame(
+        [("zz-new", [1.0, 1.0], "n", 2), ("aa-new", [1.0, 1.0], "n", 1)],
+        "id string, embedding array<float>, text string, user_id long"))
+    assert _footer_manifest(catalog, "s") == _scan_manifest(catalog, "s")
+    assert all(isinstance(v, str) for r in _footer_manifest(catalog, "s").values()
+               for v in r)
+
+
+def test_footer_id_range_edge_cases(tmp_path):
+    """Row groups without statistics make the range unknown, all-null row
+    groups are skipped (an all-null bucket reads [None, None], as Spark's
+    min/max answer), an empty dir has no range and a file without an id
+    column has none to give."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vectordb_cloud_spark.collections import _footer_id_range
+
+    def write(d, name, ids, **kw):
+        (tmp_path / d).mkdir(exist_ok=True)
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64())}),
+                       str(tmp_path / d / name), **kw)
+
+    write("mixed", "a.parquet", [9, 5, None])
+    write("mixed", "b.parquet", [None, None])
+    write("mixed", "c.parquet", [12, 7], row_group_size=1)
+    assert _footer_id_range(str(tmp_path / "mixed")) == [5, 12]
+    write("nostats", "a.parquet", [3, 4])
+    write("nostats", "b.parquet", [1, 2], write_statistics=False)
+    assert _footer_id_range(str(tmp_path / "nostats")) == [None, None]
+    write("allnull", "a.parquet", [None])
+    assert _footer_id_range(str(tmp_path / "allnull")) == [None, None]
+    (tmp_path / "empty").mkdir()
+    assert _footer_id_range(str(tmp_path / "empty")) is None
+    (tmp_path / "noid").mkdir()
+    pq.write_table(pa.table({"x": [1]}), str(tmp_path / "noid" / "a.parquet"))
+    assert _footer_id_range(str(tmp_path / "noid")) is False

@@ -457,3 +457,67 @@ def test_span_dedup_matches_python_truth(spark, seed):
     out = {r["doc_id"]: r["text"] for r in
            span_dedup_corpus(_mk_docs(spark, rows), window=W).collect()}
     assert out == truth
+
+
+def _random_pair_graph(rng, as_str):
+    """Chains (up to 15 long), stars and isolated pairs over shuffled ids,
+    plus duplicated and mirrored copies of some pairs."""
+    pairs, nxt = [], 0
+
+    def ids(n):
+        nonlocal nxt
+        out = rng.sample(range(nxt, nxt + 3 * n), n)  # min id anywhere
+        nxt += 3 * n
+        return out
+
+    for _ in range(3):
+        chain = ids(rng.randint(2, 15))
+        pairs += list(zip(chain, chain[1:]))
+    for _ in range(3):
+        hub, *leaves = ids(rng.randint(3, 7))
+        pairs += [(hub, leaf) for leaf in leaves]
+    pairs += [tuple(ids(2)) for _ in range(4)]
+    pairs += rng.sample(pairs, 5)
+    pairs += [(b, a) for a, b in rng.sample(pairs, 5)]
+    rng.shuffle(pairs)
+    if as_str:
+        return [(f"d{a:04d}", f"d{b:04d}") for a, b in pairs]
+    return pairs
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_dup_components_driver_matches_label_propagation(spark, monkeypatch,
+                                                         id_type):
+    """The driver union-find path returns the rows (and the id type) of the
+    distributed label propagation on seeded random pair graphs, and over
+    checkpointed pairs it costs one Spark job."""
+    import random
+
+    from vectordb_cloud_spark.operators import dedup
+
+    rng = random.Random(7 if id_type == "long" else 11)
+    pairs = _random_pair_graph(rng, as_str=id_type == "string")
+    if id_type == "long":
+        pairs += [(3, None), (None, None)]  # null endpoints link nothing
+    df = spark.createDataFrame(
+        pairs, f"id_a {id_type}, id_b {id_type}").localCheckpoint()
+
+    sc = spark.sparkContext
+    group = f"dup_components_driver_{id_type}"
+    sc.setJobGroup(group, "driver path")
+    try:
+        driver = dedup.dup_components(df)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    monkeypatch.setattr(dedup, "_DRIVER_EDGES", 0)
+    spread = dedup.dup_components(df)
+    assert ([(f.name, f.dataType) for f in driver.schema]
+            == [(f.name, f.dataType) for f in spread.schema])
+
+    def key(r):
+        return tuple((v is None, v if v is not None else "") for v in r)
+    got = sorted(map(tuple, driver.collect()), key=key)
+    assert got == sorted(map(tuple, spread.collect()), key=key)
+    assert {a for a, _ in got} >= {v for p in pairs for v in p if v is not None}

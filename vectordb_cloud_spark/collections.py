@@ -25,6 +25,7 @@ reproduction of a Delta/Iceberg transaction log's snapshot semantics.
 
 from __future__ import annotations
 
+import contextlib
 import errno
 import json
 import os
@@ -56,6 +57,63 @@ PAYLOAD_INDEX_TYPES = {"keyword", "integer", "float", "bool", "datetime",
 # "text_whitespace" with Qdrant's `whitespace` tokenizer
 TEXT_INDEX_SCHEMAS = {"text", "text_whitespace"}
 _RESERVED_FIELDS = {"id", "embedding", "__bucket"}
+
+
+def _footer_id_range(bucket_dir: str):
+    """``[min(id), max(id)]`` over one bucket dir's parquet files, read
+    from the footers' row-group statistics — what Spark's ``min``/``max``
+    over those files answers. All-null row groups are skipped, so an
+    all-null bucket is ``[None, None]``, as in Spark; a row group with
+    non-null ids but no min/max makes the range unknown, ``[None, None]``
+    too. None when the dir holds no rows, False when the files have no
+    ``id`` column."""
+    import pyarrow.parquet as pq
+
+    lo = hi = None
+    rows = unknown = False
+    for f in sorted(os.listdir(bucket_dir)):
+        if not f.endswith(".parquet") or f[0] in "._":
+            continue
+        md = pq.ParquetFile(os.path.join(bucket_dir, f)).metadata
+        cols = [md.schema.column(j).path for j in range(md.num_columns)]
+        if "id" not in cols:
+            return False
+        j = cols.index("id")
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            rows = True
+            st = rg.column(j).statistics
+            if st is not None and st.has_null_count and st.null_count == rg.num_rows:
+                continue  # all-null row group
+            if st is None or not st.has_min_max:
+                unknown = True
+                continue
+            lo = st.min if lo is None or st.min < lo else lo
+            hi = st.max if hi is None or st.max > hi else hi
+    if not rows:
+        return None
+    return [None, None] if unknown else [lo, hi]
+
+
+# how Spark reports a ``raise_error`` — alone, or as one of several stage
+# failures AQE gathers into one error
+_USER_RAISED = re.compile(r"\[USER_RAISED_EXCEPTION\] (.*?) SQLSTATE: P0001")
+
+
+@contextlib.contextmanager
+def _raising_checks():
+    """Re-raise a row check that ``CollectionCatalog._validate`` folded
+    into a job as the ``ValueError`` it names, chained to the Spark
+    error."""
+    try:
+        yield
+    except Exception as e:
+        m = _USER_RAISED.search(str(e))
+        if m is None:
+            raise
+        raise ValueError(m.group(1)) from e
 
 
 @dataclass
@@ -434,8 +492,19 @@ class CollectionCatalog:
     def _validate(self, name: str, df: DataFrame) -> DataFrame:
         """Checked vector dim on every write (fixes SURVEY.md §1.2 hole).
         With named vectors, every present ``vec_{name}`` column is checked
-        against its own dim in ONE pass (null = point omits that vector,
-        allowed exactly as in Qdrant); absent columns are fine."""
+        against its own dim (null = point omits that vector, allowed
+        exactly as in Qdrant); absent columns are fine. Sparse named
+        vectors: indices/values same length, indices strictly ascending
+        and unique.
+
+        Fires no job: each checked column comes back as ``CASE WHEN <bad>
+        THEN raise_error(<message>) ELSE <col> END`` (a sparse vector's
+        check rides its indices column), so the job that writes the batch
+        — or fills the cache ``upsert`` puts over it — checks every row it
+        reads, and a bad row fails that job before anything is published.
+        ``_raising_checks`` turns the failure back into the ``ValueError``
+        carrying the message. A row an operation later in the same batch
+        deletes before the write is never read, so it is never checked."""
         meta = self.meta(name)
         checks = []
         if "embedding" in df.columns:
@@ -444,18 +513,12 @@ class CollectionCatalog:
             col = self.vector_col_of(vname)
             if col in df.columns:
                 checks.append((col, int(vdim)))
-        bad_pred = None
+        guards = {}
         for col, dim in checks:
-            p = F.col(col).isNotNull() & (F.size(col) != dim)
-            bad_pred = p if bad_pred is None else bad_pred | p
-        if bad_pred is not None and df.filter(bad_pred).limit(1).count():
-            raise ValueError(
+            guards[col] = (
+                F.col(col).isNotNull() & (F.size(col) != dim),
                 f"collection {name!r} vector dim mismatch (expected "
-                f"{dict(checks)}); got a row with a different size"
-            )
-        # sparse named vectors: indices/values same length, indices strictly
-        # ascending and unique — all checked in the SAME single-pass shape
-        sparse_bad = None
+                f"{dict(checks)}); got a row with a different size")
         for sname in sorted(meta.sparse_vectors or {}):
             icol, vcol = self.sparse_cols_of(sname)
             if icol not in df.columns and vcol not in df.columns:
@@ -464,22 +527,19 @@ class CollectionCatalog:
                 raise ValueError(
                     f"sparse vector {sname!r} needs BOTH {icol} and {vcol}")
             i, v = F.col(icol), F.col(vcol)
-            p = (
+            guards[icol] = (
                 (i.isNotNull() != v.isNotNull())
                 | (i.isNotNull() & (
                     (F.size(i) != F.size(v))
                     | (F.size(F.array_distinct(i)) != F.size(i))
                     | (F.array_sort(i) != i)
-                ))
-            )
-            sparse_bad = p if sparse_bad is None else sparse_bad | p
-        if sparse_bad is not None and df.filter(sparse_bad).limit(1).count():
-            raise ValueError(
+                )),
                 f"collection {name!r} sparse vector invalid: indices/values "
                 "must pair, match in length, and indices must be strictly "
-                "ascending and unique"
-            )
-        return df
+                "ascending and unique")
+        return df.withColumns({
+            c: F.when(bad, F.raise_error(F.lit(msg))).otherwise(F.col(c))
+            for c, (bad, msg) in guards.items()})
 
     @staticmethod
     def sparse_cols_of(sparse_name: str) -> tuple[str, str]:
@@ -610,9 +670,14 @@ class CollectionCatalog:
     def _update_manifest(self, name: str, buckets=None) -> None:
         """Refresh the per-bucket id min/max manifest from on-disk data.
         ``buckets=None`` rebuilds the whole manifest; otherwise only the given
-        buckets' entries are recomputed (PartitionFilters-pruned scan) and the
-        rest are kept. The scan is two skinny columns with id-sorted row
-        groups, so parquet column stats keep it cheap — but it IS a read; at
+        buckets' entries are recomputed and the rest are kept.
+
+        Fires no job: the ranges come from the parquet footers of the bucket
+        dirs the write just published (row-group statistics of ``id``), the
+        values a Spark ``min``/``max`` over those files returns. All-null
+        row groups are skipped, as ``min``/``max`` skip nulls; a row group
+        with non-null ids but no statistics makes its bucket ``[null,
+        null]``, which the upsert probe treats as an unknown range. At
         production scale this becomes per-file stats in a transaction log.
         The manifest records the snapshot version it describes; readers
         ignore a manifest whose version doesn't match the meta pointer (a
@@ -620,32 +685,28 @@ class CollectionCatalog:
         full probe, never to a stale skip)."""
         meta = self.meta(name)
         data = self._current_data_dir(name)
-        df = self.spark.read.parquet(data)
-        if "id" not in df.columns or "__bucket" not in df.columns:
-            try:
-                os.remove(self._manifest_path(name))
-            except FileNotFoundError:
-                pass
-            return
+        dirs = {d.split("=", 1)[1]: os.path.join(data, d)
+                for d in os.listdir(data) if d.startswith("__bucket=")}
         old = self._read_manifest(name)
         if buckets is not None and (
             old is None or old.get("version") != meta.version - 1
         ):
             buckets = None  # no valid patch base — full rebuild
-        scan = df.select("id", "__bucket")
-        if buckets is not None:
-            scan = scan.filter(F.col("__bucket").isin(list(buckets)))
-        stats = (
-            scan.groupBy("__bucket")
-            .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
-            .collect()
-        )
         entries = {} if buckets is None else dict(old["buckets"])
         if buckets is not None:
             for b in buckets:
                 entries.pop(str(b), None)  # bucket may now be empty
-        for r in stats:
-            entries[str(r["__bucket"])] = [r["lo"], r["hi"]]
+        scan = sorted(dirs, key=int) if buckets is None else [
+            str(b) for b in buckets if str(b) in dirs]
+        ranges = {b: _footer_id_range(dirs[b]) for b in scan}
+        if not dirs or any(r is False for r in ranges.values()):
+            # unpartitioned image or no id column: nothing to record
+            try:
+                os.remove(self._manifest_path(name))
+            except FileNotFoundError:
+                pass
+            return
+        entries.update((b, r) for b, r in ranges.items() if r is not None)
         tmp = self._manifest_path(name) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
@@ -669,13 +730,27 @@ class CollectionCatalog:
         are never rewritten. On a real deployment this becomes Delta
         ``MERGE INTO`` with dynamic partition overwrite.
 
+        The batch is computed once: the row-checked frame (``_validate``)
+        is cached, so the first job over it — the batch-stats aggregate,
+        or the write itself — fills the cache and checks every row in the
+        same pass; the probe, the merge and the write read the cache.
+
         Raises ``ValueError`` when the batch's column set differs from a
         non-empty collection's (silent schema drift previously replaced the
-        whole table with just the batch).
+        whole table with just the batch), or when a row fails a vector
+        check; either way nothing is published and the staging dir is
+        removed.
         """
         name = self.resolve(name)
         self.last_upsert_probe = None  # telemetry is per-call, never stale
         new_rows = self._validate(name, new_rows).cache()
+        try:
+            with _raising_checks():
+                self._merge(name, new_rows, id_col)
+        finally:
+            new_rows.unpersist()
+
+    def _merge(self, name: str, new_rows: DataFrame, id_col: str) -> None:
         existing = self.read(name)
         partitioned = "__bucket" in existing.columns
         existing = existing.drop("__bucket")
@@ -758,7 +833,6 @@ class CollectionCatalog:
         else:
             merged = existing.join(F.broadcast(w_new), on=id_col, how="left_anti").unionByName(w_new)
             self._swap_in(name, merged)
-        new_rows.unpersist()
 
     def _cluster_for_indexes(self, out: DataFrame, meta: CollectionMeta,
                              n_bucket_dirs: int) -> DataFrame | None:
@@ -796,26 +870,31 @@ class CollectionCatalog:
         new_v = meta.version + 1
         new_dir = self._data_dir_v(name, new_v)
         staging = new_dir + ".staging"
-        if meta.shard_key in df.columns:
-            # _bucket_of casts integral shard keys to long first — F.hash(int)
-            # != F.hash(long), so an uncast hash here would land an int-typed
-            # first batch in buckets read_for_shard's long-hash probe can
-            # never find
-            out = df.withColumn("__bucket", self._bucket_of(meta, df))
-            clustered = self._cluster_for_indexes(out, meta, meta.n_buckets)
-            if clustered is not None:
-                out = clustered
-            out.write.mode("overwrite").partitionBy("__bucket").parquet(staging)
-            # a fully-empty partitioned write leaves no data files -> the dir
-            # becomes unreadable; fall back to a schema-only unpartitioned file
-            if not any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(staging)
-                for f in files
-            ):
+        try:
+            if meta.shard_key in df.columns:
+                # _bucket_of casts integral shard keys to long first —
+                # F.hash(int) != F.hash(long), so an uncast hash here would
+                # land an int-typed first batch in buckets read_for_shard's
+                # long-hash probe can never find
+                out = df.withColumn("__bucket", self._bucket_of(meta, df))
+                clustered = self._cluster_for_indexes(out, meta, meta.n_buckets)
+                if clustered is not None:
+                    out = clustered
+                out.write.mode("overwrite").partitionBy("__bucket").parquet(staging)
+                # a fully-empty partitioned write leaves no data files -> the
+                # dir becomes unreadable; fall back to a schema-only
+                # unpartitioned file
+                if not any(
+                    f.endswith(".parquet")
+                    for _, _, files in os.walk(staging)
+                    for f in files
+                ):
+                    df.write.mode("overwrite").parquet(staging)
+            else:
                 df.write.mode("overwrite").parquet(staging)
-        else:
-            df.write.mode("overwrite").parquet(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)  # publish nothing
+            raise
         if os.path.isdir(new_dir):
             shutil.rmtree(new_dir)  # orphan of a crashed, never-committed write
         os.rename(staging, new_dir)
@@ -849,7 +928,11 @@ class CollectionCatalog:
             # groups on id lookups — upsert's stale-bucket probe and
             # delete_by_ids read a fraction of each touched file
             out = out.sortWithinPartitions("__bucket", "id")
-        out.write.mode("overwrite").partitionBy("__bucket").parquet(staging)
+        try:
+            out.write.mode("overwrite").partitionBy("__bucket").parquet(staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)  # publish nothing
+            raise
         touched = {f"__bucket={b}" for b in buckets}
         if os.path.isdir(new_dir):
             shutil.rmtree(new_dir)  # orphan of a crashed, never-committed write
@@ -1046,24 +1129,26 @@ class CollectionCatalog:
         return os.path.join(d, sub) if sub else d
 
     @staticmethod
-    def _fresh(pdir: str, vector_col: str | None) -> bool:
-        """Published, and — for kinds built per vector column (a
-        ``params.json`` names it) — built for ``vector_col``. One
-        filesystem call either way."""
+    def _fresh(pdir: str, vector_col: str | None) -> dict | None:
+        """The published params when ``pdir`` is published and — for kinds
+        built per vector column (a ``params.json`` names it) — built for
+        ``vector_col``; None otherwise (``{}`` stands for a kind without
+        params). One filesystem call either way."""
         if vector_col is None:
-            return os.path.isdir(pdir)
+            return {} if os.path.isdir(pdir) else None
         try:
             with open(os.path.join(pdir, "params.json")) as f:
-                built_for = json.load(f).get("vector_col", "embedding")
+                params = json.load(f)
         except FileNotFoundError:
-            return False
-        return built_for == vector_col
+            return None
+        return (params if params.get("vector_col", "embedding") == vector_col
+                else None)
 
     def _sidecar(self, name: str, meta: CollectionMeta, kind: str, build,
                  sub: str | None = None,
-                 vector_col: str | None = None) -> str:
-        """The current version's published ``kind`` sidecar, built first
-        when missing or built for another vector column.
+                 vector_col: str | None = None) -> tuple[str, dict]:
+        """The current version's published ``kind`` sidecar and its params,
+        built first when missing or built for another vector column.
 
         ``build(stage)`` fills a private staging dir and returns the params
         to record (``params.json``, plus ``vector_col``) or None. The stage
@@ -1072,10 +1157,13 @@ class CollectionCatalog:
         The publish is one ``os.rename``: the first publisher wins, and a
         concurrent builder that loses discards its stage and serves the
         winner's dir. A published dir built for another vector column is
-        discarded and replaced."""
+        discarded and replaced. A published dir is never written again,
+        so its files can be read through memoized handles
+        (``_read_handle``)."""
         pdir = self._sidecar_dir(name, kind, meta.version, sub)
-        if self._fresh(pdir, vector_col):
-            return pdir
+        params = self._fresh(pdir, vector_col)
+        if params is not None:
+            return pdir, params
         if not self._has_data(name):
             raise ValueError(f"collection {name!r} is empty")
         stage = os.path.join(self._dir(name), f"staging.{uuid.uuid4().hex}")
@@ -1083,8 +1171,10 @@ class CollectionCatalog:
         try:
             params = build(stage)
             if vector_col is not None:
+                text = json.dumps({**params, "vector_col": vector_col})
                 with open(os.path.join(stage, "params.json"), "w") as f:
-                    json.dump({**params, "vector_col": vector_col}, f)
+                    f.write(text)
+                params = json.loads(text)  # as a later _fresh parses it
             os.makedirs(os.path.dirname(pdir), exist_ok=True)
             while True:
                 try:
@@ -1093,8 +1183,10 @@ class CollectionCatalog:
                 except OSError as e:  # pdir exists (non-empty)
                     if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
                         raise
-                    if self._fresh(pdir, vector_col):
-                        break  # a concurrent build published first
+                    winner = self._fresh(pdir, vector_col)
+                    if winner is not None:
+                        params = winner  # a concurrent build published first
+                        break
                     # built for another vector column: replace it
                     self._discard(name, pdir)
         finally:
@@ -1102,7 +1194,7 @@ class CollectionCatalog:
         for v, d in self._versions(name, kind).items():
             if v != meta.version:
                 self._discard(name, d)
-        return pdir
+        return pdir, params or {}
 
     def _discard(self, name: str, path: str) -> None:
         """Unpublish ``path`` atomically (rename aside, then delete) and
@@ -1202,7 +1294,7 @@ class CollectionCatalog:
             (postings.repartition("tbucket")
              .write.mode("overwrite").partitionBy("tbucket").parquet(stage))
 
-        return self._sidecar(name, meta, "textidx", build, sub=field)
+        return self._sidecar(name, meta, "textidx", build, sub=field)[0]
 
     def text_match_ids(self, name: str, field: str, text: str) -> DataFrame:
         """Ids whose ``field`` contains EVERY token of ``text``
@@ -1433,6 +1525,9 @@ class CollectionCatalog:
         (no-op if already built). The codes table keeps id + payload
         columns and DROPS the full-precision vector — the scan-side size
         win (4x for int8, ~32x for binary) is the point."""
+        return self._quant_sidecar(name, vector_col)[0]
+
+    def _quant_sidecar(self, name: str, vector_col: str) -> tuple[str, dict]:
         from vectordb_cloud_spark.operators.sq import (
             bq_encode, bq_train, sq_encode, sq_train)
 
@@ -1504,10 +1599,8 @@ class CollectionCatalog:
             # request's pool-at-least-k*x contract
             oversampling = max(1, int(_math.ceil(float(oversampling))))
         name = self.resolve(name)
-        qdir = self.quantize(name, vector_col=vector_col)
-        with open(os.path.join(qdir, "params.json")) as f:
-            params = json.load(f)
-        codes = self.spark.read.parquet(os.path.join(qdir, "codes"))
+        qdir, params = self._quant_sidecar(name, vector_col)
+        codes = self._read_handle(os.path.join(qdir, "codes"))
         if params["kind"] == "scalar":
             if rescore:
                 over = oversampling or 4
@@ -1624,7 +1717,7 @@ class CollectionCatalog:
             sparse_persist_inverted(postings, stage,
                                     bucket_dims=self._SPARSE_IDX_BUCKETS)
 
-        return self._sidecar(name, meta, "sparseidx", build, sub=sparse_name)
+        return self._sidecar(name, meta, "sparseidx", build, sub=sparse_name)[0]
 
     # -- collection-attached ANN index (the hnsw_config slot) --------------
     # The ``ann.v{N}`` sidecar: build_ann_index() materializes the index
@@ -1951,6 +2044,12 @@ class CollectionCatalog:
 
     def build_ann_index(self, name: str, vector_col: str = "embedding",
                         id_col: str = "id") -> str:
+        """Materialize the ``ann.v{N}`` sidecar for the CURRENT version
+        (no-op if already built for ``vector_col``)."""
+        return self._ann_sidecar(name, vector_col, id_col)[0]
+
+    def _ann_sidecar(self, name: str, vector_col: str,
+                     id_col: str) -> tuple[str, dict]:
         from vectordb_cloud_spark.operators.ann import ivf_build, ivf_persist
 
         name = self.resolve(name)
@@ -2182,9 +2281,7 @@ class CollectionCatalog:
         from vectordb_cloud_spark.operators.knn import exact_rescore_topk
 
         name = self.resolve(name)
-        adir = self.build_ann_index(name, vector_col=vector_col, id_col=id_col)
-        with open(os.path.join(adir, "params.json")) as f:
-            params = json.load(f)
+        adir, params = self._ann_sidecar(name, vector_col, id_col)
         if predicate is not None and params["kind"] in ("ivf", "ivf_sq"):
             # the uniform full_scan_threshold rule for the IVF kinds (the
             # graph kind plans inside graph_beam_search, which also owns
@@ -2215,13 +2312,12 @@ class CollectionCatalog:
         # a deleted row can never displace a live one; absent dir = no
         # deletes since the last full build, zero query-path cost
         tdir = os.path.join(adir, "tombstones")
-        tomb = (self.spark.read.parquet(tdir)
-                if os.path.isdir(tdir) else None)
+        tomb = self._read_handle(tdir) if os.path.isdir(tdir) else None
         if params["kind"] == "ivf":
             from vectordb_cloud_spark.operators.ann import ivf_search
 
             centers = [(int(i), list(c)) for i, c in params["centers"]]
-            assigned = self.spark.read.parquet(os.path.join(adir, "ivf"))
+            assigned = self._read_handle(os.path.join(adir, "ivf"))
             if tomb is not None:
                 assigned = assigned.join(F.broadcast(tomb), id_col,
                                          "left_anti")
@@ -2247,7 +2343,7 @@ class CollectionCatalog:
 
             centers = [(int(i), list(c)) for i, c in params["centers"]]
             probe = route_probe_ids(centers, query_vector, params["nprobe"])
-            codes = self.spark.read.parquet(os.path.join(adir, "ivf_sq")) \
+            codes = self._read_handle(os.path.join(adir, "ivf_sq")) \
                 .filter(F.col("centroid_id").isin(probe))
             if tomb is not None:
                 codes = codes.join(F.broadcast(tomb), id_col, "left_anti")
@@ -2266,7 +2362,7 @@ class CollectionCatalog:
                     name, res, predicate, query_vector, k,
                     vector_col, id_col, audit_mod)
             return res
-        graph = self.spark.read.parquet(os.path.join(adir, "graph"))
+        graph = self._read_handle(os.path.join(adir, "graph"))
         entry_ids = params["entry_ids"]
         cdir = os.path.join(adir, "coarse_sample")
         if os.path.isdir(cdir):
@@ -2546,7 +2642,8 @@ class CollectionCatalog:
                                 F.when(sel, F.lit(None)).otherwise(F.col(col)))
             else:
                 raise ValueError(f"unknown batch operation {kind!r}")
-        self._swap_in(name, df)
+        with _raising_checks():  # the upsert ops' row checks run here
+            self._swap_in(name, df)
         return {"result": {"operations": len(operations), "status": "completed"}}
 
     def update_vectors(self, name: str, rows, id_col: str = "id") -> dict:

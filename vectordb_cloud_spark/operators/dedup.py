@@ -21,7 +21,8 @@ join, the join-backs and the one materialisation decision.
 - ngram_jaccard_pairs  — exact n-gram Jaccard within explicit blocks
 - embedding_near_dup   — cosine-threshold pairs over an embedding column
 - embedding_near_dup_lsh — same, blocked by LSH buckets (the scale default)
-- dup_components       — pairs -> connected-component groups (hash-min)
+- dup_components       — pairs -> connected-component groups (driver
+                         union-find; hash-min past the driver cap)
 - dedup_keep_canonical — docs minus non-canonical near-dup group members
 - line_dedup_corpus    — cross-doc repeated LINES dropped (C4 boilerplate)
 - span_dedup_corpus    — exact-substring spans >= window tokens cut from
@@ -53,10 +54,25 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 
 
 def dedup_keep_first(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Dedup'd corpus: keep the lowest-id row per exact fingerprint."""
-    w_fp = docs.withColumn("__fp", doc_fingerprint(text_col))
-    keep = w_fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-    return w_fp.join(keep, on=["__fp", id_col], how="inner").drop("__fp")
+    """Dedup'd corpus: keep the lowest-id row per exact fingerprint.
+
+    One aggregate: ``min_by(<column>, id)`` per column and fingerprint
+    carries the winning row through the fingerprint shuffle, so no join
+    back to the input re-reads it. One aggregate per column, not one
+    ``min_by`` over a struct of the row, so the columns a consumer drops
+    are pruned from the aggregate and from the scan beneath it. Every
+    ``min_by`` sees the rows in one order and keeps the first at the
+    minimum id, so all columns come from one row. Column names, order and
+    types are the input's. ``min_by`` skips null ids, so rows with a null
+    id never win (a fingerprint whose ids are all null keeps nothing);
+    one row per fingerprint, so two rows tied at the minimum id keep one
+    of them."""
+    return (
+        docs.groupBy(doc_fingerprint(text_col).alias("__fp"))
+        .agg(*[F.min_by(c, id_col).alias(c) for c in docs.columns])
+        .filter(F.col(id_col).isNotNull())
+        .drop("__fp")
+    )
 
 
 def blocked_self_pairs(banded: DataFrame, side: DataFrame, verify) -> DataFrame:
@@ -341,23 +357,43 @@ def ngram_jaccard_pairs(
     )
 
 
+# Pair graphs up to this many edges resolve on the driver (one bounded
+# collect, union-find); larger ones run the distributed label propagation.
+_DRIVER_EDGES = 1 << 18
+
+
 def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                    max_iter: int = 20) -> DataFrame:
     """Connected components over near-duplicate PAIRS — the step that turns
     pairwise similarity into dedup GROUPS (a~b and b~c must collapse to one
     keep-decision even when a~c was never emitted as a pair).
 
-    Hash-min label propagation: every vertex starts labeled with its own id;
-    each round takes the min of its label and its neighbors' labels;
-    converges to the component's min id in O(graph diameter) rounds —
-    near-dup graphs are shallow (stars/chains around a canonical doc), so a
-    handful of rounds suffice at any data size. Each round is one
-    equi-join + groupBy on vertex ids (shuffle ∝ |edges|, never all-pairs);
-    ``localCheckpoint`` truncates the iterative lineage so plans stay flat.
+    Returns (id, comp): every vertex of a pair, with comp = the min id of
+    its component.
 
-    Returns (id, comp) — comp = min doc id of the component.
+    A graph of at most ``_DRIVER_EDGES`` pairs — the usual case: near-dup
+    pairs are few next to the corpus — is resolved on the driver: one
+    bounded collect (one job over checkpointed pairs, which every banded
+    generator returns), union-find keeping each component's smallest id as
+    its root, and the answer comes back as a local relation with the
+    pairs' id type.
+
+    Larger graphs run hash-min label propagation: every vertex starts
+    labeled with its own id; each round takes the min of its label and its
+    neighbors' labels; converges to the component's min id in O(graph
+    diameter) rounds — near-dup graphs are shallow (stars/chains around a
+    canonical doc), so a handful of rounds suffice at any data size. Each
+    round is one equi-join + groupBy on vertex ids (shuffle ∝ |edges|,
+    never all-pairs); ``localCheckpoint`` truncates the iterative lineage
+    so plans stay flat.
     """
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    # coalesce(1): the bounded collect reads every partition in ONE job
+    # (a plain limit scans one partition first, then the rest)
+    head = edges.coalesce(1).limit(_DRIVER_EDGES + 1).collect()
+    if len(head) <= _DRIVER_EDGES:
+        return _components_on_driver(pairs.sparkSession, head,
+                                     edges.schema["src"].dataType)
     edges = (
         edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
@@ -395,6 +431,44 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
             "pair graph has a longer chain than expected; raise max_iter"
         )
     return labels
+
+
+def _components_on_driver(spark, edges: list, id_type) -> DataFrame:
+    """``dup_components`` over collected ``(src, dst)`` rows: union-find
+    with the smaller root winning, so every root is its component's min
+    id. Null ids follow the label propagation: a null endpoint links
+    nothing, and the null vertex is one ``(null, null)`` row."""
+    from pyspark.sql.types import StructField, StructType
+
+    from vectordb_cloud_spark.session import local_df
+
+    parent: dict = {}
+
+    def find(x):
+        root = parent.setdefault(x, x)
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    for a, b in edges:
+        if a is None or b is None:
+            has_null = True
+            for v in (a, b):
+                if v is not None:
+                    find(v)
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    rows = [(v, find(v)) for v in parent]
+    if has_null:
+        rows.append((None, None))
+    schema = StructType([StructField("id", id_type), StructField("comp", id_type)])
+    return local_df(spark, rows, schema)
 
 
 def dedup_keep_canonical(docs: DataFrame, pairs: DataFrame,

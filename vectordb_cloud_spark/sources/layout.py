@@ -8,9 +8,9 @@ multi-column box predicate intersects far fewer files' min/max stat ranges
 — Delta OPTIMIZE ZORDER BY / Iceberg sort-order, reproduced on plain
 parquet.
 
-All driver work is ``approxQuantile`` (one pass, sketch-based); the z-value
-itself is pure JVM bit algebra, and the layout write is one range
-repartition + local sort — the same cost as a plain global sort.
+All driver work is ``approxQuantile`` (two sketch passes); the z-value
+itself is pure JVM bit algebra, and the layout write is one repartition
+into equi-depth z slices + local sort — the cost of a plain global sort.
 """
 
 from __future__ import annotations
@@ -54,6 +54,21 @@ def zorder_value(cols_with_bounds: list[tuple[Column, list[float]]], bits: int) 
     return reduce(lambda a, c: a.bitwiseOR(c), parts)
 
 
+def _hash_partition_keys(n: int) -> list[int]:
+    """``n`` long keys, the i-th landing in partition i under Spark's
+    ``repartition(n, key)`` (``pmod(murmur3(key), n)``, the hash
+    ``functions.hashing.murmur3_long`` reproduces): routing a row by the
+    key of its file index sends each index to its own partition."""
+    from vectordb_cloud_spark.functions.hashing import murmur3_long
+
+    keys: dict[int, int] = {}
+    k = 0
+    while len(keys) < n:
+        keys.setdefault(murmur3_long(k) % n, k)
+        k += 1
+    return [keys[i] for i in range(n)]
+
+
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -65,19 +80,26 @@ def write_zordered(
     """Write ``df`` clustered on the Z-curve over ``cols``.
 
     One approxQuantile sketch pass computes each column's 2^bits equi-depth
-    boundaries; rows get a z-value; ``repartitionByRange(z)`` +
-    ``sortWithinPartitions(z)`` makes every output file a contiguous z-range
-    so parquet footer min/max stats on EACH of ``cols`` stay tight per file.
+    boundaries; rows get a z-value; a second sketch pass cuts the z range
+    into ``n_files`` equi-depth slices, and each slice goes to its own
+    output task (sorted on z), so every output file is a contiguous z-range
+    and parquet footer min/max stats on EACH of ``cols`` stay tight per
+    file. The file boundaries are a function of the data alone: no
+    sampled range partitioner, whose sample seed follows the RDD id.
     """
     probs = [i / (1 << bits) for i in range(1, 1 << bits)]
     # one sketch job for ALL columns (the list overload) — not one full
     # scan per column
     all_bounds = df.approxQuantile(cols, probs, quantile_error)
     with_bounds = [(F.col(c), b) for c, b in zip(cols, all_bounds)]
-    z = zorder_value(with_bounds, bits)
+    zdf = df.withColumn("__z", zorder_value(with_bounds, bits))
+    cuts = zdf.approxQuantile(
+        "__z", [i / n_files for i in range(1, n_files)], quantile_error)
+    file_idx = _bucket_index(F.col("__z"), cuts, n_files.bit_length())
+    keys = F.array(*[F.lit(k).cast("long")
+                     for k in _hash_partition_keys(n_files)])
     (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
+        zdf.repartition(n_files, F.element_at(keys, file_idx + 1))
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite").parquet(path)

@@ -22,8 +22,13 @@ def read_insert_requests(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """S1/S2: a batch of insert requests (HTTP params / CLI args,
     /root/reference/app.py:36-43, insert.py:87-98) as a typed DataFrame.
     The length-equality assertion of insert.py:32 holds by construction —
-    one row carries all fields."""
-    return spark.createDataFrame(
+    one row carries all fields. The batch is a JVM local relation
+    (``session.local_df``), so the actions over it never run a Python
+    worker just to decode the rows."""
+    from vectordb_cloud_spark.session import local_df
+
+    return local_df(
+        spark,
         [
             (
                 int(r["id"]),
