@@ -1018,6 +1018,306 @@ def test_pin_memo_bytes_hold_under_threads(svc, monkeypatch):
     _assert_pins_within_budget(svc)
 
 
+def _l2_block_by_column(block, q):
+    """The distance loop ``_l2_block`` replaced: one column op per
+    dimension, accumulated in dimension order."""
+    import numpy as np
+
+    acc = np.zeros(block.shape[1])
+    if not block.shape[1]:
+        return acc
+    for j, y in enumerate(q):
+        d = block[j].astype(np.float64) - y
+        acc += d * d
+    return np.sqrt(acc)
+
+
+@pytest.mark.parametrize("dtype", ["float32", "float64"])
+def test_l2_block_bit_equal_to_column_loop(dtype):
+    """The broadcast distance kernel is bit-equal to the per-dimension
+    loop at every width, including n = 1 (where a pairwise axis-0 sum
+    would differ), for float32 and float64 blocks of several magnitudes."""
+    import numpy as np
+
+    from vectordb_cloud_spark.api import _l2_block
+
+    rng = np.random.default_rng(5)
+    for dim in (16, 64):
+        for n in (0, 1, 2, 7, 8, 9, 203, 609, 5000):
+            for mag in (1e-2, 1e-1, 1.0, 1e1, 1e2):
+                block = (rng.standard_normal((dim, n)) * mag).astype(dtype)
+                q = rng.standard_normal(dim) * mag
+                got = _l2_block(block, q)
+                assert got.dtype == np.float64
+                assert np.array_equal(got, _l2_block_by_column(block, q)), \
+                    (dim, n, mag)
+
+
+def _jobs(spark) -> int:
+    """Spark jobs the application has run so far."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # the status store updates async
+    return sc.statusStore().jobsList(None).size()
+
+
+def _pinned_tenant(svc, uid, n=90):
+    """Load tenant ``uid`` (``n`` points; some null sites, some empty
+    langs) and pin its unfiltered set: a cold read, a marking template
+    hit and a pinning one."""
+    from vectordb_cloud_spark.functions.embedding import mock_embed
+
+    words = ("river", "stone", "cloud", "maple", "ember", "quartz", "willow")
+    rows = [(3000 + 1000 * uid + i, 7000 + i,
+             f"{words[i % 7]} {words[i * 3 % 5]} item{i}", uid,
+             None if i % 11 == 0 else f"s{i % 3}",
+             "" if i % 7 == 0 else ("en" if i % 2 else "de"))
+            for i in range(n)]
+    df = svc.spark.createDataFrame(
+        rows, "id long, text_id long, text string, user_id long, "
+        "site string, lang string",
+    ).withColumn("embedding", mock_embed("text", svc.dim))
+    svc.catalog.upsert(svc.index_name, df)
+    for text in ("warm", "mark", "pin"):
+        svc.query(uid, {"query": {"text": text}, "limit": 5})
+    assert svc._tenant_pin(uid) is not None
+    return [r[0] for r in rows]
+
+
+def _template_ref(svc):
+    """A service on the same collection that never pins: its template
+    hits run the shape's SQL."""
+    ref = VectorService(svc.spark, svc.catalog.root,
+                        index_name=svc.index_name, dim=svc.dim)
+    ref._PIN_BUDGET_BYTES = 0
+    return ref
+
+
+def _templated(ref, fn, *args, **kw):
+    """``fn``'s answer, asserted to be a shape-template hit of ``ref``."""
+    before = ref._shape_hits
+    got = fn(*args, **kw)
+    assert ref._shape_hits == before + 1, "not template-served"
+    return got
+
+
+def _wsgi_get(app, path, **params):
+    """One GET through the WSGI app, in-process: (status, JSON body)."""
+    import json
+    import urllib.parse
+    from wsgiref.util import setup_testing_defaults
+
+    env = {"PATH_INFO": path, "QUERY_STRING": urllib.parse.urlencode(params)}
+    setup_testing_defaults(env)
+    status = []
+    body = b"".join(app(env, lambda s, h, exc=None: status.append(s)))
+    return int(status[0].split()[0]), json.loads(body)
+
+
+def _derive_steps(svc, ref, uid, flt, tag, limit=8):
+    """A filtered set's cold read, then its first and second template
+    hits, each equal to the template SQL's answer; returns the jobs the
+    two hits ran and the last answer."""
+    body = {"query": {"text": f"cold {tag}"}, "limit": limit, "filter": flt}
+    svc.query(uid, body)
+    ref.query(uid, body)
+    jobs = 0
+    for step in ("first", "second"):
+        probe = dict(body, query={"text": f"{step} {tag}"})
+        j0 = _jobs(svc.spark)
+        got = svc.query(uid, probe)
+        jobs += _jobs(svc.spark) - j0
+        assert _typed(got) == _typed(_templated(ref, ref.query, uid, probe)), \
+            (tag, step)
+    return jobs, got
+
+
+_DERIVED_FILTERS = {
+    "match_value": {"must": [{"key": "site", "match": {"value": "s1"}}]},
+    "match_any": {"must": [{"key": "lang", "match": {"any": ["en", ""]}}]},
+    "match_except": {"must": [{"key": "site",
+                               "match": {"except": ["s0"]}}]},
+    "match_text": {"must": [{"key": "text", "match": {"text": "river"}}]},
+    "regex": {"must": [{"key": "text", "match": {"regex": "item[1-3]\\d$"}}]},
+    "range": {"must": [{"key": "text_id",
+                        "range": {"gte": 7010, "lt": 7050}}]},
+    "is_null": {"must": [{"is_null": {"key": "site"}}]},
+    "is_empty": {"must": [{"is_empty": {"key": "lang"}}]},
+    "must_not": {"must_not": [{"key": "site", "match": {"value": "s2"}}]},
+    "should": {"should": [{"key": "site", "match": {"value": "s0"}},
+                          {"key": "lang", "match": {"value": "de"}}]},
+}
+
+
+def test_derived_sets_match_template_without_jobs(svc):
+    """On a tenant whose unfiltered set is pinned, each filtered set —
+    every filter-DSL form the scan stage compiles, has_id over 64 ids
+    (the parsed SQL IN form) and a filter matching nothing included — is
+    cut from the tenant's block: its first and second template hits run
+    no Spark job, the second stores it as a pin, and query(),
+    search_hits and HTTP /search answer exactly as the template SQL does
+    (ids, order, float scores)."""
+    import json
+
+    from vectordb_cloud_spark.http_app import make_wsgi_app
+
+    ids = _pinned_tenant(svc, 71)
+    ref = _template_ref(svc)
+    app = make_wsgi_app(svc)
+    filters = dict(_DERIVED_FILTERS,
+                   has_id={"must": [{"has_id": ids[10:85] + [1]}]},
+                   nothing={"must": [{"key": "site",
+                                      "match": {"value": "none"}}]})
+    assert len(filters["has_id"]["must"][0]["has_id"]) > 64
+    for tag, flt in filters.items():
+        sets, hits = (svc.memo_stats()[k] for k in ("pinned_sets",
+                                                    "pin_hits"))
+        jobs, got = _derive_steps(svc, ref, 71, flt, tag)
+        assert jobs == 0, tag
+        stats = svc.memo_stats()
+        assert (stats["pinned_sets"], stats["pin_hits"]) == \
+            (sets + 1, hits + 2), tag
+        assert (got == []) == (tag == "nothing"), tag
+        svc.search_hits(71, f"cold {tag}", limit=6, query_filter=flt)
+        ref.search_hits(71, f"cold {tag}", limit=6, query_filter=flt)
+        text = f"search {tag}"
+        want = _templated(ref, ref.search_hits, 71, text, limit=6,
+                          query_filter=flt)
+        assert _typed(svc.search_hits(71, text, limit=6,
+                                      query_filter=flt)) == _typed(want), tag
+        status, http = _wsgi_get(app, "/search", user_id=71, text=text,
+                                 limit=6, filter=json.dumps(flt))
+        assert status == 200 and _typed(http) == _typed(want), tag
+    _assert_pins_within_budget(svc)
+
+
+def test_derived_set_falls_back_when_block_cannot_evaluate(svc):
+    """A filter the tenant's block cannot evaluate (a vector column, which
+    the block does not carry) keeps today's path — a template query on
+    the first hit, a collect on the second — and still answers as the
+    template SQL does."""
+    _pinned_tenant(svc, 72)
+    ref = _template_ref(svc)
+    flt = {"must_not": [{"is_empty": {"key": "embedding"}}]}
+    sets = svc.memo_stats()["pinned_sets"]
+    jobs, got = _derive_steps(svc, ref, 72, flt, "vector")
+    assert jobs > 0 and len(got) == 8
+    assert svc.memo_stats()["pinned_sets"] == sets + 1  # collected
+
+
+def test_derived_pins_follow_writes_and_close(svc):
+    """A write drops a derived pin together with its base: at the new
+    version the filtered set is re-derived — without a job, the new point
+    included — once the base is pinned again. close() drops derived pins
+    and their marks."""
+    _pinned_tenant(svc, 73)
+    ref = _template_ref(svc)
+    flt = _DERIVED_FILTERS["match_value"]
+    assert _derive_steps(svc, ref, 73, flt, "v1")[0] == 0
+    assert svc.memo_stats()["pinned_sets"] == 2
+    assert svc.insert(99_001, 73, "river river river", "s1", "en") == 1
+    for text in ("warm", "mark", "pin"):  # the base, re-pinned
+        svc.query(73, {"query": {"text": text}, "limit": 5})
+    assert svc.memo_stats()["pinned_sets"] == 1  # the stale pins dropped
+    jobs, got = _derive_steps(svc, ref, 73, flt, "v2", limit=90)
+    assert jobs == 0 and 99_001 in [h["id"] for h in got]
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 2
+    assert all(p.at == svc._tenant_pin(73).at for p in svc._pins.values())
+    _assert_pins_within_budget(svc)
+    svc.close()
+    stats = svc.memo_stats()
+    assert stats["pinned_sets"] == 0 and stats["pinned_bytes"] == 0
+    assert not svc._pin_marks
+
+
+def test_derived_set_without_room_is_served_unstored(svc):
+    """A derived set that does not fit the room the live pins leave is
+    never stored and evicts no live pin, yet every template hit on it is
+    still cut from the tenant's block without a job."""
+    _pinned_tenant(svc, 74)
+    ref = _template_ref(svc)
+    assert _derive_steps(svc, ref, 74, _DERIVED_FILTERS["match_value"],
+                         "fits")[0] == 0
+    live = dict(svc._pins)
+    assert len(live) == 2  # the base and one derived set
+    # leave 100 bytes of room: less than any derived set
+    svc._PIN_BUDGET_BYTES = svc.memo_stats()["pinned_bytes"] + 100
+    flt = _DERIVED_FILTERS["must_not"]
+    hits = svc.memo_stats()["pin_hits"]
+    assert _derive_steps(svc, ref, 74, flt, "tight")[0] == 0
+    probe = {"query": {"text": "third tight"}, "limit": 8, "filter": flt}
+    j0 = _jobs(svc.spark)
+    got = svc.query(74, probe)
+    assert _jobs(svc.spark) == j0
+    assert _typed(got) == _typed(_templated(ref, ref.query, 74, probe))
+    assert svc._pins.keys() == live.keys()  # nothing stored or evicted
+    assert all(svc._pins[slot] is pin for slot, pin in live.items())
+    assert svc.memo_stats()["pin_hits"] == hits + 3
+    _assert_pins_within_budget(svc)
+
+
+def test_derived_pins_hold_under_threads(svc, monkeypatch):
+    """Derived and collected sets racing on threads, across two data
+    versions, keep pinned_bytes equal to the held pins' sum and within
+    the budget, and marks within their cap; a set is only derived from a
+    base pin of its own data version. Collect and derive are faked: the
+    lock around the memo is what is under test."""
+    import random
+    import sys
+    import threading
+
+    import numpy as np
+
+    from vectordb_cloud_spark.api import _Pin, _Shape
+
+    monkeypatch.setattr(VectorService, "_PIN_BUDGET_BYTES", 8_000)
+    svc._SHAPE_MEMO_CAP = 3
+    derives = []
+
+    def fake_pin(shape, nbytes):
+        return _Pin(shape.at, "embedding", np.zeros(0, np.int64),
+                    np.zeros((0, 0)), {}, ("id",), nbytes)
+
+    def fake_collect(shape, cap):
+        nbytes = 300 * (1 + shape.slot[0] % 3)
+        return fake_pin(shape, nbytes) if nbytes <= cap else None
+
+    def fake_derive(shape, base):
+        derives.append(base.at == shape.at)
+        return fake_pin(shape, 50 * (1 + shape.slot[2]))
+
+    monkeypatch.setattr(svc, "_collect_pin", fake_collect)
+    monkeypatch.setattr(svc, "_derive_pin", fake_derive)
+    shapes = [_Shape("", None, "embedding", (), 10, 0, None,
+                     slot=(t, "embedding", f), at=(f"data.v{v}", None),
+                     flt=None if f is None else f"filter {f}")
+              for t in range(6) for f in (None, 0, 1, 2) for v in range(2)]
+    errors = []
+
+    def worker(seed):
+        rng = random.Random(seed)
+        try:
+            for _ in range(400):
+                svc._pin(rng.choice(shapes))
+        except Exception as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(s,)) for s in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert derives and all(derives)
+    assert len(svc._pin_marks) <= svc._SHAPE_MEMO_CAP
+    _assert_pins_within_budget(svc)
+
+
 def test_query_template_noncanonical_selectors_stay_cold(svc):
     """Shape-key hygiene (r11 review #2): object-form with_payload must
     NOT collide with with_payload=True under one shape key, unhashable

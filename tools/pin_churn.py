@@ -11,14 +11,17 @@ tenants read over and over, no writes):
   thrash   14 tenants of ~5.6 MiB (500 points with ~11 KB payloads) read
            in turn: more sets than the 64 MiB pin budget holds;
   overcap  3 tenants of ~10 MiB (900 points), over the per-set cap, read
-           in turn with an insert every 6 reads.
+           in turn with an insert every 6 reads;
+  filtered 6 small tenants (300 points) read through their plain shape and
+           three filter documents each (site, lang, has_id), no writes:
+           a tenant's filtered sets beside its own unfiltered one.
 
 A run loads one phase's tenants into a fresh collection, warms the JVM
 with 40 reads that no memo serves (a new filter document each), reads
-every tenant twice, then measures ``--reads`` reads. It prints one JSON
-line: CPU (this process and its JVM) and wall time per read, the share of
-reads that were template hits, and the share of those the pinned tier
-served (null when the service has no ``memo_stats``). Point ``--src`` at
+every tenant's shapes twice, then measures ``--reads`` reads. It prints
+one JSON line: CPU (this process and its JVM) and wall time per read, the
+share of reads that were template hits, and the share of those the pinned
+tier served (null when the service has no ``memo_stats``). Point ``--src`` at
 two checkouts, alternating, to compare them:
 
     python tools/pin_churn.py --phase thrash --src . --seed 1
@@ -42,7 +45,7 @@ WORDS = ("alpha beta gamma delta river stone cloud maple ember quartz "
 
 # phase -> (tenants, points per tenant, payload padding, reads per write)
 PHASES = {"churn": (6, 300, 0, 12), "thrash": (14, 500, 11_000, 0),
-          "overcap": (3, 900, 11_000, 6)}
+          "overcap": (3, 900, 11_000, 6), "filtered": (6, 300, 0, 0)}
 
 
 def _cpu_s(spark) -> float:
@@ -75,12 +78,22 @@ def main() -> None:
     try:
         svc = VectorService(spark, root)
         svc.insert_batch([
-            {"id": i, "user_id": tenants[i // size], "site": "s",
-             "lang": "en",
+            {"id": i, "user_id": tenants[i // size], "site": f"s{i % 3}",
+             "lang": ("en", "de")[i % 2],
              "text": " ".join(rng.choice(WORDS) for _ in range(8))
              + " " + "p" * pad}
             for i in range(n_tenants * size)])
         next_id = n_tenants * size
+
+        def filters(t):
+            """The filter documents read on tenant ``t`` (None: plain)."""
+            if args.phase != "filtered":
+                return [None]
+            first = (t - 1) * size
+            return [None,
+                    {"must": [{"key": "site", "match": {"value": "s1"}}]},
+                    {"must": [{"key": "lang", "match": {"value": "en"}}]},
+                    {"must": [{"has_id": list(range(first, first + 100))}]}]
 
         def read(n, t, flt=None):
             nonlocal next_id
@@ -99,11 +112,14 @@ def main() -> None:
         for n in range(40):  # no memo serves these
             read(0, tenants[n % n_tenants],
                  {"must_not": [{"has_id": [-1 - n]}]})
-        for t in tenants * 2:  # cold shape, then one template hit
-            read(0, t)
+        for t in tenants * 2:  # cold shapes, then one template hit each
+            for flt in filters(t):
+                read(0, t, flt)
         (shape0, pin0), cpu0, t0 = stats(), _cpu_s(spark), time.perf_counter()
         for n in range(args.reads):
-            read(n, tenants[n % n_tenants])
+            t = tenants[n % n_tenants]
+            shapes = filters(t)
+            read(n, t, shapes[n // n_tenants % len(shapes)])
         wall, cpu = time.perf_counter() - t0, _cpu_s(spark) - cpu0
         shape1, pin1 = stats()
         hits = shape1 - shape0

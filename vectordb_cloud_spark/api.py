@@ -19,7 +19,7 @@ import threading
 from typing import NamedTuple
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vectordb_cloud_spark.collections import CollectionCatalog
@@ -32,7 +32,9 @@ from vectordb_cloud_spark.session import local_df
 class _Shape(NamedTuple):
     """What a shape-template memo entry holds beside its view name: the
     rendered SQL and everything the pinned tier needs to answer the same
-    request without it."""
+    request without it — by collecting ``cand`` or, for a filtered set,
+    by deriving it from the tenant's unfiltered pin with ``flt`` (see
+    ``VectorService._pin``)."""
     sql: str
     cand: DataFrame       # the candidate frame the view was registered on
     vcol: str             # the ranked vector column
@@ -42,12 +44,16 @@ class _Shape(NamedTuple):
     thr: float | None
     slot: tuple           # (user_id, vcol, filter JSON): the candidate set
     at: tuple             # (data_dir, stamp): the data version it reads
+    flt: Column | None = None  # the compiled rewritten filter cand applies
 
 
 class _Pin(NamedTuple):
     """A candidate set held on the driver: point ids, the vectors one
-    dimension per row (so each step of the distance loop is one contiguous
-    column op), and the non-vector response columns."""
+    dimension per row (so the distance is one broadcast op), and the
+    non-vector response columns. Filled one of two ways under one
+    admission rule (``VectorService._pin``): collected from the set's
+    candidate frame, or derived — a filtered set cut from its tenant's
+    unfiltered pin."""
     at: tuple
     vcol: str
     ids: np.ndarray
@@ -55,6 +61,13 @@ class _Pin(NamedTuple):
     cols: dict            # payload column -> values, row order
     resp: tuple           # the response columns in schema order, with id
     nbytes: int
+
+    @classmethod
+    def of(cls, at, vcol, ids, block, cols, resp) -> _Pin:
+        """A pin with its held bytes counted: the arrays plus every
+        payload value's Python objects."""
+        return cls(at, vcol, ids, block, cols, resp, ids.nbytes + block.nbytes
+                   + sum(_nbytes(v) for vs in cols.values() for v in vs))
 
     def value(self, src: str, i: int):
         """Row ``i``'s ``src`` column as ``Row.asDict(recursive=True)``
@@ -92,18 +105,20 @@ def _nbytes(v) -> int:
 
 
 def _l2_block(block: np.ndarray, q: np.ndarray) -> np.ndarray:
-    """L2 distances from every column of ``block`` to ``q``, bit-equal to
-    the template's ``zip_with``/``aggregate`` (and ``l2_distance``): in
-    float64, ``(x - y) * (x - y)`` accumulated left to right from 0.0,
-    then the square root. One column op per dimension keeps that order;
-    pairwise or fused sums (norm, BLAS, einsum) change the last bits and
-    reorder near-ties."""
+    """L2 distances from every column of ``block`` to ``q`` (a float64
+    array), bit-equal to the template's ``zip_with``/``aggregate`` (and
+    ``l2_distance``): in float64, ``(x - y) * (x - y)`` accumulated left
+    to right from 0.0, then the square root. The differences and squares
+    are one broadcast op each (float32 widens exactly); the rows are then
+    added in dimension order. Pairwise or fused sums (``sum(axis=0)``,
+    norm, BLAS, einsum) change the last bits and reorder near-ties."""
     acc = np.zeros(block.shape[1])
     if not block.shape[1]:
         return acc  # an empty set: no rows, whatever the query length
-    for j, y in enumerate(q):
-        d = block[j].astype(np.float64) - y
-        acc += d * d
+    d = block - q[:, None]
+    d *= d
+    for row in d:
+        acc += row
     return np.sqrt(acc)
 
 
@@ -160,7 +175,10 @@ class VectorService:
         # hit at one data version on a candidate set (tenant read +
         # rewritten filter, shared by every shape that differs only in
         # limit/offset/threshold/projection) collects it ONCE, bounded,
-        # and later hits rank it with NumPy, bit-equal to _QSHAPE_SQL.
+        # and later hits rank it with NumPy, bit-equal to _QSHAPE_SQL. A
+        # filtered set of a tenant whose unfiltered set is pinned is cut
+        # from that block instead (Spark's filter over a local relation,
+        # no job), from its first template hit on.
         # Keyed by (tenant, vector column, filter JSON); the entry carries
         # its data version, so a write re-pins in place. One byte budget,
         # first come first served within a data version (no eviction of
@@ -509,18 +527,25 @@ class VectorService:
 
     def _pin(self, shape: _Shape) -> _Pin | None:
         """The pinned block of ``shape``'s candidate set at its data
-        version. A set is collected on its SECOND template hit at one
-        data version — the first only marks it — so a set read once per
-        version (a write between reads makes every shape cold again) never
-        pays a collect. A pin never evicts a live one: the collect is
-        bounded by the room the live pins leave (and by the per-set cap),
-        and pins of an older data version are dropped first. So a set
-        costs at most one collect per data version, and a working set
-        larger than the budget cannot thrash — the sets that found no
-        room stay on the template. None keeps the set on the template; a
-        negative mark remembers a set that did not fit: for every version
-        when it is over the per-set cap or cannot be ranked on the
-        driver, for this version when the room was short."""
+        version, filled one of two ways under one admission rule. A
+        filtered set whose tenant's unfiltered set is pinned at the same
+        version is derived from that block (:meth:`_derive_pin`: no scan,
+        no Spark job); any other set is collected from its candidate
+        frame (:meth:`_collect_pin`: one bounded Spark job). Either way
+        the set is stored on its SECOND template hit at one data version
+        — the first only marks it (a derived set still answers that hit)
+        — so a set read once per version (a write between reads makes
+        every shape cold again) never pays a collect. A pin never evicts a
+        live one: it is admitted only into the room the live pins leave
+        (within the per-set cap), and pins of an older data version are
+        dropped first. So a set costs at most one collect per data
+        version, and a working set larger than the budget cannot thrash —
+        the sets that found no room stay on the template, or, when
+        derived, keep being cut from their tenant's block unstored. None
+        keeps the set on the template; a negative mark remembers a
+        collected set that did not fit: for every version when it is over
+        the per-set cap or cannot be ranked in NumPy, for this
+        version when the room was short."""
         per_set = self._PIN_BUDGET_BYTES // 8
         with self._pin_lock:
             pin = self._pins.get(shape.slot)
@@ -529,14 +554,26 @@ class VectorService:
             mark = self._pin_marks.get(shape.slot)
             if mark in (("no", None), ("no", shape.at)):
                 return None
-            if mark != ("seen", shape.at):
+            base = self._pins.get(shape.slot[:2] + (None,))
+            if shape.flt is None or base is None or base.at != shape.at:
+                base = None  # nothing to derive from
+            first = mark != ("seen", shape.at)
+            if first:
                 self._mark(shape.slot, ("seen", shape.at))
-                return None
-            for old in [s for s, p in self._pins.items() if p.at != shape.at]:
-                self._pin_bytes -= self._pins.pop(old).nbytes
-            cap = min(per_set, self._PIN_BUDGET_BYTES - self._pin_bytes)
-        # outside the lock: a Spark job
-        pin = self._collect_pin(shape, cap) if cap > 0 else None
+                if base is None:
+                    return None
+            else:
+                for old in [s for s, p in self._pins.items()
+                            if p.at != shape.at]:
+                    self._pin_bytes -= self._pins.pop(old).nbytes
+                cap = min(per_set, self._PIN_BUDGET_BYTES - self._pin_bytes)
+        # outside the lock: the optimizer's work on the tenant's rows
+        derived = self._derive_pin(shape, base) if base is not None else None
+        if first:
+            return derived
+        pin = derived
+        if pin is None and cap > 0:  # outside the lock: a Spark job
+            pin = self._collect_pin(shape, cap)
         with self._pin_lock:
             held = self._pins.pop(shape.slot, None)
             if held is not None and held.at == shape.at:
@@ -550,6 +587,8 @@ class VectorService:
                 self._pin_bytes += pin.nbytes
                 self._pin_marks.pop(shape.slot, None)
                 return pin
+            if derived is not None:
+                return derived  # still marked: offered again next hit
             self._mark(shape.slot, (
                 "no", None if pin is None and cap == per_set else shape.at))
             return None
@@ -616,14 +655,52 @@ class VectorService:
                  else np.zeros((0, 0), dtype=dtype))
         if not np.isfinite(block).all():
             return None
-        ids = np.array([r["id"] for r in rows], dtype=np.int64)
-        payload_cols = {c: [r[c] for r in rows] for c in payload}
-        nbytes = ids.nbytes + block.nbytes + sum(
-            _nbytes(v) for vs in payload_cols.values() for v in vs)
-        if nbytes > cap:
+        pin = _Pin.of(shape.at, shape.vcol,
+                      np.array([r["id"] for r in rows], dtype=np.int64),
+                      block, {c: [r[c] for r in rows] for c in payload},
+                      tuple(resp))
+        return pin if pin.nbytes <= cap else None
+
+    def _derive_pin(self, shape: _Shape, base: _Pin) -> _Pin | None:
+        """``shape``'s filtered candidate set cut from ``base``, the
+        tenant's unfiltered pin at the same data version. The base's rows
+        — an internal row index, the point id and the payload columns,
+        typed as the candidate frame types them — go to the JVM once as a
+        local relation; ``shape.flt`` filters it and the surviving indexes
+        come back. The optimizer folds a filter over a local relation into
+        a new local relation, which Spark answers without a job, so the
+        set costs no scan, no Spark job and no second collect, and the
+        filter keeps Spark's own semantics. None — the set takes the
+        collect path — when the relation cannot evaluate the filter: an
+        analysis error (e.g. a filter on a vector column, which the
+        relation does not carry), an optimized plan that is not a local
+        relation (e.g. ``local_df`` fell back to a Python RDD), an empty
+        base, or a timestamp column (its Python value does not round-trip
+        exactly)."""
+        from pyspark.errors import AnalysisException
+        from pyspark.sql.types import LongType, StructField, StructType
+
+        if not len(base.ids):
             return None
-        return _Pin(shape.at, shape.vcol, ids, block, payload_cols,
-                    tuple(resp), nbytes)
+        try:
+            schema = StructType(
+                [StructField("__ri", LongType(), False)]
+                + [shape.cand.schema[c] for c in ["id", *base.cols]])
+            if "timestamp" in schema.simpleString():
+                return None
+            rows = list(zip(range(len(base.ids)), base.ids.tolist(),
+                            *base.cols.values()))
+            cut = (local_df(self.spark, rows, schema)
+                   .filter(shape.flt).select("__ri"))
+            plan = cut._jdf.queryExecution().optimizedPlan()
+            if plan.getClass().getSimpleName() != "LocalRelation":
+                return None
+            idx = np.array([r[0] for r in cut.collect()], dtype=np.int64)
+        except (AnalysisException, KeyError, TypeError, ValueError):
+            return None  # a column the rows lack or cannot type: collect
+        return _Pin.of(base.at, base.vcol, base.ids[idx], base.block[:, idx],
+                       {c: [vs[i] for i in idx.tolist()]
+                        for c, vs in base.cols.items()}, base.resp)
 
     def _incarnation(self, name: str, data_dir: str | None, meta=None):
         """Which INCARNATION of a collection name a data dir belongs to:
@@ -822,11 +899,12 @@ class VectorService:
         """A shape-template hit answered from its candidate set's pinned
         block: the rows, keys, key order and Python types that collecting
         the shape's SQL gives. The second hit on a set at one data
-        version pins it (see :meth:`_pin`). None falls through to the
-        DataFrame tiers: no live shape, a set not (yet) pinned, a query
-        vector the template declines (non-finite or empty) or one whose
-        length differs from the stored vectors (Spark ranks the null
-        distances that gives)."""
+        version pins it; a filtered set of a pinned tenant is answered
+        from its tenant's block from the first (see :meth:`_pin`). None
+        falls through to the DataFrame tiers: no live shape, a set not
+        (yet) pinned, a query vector the template declines (non-finite or
+        empty) or one whose length differs from the stored vectors (Spark
+        ranks the null distances that gives)."""
         entry = (self._shape_memo.get(shape_key)
                  if shape_key is not None else None)
         if entry is None:
@@ -1076,7 +1154,8 @@ class VectorService:
                 _, data_dir, stamp, _, _, filt_key, *_ = qshape_key
                 self._register_shape(qshape_key, _Shape(
                     sql, cand, vcol, proj, k, off, thr,
-                    slot=(user_id, vcol, filt_key), at=(data_dir, stamp)))
+                    slot=(user_id, vcol, filt_key), at=(data_dir, stamp),
+                    flt=flt))
         return self._memo_plan(memo_key, shaped)
 
     # response-shaping: Qdrant's with_payload / with_vectors selectors.
