@@ -23,6 +23,18 @@ def _assert_pins_within_budget(svc):
     assert stats["pinned_bytes"] == sum(p.nbytes for p in svc._pins.values())
 
 
+def test_construction_leaves_session_config_alone(spark, tmp_path):
+    """Building a service changes neither the session's call-site
+    capture conf nor PySpark's process-wide cache of it."""
+    import pyspark.errors.utils as peu
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    peu.is_debugging_enabled()  # fill the cache from the session
+    before = (spark.conf.get(key, None), peu._enable_debugging_cache)
+    VectorService(spark, str(tmp_path / "cat"), index_name="ConfVDB", dim=16)
+    assert (spark.conf.get(key, None), peu._enable_debugging_cache) == before
+
+
 def test_insert_search_tenant_isolation(svc):
     """/root/reference/run_tests.py:21-28: user 332 inserts, user 332 finds
     it, user 333 sees nothing."""
@@ -1013,8 +1025,16 @@ def test_pin_memo_bytes_hold_under_threads(svc, monkeypatch):
     finally:
         sys.setswitchinterval(old)
     assert not errors and not any(t.is_alive() for t in threads)
-    assert svc.memo_stats()["pinned_sets"] > 0
     assert len(svc._pin_marks) <= svc._SHAPE_MEMO_CAP
+    _assert_pins_within_budget(svc)
+    # the memo still admits after the race, whatever its last
+    # interleaving left: a fitting set hit twice at a fresh data version
+    # is pinned (the second hit drops the older versions' pins first)
+    fresh = _Shape("", None, "embedding", (), 10, 0, None,
+                   slot=(1, "embedding", None), at=("data.v9", None))
+    svc._pin(fresh)
+    assert svc._pin(fresh) is svc._pins[fresh.slot]
+    assert svc._pins[fresh.slot].at == fresh.at
     _assert_pins_within_budget(svc)
 
 
@@ -1054,10 +1074,14 @@ def test_l2_block_bit_equal_to_column_loop(dtype):
 
 
 def _jobs(spark) -> int:
-    """Spark jobs the application has run so far."""
+    """Spark jobs the application has run so far: the newest job id + 1.
+    The store keeps only the last ``spark.ui.retainedJobs`` jobs, so its
+    size stops counting (and can shrink) in a long test session."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()  # the status store updates async
-    return sc.statusStore().jobsList(None).size()
+    jobs = sc.statusStore().jobsList(None)  # sorted by job id
+    n = jobs.size()
+    return max(jobs.apply(0).jobId(), jobs.apply(n - 1).jobId()) + 1 if n else 0
 
 
 def _pinned_tenant(svc, uid, n=90):

@@ -69,11 +69,15 @@ def test_wider_beam_does_not_reduce_recall(spark, embeddings, graph):
 
 
 def test_graph_append_incremental(spark, embeddings):
-    from vectordb_cloud_spark.operators.graph_ann import knn_graph_append
+    from vectordb_cloud_spark.operators.graph_ann import (
+        knn_graph_append,
+        knn_graph_build_sharded,
+    )
 
     base = embeddings.filter(F.col("vec_id") < 400)
     new = embeddings.filter(F.col("vec_id") >= 400)
-    g0, centers_multi = knn_graph_build(base, degree=8, with_blocking=True)
+    g0, centers_multi = knn_graph_build_sharded(
+        base, degree=8, refine_rounds=1, with_blocking=True)
     g0 = g0.cache()
     g1 = knn_graph_append(embeddings, new, g0, centers_multi, degree=8).cache()
 
@@ -105,15 +109,19 @@ def test_graph_append_incremental(spark, embeddings):
 
 def test_graph_append_banded_fast_path_matches_reroute(spark, embeddings):
     """r14: appending through the PERSISTED (id, block) routing table
-    (builders' return_banded) must produce the identical adjacency to
-    the legacy corpus re-route — the banded table IS the routing, just
+    (the builder's return_banded) must produce the identical adjacency
+    to the legacy corpus re-route — the banded table IS the routing, just
     materialized."""
-    from vectordb_cloud_spark.operators.graph_ann import knn_graph_append
+    from vectordb_cloud_spark.operators.graph_ann import (
+        knn_graph_append,
+        knn_graph_build_sharded,
+    )
 
     base = embeddings.filter(F.col("vec_id") < 400)
     new = embeddings.filter(F.col("vec_id") >= 400)
-    g0, blocking, banded = knn_graph_build(
-        base, degree=8, with_blocking=True, return_banded=True)
+    g0, blocking, banded = knn_graph_build_sharded(
+        base, degree=8, refine_rounds=1, with_blocking=True,
+        return_banded=True)
     g0, banded = g0.cache(), banded.cache()
     slow = knn_graph_append(embeddings, new, g0, blocking, degree=8)
     fast = knn_graph_append(embeddings, new, g0, blocking, degree=8,

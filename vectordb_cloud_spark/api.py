@@ -125,13 +125,20 @@ def _l2_block(block: np.ndarray, q: np.ndarray) -> np.ndarray:
 class VectorService:
     """One prod collection, multi-tenant via user_id filter — the
     reference's deployment shape (/root/reference/QdrantCloud.py:24,
-    README.md:22)."""
+    README.md:22).
+
+    The service leaves its session's configuration as it finds it. A
+    serving session should be built with
+    ``spark.python.sql.dataFrameDebugging.enabled=false``, as
+    ``session.get_spark`` does: that static conf turns off PySpark's
+    per-op call-site capture (SPARK-47274: 3-4 extra py4j round trips
+    on every DataFrame method, ~3 ms each), which alone turns the ~4 ms
+    distinct-text tail into ~40 ms."""
 
     def __init__(self, spark: SparkSession, catalog_root: str,
                  index_name: str = "EverGrowingVDB", dim: int = DEFAULT_DIM,
                  quantization: dict | None = None,
-                 ann_index: dict | None = None,
-                 disable_callsite_capture: bool = True):
+                 ann_index: dict | None = None):
         self.spark = spark
         self.catalog = CollectionCatalog(spark, catalog_root)
         self.index_name = index_name
@@ -197,44 +204,6 @@ class VectorService:
         # oracle rows and tests, reported by memo_stats()
         self._plan_hits = 0
         self._shape_hits = 0
-        # Serving sessions should not pay PySpark's per-op call-site
-        # capture (SPARK-47274: 3-4 extra py4j round trips on every
-        # DataFrame method, ~3 ms each — it alone turns the ~4 ms
-        # distinct-text tail into ~40 ms). session.get_spark() disables it
-        # at build time; when the service is handed a session that was
-        # built elsewhere, set the conf AND drop pyspark's
-        # read-once cache so it takes effect (best-effort — private attr,
-        # guarded for forward compatibility). NOTE: the fallback flip is
-        # PROCESS-GLOBAL (pyspark caches the flag once per process), so an
-        # application that wants call-site capture kept for its other
-        # DataFrame code must construct the service with
-        # ``disable_callsite_capture=False`` — instantiation must not
-        # silently change global behavior for hosts that opted out.
-        if not disable_callsite_capture:
-            return
-        try:
-            try:
-                # static conf: settable only at session build
-                # (session.get_spark does); raises on a live session
-                spark.conf.set(
-                    "spark.python.sql.dataFrameDebugging.enabled", "false")
-            except Exception:
-                pass
-            if (spark.conf.get(
-                    "spark.python.sql.dataFrameDebugging.enabled",
-                    "true").lower() == "false"):
-                import pyspark.errors.utils as _peu
-
-                _peu._enable_debugging_cache = None  # re-read the conf
-            else:
-                # the session was built without the conf and it's static —
-                # flip pyspark's read-once gate directly (private attr,
-                # guarded; the capture is a debug aid, not a semantic)
-                import pyspark.errors.utils as _peu
-
-                _peu._enable_debugging_cache = False
-        except Exception:  # pragma: no cover - forward-compat guard
-            pass
 
     # GET /insert (/root/reference/app.py:36-55)
     def insert(self, id: int, user_id: int, text: str, site: str = "", lang: str = "") -> int:
@@ -1289,124 +1258,6 @@ class VectorService:
             joined.columns, with_vectors=False,
             with_payload=core.get("with_payload", True)))
 
-    def _query_ann_batch(self, user_id: int, entries):
-        """Shared-sidecar service for >=2 ANN-batchable /query bodies
-        (r14): plan ONCE — one narrow tenant count instead of one per
-        request — then either hand the batch to the shared EXACT scan
-        (returns ``"exact"``: the planner's small-matching-set band,
-        where the per-request path serves the exact filtered top-k
-        anyway) or serve every query from ONE pruned scan of the union
-        of their probed inverted lists (``operators.ann.ivf_knn_join``:
-        routing is a broadcast of the tiny centers table, candidates an
-        equi-join on centroid_id) plus ONE batched sample audit, instead
-        of a count + probed scan + audit per request. Returns a
-        {body_index: response_rows} dict; audit-flagged queries are
-        omitted so the caller's per-request fallback re-serves them
-        exact (rare — the correlated-filter case). Returns None when the
-        collection has no plain-IVF sidecar (graph / ivf_sq / quantized
-        kinds serve per-request as before). Per-request parity — ids,
-        distances, response envelope — is pytest-pinned
-        (test_api.py::test_query_batch_ann_shared_parity)."""
-        import json as _json
-        import os as _os
-
-        from vectordb_cloud_spark.functions.vector import l2_distance
-        from vectordb_cloud_spark.operators.ann import ivf_knn_join
-
-        meta = self._safe_meta()
-        if (meta is None or not meta.ann_index
-                or not self.catalog._has_data(self.index_name)):
-            return None
-        name = self.catalog.resolve(self.index_name)
-        adir = self.catalog.build_ann_index(name)
-        with open(_os.path.join(adir, "params.json")) as f:
-            params = _json.load(f)
-        if params.get("kind") != "ivf":
-            return None
-        pred = F.col("user_id") == F.lit(user_id)
-        base = self.catalog.read(name)
-        fst = int(params.get("full_scan_threshold", 10_000) or 0)
-        if fst and base.filter(pred).count() <= fst:
-            return "exact"
-        centers = [(int(i), list(c)) for i, c in params["centers"]]
-        queries = local_df(
-            self.spark,
-            [(i, [float(x) for x in v]) for i, (v, _k) in entries],
-            "query_id int, embedding array<double>",
-        )
-        codes = self.spark.read.parquet(_os.path.join(adir, "ivf")) \
-            .filter(pred)
-        tdir = _os.path.join(adir, "tombstones")
-        if _os.path.isdir(tdir):
-            # incremental-delete tombstones: parity with search_ann's
-            # anti-join — stale layout rows can't displace live ones
-            codes = codes.join(
-                F.broadcast(self.spark.read.parquet(tdir)), "id",
-                "left_anti")
-        ks = {i: k for i, (_v, k) in entries}
-        hits = ivf_knn_join(
-            queries, codes, centers, k=max(ks.values()),
-            nprobe=int(params["nprobe"]), query_id="query_id",
-            query_vec="embedding", point_id="id", point_vec="embedding")
-        per_q: dict[int, list] = {i: [] for i in ks}
-        for r in hits.collect():  # <= |batch| * max_k rows by contract
-            per_q[r["query_id"]].append((int(r["id"]), float(r["dist"])))
-        for i, lst in per_q.items():
-            lst.sort(key=lambda t: (t[1], t[0]))
-            del lst[ks[i]:]
-        flagged: set[int] = set()
-        audit_mod = params.get("audit_sample_mod", 31) if fst else None
-        if audit_mod:
-            # the batched edition of operators.knn.filtered_sample_audit:
-            # ONE pruned scan of the ~1/mod matching sample, cross-joined
-            # against the broadcast (tiny) query batch — a sample row
-            # outside a query's results beating its worst distance (or
-            # ANY such row when fewer than k came back) flags that query
-            qb = local_df(
-                self.spark,
-                [(i, [float(x) for x in v],
-                  per_q[i][-1][1] if len(per_q[i]) >= ks[i] and per_q[i]
-                  else None,
-                  [pid for pid, _ in per_q[i]])
-                 for i, (v, _k) in entries],
-                "query_id int, qv array<double>, worst double, "
-                "res array<bigint>",
-            )
-            samp = pred & (
-                F.pmod(F.xxhash64(F.col("id")), F.lit(int(audit_mod))) == 0)
-            viol = (
-                base.filter(samp).select("id", "embedding")
-                .crossJoin(F.broadcast(qb))
-                .filter(~F.array_contains(F.col("res"), F.col("id")))
-                .withColumn("d", l2_distance(F.col("embedding"),
-                                             F.col("qv")))
-                .filter(F.col("worst").isNull()
-                        | (F.col("d") < F.col("worst")))
-                .select("query_id").distinct().collect()
-            )
-            flagged = {int(r["query_id"]) for r in viol}
-        keep_q = [i for i in ks if i not in flagged]
-        if not keep_q:
-            return {}
-        all_hits = local_df(
-            self.spark,
-            [(i, pid, d) for i in keep_q for pid, d in per_q[i]],
-            "query_id int, id long, dist double",
-        )
-        payload = self.catalog.read_for_user(self.index_name, user_id)
-        joined = payload.join(F.broadcast(all_hits), "id")
-        keep = self._select_response(
-            [c for c in joined.columns if c != "query_id"],
-            with_vectors=False, with_payload=True)
-        rows = joined.select(*keep, "query_id").collect()
-        served: dict[int, list] = {i: [] for i in keep_q}
-        for r in rows:
-            d = r.asDict(recursive=True)
-            served[d.pop("query_id")].append(d)
-        for lst in served.values():
-            lst.sort(key=lambda d: (d["dist"], d["id"]))
-        return served
-
     def query_batch(self, user_id: int, bodies: list[dict]) -> list[list[dict]]:
         """Qdrant POST /points/query/batch, tenant-scoped. Requests whose
         primary ranking is a plain dense L2 top-k share ONE corpus scan —
@@ -1434,10 +1285,12 @@ class VectorService:
         resolve from it; a batch never creates a pin).
 
         Anything else (prefetch, filters, fusion, group_by, best_score,
-        lookup_from, mmr, ...) dispatches through :meth:`query` per
-        request. Results align with the input order; a missing referenced
-        point raises ``PointNotFoundError`` exactly as per-request (the
-        HTTP layer maps it to 404).
+        lookup_from, mmr, ``params``, ...) dispatches through
+        :meth:`query` per request; a ``params.exact=false`` body thus
+        takes the one ANN route (``_query_ann`` → the collection's
+        sidecar search), one per body. Results align with the input
+        order; a missing referenced point raises ``PointNotFoundError``
+        exactly as per-request (the HTTP layer maps it to 404).
 
         ROUTING RULE (r14, measured — VERDICT r13 #2): the shared scan
         engages at >= 2 batchable entries; a single batchable body
@@ -1507,47 +1360,10 @@ class VectorService:
                         pos[0] + neg[0], k)
             return None
 
-        def _classify_ann(b: dict):
-            """(qvec, k) for ANN-batchable bodies: Qdrant's plain dense
-            search carrying exactly ``params: {"exact": false}`` — the
-            ANN default — and nothing else beside ``limit``. Filters,
-            offset, score_threshold, hnsw_ef, and quantization knobs keep
-            per-request dispatch (each changes the serve plan)."""
-            if set(b) - {"query", "limit", "params"}:
-                return None
-            if b.get("params") != {"exact": False}:
-                return None
-            try:
-                k = int(b.get("limit", 10))
-            except (TypeError, ValueError):
-                return None
-            if k < 1:
-                return None  # degenerate limits: per-request semantics
-            v = self._query_dense_vec(
-                {kk: vv for kk, vv in b.items() if kk != "params"})
-            return None if v is None else (v, k)
-
         results: list[list[dict] | None] = [None] * len(bodies)
         entries = [(i, c) for i, c in
                    ((i, _classify(b)) for i, b in enumerate(bodies))
                    if c is not None]
-        # r14: ANN-batchable bodies (params.exact=false — Qdrant's
-        # default search mode) share the plain-IVF sidecar: ONE planning
-        # count + ONE pruned scan of the union of probed inverted lists +
-        # ONE batched sample audit instead of each per request. The
-        # planner's small-matching-set band folds them into the shared
-        # EXACT scan below (which is what per-request would serve).
-        ann_entries = [(i, c) for i, c in
-                       ((i, _classify_ann(b)) for i, b in enumerate(bodies))
-                       if c is not None]
-        if len(ann_entries) >= 2:
-            plan = self._query_ann_batch(user_id, ann_entries)
-            if plan == "exact":
-                entries = entries + [
-                    (i, ("dense", v, [], k)) for i, (v, k) in ann_entries]
-            elif plan is not None:
-                for i, rows_i in plan.items():
-                    results[i] = rows_i
         if len(entries) >= 2:
             # the tenant's unfiltered pin, when a read made one, serves
             # the whole shared leg on the driver (a batch never pins)

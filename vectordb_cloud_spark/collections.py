@@ -1982,8 +1982,8 @@ class CollectionCatalog:
 
         Deletes ride the epoch too (r14): the immutable layout files
         keep the stale rows, so deleted ids become TOMBSTONES — a
-        skinny id table in the sidecar that ``search_ann`` (and the
-        batched ``_query_ann_batch``) anti-joins out before the top-k;
+        skinny id table in the sidecar that ``search_ann`` anti-joins
+        out before the top-k;
         a tombstoned id re-inserted later is subtracted back out, and
         the rebuild clears the table.
 
@@ -2130,19 +2130,6 @@ class CollectionCatalog:
                     params["oversample"] = int(spec.get("oversample", 4))
             else:
                 spec = meta.ann_index["graph"]
-                # default to the SHARDED builder: center-literal count is
-                # capped at any corpus size (the plain builder's n/128
-                # center literals blow up the plan past ~10^7 rows — its
-                # own docstring), and it degenerates to the unsharded
-                # candidate structure on small corpora (n_shards=1).
-                # `builder: "blocked"` keeps the legacy form for
-                # comparisons; anything else is a config error, not a
-                # silent sharded build.
-                builder = spec.get("builder", "sharded")
-                if builder not in ("sharded", "blocked"):
-                    raise ValueError(
-                        f"unknown graph builder {builder!r}: "
-                        "expected 'sharded' or 'blocked'")
                 # r14 (VERDICT r13 #3): a write-moved version tries the
                 # INCREMENTAL maintenance path first — append the write's
                 # delta through the persisted blocking instead of a full
@@ -2152,15 +2139,14 @@ class CollectionCatalog:
                     name, meta, spec, df, vector_col, id_col, stage)
                 if params is None:
                     params = self._full_graph_build(
-                        spec, df, vector_col, id_col, stage, builder, n_total)
+                        spec, df, vector_col, id_col, stage, n_total)
             params["n_total"] = n_total
             return params
 
         return self._sidecar(name, meta, "ann", build, vector_col=vector_col)
 
     def _full_graph_build(self, spec: dict, df: DataFrame, vector_col: str,
-                          id_col: str, stage: str, builder: str,
-                          n_total: int) -> dict:
+                          id_col: str, stage: str, n_total: int) -> dict:
         """Full graph sidecar build (the from-scratch path): adjacency +
         blocking + coarse entry sample materialized into ``stage``,
         returns the params dict. The blocking is persisted
@@ -2168,21 +2154,18 @@ class CollectionCatalog:
         same routing (``_incremental_graph_params``) instead of paying
         this build again."""
         from vectordb_cloud_spark.operators.graph_ann import (
-            blocking_to_json, graph_entry_points, knn_graph_build,
-            knn_graph_build_sharded)
+            blocking_to_json, graph_entry_points, knn_graph_build_sharded)
 
-        if builder == "blocked":
-            graph, blocking, banded = knn_graph_build(
-                df, degree=int(spec.get("degree", 8)), id_col=id_col,
-                vec_col=vector_col,
-                refine_rounds=int(spec.get("refine_rounds", 1)),
-                with_blocking=True, return_banded=True)
-        else:
-            graph, blocking, banded = knn_graph_build_sharded(
-                df, degree=int(spec.get("degree", 8)), id_col=id_col,
-                vec_col=vector_col,
-                refine_rounds=int(spec.get("refine_rounds", 2)),
-                with_blocking=True, return_banded=True)
+        # the SHARDED builder: its center-literal count is capped at any
+        # corpus size (knn_graph_build's n/128 center literals blow up the
+        # plan past ~10^7 rows — its own docstring), and it degenerates
+        # to the unsharded candidate structure on small corpora
+        # (n_shards=1)
+        graph, blocking, banded = knn_graph_build_sharded(
+            df, degree=int(spec.get("degree", 8)), id_col=id_col,
+            vec_col=vector_col,
+            refine_rounds=int(spec.get("refine_rounds", 2)),
+            with_blocking=True, return_banded=True)
         graph.select("src", "dst", F.col("dist").cast("double")).write \
             .mode("overwrite").parquet(os.path.join(stage, "graph"))
         # persist the blocking + the skinny (id, block) routing table so
@@ -2235,30 +2218,6 @@ class CollectionCatalog:
                 # graph_beam_search docstring
                 "audit_sample_mod": spec.get("audit_sample_mod", 31)}
 
-    def _filtered_sample_audit(self, name: str, result_df: DataFrame,
-                               predicate, query_vector: list[float], k: int,
-                               vector_col: str, id_col: str,
-                               mod: int) -> DataFrame:
-        """r14 (VERDICT r13 #5): the graph family's post-navigation sample
-        audit, extended to the IVF kinds. The pushed-down filtered IVF
-        search is exact WITHIN the probed partitions, but a
-        geometry-correlated filter's matching set can sit outside every
-        probed centroid (RECALL.md's own caveat: IVF's probed region
-        covered the correlated clusters on the r13 fixture 'but nothing
-        guarantees it'). One pruned scan of a deterministic ~1/mod slice
-        of the matching rows checks for any point beating the result's
-        worst distance (or for ANY matching point when fewer than k came
-        back); a hit upgrades the query to the exact filtered top-k.
-        Result ids/dists arrive driver-side (<= k rows by contract), the
-        same envelope the graph audit uses. Delegates to
-        ``operators.knn.filtered_sample_audit`` (shared with the recall
-        harness's measured series)."""
-        from vectordb_cloud_spark.operators.knn import filtered_sample_audit
-
-        return filtered_sample_audit(
-            self.read(name), result_df, predicate, query_vector, k,
-            vector_col=vector_col, id_col=id_col, mod=mod)
-
     def search_ann(self, name: str, query_vector: list[float], k: int = 10,
                    predicate=None, vector_col: str = "embedding",
                    id_col: str = "id", beam: int | None = None) -> DataFrame:
@@ -2278,7 +2237,8 @@ class CollectionCatalog:
         Qdrant's search-time ``params.hnsw_ef`` (ignored by IVF layouts,
         as Qdrant ignores hnsw_ef for non-HNSW indexes)."""
         from vectordb_cloud_spark.operators.graph_ann import graph_beam_search
-        from vectordb_cloud_spark.operators.knn import exact_rescore_topk
+        from vectordb_cloud_spark.operators.knn import (
+            exact_rescore_topk, filtered_sample_audit)
 
         name = self.resolve(name)
         adir, params = self._ann_sidecar(name, vector_col, id_col)
@@ -2329,9 +2289,9 @@ class CollectionCatalog:
             if predicate is not None and audit_mod:
                 # r14: the correlated-filter sample audit, IVF edition —
                 # the matching set may sit outside every probed centroid
-                res = self._filtered_sample_audit(
-                    name, res, predicate, query_vector, k,
-                    vector_col, id_col, audit_mod)
+                res = filtered_sample_audit(
+                    self.read(name), res, predicate, query_vector, k,
+                    vector_col=vector_col, id_col=id_col, mod=audit_mod)
             return res
         if params["kind"] == "ivf_sq":
             # the sidecar keeps payload columns, so the predicate prunes
@@ -2358,9 +2318,9 @@ class CollectionCatalog:
             res = exact_rescore_topk(base, cand, query_vector, k,
                                      id_col=id_col, vector_col=vector_col)
             if predicate is not None and audit_mod:
-                res = self._filtered_sample_audit(
-                    name, res, predicate, query_vector, k,
-                    vector_col, id_col, audit_mod)
+                res = filtered_sample_audit(
+                    self.read(name), res, predicate, query_vector, k,
+                    vector_col=vector_col, id_col=id_col, mod=audit_mod)
             return res
         graph = self._read_handle(os.path.join(adir, "graph"))
         entry_ids = params["entry_ids"]

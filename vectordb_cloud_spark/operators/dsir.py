@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 DEFAULT_BUCKETS = 10_000  # the paper's hashed feature dimensionality
+# dsir_select checkpoints the raw corpus's features at or below this size
+_MATERIALIZE_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _hash64(col: Column, hash_fn: str) -> Column:
@@ -184,38 +186,32 @@ def dsir_select(raw_docs: DataFrame, target_docs: DataFrame, n: int,
                 id_col: str = "doc_id", text_col: str = "text",
                 n_buckets: int = DEFAULT_BUCKETS, seed: int = 42,
                 temperature: float = 1.0, alpha: float = 1.0,
-                hash_fn: str = "xxhash64",
-                materialize_features: bool | None = None) -> DataFrame:
+                hash_fn: str = "xxhash64") -> DataFrame:
     """The end-to-end DSIR recipe: fit both hashed-ngram models, score the
     raw corpus, Gumbel-top-k sample ``n`` target-resembling documents.
 
-    ``materialize_features`` — the raw corpus's (id, bucket) feature rows
-    feed BOTH the raw unigram model and the scoring pass. Materializing
-    them once (localCheckpoint) halves the tokenize→bigram→hash map work
-    (r14: 3.6s → 1.75s on a 5k-doc fixture where plan overhead dominates),
-    but the trade INVERTS with volume: at 500k docs / 40M tokens the
-    checkpoint write of ~160 feature rows per doc costs 2.5× the map pass
-    it saves (r15 core-scaling diagnosis), and at real corpus scale it
-    would pin corpus-sized state in executor storage. Default (None):
-    materialize only when the corpus's optimizer size estimate is under
-    ``SPARK_GRAFT_DSIR_MATERIALIZE_MAX_BYTES`` (default 64 MB — the
-    checkpoint is plan-overhead arbitrage there); larger corpora recompute
-    the embarrassingly-parallel map once per consumer instead. The
-    estimate comes from plan statistics (parquet footers) — no job is
-    fired to decide. Results are identical either way."""
-    if materialize_features is None:
-        import os
-
-        cap = int(os.environ.get("SPARK_GRAFT_DSIR_MATERIALIZE_MAX_BYTES",
-                                 str(64 * 1024 * 1024)))
-        try:
-            est = int(str(
-                raw_docs._jdf.queryExecution().optimizedPlan().stats()
-                .sizeInBytes()
-            ))  # noqa: SLF001 - read-only plan statistics, no job
-            materialize_features = est <= cap
-        except Exception:  # pragma: no cover - stats API drift
-            materialize_features = True
+    The raw corpus's (id, bucket) feature rows feed BOTH the raw unigram
+    model and the scoring pass. Materializing them once (localCheckpoint)
+    halves the tokenize→bigram→hash map work (r14: 3.6s → 1.75s on a
+    5k-doc fixture where plan overhead dominates), but the trade INVERTS
+    with volume: at 500k docs / 40M tokens the checkpoint write of ~160
+    feature rows per doc costs 2.5× the map pass it saves (r15
+    core-scaling diagnosis), and at real corpus scale it would pin
+    corpus-sized state in executor storage. So the features are
+    materialized only when the corpus's optimizer size estimate is at
+    most ``_MATERIALIZE_MAX_BYTES`` (64 MiB — the checkpoint is
+    plan-overhead arbitrage there); larger corpora recompute the
+    embarrassingly-parallel map once per consumer instead. The estimate
+    comes from plan statistics (parquet footers) — no job is fired to
+    decide. Results are identical either way."""
+    try:
+        est = int(str(
+            raw_docs._jdf.queryExecution().optimizedPlan().stats()
+            .sizeInBytes()
+        ))  # noqa: SLF001 - read-only plan statistics, no job
+        materialize_features = est <= _MATERIALIZE_MAX_BYTES
+    except Exception:  # pragma: no cover - stats API drift
+        materialize_features = True
     raw_feats = hashed_ngram_features(
         raw_docs, id_col, text_col, n_buckets, hash_fn
     )

@@ -281,11 +281,11 @@ def knn_graph_build(
     refine_rounds: int = 1,
     seed: int = 42,
     max_train_rows: int = 100_000,
-    with_blocking: bool = False,
-    return_banded: bool = False,
 ):
     """Build a symmetric kNN graph: ``(src, dst, dist)`` with up to
-    ``degree`` out-edges per node.
+    ``degree`` out-edges per node. The collection sidecar builds with
+    ``knn_graph_build_sharded``, which also hands out the blocking and
+    routing rows incremental appends need.
 
     Candidates come from ``n_blockings`` INDEPENDENT k-means partitions of
     the corpus (different seeds over one driver-side sample — the
@@ -321,14 +321,7 @@ def knn_graph_build(
         _fit_blocking(X, n_blocks, seed + 7919 * s) for s in range(n_blockings)
     ]
     banded = _banded(vecs0, centers_multi)
-    graph = _graph_from_banded(vecs0, banded, degree, refine_rounds)
-    if with_blocking and return_banded:
-        return graph, centers_multi, banded.select("id", "block")
-    if with_blocking:
-        return graph, centers_multi
-    if return_banded:
-        return graph, banded.select("id", "block")
-    return graph
+    return _graph_from_banded(vecs0, banded, degree, refine_rounds)
 
 
 def _graph_from_banded(
@@ -674,18 +667,17 @@ def knn_graph_append(
     for re-routed ids). With it the append never re-routes the corpus —
     touched-block members come from one pruned scan of the skinny table
     (r14: re-routing dominated the append at 100k rows, 43.6 s of a
-    69.8 s full build; the builders' ``return_banded=True`` hands the
+    69.8 s full build; the builder's ``return_banded=True`` hands the
     table out for free since routing is materialized anyway). Without
     it, the corpus is re-routed through ``centers_multi`` (legacy
     sidecars).
 
     ``points`` is the FULL post-append corpus (old ∪ new; vectors live in
     the base table, the graph holds only ids), ``centers_multi`` the
-    blocking kept from ``knn_graph_build(..., with_blocking=True)`` OR the
     ``(centers_multi, n_shards, shard_salts)`` tuple from
-    ``knn_graph_build_sharded`` — routing (including the shard term) is
-    shared (``_banded``), so appends land in the same blocks either
-    family built from. The
+    ``knn_graph_build_sharded(..., with_blocking=True)`` — routing
+    (including the shard term) is shared (``_banded``), so appends land
+    in the blocks the build routed to. The
     batch is routed to its blocks, candidate pairs are (new × members of
     touched blocks) only — O(batch · block_size), not O(n) — and each new
     edge updates BOTH endpoints' adjacency lists (the existing node keeps
