@@ -1485,6 +1485,22 @@ def test_query_params_quantization_and_hnsw_ef(spark, tmp_path):
     assert len(wide) == 5 and "dist" in wide[0]
 
 
+def test_query_ann_zero_limit_on_graph_is_empty(spark, tmp_path):
+    """A filtered ``limit: 0`` ANN body on a graph collection whose tenant
+    is above ``full_scan_threshold`` takes the navigated band and answers
+    ``[]``, like the exact path — not an IndexError from the audit."""
+    svc = VectorService(spark, str(tmp_path / "gz0"), index_name="G0",
+                        dim=8, ann_index={"graph": {
+                            "degree": 4, "beam": 4, "max_hops": 2,
+                            "full_scan_threshold": 4}})
+    assert svc.insert_batch([
+        {"id": i, "user_id": 3, "text": f"graph point {i}", "site": "s",
+         "lang": "en"} for i in range(30)]) == 30
+    body = {"query": {"text": "graph point 7"}, "limit": 0,
+            "params": {"exact": False}}
+    assert svc.query(3, body) == []
+
+
 def test_query_batch_ann_shared_parity(spark, tmp_path):
     """r14: >=2 plain dense bodies carrying params {"exact": false} —
     Qdrant's ANN default — share the plain-IVF sidecar: one planning

@@ -7,14 +7,30 @@ from pyspark.sql import functions as F
 from vectordb_cloud_spark.operators.ann import brute_force_topk, recall_at_k
 from vectordb_cloud_spark.operators.graph_ann import (
     graph_beam_search,
+    graph_widened_search,
     knn_graph_build,
     knn_graph_persist,
 )
+from vectordb_cloud_spark.operators.knn import planned_topk
 
 
 @pytest.fixture(scope="module")
 def graph(spark, embeddings):
     return knn_graph_build(embeddings, degree=8, refine_rounds=1).cache()
+
+
+def _planned(points, graph, qv, k, filters, full_scan_threshold,
+             audit_sample_mod=31, filtered_beam_cap=None, n_total=None,
+             **nav):
+    """Graph search behind the shared filtered-ANN planner, the way
+    ``CollectionCatalog.search_ann`` serves a graph sidecar."""
+    return planned_topk(
+        points, filters, qv, k,
+        lambda m: graph_widened_search(points, graph, qv, m, k=k,
+                                       cap=filtered_beam_cap,
+                                       n_total=n_total, filters=filters,
+                                       **nav),
+        full_scan_threshold, audit_sample_mod)
 
 
 def test_graph_degree_bound_and_no_self_loops(graph, embeddings):
@@ -164,9 +180,9 @@ def test_full_scan_threshold_planner_crossover(spark, embeddings, graph):
           embeddings.filter(F.col("vec_id") == 0).first()["embedding"]]
     sparse_pred = F.pmod(F.col("vec_id"), F.lit(50)) == 0  # 10 of 500
     exact = brute_force_topk(embeddings, qv, k=5, filters=sparse_pred)
-    planned = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                                max_hops=4, filters=sparse_pred,
-                                full_scan_threshold=100)
+    planned = _planned(embeddings, graph, qv, k=5, beam=16,
+                       max_hops=4, filters=sparse_pred,
+                       full_scan_threshold=100)
     # below threshold: EXACT filtered top-k, ids and distances identical
     assert [(r["vec_id"], round(r["dist"], 9)) for r in planned.collect()] \
         == [(r["vec_id"], round(r["dist"], 9)) for r in exact.collect()]
@@ -177,36 +193,36 @@ def test_full_scan_threshold_planner_crossover(spark, embeddings, graph):
     dense_pred = F.col("vec_id") >= 0
     beam_only = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
                                   max_hops=4, filters=dense_pred)
-    planned_dense = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                                      max_hops=4, filters=dense_pred,
-                                      full_scan_threshold=100,
-                                      audit_sample_mod=None)
+    planned_dense = _planned(embeddings, graph, qv, k=5, beam=16,
+                             max_hops=4, filters=dense_pred,
+                             full_scan_threshold=100,
+                             audit_sample_mod=None)
     assert [r["vec_id"] for r in planned_dense.collect()] \
         == [r["vec_id"] for r in beam_only.collect()]
     # a filter matching NOTHING under the threshold returns empty, not
     # an error
     none_pred = F.col("vec_id") < 0
-    assert graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                             max_hops=4, filters=none_pred,
-                             full_scan_threshold=100).count() == 0
+    assert _planned(embeddings, graph, qv, k=5, beam=16,
+                    max_hops=4, filters=none_pred,
+                    full_scan_threshold=100).count() == 0
     # middle band (matches > threshold, needed beam <= cap): navigation
     # runs with the beam WIDENED to 2kN/m — only matching ids return,
     # and recall against the filtered exact baseline holds where the
     # registry-beam post-filter collapses (RECALL.md r13 series)
     half_pred = F.pmod(F.col("vec_id"), F.lit(2)) == 0  # 250 of 500
     exact_half = brute_force_topk(embeddings, qv, k=5, filters=half_pred)
-    widened = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                                max_hops=4, filters=half_pred,
-                                full_scan_threshold=100)
+    widened = _planned(embeddings, graph, qv, k=5, beam=16,
+                       max_hops=4, filters=half_pred,
+                       full_scan_threshold=100)
     rows = widened.collect()
     assert len(rows) == 5 and all(r["vec_id"] % 2 == 0 for r in rows)
     assert recall_at_k(widened, exact_half, "vec_id") >= 0.6
     # needed beam above the cap: exact filtered top-k serves (identical
     # to brute force, not merely overlapping)
-    capped = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                               max_hops=4, filters=half_pred,
-                               full_scan_threshold=100,
-                               filtered_beam_cap=8)
+    capped = _planned(embeddings, graph, qv, k=5, beam=16,
+                      max_hops=4, filters=half_pred,
+                      full_scan_threshold=100,
+                      filtered_beam_cap=8)
     assert [(r["vec_id"], round(r["dist"], 9)) for r in capped.collect()] \
         == [(r["vec_id"], round(r["dist"], 9)) for r in exact_half.collect()]
 
@@ -219,23 +235,23 @@ def test_planner_uses_supplied_n_total(spark, embeddings, graph):
     qv = [float(x) for x in
           embeddings.filter(F.col("vec_id") == 0).first()["embedding"]]
     half_pred = F.pmod(F.col("vec_id"), F.lit(2)) == 0  # 250 of 500
-    counted = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                                max_hops=4, filters=half_pred,
-                                full_scan_threshold=100,
-                                audit_sample_mod=None)
-    supplied = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                                 max_hops=4, filters=half_pred,
-                                 full_scan_threshold=100,
-                                 audit_sample_mod=None, n_total=500)
+    counted = _planned(embeddings, graph, qv, k=5, beam=16,
+                       max_hops=4, filters=half_pred,
+                       full_scan_threshold=100,
+                       audit_sample_mod=None)
+    supplied = _planned(embeddings, graph, qv, k=5, beam=16,
+                        max_hops=4, filters=half_pred,
+                        full_scan_threshold=100,
+                        audit_sample_mod=None, n_total=500)
     assert [(r["vec_id"], round(r["dist"], 9)) for r in supplied.collect()] \
         == [(r["vec_id"], round(r["dist"], 9)) for r in counted.collect()]
     # inflated N: needed = 2*5*10^9/250 >> default cap -> exact path,
     # identical to brute force — proves n_total feeds the decision
     exact = brute_force_topk(embeddings, qv, k=5, filters=half_pred)
-    inflated = graph_beam_search(embeddings, graph, qv, k=5, beam=16,
-                                 max_hops=4, filters=half_pred,
-                                 full_scan_threshold=100,
-                                 audit_sample_mod=None, n_total=10**9)
+    inflated = _planned(embeddings, graph, qv, k=5, beam=16,
+                        max_hops=4, filters=half_pred,
+                        full_scan_threshold=100,
+                        audit_sample_mod=None, n_total=10**9)
     assert [(r["vec_id"], round(r["dist"], 9)) for r in inflated.collect()] \
         == [(r["vec_id"], round(r["dist"], 9)) for r in exact.collect()]
 
@@ -260,21 +276,40 @@ def test_filtered_audit_catches_correlated_filter(spark):
     pred = F.col("vec_id") >= 200  # 200 matches > threshold 50
     seeds = [0, 1, 2, 3]  # force navigation to start inside A
     exact = brute_force_topk(pts.filter(pred), qv, k=5)
-    audited = graph_beam_search(pts, graph, qv, k=5, beam=16, max_hops=3,
-                                filters=pred, entry_ids=seeds,
-                                full_scan_threshold=50,
-                                audit_sample_mod=5)
+    audited = _planned(pts, graph, qv, k=5, beam=16, max_hops=3,
+                       filters=pred, entry_ids=seeds,
+                       full_scan_threshold=50,
+                       audit_sample_mod=5)
     assert [(r["vec_id"], round(r["dist"], 9)) for r in audited.collect()] \
         == [(r["vec_id"], round(r["dist"], 9)) for r in exact.collect()]
     # audit off: navigation never reaches cluster B (A's kNN edges stay
     # inside A), so the unaudited result misses some/all of the true
     # filtered top-k — the documented correlated failure
-    raw = graph_beam_search(pts, graph, qv, k=5, beam=16, max_hops=3,
-                            filters=pred, entry_ids=seeds,
-                            full_scan_threshold=50, audit_sample_mod=None)
+    raw = _planned(pts, graph, qv, k=5, beam=16, max_hops=3,
+                   filters=pred, entry_ids=seeds,
+                   full_scan_threshold=50, audit_sample_mod=None)
     got = [r["vec_id"] for r in raw.collect()]
     want = [r["vec_id"] for r in exact.collect()]
     assert got != want
+
+
+def test_planner_zero_limit_on_graph_route(spark):
+    """A zero limit through the navigated band (matches above the
+    threshold) answers empty: the audit's k <= 0 guard covers the graph
+    route too, which once indexed the worst of an empty result."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    pts = spark.createDataFrame(
+        [(i, rng.rand(8).tolist()) for i in range(60)],
+        "vec_id long, embedding array<double>")
+    graph = knn_graph_build(pts, degree=6, refine_rounds=0)
+    qv = [0.5] * 8
+    pred = F.col("vec_id") >= 0  # 60 matches > threshold 1
+    assert _planned(pts, graph, qv, k=0, filters=pred,
+                    full_scan_threshold=1).collect() == []
+    assert _planned(pts, graph, qv, k=3, filters=pred,
+                    full_scan_threshold=1).count() == 3
 
 
 def test_filtered_beam_search_matches_unfiltered_when_filter_is_true(

@@ -92,6 +92,14 @@ def main():
     from vectordb_cloud_spark.plans.inspect import count_exchanges, explain_str
     from vectordb_cloud_spark.session import get_spark
 
+    # a showcase plan is about the SHAPE, not registry membership: rows
+    # rotated out of the registry still resolve from the library
+    queries = {**qmod.library(), **qmod.registry()}
+    unknown = sorted(set(SHOWCASE) - set(queries))
+    if unknown:
+        raise SystemExit(f"showcase names in neither registry() nor "
+                         f"library(): {', '.join(unknown)}")
+
     spark = get_spark("dump-plans")
     out = [
         "# PLANS — physical plans of the flagship queries",
@@ -101,13 +109,8 @@ def main():
         "minimal exchanges. Regenerate after optimizer-relevant changes.",
         "",
     ]
-    registry = qmod.registry()
     for name, why in SHOWCASE.items():
-        # rotated-out rows keep their functions module-level; resolve from
-        # the registry first, then the module (a showcase plan is about the
-        # SHAPE, not registry membership)
-        fn = registry.get(name) or getattr(qmod, name)
-        df = fn(spark, sf_dir)
+        df = queries[name](spark, sf_dir)
         plan = explain_str(df)
         out.append(f"## {name}")
         out.append("")

@@ -261,7 +261,7 @@ def main():
             "corpus, often wide enough to cover far matching clusters on",
             "this fixture — but nothing guarantees it). The shipped",
             "planner closes this at runtime with the",
-            "SAMPLE AUDIT (graph_beam_search audit_sample_mod, default",
+            "SAMPLE AUDIT (planned_topk, shared by every ANN kind; default",
             "1/31): after navigation, one pruned scan of a deterministic",
             "slice of the MATCHING rows checks for any point beating the",
             "result's worst distance; a hit means navigation missed the",

@@ -2123,8 +2123,8 @@ class CollectionCatalog:
                     # selectivity (RECALL.md r13 filtered series)
                     full_scan_threshold=int(
                         spec.get("full_scan_threshold", 10_000)),
-                    # filtered-search sample audit (the graph family's
-                    # knob, IVF edition) — None/0 disables
+                    # filtered-search sample audit
+                    # (operators.knn.planned_topk) — None/0 disables
                     audit_sample_mod=spec.get("audit_sample_mod", 31))
                 if kind == "ivf_sq":
                     params["oversample"] = int(spec.get("oversample", 4))
@@ -2208,92 +2208,69 @@ class CollectionCatalog:
                 # full_scan_threshold points serve exact; denser
                 # filters widen the beam to ~2kN/m up to
                 # filtered_beam_cap, beyond which exact serves
-                # (graph_beam_search docstring; RECALL.md r13
-                # filtered series). cap 0/None = operator default
-                # max(8*beam, 512).
+                # (operators.knn.planned_topk, graph_widened_search;
+                # RECALL.md r13 filtered series). cap 0/None =
+                # default max(8*beam, 512).
                 "full_scan_threshold": int(
                     spec.get("full_scan_threshold", 10_000)),
                 "filtered_beam_cap": spec.get("filtered_beam_cap"),
                 # r13 sample audit: None/0 disables; see
-                # graph_beam_search docstring
+                # operators.knn.filtered_sample_audit
                 "audit_sample_mod": spec.get("audit_sample_mod", 31)}
 
     def search_ann(self, name: str, query_vector: list[float], k: int = 10,
                    predicate=None, vector_col: str = "embedding",
                    id_col: str = "id", beam: int | None = None) -> DataFrame:
         """Top-k through the collection's attached ANN index (nprobe/beam
-        from the config). Filters compose Qdrant-style: IVF pushes them
-        into the pruned scan; the graph family plans filtered queries
-        THREE ways by matching-count ``m`` (one narrow planning count):
-        exact filtered top-k when ``m <= full_scan_threshold`` (config
-        knob, default 10k, Qdrant's rule of the same name), unfiltered
-        navigation with the beam widened to ``~2kN/m`` in the middle
-        band (post-filtered navigation alone measured 0.812/0.363/0.025
-        at 10%/1%/0.1% uncorrelated selectivity; widening restores the
-        10% band to 0.975), and exact again past ``filtered_beam_cap``
-        (graph_beam_search docstring; RECALL.md r13 filtered series,
-        incl. the correlated adversarial case both ANN families lose).
-        ``beam`` overrides the graph config's beam width for this query —
+        from the config). Every kind plans a filtered query through the
+        one planner, ``operators.knn.planned_topk`` (Qdrant's rule of the
+        same name): one narrow planning count ``m``; the exact filtered
+        top-k when ``m <= full_scan_threshold`` (config knob, default
+        10k); otherwise the kind's own search, then the sample audit
+        (``audit_sample_mod``, default 31), which upgrades a result that
+        missed the matching set to exact. The kinds differ only in that
+        search: IVF and IVF-SQ push the predicate into their pruned
+        scans; the graph navigates unfiltered with the beam widened to
+        ``~2kN/m`` (post-filtered navigation alone measured
+        0.812/0.363/0.025 at 10%/1%/0.1% uncorrelated selectivity;
+        widening restores the 10% band to 0.975) and declines to exact
+        past ``filtered_beam_cap`` (RECALL.md r13 filtered series, incl.
+        the correlated adversarial case both ANN families lose without
+        the audit). ``full_scan_threshold`` 0 serves the raw index math:
+        no count, no audit (the oracle fixtures pin it). ``beam``
+        overrides the graph config's beam width for this query —
         Qdrant's search-time ``params.hnsw_ef`` (ignored by IVF layouts,
         as Qdrant ignores hnsw_ef for non-HNSW indexes)."""
-        from vectordb_cloud_spark.operators.graph_ann import graph_beam_search
         from vectordb_cloud_spark.operators.knn import (
-            exact_rescore_topk, filtered_sample_audit)
+            exact_rescore_topk, knn_search, planned_topk)
 
         name = self.resolve(name)
         adir, params = self._ann_sidecar(name, vector_col, id_col)
-        if predicate is not None and params["kind"] in ("ivf", "ivf_sq"):
-            # the uniform full_scan_threshold rule for the IVF kinds (the
-            # graph kind plans inside graph_beam_search, which also owns
-            # the middle-band beam widening): a filter matching at most
-            # threshold points serves exact — its matching set may sit
-            # entirely OUTSIDE the probed lists, the one selectivity band
-            # where pushdown-into-probed-scan loses recall. One narrow
-            # planning count (predicate columns only, never vectors).
-            fst = int(params.get("full_scan_threshold", 10_000))
-            if fst:
-                from vectordb_cloud_spark.operators.knn import knn_search
+        points = self.read(name)
 
-                base = self.read(name)
-                if base.filter(predicate).count() <= fst:
-                    return knn_search(
-                        base.filter(predicate), query_vector, k=k,
-                        vector_col=vector_col, tiebreak=id_col,
-                    ).select(id_col, "dist")
-        # the audit belongs to the PLANNER (like the graph family's: active
-        # only when full_scan_threshold engages) — a collection that pins
-        # full_scan_threshold 0 to serve the raw index math (the oracle
-        # fixtures) opts out of the audit with it
-        audit_mod = (params.get("audit_sample_mod", 31)
-                     if int(params.get("full_scan_threshold", 10_000) or 0)
-                     else None)
-        # incremental-delete tombstones (r14): stale rows kept by the
-        # immutable layout files are anti-joined out BEFORE the top-k so
-        # a deleted row can never displace a live one; absent dir = no
-        # deletes since the last full build, zero query-path cost
-        tdir = os.path.join(adir, "tombstones")
-        tomb = self._read_handle(tdir) if os.path.isdir(tdir) else None
+        def live(layout: DataFrame) -> DataFrame:
+            # incremental-delete tombstones (r14): stale rows kept by the
+            # immutable layout files are anti-joined out BEFORE the top-k
+            # so a deleted row can never displace a live one; absent dir =
+            # no deletes since the last full build, zero query-path cost
+            tdir = os.path.join(adir, "tombstones")
+            if not os.path.isdir(tdir):
+                return layout
+            return layout.join(F.broadcast(self._read_handle(tdir)), id_col,
+                               "left_anti")
+
         if params["kind"] == "ivf":
             from vectordb_cloud_spark.operators.ann import ivf_search
 
-            centers = [(int(i), list(c)) for i, c in params["centers"]]
-            assigned = self._read_handle(os.path.join(adir, "ivf"))
-            if tomb is not None:
-                assigned = assigned.join(F.broadcast(tomb), id_col,
-                                         "left_anti")
-            res = ivf_search(
-                assigned, centers, query_vector,
-                k=k, nprobe=params["nprobe"], vector_col=vector_col,
-                filters=predicate, tiebreak=id_col
-            ).select(id_col, "dist")  # uniform (id, dist) contract
-            if predicate is not None and audit_mod:
-                # r14: the correlated-filter sample audit, IVF edition —
-                # the matching set may sit outside every probed centroid
-                res = filtered_sample_audit(
-                    self.read(name), res, predicate, query_vector, k,
-                    vector_col=vector_col, id_col=id_col, mod=audit_mod)
-            return res
-        if params["kind"] == "ivf_sq":
+            def search(m):
+                centers = [(int(i), list(c)) for i, c in params["centers"]]
+                return ivf_search(
+                    live(self._read_handle(os.path.join(adir, "ivf"))),
+                    centers, query_vector,
+                    k=k, nprobe=params["nprobe"], vector_col=vector_col,
+                    filters=predicate, tiebreak=id_col
+                ).select(id_col, "dist")  # uniform (id, dist) contract
+        elif params["kind"] == "ivf_sq":
             # the sidecar keeps payload columns, so the predicate prunes
             # the CANDIDATE scan (inside the probed partitions) before the
             # ADC top-k*oversample — a tenant filter yields the tenant's
@@ -2301,65 +2278,63 @@ class CollectionCatalog:
             from vectordb_cloud_spark.operators.ann import route_probe_ids
             from vectordb_cloud_spark.operators.sq import sq_search
 
-            centers = [(int(i), list(c)) for i, c in params["centers"]]
-            probe = route_probe_ids(centers, query_vector, params["nprobe"])
-            codes = self._read_handle(os.path.join(adir, "ivf_sq")) \
-                .filter(F.col("centroid_id").isin(probe))
-            if tomb is not None:
-                codes = codes.join(F.broadcast(tomb), id_col, "left_anti")
-            if predicate is not None:
-                codes = codes.filter(predicate)
-            cand = sq_search(codes, params["mins"], params["maxs"],
-                             query_vector, k=k * params["oversample"],
-                             tiebreak=id_col).select(id_col)
-            base = self.read(name)
-            if predicate is not None:
-                base = base.filter(predicate)
-            res = exact_rescore_topk(base, cand, query_vector, k,
-                                     id_col=id_col, vector_col=vector_col)
-            if predicate is not None and audit_mod:
-                res = filtered_sample_audit(
-                    self.read(name), res, predicate, query_vector, k,
-                    vector_col=vector_col, id_col=id_col, mod=audit_mod)
-            return res
-        graph = self._read_handle(os.path.join(adir, "graph"))
-        entry_ids = params["entry_ids"]
-        cdir = os.path.join(adir, "coarse_sample")
-        if os.path.isdir(cdir):
-            # per-query coarse seeding from the persisted mod-sample (see
-            # build_ann_index): one bounded top-n_entry scan of the small
-            # sample table replaces the global medoid seeds that lose the
-            # query's cluster on large clumped corpora (RECALL.md 1M
-            # series). Falls back to the medoids when the stratum is
-            # empty (offset/sparse id spaces).
-            from vectordb_cloud_spark.operators.knn import knn_search
+            def search(m):
+                centers = [(int(i), list(c)) for i, c in params["centers"]]
+                probe = route_probe_ids(centers, query_vector,
+                                        params["nprobe"])
+                codes = live(
+                    self._read_handle(os.path.join(adir, "ivf_sq"))
+                    .filter(F.col("centroid_id").isin(probe)))
+                base = points
+                if predicate is not None:
+                    codes = codes.filter(predicate)
+                    base = base.filter(predicate)
+                cand = sq_search(codes, params["mins"], params["maxs"],
+                                 query_vector, k=k * params["oversample"],
+                                 tiebreak=id_col).select(id_col)
+                return exact_rescore_topk(base, cand, query_vector, k,
+                                          id_col=id_col,
+                                          vector_col=vector_col)
+        else:
+            from vectordb_cloud_spark.operators.graph_ann import (
+                graph_widened_search)
 
-            sample = self._read_handle(cdir)
-            seeds = [int(r[0]) for r in knn_search(
-                sample, query_vector, k=int(params.get("n_entry", 16)),
-                vector_col=vector_col, tiebreak=id_col,
-            ).select(id_col).collect()]
-            if seeds:
-                entry_ids = seeds
-        return graph_beam_search(
-            self.read(name), graph, query_vector, k=k,
-            beam=int(beam) if beam else params["beam"],
-            max_hops=params["max_hops"], id_col=id_col, vec_col=vector_col,
-            filters=predicate, entry_ids=entry_ids,
-            # the filtered three-way plan: exact below the threshold,
-            # beam widened to ~2kN/m in the middle band, exact again
-            # past the cap — raw post-filter measured 0.812/0.363/0.025
-            # at 10%/1%/0.1% uncorrelated selectivity, widened 0.975 at
-            # 10% (RECALL.md r13 filtered series); 10k default for
-            # legacy sidecars built before the knob existed
-            full_scan_threshold=int(
-                params.get("full_scan_threshold", 10_000)),
-            filtered_beam_cap=params.get("filtered_beam_cap"),
-            audit_sample_mod=params.get("audit_sample_mod", 31),
-            # build-time corpus count: saves the planner one full
-            # blocking scan per filtered query (ADVICE r13); absent in
-            # legacy sidecars, where the operator re-counts
-            n_total=params.get("n_total"))
+            def search(m):
+                entry_ids = params["entry_ids"]
+                cdir = os.path.join(adir, "coarse_sample")
+                if os.path.isdir(cdir):
+                    # per-query coarse seeding from the persisted
+                    # mod-sample (see build_ann_index): one bounded
+                    # top-n_entry scan of the small sample table replaces
+                    # the global medoid seeds that lose the query's
+                    # cluster on large clumped corpora (RECALL.md 1M
+                    # series). Falls back to the medoids when the stratum
+                    # is empty (offset/sparse id spaces).
+                    seeds = [int(r[0]) for r in knn_search(
+                        self._read_handle(cdir), query_vector,
+                        k=int(params.get("n_entry", 16)),
+                        vector_col=vector_col, tiebreak=id_col,
+                    ).select(id_col).collect()]
+                    if seeds:
+                        entry_ids = seeds
+                return graph_widened_search(
+                    points, self._read_handle(os.path.join(adir, "graph")),
+                    query_vector, m, k=k,
+                    beam=int(beam) if beam else params["beam"],
+                    cap=params.get("filtered_beam_cap"),
+                    # build-time corpus count: saves one full blocking
+                    # scan per filtered query (ADVICE r13); absent in
+                    # legacy sidecars, where the search re-counts
+                    n_total=params.get("n_total"),
+                    max_hops=params["max_hops"], id_col=id_col,
+                    vec_col=vector_col, filters=predicate,
+                    entry_ids=entry_ids)
+        # 10k default for legacy sidecars built before the knob existed
+        return planned_topk(
+            points, predicate, query_vector, k, search,
+            params.get("full_scan_threshold", 10_000),
+            params.get("audit_sample_mod", 31),
+            vector_col=vector_col, id_col=id_col)
 
     def compact(self, name: str, max_files_per_bucket: int = 4) -> int:
         """Compact buckets that accumulated small files (every bucket-scoped

@@ -24,7 +24,14 @@ operations so every stage distributes:
   vectors, exact-score, keep beam top-``beam``. The loop runs
   ``max_hops`` rounds or until the beam stops improving; each round is a
   broadcast-pruned scan + TakeOrderedAndProject, so no hop ever shuffles
-  the corpus.
+  the corpus. A ``filters`` predicate post-filters the visited nodes;
+  navigation itself is never filtered.
+- **Filtered search** (`graph_widened_search`): the graph's search for
+  the filtered-ANN planner every sidecar kind shares
+  (``operators.knn.planned_topk`` — planning count, exact branch and
+  sample audit). This module adds only the graph's own rule: the beam
+  widened to ``ceil(2kN/m)`` for ``m`` matching of ``N``, or exact past
+  a cap.
 
 Degree/beam/hops trade recall for reads exactly like HNSW's M/ef: tests
 gate recall@10 vs exact (test_graph_ann.py) the same way the LSH/IVF/PQ
@@ -549,7 +556,6 @@ def knn_graph_build_sharded(
     block_rows: int = 128,
     max_cells: int | None = None,
     with_blocking: bool = False,
-    local_scoring: bool = True,
     return_banded: bool = False,
 ):
     """Scale form of ``knn_graph_build``: the block key is a HASH SHARD
@@ -582,14 +588,13 @@ def knn_graph_build_sharded(
     ``(src, dst, dist)`` adjacency; ``with_blocking`` additionally returns
     ``(centers_multi, n_shards, shard_salts)`` for incremental append.
 
-    ``local_scoring`` (default) scores candidates INSIDE each block with
-    Arrow batches (``_block_local_edges``) and runs NN-descent as a local
-    join (``_nn_descent_round_local``): total vector shuffle is
+    Candidates are scored INSIDE each block with Arrow batches
+    (``_block_local_edges``) and NN-descent runs as a local join
+    (``_nn_descent_round_local``): total vector shuffle is
     O(n·blockings + n·degree) single vectors per round instead of the pure
     pair-join's O(block_rows·n) vector PAIRS (~28 GB per 100k rows at
     dim 64 — why ``knn_graph_build`` measured 271 s at 100k in SCALE.md
-    r6). ``local_scoring=False`` keeps the pure-JVM pair-join core for
-    plan-parity comparisons.
+    r6).
 
     Memory shape: the banded frame (n·blockings rows, one vector each) is
     localCheckpointed through the block manager — distributed across
@@ -618,28 +623,23 @@ def knn_graph_build_sharded(
         _fit_blocking(X, n_cells, seed + 7919 * s) for s in range(n_blockings)
     ]
     shard_salts = [seed + 104729 * s for s in range(n_blockings)]
-    keep = ("id", "vec") if local_scoring else ("id",)
+    # routing costs ~2·sqrt(C) distance folds per row; the banded frame
+    # feeds both the block-size stats and the scoring groups, so
+    # materialize it once instead of routing twice
     banded = _shard_banded(vecs0, centers_multi, n_shards, shard_salts,
-                           keep=keep)
-    if not local_scoring:
-        graph = _graph_from_banded(vecs0, banded, degree, refine_rounds)
-    else:
-        # routing costs ~2·sqrt(C) distance folds per row; the banded frame
-        # feeds both the block-size stats and the scoring groups, so
-        # materialize it once instead of routing twice
-        banded = banded.localCheckpoint()
-        cand = _block_local_edges(banded, degree)
-        # symmetrize: a candidate counts for BOTH endpoints
-        edges = cand.unionByName(
-            cand.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "dist")
-        ).dropDuplicates(["src", "dst"])
-        graph = _top_per_src(edges, degree).localCheckpoint()
-        for _ in range(refine_rounds):
-            graph = _nn_descent_round_local(graph, vecs0, degree).localCheckpoint()
+                           keep=("id", "vec")).localCheckpoint()
+    cand = _block_local_edges(banded, degree)
+    # symmetrize: a candidate counts for BOTH endpoints
+    edges = cand.unionByName(
+        cand.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "dist")
+    ).dropDuplicates(["src", "dst"])
+    graph = _top_per_src(edges, degree).localCheckpoint()
+    for _ in range(refine_rounds):
+        graph = _nn_descent_round_local(graph, vecs0, degree).localCheckpoint()
     blocking = (centers_multi, n_shards, shard_salts)
     if with_blocking and return_banded:
         # the routing assignment is already materialized (localCheckpoint
-        # above in the default path) — persisting it beside the adjacency
+        # above) — persisting it beside the adjacency
         # makes future APPENDS skip re-routing the whole corpus
         return graph, blocking, banded.select("id", "block")
     if with_blocking:
@@ -1228,10 +1228,6 @@ def graph_beam_search(
     vec_col: str = "embedding",
     filters=None,
     entry_ids: list[int] | None = None,
-    full_scan_threshold: int | None = None,
-    filtered_beam_cap: int | None = None,
-    audit_sample_mod: int | None = 31,
-    n_total: int | None = None,
 ) -> DataFrame:
     """Greedy beam search over the kNN graph — HNSW's search loop with the
     frontier as the only driver-side state.
@@ -1260,45 +1256,11 @@ def graph_beam_search(
     with UNCORRELATED filters, and 0.125 at any width when the filter
     selects whole clusters (RECALL.md r13 series, incl. the correlated
     adversarial case — geometry-correlated filters belong to the exact
-    path over a payload-clustered layout).
-
-    ``full_scan_threshold`` (Qdrant's planner knob of the same name —
-    its filterable-HNSW planner switches between a payload-driven full
-    scan and predicate-aware navigation by estimated filter cardinality)
-    therefore enables a THREE-WAY plan, decided by one cheap narrow
-    count of the matching rows (predicate columns only — pushdown +
-    row-group pruning; the vector column is never read by the count):
-
-    - ``m <= full_scan_threshold``: the matching set is small — serve
-      the exact filtered top-k (one ``TakeOrderedAndProject`` scan of
-      the matching rows; recall 1.0 by construction).
-    - moderate selectivity: navigate with the beam WIDENED to
-      ``2·k·N/m`` (the expected overall rank of the k-th filtered
-      neighbor, 2x oversampled), capped at ``filtered_beam_cap``
-      (default ``max(8·beam, 512)``) — per-hop cost stays
-      beam×degree probes.
-    - ``2·k·N/m`` above the cap: the filtered top-k live too deep in
-      the unfiltered ranking for navigation to reach reliably — serve
-      the exact filtered top-k instead (correct, one filtered scan; at
-      this band prefer the IVF/IVF-SQ families, which push predicates
-      into their pruned scans natively).
-
-    ``n_total`` lets callers with a persisted index pass the corpus row
-    count measured at build time (snapshot-invariant — any write
-    rebuilds the sidecar), so the planner pays only the per-predicate
-    matching count on the query path instead of two full counts
-    (ADVICE r13). ``None`` falls back to counting.
-
-    ``audit_sample_mod`` (default 31, active only on the widened-beam
-    route) adds the r13 SAMPLE AUDIT: after navigation, one pruned scan
-    of a deterministic ~1/mod slice of the matching rows checks for any
-    point beating the result's worst distance (or for any matching
-    point at all when fewer than k came back). A hit means the filter
-    correlates with geometry and navigation missed the matching region
-    (the RECALL.md correlated case — 0.125 at any beam width without
-    the audit), so the exact filtered top-k serves instead. Set
-    ``audit_sample_mod=None`` to trade the per-query 1/mod scan away
-    when filters are known uncorrelated.
+    path over a payload-clustered layout). Filtered queries therefore go
+    through the planner every sidecar kind shares
+    (``operators.knn.planned_topk``): it serves small matching sets
+    exact and audits the navigated answer, and ``graph_widened_search``
+    widens the beam for the rest.
 
     Per hop this is two bounded single-stage actions: (1) an ``src IN
     (beam)`` probe of the adjacency table collecting ≤ beam×degree dst
@@ -1314,28 +1276,6 @@ def graph_beam_search(
     """
     dist_to_q = lambda col: l2_distance_to(col, query_vector)  # noqa: E731
     spark = points.sparkSession
-    if filters is not None and full_scan_threshold:
-        from vectordb_cloud_spark.operators.knn import knn_search
-
-        fst = int(full_scan_threshold)
-        # narrow planning count: predicate columns only, never the vectors
-        m = points.filter(filters).count()
-        if m <= fst:
-            matched = points.filter(filters)
-            return knn_search(matched, query_vector, k=k, vector_col=vec_col,
-                              tiebreak=id_col).select(id_col, "dist")
-        if n_total is None:
-            # snapshot-invariant: callers with a persisted sidecar pass
-            # the build-time count instead of re-scanning per query
-            n_total = points.count()
-        needed = -(-2 * int(k) * int(n_total) // max(1, m))  # ceil(2kN/m)
-        cap = (int(filtered_beam_cap) if filtered_beam_cap
-               else max(8 * int(beam), 512))
-        if needed > cap:
-            matched = points.filter(filters)
-            return knn_search(matched, query_vector, k=k, vector_col=vec_col,
-                              tiebreak=id_col).select(id_col, "dist")
-        beam = max(int(beam), needed)
     match_flag = (
         F.lit(True) if filters is None else filters.cast("boolean")
     ).alias("match")
@@ -1410,56 +1350,42 @@ def graph_beam_search(
             break
 
     best = sorted(matches.items(), key=lambda kv: (kv[1], kv[0]))[:k]
-    if filters is not None and full_scan_threshold and audit_sample_mod:
-        # SAMPLE AUDIT (r13): post-filtered navigation can silently miss
-        # whole regions when the filter correlates with geometry (the
-        # RECALL.md correlated case: 0.125 at any beam width). Probe a
-        # deterministic ~1/mod slice of the MATCHING rows for any point
-        # that beats the result's worst distance — one pruned scan of
-        # ~m/mod vectors, no driver collect. A hit means navigation
-        # missed a region the result should cover, so the exact filtered
-        # top-k serves instead (correct by construction). Uncorrelated
-        # filters rarely trigger (a violation needs a missed true-top-k
-        # member AND the sample catching it); correlated filters trigger
-        # almost surely, converting the 0.125 failure into exact service
-        # at one extra 1/mod scan + the exact scan it needed anyway.
-        from vectordb_cloud_spark.operators.knn import knn_search
-
-        samp_pred = filters & (
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(audit_sample_mod)))
-            == 0)
-        suspect = len(best) < k
-        if not suspect:
-            worst = best[-1][1]
-            result_ids = [i for i, _ in best]
-            viol = (
-                points.filter(samp_pred)
-                .filter(~F.col(id_col).isin(result_ids))
-                .select(dist_to_q(F.col(vec_col)).alias("d"))
-                .filter(F.col("d") < F.lit(float(worst)))
-                .limit(1)
-                .count()
-            )
-            suspect = viol > 0
-        else:
-            # fewer than k matches found by navigation: if the matching
-            # sample has anything outside the result, the deficit is
-            # navigational, not a tiny matching set (that case went
-            # exact at the threshold)
-            result_ids = [i for i, _ in best]
-            extra = (
-                points.filter(samp_pred)
-                .filter(~F.col(id_col).isin(result_ids)
-                        if result_ids else F.lit(True))
-                .limit(1)
-                .count()
-            )
-            suspect = extra > 0
-        if suspect:
-            return knn_search(points.filter(filters), query_vector, k=k,
-                              vector_col=vec_col,
-                              tiebreak=id_col).select(id_col, "dist")
     return local_df(
         spark,
         [(int(i), float(d)) for i, d in best], f"{id_col} long, dist double"
     )
+
+
+def graph_widened_search(
+    points: DataFrame,
+    graph: DataFrame,
+    query_vector: list[float],
+    m: int | None,
+    k: int = 10,
+    beam: int = 16,
+    cap: int | None = None,
+    n_total: int | None = None,
+    **nav,
+) -> DataFrame | None:
+    """The graph kind's ``search(m)`` for ``operators.knn.planned_topk``.
+
+    With ``m`` of ``n_total`` points matching the filter, the filtered
+    top-k sit around overall rank ``k·N/m``, so navigation runs with the
+    beam widened to ``ceil(2·k·N/m)`` (2x oversampled; per-hop cost stays
+    beam×degree probes). Past ``cap`` (default ``max(8·beam, 512)``) the
+    filtered top-k live too deep in the unfiltered ranking for navigation
+    to reach reliably: this returns None and the planner serves the exact
+    filtered top-k (at that band prefer the IVF kinds, which push
+    predicates into their pruned scans). ``m`` None navigates with
+    ``beam`` as given. ``n_total`` is the corpus count the sidecar stored
+    at build time; None counts ``points``. ``nav`` passes through to
+    ``graph_beam_search``."""
+    if m is not None:
+        if n_total is None:
+            n_total = points.count()
+        needed = -(-2 * int(k) * int(n_total) // max(1, m))  # ceil(2kN/m)
+        if needed > (int(cap) if cap else max(8 * int(beam), 512)):
+            return None
+        beam = max(int(beam), needed)
+    return graph_beam_search(points, graph, query_vector, k=k, beam=beam,
+                             **nav)

@@ -20,6 +20,8 @@ per query — the scan side never shuffles.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -581,8 +583,8 @@ def filtered_sample_audit(
     id_col: str = "vec_id",
     mod: int = 31,
 ) -> DataFrame:
-    """Post-search SAMPLE AUDIT for filtered ANN results (r13 for the
-    graph family, r14 factored here for the IVF kinds — VERDICT r13 #5):
+    """Post-search SAMPLE AUDIT for filtered ANN results (r13, the last
+    step of ``planned_topk`` for every sidecar kind — VERDICT r13 #5):
     an approximate index can silently miss the matching set when the
     filter correlates with geometry (graph navigation converges away
     from it; IVF's probed centroids may not cover it). One pruned scan
@@ -633,6 +635,53 @@ def filtered_sample_audit(
     return local_df(points.sparkSession,
                     [(int(i), d) for i, d in rows],
                     f"{id_col} long, dist double")
+
+
+def planned_topk(
+    points: DataFrame,
+    filters: Column | None,
+    query_vector: list[float],
+    k: int,
+    search: Callable[[int | None], DataFrame | None],
+    full_scan_threshold: int | None,
+    audit_sample_mod: int | None,
+    vector_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Filtered top-k through an approximate index: the one planner the
+    IVF, IVF-SQ and graph sidecars share — Qdrant's
+    ``full_scan_threshold`` rule plus the r13 sample audit.
+
+    ``search(m)`` is the index's own filtered search over ``points``,
+    returning ``(id_col, dist)`` rows; ``m`` is the planning count, None
+    when none ran. It may return None to decline (the graph kind does
+    when the beam it would need exceeds its cap), and the exact filtered
+    top-k serves instead. The plan:
+
+    - no filter, or ``full_scan_threshold`` 0/None: ``search(None)`` —
+      the raw index math, no count and no audit;
+    - otherwise one narrow planning count ``m`` of the matching rows
+      (predicate columns only, never the vectors). ``m <=
+      full_scan_threshold`` serves the exact filtered top-k (one
+      TakeOrderedAndProject scan of the matching rows, recall 1.0 by
+      construction): a small matching set may sit entirely outside the
+      probed lists or the navigated region;
+    - otherwise ``search(m)``, exact when it declines, and its answer
+      goes through ``filtered_sample_audit`` when ``audit_sample_mod``
+      is set."""
+    if filters is None or not full_scan_threshold:
+        return search(None)
+    m = points.filter(filters).count()
+    res = search(m) if m > int(full_scan_threshold) else None
+    if res is None:
+        return knn_search(points.filter(filters), query_vector, k=k,
+                          vector_col=vector_col,
+                          tiebreak=id_col).select(id_col, "dist")
+    if audit_sample_mod:
+        res = filtered_sample_audit(points, res, filters, query_vector, k,
+                                    vector_col=vector_col, id_col=id_col,
+                                    mod=audit_sample_mod)
+    return res
 
 
 def distance_matrix_pairs(

@@ -366,12 +366,3 @@ def sample_video_frames(media: DataFrame, every_ms: int = 500,
     vids = media.filter(F.col("kind") == "video")
     return vids.mapInPandas(_batches, out_schema)
 
-
-def partition_for_media(media: DataFrame, target_mb_per_partition: int = 256,
-                        avg_row_mb: float = 1.0) -> DataFrame:
-    """Right-size partitions so fat binary rows don't blow executor memory:
-    rows-per-partition = budget / avg row size. At 100 TB this is the knob
-    that keeps decode tasks uniform."""
-    rows_per_part = max(1, int(target_mb_per_partition / max(avg_row_mb, 0.01)))
-    n = media.count()
-    return media.repartition(max(1, n // rows_per_part))

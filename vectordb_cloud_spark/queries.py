@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from vectordb_cloud_spark import fixtures as fx
 from vectordb_cloud_spark.functions.text import (
-    bpe_token_estimate,
     doc_fingerprint,
     lang_id_expr,
     quality_score,
@@ -36,7 +35,6 @@ from vectordb_cloud_spark.functions.vector import l2_distance
 from vectordb_cloud_spark.operators.classify import label_centroids, nearest_centroid
 from vectordb_cloud_spark.operators.dedup import (
     minhash_lsh_pairs,
-    ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
 from vectordb_cloud_spark.operators.knn import knn_search
@@ -469,34 +467,9 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def token_estimate_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish token estimate, top-20 longest docs. Rotated OUT of the
-    50-slot registry in r8 (token counting stays oracle-checked inside
-    `gopher_quality_counts` and `text_quality_profile`) to make room for
-    the serving-API rows (filter DSL / geo / discover / maxsim); kept
-    library-level."""
-    docs = fx.table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", bpe_token_estimate("text").alias("n_tokens"))
-        .orderBy(F.col("n_tokens").desc(), "doc_id")
-        .limit(20)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Similarity / dedup extensions with SQL oracles
 # ---------------------------------------------------------------------------
-
-def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3gram Jaccard pairs, blocked by (lang, source) so the pair
-    space is bounded per block — dedup op #4. Library-level since the r8
-    span-dedup rotation (the exact-Jaccard arithmetic stays oracle-covered
-    inside ``minhash_lsh_near_dup``'s verify stage; the slot went to
-    ``span_dedup_injected``)."""
-    docs = fx.table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).withColumn(
-        "__block", F.concat_ws("|", "lang", "source")
-    )
-    return ngram_jaccard_pairs(docs, "__block", shingle_n=3, threshold=0.01)
 
 
 _SPAN_W = 20  # window for the span-dedup oracle row
@@ -889,42 +862,6 @@ def sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = fx.table(spark, sf_dir, "events")
     return sessionize_batch(ev, gap_minutes=30, tiebreak_col="event_id")
-
-
-def tpch_q6_q14_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 (scan-filter-agg, both predicates pushed to parquet) and Q14
-    (conditional-aggregate ratio over a broadcast dim join) as one
-    two-row (metric, value) entry — merged r7; rotated OUT of the 50-slot
-    registry in r8 (q1/q3/q5 keep the TPC-H scan/join/agg shapes under the
-    oracle) to make room for the serving-API rows; kept library-level and
-    covered by test_relational.py."""
-    li = fx.table(spark, sf_dir, "lineitem")
-    q6 = (
-        li.filter(F.col("l_discount").between(0.05, 0.07) & (F.col("l_quantity") < 24))
-        .agg(
-            F.round(
-                F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(28,10)"))
-                .cast("double"), 2
-            ).alias("value")
-        )
-        .select(F.lit("q6_revenue").alias("metric"), "value")
-    )
-    p = fx.table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    q14 = (
-        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(promo.cast("decimal(28,10)")).cast("double")
-                / F.sum(rev.cast("decimal(28,10)")).cast("double"),
-                6,
-            ).alias("value")
-        )
-        .select(F.lit("q14_promo_share_pct").alias("metric"), "value")
-    )
-    return q6.unionByName(q14)
 
 
 # ---------------------------------------------------------------------------
@@ -1478,29 +1415,6 @@ def price_percentiles_by_flag_approx(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-def top_terms_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Term frequencies: explode -> two-level agg -> top-5 per lang.
-    The (lang, term) partial aggregation bounds the shuffle by vocabulary
-    size, not corpus size. Library-level since the r8 hybrid rotation (its
-    window-top-k-per-group shape stays oracle-covered by
-    ``search_groups_topk``; the slot went to ``hybrid_rrf_topk``)."""
-    from vectordb_cloud_spark.functions.text import words
-
-    docs = fx.table(spark, sf_dir, "documents")
-    terms = (
-        docs.select("lang", F.explode(words("text")).alias("w"))
-        .select("lang", F.lower("w").alias("term"))
-        .groupBy("lang", "term")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("term"))
-    return (
-        terms.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= 5)
-        .select("lang", "term", "n")
-    )
-
-
 def scalar_functions_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar-function surface (SURVEY.md §2.6): substring/instr/concat_ws/
     casts, plus the reference's literal backslash-n split quirk (F3,
@@ -1520,17 +1434,6 @@ def scalar_functions_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.length("text").cast("double") / 100.0).alias("chars_ratio"),
         F.size(F.split(F.regexp_replace("text", " ", "\n"), "\n")).alias("nl_parts"),
     )
-
-
-def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram: bucket expression + group-by (partial-agg
-    shuffle bounded by bucket count). Rotated OUT of the 50-slot registry in
-    r7 (redundant with the other grouped-agg oracle rows) to make room for
-    the SQ/BQ/sparse/graph ANN oracle entries; kept library-level."""
-    ev = fx.table(spark, sf_dir, "events")
-    return ev.groupBy(
-        "event_type", F.floor(F.col("value") / 25.0).cast("long").alias("bucket")
-    ).agg(F.count("*").alias("n"))
 
 
 @_q(
@@ -1739,36 +1642,6 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     return rrf_fuse([lex, dense], id_col="doc_id", k=10, max_list_rows=None)
-
-
-def events_daily_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily distinct-user counts. Rotated OUT of the 50-slot registry in
-    r8 (events-table time aggregation stays oracle-checked via
-    `streaming_hourly_counts` and `sessionize_users`) to make room for the
-    serving-API rows; kept library-level."""
-    ev = fx.table(spark, sf_dir, "events")
-    return ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.countDistinct("user_id").alias("dau"), F.count("*").alias("n_events")
-    )
-
-
-def price_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated-scalar-subquery shape, decorrelated to a window aggregate:
-    one shuffle on brand instead of a per-row subquery. Decimal-exact mean so
-    the comparison is deterministic. Rotated OUT of the 50-slot registry in
-    r7 (redundant with the other window-agg oracle rows) to make room for
-    the SQ/BQ/sparse/graph ANN oracle entries; kept library-level."""
-    p = fx.table(spark, sf_dir, "part")
-    w = Window.partitionBy("p_brand")
-    brand_avg = (
-        F.sum(F.col("p_retailprice").cast("decimal(28,10)")).over(w).cast("double")
-        / F.count("*").over(w)
-    )
-    return (
-        p.withColumn("__avg", brand_avg)
-        .filter(F.col("p_retailprice") > F.col("__avg"))
-        .select("p_partkey", "p_brand", "p_retailprice")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -32,6 +32,7 @@ GRAPH_DEGREE = 12  # r7: degree 8 -> 12 measured +0.14 recall at identical build
 GRAPH_BEAM = 48  # beam width is the recall dial: 32->0.75, 48->0.94 at sf0.1 with medoid entries (per-hop cost is scheduling, not rows)
 GRAPH_MAX_HOPS = 4
 GRAPH_ENTRIES = 16  # medoid entry points (graph_entry_points) — r7: +0.09 recall over smallest-id seeds at the same beam
+AUDIT_SAMPLE_MOD = 31  # the ANN sidecars' default filtered sample audit (1/31 of the matching rows)
 BQ_OVERSAMPLE = 48  # 64-dim codes are coarse: rescore recall 16->0.73, 32->0.85, 48->0.94 at sf0.1 (Qdrant documents the same oversample-for-BQ practice)
 PQ_RERANK_OVERSAMPLE = 4  # with M=16/K=256 codebooks: 0.988 at sf0.1
 
@@ -338,8 +339,9 @@ def filtered_graph_recall_report(
     IVF degrades more gracefully (measured 0.875-1.000 across builds:
     its probed region is ~25% of the corpus, often wide enough to cover
     far matching clusters on this fixture — nothing guarantees it).
-    The graph planner's SAMPLE AUDIT (graph_beam_search
-    ``audit_sample_mod``) closes the correlated case at runtime —
+    The shared filtered-ANN planner's SAMPLE AUDIT
+    (``operators.knn.planned_topk`` with ``audit_sample_mod``, the step
+    every ANN sidecar kind runs) closes the correlated case at runtime —
     measured correlated_planned 1.000 vs raw 0.125 — and
     payload-clustered layouts (``create_payload_index`` re-clusters
     files so the exact filtered scan prunes to the matching files)
@@ -359,8 +361,10 @@ def filtered_graph_recall_report(
         graph_beam_search,
         graph_coarse_entry_ids,
         graph_entry_points,
+        graph_widened_search,
         knn_graph_build_sharded,
     )
+    from vectordb_cloud_spark.operators.knn import planned_topk
 
     corpus = million_row_corpus(spark, sf_dir, n_rows).cache()
     corpus.count()
@@ -413,10 +417,13 @@ def filtered_graph_recall_report(
                                   entry_ids=seeds),
                 exact, "vec_id")
             sums[plan_key] += recall_at_k(
-                graph_beam_search(corpus, graph, qv, k=k, beam=GRAPH_BEAM,
-                                  max_hops=GRAPH_MAX_HOPS, filters=pred,
-                                  entry_ids=seeds,
-                                  full_scan_threshold=full_scan_threshold),
+                planned_topk(
+                    corpus, pred, qv, k,
+                    lambda m: graph_widened_search(
+                        corpus, graph, qv, m, k=k, beam=GRAPH_BEAM,
+                        max_hops=GRAPH_MAX_HOPS, filters=pred,
+                        entry_ids=seeds),
+                    full_scan_threshold, AUDIT_SAMPLE_MOD),
                 exact, "vec_id")
             ivf_res = ivf_search(assigned, centers, qv, k=k,
                                  nprobe=IVF_NPROBE,
@@ -428,13 +435,11 @@ def filtered_graph_recall_report(
                 # region covering the matching clusters on this fixture
                 # is luck ('nothing guarantees it'); the audit makes the
                 # guarantee at one 1/31 matching scan per query
-                from vectordb_cloud_spark.operators.knn import (
-                    filtered_sample_audit)
-
                 sums[ivf_audit_key] += recall_at_k(
-                    filtered_sample_audit(
-                        corpus, ivf_res.select("vec_id", "dist"), pred,
-                        qv, k, id_col="vec_id"),
+                    planned_topk(
+                        corpus, pred, qv, k,
+                        lambda m: ivf_res.select("vec_id", "dist"),
+                        full_scan_threshold, AUDIT_SAMPLE_MOD),
                     exact, "vec_id")
         subset.unpersist()
     corpus.unpersist()

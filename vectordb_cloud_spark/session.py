@@ -126,23 +126,3 @@ def local_df(spark: SparkSession, rows, schema):
             pass
     return spark.createDataFrame(rows, schema)
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Read the driver-generated parquet tables and register temp views.
-
-    Returns ``{name: DataFrame}``. Parquet scans get automatic filter
-    pushdown + column pruning from Catalyst, so callers just ``filter``/
-    ``select`` declaratively.
-    """
-    if names is None:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    out = {}
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
